@@ -57,15 +57,8 @@ object QuerySpec {
     * accumulation order follows scan partitioning — those stay on the
     * order-stable single-split read.
     */
-  /** Dev-only interleaved-A/B switch (tools/ProfileFanoutAb): false
-    * makes [[tw]] behave as [[t]] so a profiler can alternate both
-    * shapes of the same graded query body in one JVM. Never toggled in
-    * production paths; Bench/Verify see the default. */
-  @volatile private[graft] var fanoutEnabled = true
-
   def tw(spark: SparkSession, dir: String, name: String): DataFrame = {
     val raw = t(spark, dir, name)
-    if (!fanoutEnabled) return raw
     val target = spark.sparkContext.defaultParallelism
     // planning-free partition count (r19, verdict #6): the previous
     // `raw.rdd.getNumPartitions` compiled the physical plan once per

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,7 +20,25 @@ import graft.streaming.Streams
   */
 object ScaleQueries {
 
-  private val streamRun = new AtomicInteger(0)
+  /** Replay `input` as a bounded stream sliced one file per trigger:
+    * write it under a temp dir as one parquet file group per entry of
+    * `fileGroups` (each group `repartition`ed to that many files), run
+    * `runner` over the file stream, pin its result, and delete the dir. */
+  private def replayFiles(s: org.apache.spark.sql.SparkSession,
+      input: org.apache.spark.sql.DataFrame, fileGroups: Int*)(
+      runner: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val in = java.nio.file.Files.createTempDirectory("graft_replay").toString
+    try {
+      fileGroups.foreach(n => input.repartition(n).write
+        .mode(org.apache.spark.sql.SaveMode.Append).parquet(in))
+      runner(Streams.fileStream(s, in, "*.parquet", input.schema,
+        onePerTrigger = true)).localCheckpoint(true)
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(in)
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
 
   private val stopwords = Seq("the", "a", "value", "data", "row", "table")
 
@@ -2193,10 +2209,7 @@ object ScaleQueries {
 
     QuerySpec("st1_stream_hourly_agg", (s, d) => {
       val schema = Streams.eventsFileSchema(s, d)
-      val run = streamRun.incrementAndGet()
-      val sink = s"graft_stream_$run"
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      Streams.runWindowedAggAvailableNow(s, d, "events.parquet", schema, sink, ckpt)
+      Streams.runWindowedAggAvailableNow(s, d, "events.parquet", schema)
         .select(col("window_start"), col("event_type"), col("n"),
           round(col("total_value"), 3).as("total_value"))
         .orderBy("window_start", "event_type")
@@ -2219,11 +2232,8 @@ object ScaleQueries {
     // small-range bias (x60's scaladoc regime note, measured here).
     QuerySpec("st8_stream_hll_distinct", (s, d) => {
       val schema = Streams.eventsFileSchema(s, d)
-      val run = streamRun.incrementAndGet()
-      val sink = s"graft_hll_$run"
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       val est = Streams.runWindowedHllAvailableNow(s, d, "events.parquet",
-        schema, "event_id", p = 6, sink, ckpt, window = "1 day")
+        schema, "event_id", p = 6, window = "1 day")
       val exact = t(s, d, "events")
         .groupBy(date_trunc("day", col("ts")).as("window_start"))
         .agg(countDistinct(col("event_id")).as("n_exact"))
@@ -2268,13 +2278,10 @@ object ScaleQueries {
     // a stream cannot take the batch operator's min/max pre-pass.
     QuerySpec("st10_stream_percentiles", (s, d) => {
       val schema = Streams.eventsFileSchema(s, d)
-      val run = streamRun.incrementAndGet()
-      val sink = s"graft_hist_$run"
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runWindowedPercentilesAvailableNow(s, d, "events.parquet",
         schema, floor(col("value") * 100).cast("long"), loCents = 0L,
         widthCents = 64L, nBins = 1024,
-        ps = Seq(("p50_cents", 0.5), ("p95_cents", 0.95)), sink, ckpt)
+        ps = Seq(("p50_cents", 0.5), ("p95_cents", 0.95)))
         .orderBy("window_start")
     },
       Some("""WITH c AS (SELECT date_trunc('hour', ts) w,
@@ -2312,12 +2319,9 @@ object ScaleQueries {
     // the over-estimate property is exercised, not vacuous.
     QuerySpec("st11_stream_cms_counts", (s, d) => {
       val schema = Streams.eventsFileSchema(s, d)
-      val run = streamRun.incrementAndGet()
-      val sink = s"graft_cms_$run"
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       val probes = Seq(1L, 2L, 3L, 4L, 5L)
       val est = Streams.runWindowedCmsAvailableNow(s, d, "events.parquet",
-        schema, col("user_id"), depth = 3, width = 256, probes, sink, ckpt)
+        schema, col("user_id"), depth = 3, width = 256, probes)
       val exact = t(s, d, "events")
         .filter(col("user_id").isin(probes: _*))
         .groupBy(date_trunc("hour", col("ts")).as("window_start"),
@@ -2357,11 +2361,8 @@ object ScaleQueries {
 
     QuerySpec("st2_sessionize_stateful", (s, d) => {
       val schema = Streams.eventsFileSchema(s, d)
-      val run = streamRun.incrementAndGet()
-      val sink = s"graft_sessions_$run"
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runSessionizeAvailableNow(s, d, "events.parquet", schema,
-        gapMinutes = 60, sink, ckpt)
+        gapMinutes = 60)
         .orderBy("user_id", "session_id")
     },
       Some("""WITH e AS (SELECT user_id, event_id, ts, value,
@@ -2381,11 +2382,9 @@ object ScaleQueries {
     // single drain.
     QuerySpec("st3_sessionize_eventtime", (s, d) => {
       val schema = Streams.eventsFileSchema(s, d)
-      val run = streamRun.incrementAndGet()
-      val sink = s"graft_sessions_et_$run"
       val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runSessionizeEventTimeAvailableNow(s, d, "events.parquet", schema,
-        gapMinutes = 60, sink, ckpt)
+        gapMinutes = 60, "graft_st3_sessions", ckpt)
         .orderBy("user_id", "session_id")
     },
       Some("""WITH e AS (SELECT user_id, event_id, ts, value,
@@ -2405,11 +2404,8 @@ object ScaleQueries {
     // non-equi join exactly — the oracle is that batch join.
     QuerySpec("st5_stream_stream_join", (s, d) => {
       val schema = Streams.eventsFileSchema(s, d)
-      val run = streamRun.incrementAndGet()
-      val sink = s"graft_ssj_$run"
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runStreamStreamJoinAvailableNow(s, d, "events.parquet", schema,
-        lookbackMinutes = 30, sink, ckpt)
+        lookbackMinutes = 30)
         .orderBy("purchase_id", "view_id")
     },
       Some("""SELECT l.event_id purchase_id, l.user_id, l.ts p_ts,
@@ -2432,11 +2428,8 @@ object ScaleQueries {
     // both SFs).
     QuerySpec("st9_stream_stream_outer", (s, d) => {
       val schema = Streams.eventsFileSchema(s, d)
-      val run = streamRun.incrementAndGet()
-      val sink = s"graft_ssjo_$run"
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runStreamStreamJoinAvailableNow(s, d, "events.parquet", schema,
-        lookbackMinutes = 30, sink, ckpt,
+        lookbackMinutes = 30,
         joinType = "leftOuter", watermarkDelay = "1 hour")
         .orderBy("purchase_id", "view_id")
     },
@@ -2463,25 +2456,14 @@ object ScaleQueries {
     QuerySpec("st6_stream_dedup", (s, d) => {
       val ev = t(s, d, "events").filter(col("event_id") % 10 === 0)
         .select("event_id", "ts", "user_id", "event_type", "value")
-      val run = streamRun.incrementAndGet()
-      val base = java.nio.file.Files.createTempDirectory("graft_stdedup").toString
       // 2+1 file groups (r12 directive #2, the st4b minimum-slice rule):
       // three one-file micro-batches still put every duplicate copy in a
       // DIFFERENT batch than its original — the cross-batch state under
       // test — while shedding two fixed-cost triggers vs the old 3+2
-      ev.repartition(2).write.parquet(s"$base/in")
-      ev.repartition(1).write.mode(org.apache.spark.sql.SaveMode.Append)
-        .parquet(s"$base/in")
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-      val out = Streams.runStreamingDedupAvailableNow(s, stream,
+      replayFiles(s, ev, 2, 1)(Streams.runStreamingDedupAvailableNow(_,
         keyCols = Seq("event_id"), tsCol = "ts",
-        watermarkDelay = "3650 days", sinkName = s"graft_stdedup_$run",
-        checkpoint = s"$base/ckpt")
-        .localCheckpoint(true)
-      val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      out.orderBy("event_id")
+        watermarkDelay = "3650 days"))
+        .orderBy("event_id")
     },
       Some("""SELECT event_id, ts, user_id, event_type, "value"
              |FROM events WHERE event_id % 10 = 0 ORDER BY event_id""".stripMargin)),
@@ -3000,17 +2982,9 @@ object ScaleQueries {
         .select("event_id", "ts", "user_id", "event_type", "value")
       val dim = ev.groupBy("user_id").agg(min(col("ts")).as("first_ts"),
         count(lit(1)).as("n_user_events"))
-      val run = streamRun.incrementAndGet()
-      val base = java.nio.file.Files.createTempDirectory("graft_stenrich").toString
-      ev.repartition(4).write.parquet(s"$base/in")
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-      val out = Streams.runStreamStaticEnrichAvailableNow(s, stream, dim,
-        "user_id", s"graft_stenrich_$run", s"$base/ckpt")
-        .localCheckpoint(true)
-      val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      out.orderBy("event_id")
+      replayFiles(s, ev, 4)(
+        Streams.runStreamStaticEnrichAvailableNow(_, dim, "user_id"))
+        .orderBy("event_id")
     },
       Some("""WITH dim AS (SELECT user_id, min(ts) first_ts,
              |    count(*) n_user_events FROM events GROUP BY 1)
@@ -3758,12 +3732,9 @@ object ScaleQueries {
     // bitwise equal to batch regardless of micro-batch slicing.
     QuerySpec("st12_stream_seasonal_anomaly", (s, d) => {
       val schema = Streams.eventsFileSchema(s, d)
-      val run = streamRun.incrementAndGet()
-      val sink = s"graft_stream_$run"
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runSeasonalAnomalyAvailableNow(s, d, "events.parquet", schema,
-        t(s, d, "events"), cutoff = "2024-01-22 00:00:00", mult = 2,
-        sink, ckpt).orderBy("window_start")
+        t(s, d, "events"), cutoff = "2024-01-22 00:00:00", mult = 2)
+        .orderBy("window_start")
     },
       Some("""WITH tr AS (SELECT ts FROM events
              |  WHERE ts IS NOT NULL AND ts < TIMESTAMP '2024-01-22'),
@@ -4041,12 +4012,9 @@ object ScaleQueries {
     // batch-side on (windows × bins)-sized frames.
     QuerySpec("st13_stream_psi_drift", (s, d) => {
       val schema = Streams.eventsFileSchema(s, d)
-      val run = streamRun.incrementAndGet()
-      val sink = s"graft_psi_$run"
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runWindowedPsiAvailableNow(s, d, "events.parquet", schema,
         t(s, d, "events"), loCents = 0L, widthCents = 2000L, nBins = 18,
-        cutoff = "2024-01-22 00:00:00", sink, ckpt)
+        cutoff = "2024-01-22 00:00:00")
         .orderBy("window_start")
     },
       Some("""WITH rb AS (SELECT least(greatest(
@@ -4359,20 +4327,11 @@ object ScaleQueries {
     // not change the pair set.
     QuerySpec("st14_stream_simhash_neardup", (s, d) => {
       val docs = t(s, d, "documents").select("doc_id", "text")
-      val run = streamRun.incrementAndGet()
-      val base = java.nio.file.Files.createTempDirectory("graft_stsim").toString
       // 2 slices (r12 directive #2): the minimum that exercises
       // cross-batch bucket state, one fewer fixed-cost trigger
-      docs.repartition(2).write.parquet(s"$base/in")
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-      val out = Streams.runStreamingSimhashAvailableNow(s, stream,
-        "doc_id", "text", shingleWords = 3, maxHamming = 3,
-        sinkName = s"graft_stsim_$run", checkpoint = s"$base/ckpt")
-        .localCheckpoint(true)
-      val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      out.orderBy("id_a", "id_b")
+      replayFiles(s, docs, 2)(Streams.runStreamingSimhashAvailableNow(_,
+        "doc_id", "text", shingleWords = 3, maxHamming = 3))
+        .orderBy("id_a", "id_b")
     },
       Some(simhashOracleSql)),
 
@@ -4833,11 +4792,8 @@ object ScaleQueries {
     // verbatim.
     QuerySpec("st18_stream_divergence", (s, d) => {
       val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val sink = s"graft_kl_$run"
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runStreamingDivergenceAvailableNow(s, d, "documents.parquet",
-        schema, "source", "text", sink, ckpt)
+        schema, "source", "text")
         .orderBy("source")
     },
       Some("""WITH tok AS (SELECT source, unnest(list_filter(
@@ -4870,12 +4826,9 @@ object ScaleQueries {
     // batch; graded on x103's oracle restricted to the carried columns.
     QuerySpec("st17_stream_weighted_sample", (s, d) => {
       val schema = s.read.parquet(s"$d/orders.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val sink = s"graft_wsample_$run"
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runStreamingWeightedSampleAvailableNow(s, d, "orders.parquet",
         schema, "o_orderpriority", "o_orderkey", "o_totalprice",
-        salt = "esample:", k = 50, sink, ckpt)
+        salt = "esample:", k = 50)
         .select(col("g").as("o_orderpriority"),
           col("id").as("o_orderkey"), col("es_key"), col("rk"))
         .orderBy("o_orderpriority", "rk")
@@ -4906,11 +4859,8 @@ object ScaleQueries {
     // oracle verbatim.
     QuerySpec("st16_stream_cusum", (s, d) => {
       val schema = Streams.eventsFileSchema(s, d)
-      val run = streamRun.incrementAndGet()
-      val sink = s"graft_cusum_$run"
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runStreamingCusumAvailableNow(s, d, "events.parquet", schema,
-        "event_type", target = 70L, threshold = 150L, sink, ckpt)
+        "event_type", target = 70L, threshold = 150L)
         .orderBy("event_type", "day")
     },
       Some("""WITH dd AS (SELECT event_type g, CAST(ts AS DATE) dy,
@@ -4944,20 +4894,10 @@ object ScaleQueries {
     // batch operator, graded on x107's oracle verbatim.
     QuerySpec("st15_stream_passage_counts", (s, d) => {
       val docs = t(s, d, "documents").select("doc_id", "text")
-      val run = streamRun.incrementAndGet()
-      val base = java.nio.file.Files.createTempDirectory("graft_stpass").toString
       // 2 slices (r12 directive #2): cross-batch census merging is
       // exercised by the second batch; one fewer fixed-cost trigger
-      docs.repartition(2).write.parquet(s"$base/in")
-      val stream = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-      val out = Streams.runStreamingPassageCountsAvailableNow(s, stream,
-        "doc_id", "text", gramWords = 8, k = 50,
-        sinkName = s"graft_stpass_$run", checkpoint = s"$base/ckpt")
-        .localCheckpoint(true)
-      val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      out
+      replayFiles(s, docs, 2)(Streams.runStreamingPassageCountsAvailableNow(_,
+        "doc_id", "text", gramWords = 8, k = 50))
     },
       Some("""WITH toks AS (SELECT doc_id,
              |    regexp_split_to_array(trim(text), '\s+') tk
@@ -5134,12 +5074,10 @@ object ScaleQueries {
     // twin covers date canonicalization).
     QuerySpec("st19_stream_checksum", (s, d) => {
       val schema = s.read.parquet(s"$d/orders.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runStreamingChecksumAvailableNow(s, d, "orders.parquet",
         schema, "o_orderkey",
         Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"),
-        buckets = 16, s"graft_cksum_$run", ckpt)
+        buckets = 16)
         .orderBy("bucket")
     },
       Some("""WITH h AS (SELECT CAST(o_orderkey % 16 AS BIGINT) bucket,
@@ -5164,11 +5102,8 @@ object ScaleQueries {
     // centroid.
     QuerySpec("st20_stream_centroid_route", (s, d) => {
       val schema = s.read.parquet(s"$d/embeddings.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runStreamingCentroidRouteAvailableNow(s, d,
-        "embeddings.parquet", schema, "vec_id", "embedding", k = 8,
-        s"graft_route_$run", ckpt)
+        "embeddings.parquet", schema, "vec_id", "embedding", k = 8)
         .orderBy("centroid_id")
     },
       Some("""WITH c AS (SELECT CAST(vec_id AS BIGINT) cid,
@@ -5393,11 +5328,9 @@ object ScaleQueries {
     // — graded on x126's oracle verbatim.
     QuerySpec("st21_stream_k_anonymity", (s, d) => {
       val schema = s.read.parquet(s"$d/customer.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runStreamingKAnonymityAvailableNow(s, d, "customer.parquet",
         schema, Seq("c_nationkey", "c_mktsegment"),
-        (col("c_acctbal") > 0), k = 10, s"graft_kanon_$run", ckpt)
+        (col("c_acctbal") > 0), k = 10)
     },
       Some(x126OracleSql)),
 
@@ -5532,11 +5465,9 @@ object ScaleQueries {
     // shares finalized batch-side; graded on x131's oracle verbatim.
     QuerySpec("st22_stream_shard_balance", (s, d) => {
       val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runStreamingShardBalanceAvailableNow(s, d,
         "documents.parquet", schema, "doc_id", "n_chars",
-        salt = "shard:", nShards = 8, s"graft_shard_$run", ckpt)
+        salt = "shard:", nShards = 8)
         .orderBy("shard")
     },
       Some(shardBalanceOracleSql)),
@@ -5636,10 +5567,8 @@ object ScaleQueries {
     // efficiency finalized batch-side; graded on x133's oracle verbatim.
     QuerySpec("st23_stream_padding", (s, d) => {
       val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runStreamingPaddingAvailableNow(s, d, "documents.parquet",
-        schema, "text", bucketStep = 64, s"graft_pad_$run", ckpt)
+        schema, "text", bucketStep = 64)
         .orderBy("bucket_cap")
     },
       Some(paddingOracleSql)),
@@ -5695,13 +5624,10 @@ object ScaleQueries {
     // x128's oracle verbatim.
     QuerySpec("st24_stream_linkage", (s, d) => {
       val schema = s.read.parquet(s"$d/customer.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runStreamingLinkageAvailableNow(s, d, "customer.parquet",
         schema,
         df => df.withColumn("blk", substring(col("c_name"), 1, 16)),
-        "c_custkey", "c_name", Seq("c_mktsegment", "blk"), maxDist = 1,
-        s"graft_link_$run", ckpt)
+        "c_custkey", "c_name", Seq("c_mktsegment", "blk"), maxDist = 1)
         .orderBy("id_a", "id_b")
     },
       Some(linkageOracleSql)),
@@ -5785,10 +5711,8 @@ object ScaleQueries {
     // graded on x134's oracle verbatim.
     QuerySpec("st25_stream_key_skew", (s, d) => {
       val schema = s.read.parquet(s"$d/orders.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runStreamingKeySkewAvailableNow(s, d, "orders.parquet",
-        schema, "o_custkey", s"graft_skew_$run", ckpt)
+        schema, "o_custkey")
     },
       Some(keySkewOracleSql)),
 
@@ -5854,12 +5778,10 @@ object ScaleQueries {
     // leaked doc is flagged at ingest; graded on x21's oracle verbatim.
     QuerySpec("st26_stream_decontamination", (s, d) => {
       val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       val bench = t(s, d, "documents").filter(col("doc_id") % 97 === 0)
       Streams.runStreamingDecontaminationAvailableNow(s, d,
         "documents.parquet", schema, col("doc_id") % 97 =!= 0, bench,
-        "doc_id", "text", shingleWords = 4, s"graft_decon_$run", ckpt)
+        "doc_id", "text", shingleWords = 4)
         .orderBy("doc_id")
     },
       Some(decontamOracleSql)),
@@ -5966,11 +5888,8 @@ object ScaleQueries {
     // x129's oracle verbatim.
     QuerySpec("st27_stream_variance_spectrum", (s, d) => {
       val schema = s.read.parquet(s"$d/embeddings.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runStreamingVarianceSpectrumAvailableNow(s, d,
-        "embeddings.parquet", schema, "embedding",
-        s"graft_vspec_$run", ckpt)
+        "embeddings.parquet", schema, "embedding")
         .orderBy("rnk")
     },
       Some(varianceSpectrumOracleSql)),
@@ -6024,18 +5943,9 @@ object ScaleQueries {
     QuerySpec("st28_stream_ppm_decode", (s, d) => {
       val ids = t(s, d, "documents").select("doc_id")
       val media = Multimodal.synthPpm(ids, "doc_id")
-      val run = streamRun.incrementAndGet()
-      val base = java.nio.file.Files.createTempDirectory("graft_stppm")
-        .toString
-      media.repartition(3).write.parquet(s"$base/in")
-      val stream = s.readStream.schema(media.schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-      val out = Streams.runStreamingPpmDecodeAvailableNow(s, stream,
-        "doc_id", s"graft_stppm_$run", s"$base/ckpt")
-        .localCheckpoint(true)
-      val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      out.orderBy("doc_id")
+      replayFiles(s, media, 3)(
+        Streams.runStreamingPpmDecodeAvailableNow(_, "doc_id"))
+        .orderBy("doc_id")
     },
       Some(ppmDecodeOracleSql)),
 
@@ -6251,12 +6161,9 @@ object ScaleQueries {
     // oracle verbatim.
     QuerySpec("st29_stream_bootstrap_ci", (s, d) => {
       val schema = s.read.parquet(s"$d/orders.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runStreamingBootstrapCiAvailableNow(s, d, "orders.parquet",
         schema, "o_orderpriority", "o_orderkey", "o_totalprice",
-        salt = "boot:", replicas = 32, loRank = 2, hiRank = 31,
-        s"graft_boot_$run", ckpt)
+        salt = "boot:", replicas = 32, loRank = 2, hiRank = 31)
         .orderBy("o_orderpriority")
     },
       Some(bootstrapOracleSql)),
@@ -6606,16 +6513,13 @@ object ScaleQueries {
     // graded on x157's oracle verbatim.
     QuerySpec("st30_stream_calibration", (s, d) => {
       val schema = s.read.parquet(s"$d/embeddings.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       val q0 = t(s, d, "embeddings")
         .filter(col("vec_id") === 0 && col("embedding").isNotNull)
         .select(col("embedding"), col("label")).collect().head
       val qv = q0.getSeq[Float](0).map(_.toDouble).toSeq
       val qLabel = q0.getInt(1)
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "embeddings.parquet", schema,
+        onePerTrigger = true)
       val scored = raw
         .filter(col("vec_id") =!= 0 && col("embedding").isNotNull &&
           col("label").isNotNull)
@@ -6623,8 +6527,8 @@ object ScaleQueries {
           round((graft.functions.CosineSimilarity(col("embedding"),
             typedLit(qv)) + 1) / 2, 4).as("p"),
           (col("label") === qLabel).as("y"))
-      Streams.runStreamingCalibrationAvailableNow(s, scored, "p", "y",
-        nBins = 10, s"graft_calib_$run", ckpt)
+      Streams.runStreamingCalibrationAvailableNow(scored, "p", "y",
+        nBins = 10)
         .orderBy("bin")
     },
       Some(calibrationOracleSql)),
@@ -6635,18 +6539,15 @@ object ScaleQueries {
     // on x156's oracle verbatim.
     QuerySpec("st31_stream_kappa", (s, d) => {
       val schema = Streams.eventsFileSchema(s, d)
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "events.parquet", schema,
+        onePerTrigger = true)
       val u = graft.operators.ScaleOps.hashUniform(col("event_id"), "kappa:")
       val labeled = raw.filter(col("event_type").isNotNull)
         .select(col("event_type").as("rater_a"),
           when(u < 0.7, col("event_type")).otherwise(lit("other"))
             .as("rater_b"))
-      Streams.runStreamingKappaAvailableNow(s, labeled, "rater_a",
-        "rater_b", s"graft_kappa_$run", ckpt)
+      Streams.runStreamingKappaAvailableNow(labeled, "rater_a",
+        "rater_b")
     },
       Some(kappaOracleSql)),
 
@@ -7079,10 +6980,8 @@ object ScaleQueries {
     // oracle verbatim.
     QuerySpec("st32_stream_changepoint", (s, d) => {
       val schema = Streams.eventsFileSchema(s, d)
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runStreamingChangepointAvailableNow(s, d, "events.parquet",
-        schema, "event_type", s"graft_chgpt_$run", ckpt)
+        schema, "event_type")
         .orderBy("event_type")
     },
       Some(changepointOracleSql)),
@@ -7207,11 +7106,8 @@ object ScaleQueries {
     // oracle verbatim.
     QuerySpec("st33_stream_fleiss", (s, d) => {
       val schema = Streams.eventsFileSchema(s, d)
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "events.parquet", schema,
+        onePerTrigger = true)
       def deg(keep: Double, salt: String) =
         when(graft.operators.ScaleOps.hashUniform(col("event_id"), salt)
           < keep, col("event_type")).otherwise(lit("other"))
@@ -7224,8 +7120,8 @@ object ScaleQueries {
           .as("r"))
         .select(col("item"), col("r.rater").as("rater"),
           col("r.cat").as("cat"))
-      Streams.runStreamingFleissAvailableNow(s, ratings, "item", "rater",
-        "cat", s"graft_fleiss_$run", ckpt)
+      Streams.runStreamingFleissAvailableNow(ratings, "item", "rater",
+        "cat")
     },
       Some(fleissOracleSql)),
 
@@ -7311,15 +7207,12 @@ object ScaleQueries {
     // oracle verbatim.
     QuerySpec("st34_stream_weighted_pct", (s, d) => {
       val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "documents.parquet", schema,
+        onePerTrigger = true)
         .select(col("lang"), col("n_chars").cast("long").as("len"),
           col("n_chars").cast("long").as("w"))
-      Streams.runStreamingWeightedPercentilesAvailableNow(s, raw, "lang",
-        "len", "w", Seq(0.5, 0.9, 0.99), s"graft_wpct_$run", ckpt)
+      Streams.runStreamingWeightedPercentilesAvailableNow(raw, "lang",
+        "len", "w", Seq(0.5, 0.9, 0.99))
         .orderBy("lang")
     },
       Some(weightedPctOracleSql)),
@@ -7397,15 +7290,12 @@ object ScaleQueries {
     // graded on x176's oracle verbatim.
     QuerySpec("st35_stream_mad", (s, d) => {
       val schema = s.read.parquet(s"$d/orders.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "orders.parquet", schema,
+        onePerTrigger = true)
         .select(col("o_orderpriority"),
           round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-      Streams.runStreamingMadAvailableNow(s, raw, "o_orderpriority",
-        "cents", s"graft_smad_$run", ckpt)
+      Streams.runStreamingMadAvailableNow(raw, "o_orderpriority",
+        "cents")
         .orderBy("o_orderpriority")
     },
       Some(groupedMadOracleSql)),
@@ -7430,17 +7320,14 @@ object ScaleQueries {
     // on x160's oracle.
     QuerySpec("st36_stream_contracts", (s, d) => {
       val schema = s.read.parquet(s"$d/orders.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
-      Streams.runStreamingContractsAvailableNow(s, raw,
+      val raw = Streams.fileStream(s, d, "orders.parquet", schema,
+        onePerTrigger = true)
+      Streams.runStreamingContractsAvailableNow(raw,
         keyCol = "o_orderkey", notNullCol = "o_custkey",
         inSetCol = "o_orderstatus", inSetValues = Seq("O", "F", "P"),
         inRangeCol = "o_totalprice", lo = 0.0, hi = 200000.0,
         dim = t(s, d, "customer"), dimCol = "c_custkey",
-        refCol = "o_custkey", s"graft_sctr_$run", ckpt)
+        refCol = "o_custkey")
         .orderBy("contract", "detail")
     },
       Some(contractsOracleSql)),
@@ -7465,16 +7352,12 @@ object ScaleQueries {
     // finalized by conformalFromCensus; graded on x179's oracle.
     QuerySpec("st37_stream_conformal", (s, d) => {
       val schema = s.read.parquet(s"$d/orders.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "orders.parquet", schema,
+        onePerTrigger = true)
         .select(col("o_orderkey"), col("o_orderpriority"),
           round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-      Streams.runStreamingConformalAvailableNow(s, raw, "o_orderpriority",
-        "cents", "o_orderkey", salt = "cf1:", level = 0.9,
-        s"graft_scnf_$run", ckpt)
+      Streams.runStreamingConformalAvailableNow(raw, "o_orderpriority",
+        "cents", "o_orderkey", salt = "cf1:", level = 0.9)
         .orderBy("o_orderpriority")
     },
       Some(conformalOracleSql)),
@@ -7541,17 +7424,14 @@ object ScaleQueries {
     // batch-side by the shared olsFromStats; graded on x180's oracle.
     QuerySpec("st38_stream_ols2", (s, d) => {
       val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "lineitem.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "lineitem.parquet", schema,
+        onePerTrigger = true)
         .select(col("l_returnflag"),
           round(col("l_quantity"), 0).cast("long").as("qty"),
           round(col("l_discount") * 100, 0).cast("long").as("disc"),
           round(col("l_extendedprice"), 0).cast("long").as("dollars"))
-      Streams.runStreamingOls2AvailableNow(s, raw, "l_returnflag",
-        "qty", "disc", "dollars", s"graft_sols_$run", ckpt)
+      Streams.runStreamingOls2AvailableNow(raw, "l_returnflag",
+        "qty", "disc", "dollars")
         .orderBy("l_returnflag")
     },
       Some(ols2OracleSql)),
@@ -7562,15 +7442,12 @@ object ScaleQueries {
     // on x178's oracle.
     QuerySpec("st39_stream_mutual_info", (s, d) => {
       val schema = Streams.eventsFileSchema(s, d)
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "events.parquet", schema,
+        onePerTrigger = true)
       val ev = Streams.normalizeTs(raw)
         .select(col("event_type"), dayofweek(col("ts")).as("dow"))
-      Streams.runStreamingMutualInfoAvailableNow(s, ev, "event_type",
-        "dow", s"graft_smi_$run", ckpt)
+      Streams.runStreamingMutualInfoAvailableNow(ev, "event_type",
+        "dow")
     },
       Some(mutualInfoOracleSql)),
 
@@ -7591,15 +7468,12 @@ object ScaleQueries {
     // finalized by anovaFromStats; graded on x182's oracle.
     QuerySpec("st40_stream_anova", (s, d) => {
       val schema = s.read.parquet(s"$d/orders.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "orders.parquet", schema,
+        onePerTrigger = true)
         .select(col("o_orderpriority"),
           round(col("o_totalprice"), 0).cast("long").as("dollars"))
-      Streams.runStreamingAnovaAvailableNow(s, raw, "o_orderpriority",
-        "dollars", s"graft_sanv_$run", ckpt)
+      Streams.runStreamingAnovaAvailableNow(raw, "o_orderpriority",
+        "dollars")
     },
       Some(anovaOracleSql)),
 
@@ -7620,15 +7494,12 @@ object ScaleQueries {
     // x183's oracle.
     QuerySpec("st41_stream_kruskal", (s, d) => {
       val schema = s.read.parquet(s"$d/orders.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "orders.parquet", schema,
+        onePerTrigger = true)
         .select(col("o_orderpriority"),
           round(col("o_totalprice"), 0).cast("long").as("dollars"))
-      Streams.runStreamingKruskalAvailableNow(s, raw, "o_orderpriority",
-        "dollars", s"graft_skw_$run", ckpt)
+      Streams.runStreamingKruskalAvailableNow(raw, "o_orderpriority",
+        "dollars")
     },
       Some(kruskalOracleSql)),
 
@@ -7677,15 +7548,12 @@ object ScaleQueries {
     // x186's oracle.
     QuerySpec("st42_stream_brown_forsythe", (s, d) => {
       val schema = s.read.parquet(s"$d/orders.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "orders.parquet", schema,
+        onePerTrigger = true)
         .select(col("o_orderpriority"),
           round(col("o_totalprice"), 0).cast("long").as("dollars"))
-      Streams.runStreamingBrownForsytheAvailableNow(s, raw,
-        "o_orderpriority", "dollars", s"graft_sbf_$run", ckpt)
+      Streams.runStreamingBrownForsytheAvailableNow(raw,
+        "o_orderpriority", "dollars")
     },
       Some(brownForsytheOracleSql)),
 
@@ -7694,16 +7562,13 @@ object ScaleQueries {
     // operator verbatim; graded on x185's oracle.
     QuerySpec("st43_stream_kendall", (s, d) => {
       val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "lineitem.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "lineitem.parquet", schema,
+        onePerTrigger = true)
         .select(col("l_quantity").cast("long").as("qty"),
           floor(col("l_extendedprice") / lit(1000.0)).cast("long")
             .as("pricebin"))
-      Streams.runStreamingKendallAvailableNow(s, raw, "qty", "pricebin",
-        8192, s"graft_skt_$run", ckpt)
+      Streams.runStreamingKendallAvailableNow(raw, "qty", "pricebin",
+        8192)
     },
       Some(kendallOracleSql)),
 
@@ -7732,18 +7597,15 @@ object ScaleQueries {
     // x187's oracle.
     QuerySpec("st44_stream_theil_sen", (s, d) => {
       val schema = Streams.eventsFileSchema(s, d)
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "events.parquet", schema,
+        onePerTrigger = true)
       val ev = Streams.normalizeTs(raw)
         .filter(col("event_type").isNotNull && col("ts").isNotNull)
         .select(col("event_type"),
           datediff(to_date(col("ts")),
             lit(java.sql.Date.valueOf("1970-01-01"))).cast("long").as("dy"))
-      Streams.runStreamingTheilSenAvailableNow(s, ev, "event_type", "dy",
-        2048, s"graft_sts_$run", ckpt)
+      Streams.runStreamingTheilSenAvailableNow(ev, "event_type", "dy",
+        2048)
         .orderBy("grp")
     },
       Some(theilSenOracleSql)),
@@ -7765,16 +7627,13 @@ object ScaleQueries {
     // welchFromStats verbatim — graded on x188's oracle.
     QuerySpec("st45_stream_welch_t", (s, d) => {
       val schema = Streams.eventsFileSchema(s, d)
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "events.parquet", schema,
+        onePerTrigger = true)
       val ev = Streams.normalizeTs(raw)
         .select(col("event_type"),
           round(col("value") * 100, 0).cast("long").as("cents"))
-      Streams.runStreamingWelchAvailableNow(s, ev, "event_type", "cents",
-        "purchase", "view", s"graft_swt_$run", ckpt)
+      Streams.runStreamingWelchAvailableNow(ev, "event_type", "cents",
+        "purchase", "view")
     },
       Some(welchOracleSql)),
 
@@ -7805,14 +7664,10 @@ object ScaleQueries {
     // state; singleton/doubleton counts are global census properties a
     // row-at-a-time fold cannot maintain — graded on x190's oracle.
     QuerySpec("st46_stream_vocab_richness", (s, d) => {
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
-      val stream = s.readStream.schema(docsSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
-      Streams.runStreamingRichnessAvailableNow(s, stream, "text",
-        s"graft_svr_$run", ckpt)
+      val stream = Streams.fileStream(s, d, "documents.parquet", docsSchema,
+        onePerTrigger = true)
+      Streams.runStreamingRichnessAvailableNow(stream, "text")
     },
       Some(richnessOracleSql)),
 
@@ -7932,14 +7787,10 @@ object ScaleQueries {
     // finalize job) — graded on x194's oracle.
     QuerySpec("st48_stream_bloom_audit", (s, d) => {
       val schema = s.read.parquet(s"$d/orders.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val build = s.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
-      Streams.runStreamingBloomAuditAvailableNow(s, build, "o_custkey",
-        t(s, d, "customer"), "c_custkey", mBits = 4096, numHashes = 3,
-        s"graft_sbl_$run", ckpt)
+      val build = Streams.fileStream(s, d, "orders.parquet", schema,
+        onePerTrigger = true)
+      Streams.runStreamingBloomAuditAvailableNow(build, "o_custkey",
+        t(s, d, "customer"), "c_custkey", mBits = 4096, numHashes = 3)
     },
       Some(bloomOracleSql)),
 
@@ -8028,18 +7879,14 @@ object ScaleQueries {
     // whole stream state (four BIGINTs), finalized by mcnemarFromCells
     // — graded on x189's oracle.
     QuerySpec("st47_stream_mcnemar", (s, d) => {
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
-      val stream = s.readStream.schema(docsSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val stream = Streams.fileStream(s, d, "documents.parquet", docsSchema,
+        onePerTrigger = true)
         .filter(col("text").isNotNull)
         .select((length(col("text")) >= 200).as("ga"),
           (size(graft.operators.TextOps.tokens(col("text"))) >= 40)
             .as("gb"))
-      Streams.runStreamingMcnemarAvailableNow(s, stream, "ga", "gb",
-        s"graft_smn_$run", ckpt)
+      Streams.runStreamingMcnemarAvailableNow(stream, "ga", "gb")
     },
       Some(mcnemarOracleSql)),
 
@@ -8104,10 +7951,8 @@ object ScaleQueries {
     // jsdFromCounts batch-side — graded on x197's oracle.
     QuerySpec("st50_stream_jsd", (s, d) => {
       val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       Streams.runStreamingJsdAvailableNow(s, d, "documents.parquet",
-        schema, "source", "text", s"graft_jsd_$run", ckpt)
+        schema, "source", "text")
         .orderBy("source_a", "source_b")
     },
       Some(jsdOracleSql)),
@@ -9615,17 +9460,13 @@ object ScaleQueries {
     // wsrFromCensus verbatim — graded on x202's oracle.
     QuerySpec("st51_stream_wilcoxon", (s, d) => {
       val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "documents.parquet", schema,
+        onePerTrigger = true)
       val rows = raw.filter(col("text").isNotNull)
         .select(length(col("text")).cast("long").as("a"),
           (size(graft.operators.TextOps.tokens(col("text"))) * 25)
             .cast("long").as("b"))
-      Streams.runStreamingWilcoxonAvailableNow(s, rows, "a", "b",
-        s"graft_wsr_$run", ckpt)
+      Streams.runStreamingWilcoxonAvailableNow(rows, "a", "b")
     },
       Some(wsrOracleSql)),
 
@@ -9647,16 +9488,13 @@ object ScaleQueries {
     // finalized by caFromCensus verbatim; graded on x203's oracle.
     QuerySpec("st52_stream_cochran_armitage", (s, d) => {
       val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "lineitem.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "lineitem.parquet", schema,
+        onePerTrigger = true)
       val rows = raw
         .select(col("l_quantity").cast("long").as("dose"),
           (col("l_returnflag") === "R").as("ok"))
-      Streams.runStreamingCochranArmitageAvailableNow(s, rows, "dose",
-        "ok", s"graft_sca_$run", ckpt)
+      Streams.runStreamingCochranArmitageAvailableNow(rows, "dose",
+        "ok")
     },
       Some(caOracleSql)),
 
@@ -9759,15 +9597,11 @@ object ScaleQueries {
     // verbatim — graded on x205's oracle.
     QuerySpec("st53_stream_jonckheere", (s, d) => {
       val schema = s.read.parquet(s"$d/lineitem.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "lineitem.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "lineitem.parquet", schema,
+        onePerTrigger = true)
       val rows = raw.select(col("l_linenumber").as("g"),
         col("l_quantity").cast("long").as("v"))
-      Streams.runStreamingJonckheereAvailableNow(s, rows, "g", "v",
-        s"graft_jt_$run", ckpt)
+      Streams.runStreamingJonckheereAvailableNow(rows, "g", "v")
     },
       Some(jtOracleSql)),
 
@@ -9793,16 +9627,12 @@ object ScaleQueries {
     // finalized by friedmanFromCells verbatim; graded on x206's oracle.
     QuerySpec("st54_stream_friedman", (s, d) => {
       val schema = s.read.parquet(s"$d/orders.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "orders.parquet", schema,
+        onePerTrigger = true)
       val rows = raw.select(col("o_custkey").as("bl"),
         col("o_orderpriority").as("tr"),
         round(col("o_totalprice") * 100, 0).cast("long").as("v"))
-      Streams.runStreamingFriedmanAvailableNow(s, rows, "bl", "tr", "v",
-        s"graft_fr_$run", ckpt)
+      Streams.runStreamingFriedmanAvailableNow(rows, "bl", "tr", "v")
     },
       Some(friedmanOracleSql)),
 
@@ -9829,18 +9659,14 @@ object ScaleQueries {
     // on x208's oracle.
     QuerySpec("st55_stream_cvm", (s, d) => {
       val schema = s.read.parquet(s"$d/orders.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "orders.parquet", schema,
+        onePerTrigger = true)
       val rows = raw
         .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
         .select(round(col("o_totalprice") * 100, 0).cast("long")
             .as("cents"),
           (col("o_orderpriority") === "5-LOW").as("side"))
-      Streams.runStreamingCvmAvailableNow(s, rows, "cents", "side",
-        s"graft_cvm_$run", ckpt)
+      Streams.runStreamingCvmAvailableNow(rows, "cents", "side")
     },
       Some(cvmOracleSql)),
 
@@ -9865,18 +9691,15 @@ object ScaleQueries {
     // verbatim — graded on x213's oracle.
     QuerySpec("st59_stream_mood_median", (s, d) => {
       val schema = s.read.parquet(s"$d/orders.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "orders.parquet", schema,
+        onePerTrigger = true)
       val rows = raw
         .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
         .select(round(col("o_totalprice") * 100, 0).cast("long")
             .as("cents"),
           (col("o_orderpriority") === "5-LOW").as("side"))
-      Streams.runStreamingMoodMedianAvailableNow(s, rows, "cents",
-        "side", s"graft_mm_$run", ckpt)
+      Streams.runStreamingMoodMedianAvailableNow(rows, "cents",
+        "side")
     },
       Some(mmOracleSql)),
 
@@ -9915,17 +9738,14 @@ object ScaleQueries {
     // oracle.
     QuerySpec("st58_stream_log_rank", (s, d) => {
       val schema = Streams.eventsFileSchema(s, d)
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "events.parquet", schema,
+        onePerTrigger = true)
       val rows = Streams.normalizeTs(raw)
         .select(col("user_id"), col("ts"),
           (col("event_type") === "purchase").as("ev"),
           (col("user_id") % 2 === 1).as("g"))
-      Streams.runStreamingLogRankAvailableNow(s, rows, "user_id", "ts",
-        "ev", "g", s"graft_lr_$run", ckpt)
+      Streams.runStreamingLogRankAvailableNow(rows, "user_id", "ts",
+        "ev", "g")
     },
       Some(lrOracleSql)),
 
@@ -9951,18 +9771,15 @@ object ScaleQueries {
     // bmFromCensus verbatim; graded on x211's oracle.
     QuerySpec("st57_stream_brunner_munzel", (s, d) => {
       val schema = s.read.parquet(s"$d/orders.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "orders.parquet", schema,
+        onePerTrigger = true)
       val rows = raw
         .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
         .select(round(col("o_totalprice") * 100, 0).cast("long")
             .as("cents"),
           (col("o_orderpriority") === "5-LOW").as("side"))
-      Streams.runStreamingBrunnerMunzelAvailableNow(s, rows, "cents",
-        "side", s"graft_bm_$run", ckpt)
+      Streams.runStreamingBrunnerMunzelAvailableNow(rows, "cents",
+        "side")
     },
       Some(bmOracleSql)),
 
@@ -10041,18 +9858,15 @@ object ScaleQueries {
     // verbatim; graded on x209's oracle.
     QuerySpec("st56_stream_effect_sizes", (s, d) => {
       val schema = s.read.parquet(s"$d/orders.parquet").schema
-      val run = streamRun.incrementAndGet()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-      val raw = s.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(d)
+      val raw = Streams.fileStream(s, d, "orders.parquet", schema,
+        onePerTrigger = true)
       val rows = raw
         .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
         .select(round(col("o_totalprice") * 100, 0).cast("long")
             .as("cents"),
           (col("o_orderpriority") === "5-LOW").as("side"))
-      Streams.runStreamingEffectSizesAvailableNow(s, rows, "cents",
-        "side", s"graft_es_$run", ckpt)
+      Streams.runStreamingEffectSizesAvailableNow(rows, "cents",
+        "side")
     },
       Some(esOracleSql)),
 

@@ -25,9 +25,8 @@ class StreamingMultimodalSpec extends SparkSpec {
       .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
     events.write.mode("overwrite").parquet(dir)
 
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
     val out = Streams.runWindowedAggAvailableNow(spark, dir, "*.parquet",
-      events.schema, "graft_test_sink", ckpt)
+      events.schema)
       .orderBy("window_start", "event_type")
       .select($"window_start".cast("string"), $"event_type", $"n", $"total_value")
       .as[(String, String, Long, Double)].collect().toSeq
@@ -53,10 +52,8 @@ class StreamingMultimodalSpec extends SparkSpec {
     ).toDF("event_id", "ts_s", "value")
       .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
     events.write.mode("overwrite").parquet(dir)
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
     val out = Streams.runSeasonalAnomalyAvailableNow(spark, dir, "*.parquet",
-      events.schema, events, "2024-01-15 00:00:00", 2,
-      "graft_seasonal_sink", ckpt)
+      events.schema, events, "2024-01-15 00:00:00", 2)
       .orderBy("window_start")
       .select($"window_start".cast("string"), $"n", $"base_n", $"n_days",
         $"is_anomaly")
@@ -81,10 +78,9 @@ class StreamingMultimodalSpec extends SparkSpec {
     ).toDF("event_id", "ts_s", "value")
       .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
     events.write.mode("overwrite").parquet(dir)
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
     val out = Streams.runWindowedPsiAvailableNow(spark, dir, "*.parquet",
       events.schema, events, loCents = 0L, widthCents = 2000L, nBins = 18,
-      cutoff = "2024-01-15 00:00:00", "graft_psi_sink", ckpt)
+      cutoff = "2024-01-15 00:00:00")
       .orderBy("window_start")
       .select($"window_start".cast("string"), $"n_ref", $"n_cur",
         $"n_bins_used", $"n_bins_skipped", $"psi")
@@ -149,9 +145,8 @@ class StreamingMultimodalSpec extends SparkSpec {
       .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
     rows.write.mode("append").parquet(dir)
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
     val out = Streams.runStreamStreamJoinAvailableNow(spark, dir, "*.parquet",
-      rows.schema, lookbackMinutes = 30, "graft_ssjo_test", ckpt,
+      rows.schema, lookbackMinutes = 30,
       joinType = "leftOuter", watermarkDelay = "1 hour")
       .select($"purchase_id", $"view_id")
       .as[(Long, Option[Long])].collect().toSeq.sortBy(_._1)
@@ -169,11 +164,10 @@ class StreamingMultimodalSpec extends SparkSpec {
       .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
     rows.write.mode("append").parquet(dir)
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
     val cents = floor(col("value") * 100).cast("long")
     val got = Streams.runWindowedPercentilesAvailableNow(spark, dir,
       "*.parquet", rows.schema, cents, 0L, 8L, 128,
-      Seq(("p50", 0.5), ("p90", 0.9)), "graft_hist_sink", ckpt)
+      Seq(("p50", 0.5), ("p90", 0.9)))
       .orderBy("window_start")
       .select($"window_start".cast("string"), $"n_rows", $"p50", $"p90")
       .as[(String, Long, Long, Long)].collect().toSeq
@@ -207,11 +201,9 @@ class StreamingMultimodalSpec extends SparkSpec {
       .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
     rows.write.mode("append").parquet(dir)
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
     val probes = Seq(0L, 1L, 2L, 6L)
     val got = Streams.runWindowedCmsAvailableNow(spark, dir, "*.parquet",
-      rows.schema, col("user_id"), depth = 3, width = 64, probes,
-      "graft_cms_sink", ckpt)
+      rows.schema, col("user_id"), depth = 3, width = 64, probes)
       .orderBy("window_start", "probe_key")
       .select($"window_start".cast("string"), $"probe_key", $"cms_count")
       .as[(String, Long, Long)].collect().toSeq
@@ -242,9 +234,8 @@ class StreamingMultimodalSpec extends SparkSpec {
       .union(mk(1L to 2000L, "2024-01-01 11:20:00"))
     f1.write.mode("append").parquet(dir)
     f2.write.mode("append").parquet(dir)
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
     val est = Streams.runWindowedHllAvailableNow(spark, dir, "*.parquet",
-      f1.schema, "event_id", 9, "graft_hll_sink", ckpt)
+      f1.schema, "event_id", 9)
       .orderBy("window_start")
       .select($"window_start".cast("string"), $"hll_distinct")
       .as[(String, Double)].collect().toSeq
@@ -574,14 +565,66 @@ class StreamingMultimodalSpec extends SparkSpec {
       .toDF("user_id", "segment")
     val stream = spark.readStream.schema(events.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
-    val got = Streams.runStreamStaticEnrichAvailableNow(spark, stream, dim,
-      "user_id", "enrich_t", s"$base/ckpt")
+    val got = Streams.runStreamStaticEnrichAvailableNow(stream, dim,
+      "user_id")
       .orderBy("event_id")
       .select("event_id", "segment")
       .as[(Long, String)].collect().toSeq
     val want = events.join(dim, Seq("user_id")).orderBy("event_id")
       .select("event_id", "segment").as[(Long, String)].collect().toSeq
     assert(got == want) // stateless per batch — slicing cannot change the set
+  }
+
+  test("a bounded drain removes its sink view and checkpoint dir whether " +
+    "a batch fails or the drain succeeds") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // QueryStartedEvent reaches spark.streams listeners synchronously
+    // inside start(), so the drain's sink name is known before it fails
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        started.add(e.name)
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    val base = Files.createTempDirectory("graft_drain_cleanup").toString
+    val events = (1L to 6L).map(i => (i, i % 2)).toDF("event_id", "user_id")
+    events.repartition(2).write.parquet(s"$base/in")
+    val dim = Seq((0L, "even"), (1L, "odd")).toDF("user_id", "parity")
+    def stream = spark.readStream.schema(events.schema)
+      .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
+    val boom = udf { (id: Long) =>
+      if (id == 4L) throw new IllegalStateException("injected batch failure")
+      id
+    }
+    // what a drain may leave behind: its memory-sink view, and a temp
+    // checkpoint dir whose name starts with the sink name
+    def leftovers(sink: String): Seq[String] =
+      Seq(sink).filter(spark.catalog.tableExists) ++
+        new java.io.File(System.getProperty("java.io.tmpdir")).list()
+          .filter(_.startsWith(s"${sink}_"))
+    spark.streams.addListener(listener)
+    try {
+      val err = intercept[Exception](Streams.runStreamStaticEnrichAvailableNow(
+        stream.withColumn("event_id", boom(col("event_id"))), dim, "user_id"))
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage)
+          .contains("injected batch failure")), err)
+      val failed = started.poll()
+      assert(failed != null, "the failing drain never started a query")
+      assert(leftovers(failed).isEmpty, s"failed drain left $failed behind")
+      val ok = Streams.runStreamStaticEnrichAvailableNow(stream, dim, "user_id")
+      assert(ok.count() == 6L)
+      val succeeded = started.poll()
+      assert(succeeded != null && succeeded != failed)
+      assert(leftovers(succeeded).isEmpty,
+        s"successful drain left $succeeded behind")
+    } finally {
+      spark.streams.removeListener(listener)
+      val p = new org.apache.hadoop.fs.Path(base)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
   }
 
   test("streaming simhash near-dup equals the batch pair set under " +
@@ -609,9 +652,8 @@ class StreamingMultimodalSpec extends SparkSpec {
     docs.repartition(4).write.parquet(s"$dir/in")
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-    val got = Streams.runStreamingSimhashAvailableNow(spark, stream,
-      "doc_id", "text", shingleWords = 3, maxHamming = 3,
-      sinkName = "graft_stsim_test", checkpoint = s"$dir/ckpt")
+    val got = Streams.runStreamingSimhashAvailableNow(stream,
+      "doc_id", "text", shingleWords = 3, maxHamming = 3)
       .as[(Long, Long, Int)].collect().toSet
     val want = DedupOps.simhashPairs(docs, "doc_id", "text", 3, 3)
       .as[(Long, Long, Int)].collect().toSet
@@ -631,8 +673,7 @@ class StreamingMultimodalSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_stck_test").toString
     rows.repartition(4).write.parquet(s"$dir/in")
     val got = Streams.runStreamingChecksumAvailableNow(spark, s"$dir/in",
-      "*.parquet", rows.schema, "k", Seq("k", "s", "p"), buckets = 16,
-      sinkName = "graft_stck_test", checkpoint = s"$dir/ckpt")
+      "*.parquet", rows.schema, "k", Seq("k", "s", "p"), buckets = 16)
       .orderBy("bucket").as[(Long, Long, Long)].collect().toSeq
     val want = Analytics.tableChecksum(rows, "k", Seq("k", "s", "p"), 16)
       .orderBy("bucket").as[(Long, Long, Long)].collect().toSeq
@@ -657,8 +698,7 @@ class StreamingMultimodalSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_stroute_test").toString
     vecs.repartition(3).write.parquet(s"$dir/in")
     val got = Streams.runStreamingCentroidRouteAvailableNow(spark,
-      s"$dir/in", "*.parquet", vecs.schema, "vec_id", "embedding", k = 3,
-      sinkName = "graft_stroute_test", checkpoint = s"$dir/ckpt")
+      s"$dir/in", "*.parquet", vecs.schema, "vec_id", "embedding", k = 3)
       .orderBy("centroid_id").as[(Long, Long, Double)].collect().toSeq
     // c2 mean: (10000 + 9487) / 2 / 1e4 = 0.9744 (round HALF_UP)
     assert(got == Seq((0L, 2L, 1.0), (1L, 3L, 1.0), (2L, 2L, 0.9744)))
@@ -668,8 +708,7 @@ class StreamingMultimodalSpec extends SparkSpec {
       (9L, Seq(1.0f, 1.0f))).toDF("vec_id", "embedding")
     tied.coalesce(1).write.parquet(s"$dir/in2")
     val got2 = Streams.runStreamingCentroidRouteAvailableNow(spark,
-      s"$dir/in2", "*.parquet", tied.schema, "vec_id", "embedding", k = 2,
-      sinkName = "graft_stroute_test2", checkpoint = s"$dir/ckpt2")
+      s"$dir/in2", "*.parquet", tied.schema, "vec_id", "embedding", k = 2)
       .orderBy("centroid_id").as[(Long, Long, Double)].collect().toSeq
     // c0: itself (1.0) + the tied vector (0.7071) → mean 0.8536
     assert(got2 == Seq((0L, 2L, 0.8536), (1L, 1L, 1.0)))
@@ -688,8 +727,7 @@ class StreamingMultimodalSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_stka_test").toString
     rows.repartition(3).write.parquet(s"$dir/in")
     val got = Streams.runStreamingKAnonymityAvailableNow(spark, s"$dir/in",
-      "*.parquet", rows.schema, Seq("q1", "q2"), col("sv"), k = 3,
-      sinkName = "graft_stka_test", checkpoint = s"$dir/ckpt")
+      "*.parquet", rows.schema, Seq("q1", "q2"), col("sv"), k = 3)
       .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
     val want = Analytics.kAnonymity(rows, Seq("q1", "q2"), "sv", k = 3)
       .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
