@@ -28,24 +28,8 @@ object Bench {
     // envelope reproducibly; a single pass cannot.
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     require(passes >= 1, s"SPARK_GRAFT_BENCH_PASSES must be >= 1, got $passes")
-    // dev-only subset filter (comma-separated name prefixes) for A/B
-    // re-measurement of individual queries; the driver never sets it
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-    // a filtered run must never land on the official artifact path: it
-    // would overwrite the full-suite totals (and the noise_factor
-    // baseline) with a subset sum (ADVICE r15) — and naming the
-    // default path explicitly is the same mistake, so compare the
-    // RESOLVED path, not mere presence
     val defaultOut = "/root/repo/BENCH_FULL.json"
-    require(only.isEmpty || sys.env.get("SPARK_GRAFT_BENCH_OUT")
-        .exists(p => java.nio.file.Paths.get(p).toAbsolutePath !=
-          java.nio.file.Paths.get(defaultOut).toAbsolutePath),
-      "SPARK_GRAFT_BENCH_ONLY is a dev subset filter — set " +
-        "SPARK_GRAFT_BENCH_OUT to a non-default path so the filtered " +
-        "run cannot overwrite BENCH_FULL.json")
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
     // Throwaway warm pass for the cache-mode-sensitive family (r6 VERDICT
     // item 4): the streaming micro-batch queries (st*) and the
     // checkpoint-heavy near-dup/cluster queries read 1.5-2.5x slower on

@@ -20,16 +20,14 @@ object GraphOps {
     * multi-way parallelism (unlike AQE advisory-size coalescing, which
     * measured 1.5-2.4× WORSE here by collapsing expensive mid-size
     * exchanges to one task — PERF.md r9) while cutting the task count
-    * per round. At true 100 TB graph scale, raise the cap with
-    * SPARK_GRAFT_GRAPH_PARTITIONS or size the session's
-    * shuffle.partitions below it.
+    * per round. The cap is the constant 8; a narrower session keeps its
+    * own width.
     */
   private[operators] def withCappedShuffle[T](df: DataFrame)(body: => T): T = {
     val spark = df.sparkSession
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    val cap = sys.env.getOrElse("SPARK_GRAFT_GRAPH_PARTITIONS", "8").toInt
-    spark.conf.set(key, math.min(prev.toInt, cap).toString)
+    spark.conf.set(key, math.min(prev.toInt, 8).toString)
     try body finally spark.conf.set(key, prev)
   }
 
@@ -194,7 +192,7 @@ object GraphOps {
     // is node-sized and joins back once at the end. (A bloom prefilter
     // on the wedge frame was measured instead and REJECTED: the 4 MB+
     // filter literal's random probes are DRAM-latency-bound per row and
-    // cost more than the exchange they save — tools/ProfileTri.)
+    // cost more than the exchange they save — OPTIMIZATION_r18.md.)
     val ranked = graft.operators.ScaleOps.globalRankAndSum(deg, "__d",
         Seq(col("__d").asc, col("node").asc))
       .select(col("node"), col("__rank").as("__r"))

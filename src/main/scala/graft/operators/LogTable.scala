@@ -1698,7 +1698,7 @@ object LogTable {
       val rootStr = tableRoot
       // UNRESOLVED InternalRow scan (queryExecution.toRdd), not .rdd:
       // the Row-boxing conversion costs ~5× on a multi-million-row
-      // commit (measured in tools/ProfileBloom) — hashing reads the
+      // commit (measured in PERF.md, round 15) — hashing reads the
       // unsafe row directly
       val written: Array[String] = df
         .select((input_file_name().as("__f") +: usable.map(col)): _*)

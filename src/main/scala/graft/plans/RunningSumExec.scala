@@ -162,11 +162,10 @@ case class RunningSumExec(groupExprs: Seq[Expression],
     // FAILS (truncated lineage) rather than silently recomputing into
     // different partition contents than the collected offsets (r10
     // ADVICE).
-    // policy (spark.graft.runningSum.pin): "auto" re-reads when safe,
-    // "always" pins unconditionally — the memory-vs-resort trade is
-    // measured in PERF.md r11 (pinning re-reads cached sorted rows;
-    // re-reading re-runs the sort in pass 2 but never doubles storage)
-    val pinPolicy = conf.getConfString("spark.graft.runningSum.pin", "auto")
+    // Pinning a determinate lineage too (re-reading cached sorted rows
+    // instead of re-running the sort in pass 2) measured within run noise
+    // (PERF.md r11) and doubles storage, so only a nondeterministic
+    // lineage is pinned.
     val raw = child.execute()
     val grouped = boundGroups.nonEmpty
     // small-input fast path (r12 directive #3): with a single child
@@ -183,11 +182,10 @@ case class RunningSumExec(groupExprs: Seq[Expression],
     // coalesced shuffle partition with ties in the sort key can replay
     // in a different row order on task retry, reattaching cumulative
     // values to different rows, so the pin condition is evaluated here
-    // exactly as on the multi-partition path (auto + determinate map
+    // exactly as on the multi-partition path (a determinate map
     // side still skips it, keeping the x129/x134 constant-cost win).
     def pinIfNeeded(rdd: org.apache.spark.rdd.RDD[InternalRow]) =
-      if (pinPolicy != "always" &&
-          org.apache.spark.sql.graftshim.RddShim.mapSideDeterminate(rdd))
+      if (org.apache.spark.sql.graftshim.RddShim.mapSideDeterminate(rdd))
         rdd
       else rdd.map(_.copy()).localCheckpoint()
     if (raw.getNumPartitions <= 1)

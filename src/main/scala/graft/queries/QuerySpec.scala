@@ -38,13 +38,13 @@ object QuerySpec {
     * work fused to it (tokenization, hashing, chunking, shingling,
     * bootstrap weight derivation) ran on one core of the session —
     * measured 4-6× on the CDC pair and 2-3× on the bootstrap CI
-    * (tools/ProfileScanPar). Round-robins to the session's default
+    * (OPTIMIZATION_r18.md). Round-robins to the session's default
     * parallelism ONLY when the scan plans fewer partitions: at cluster
     * scale inputs span many files/row groups, the guard sees ≥ cores
     * partitions and this is a NO-OP — nothing tuned to local mode.
     * Filters and column pruning push through the round-robin exchange
     * (plan-verified: PushedFilters/ReadSchema reach the scan unchanged,
-    * tools/ProfilePushdown).
+    * OPTIMIZATION_r18.md).
     *
     * Used ONLY by queries whose pre-first-shuffle math is EXACT
     * (integer/string/md5 arithmetic — BIGINT sums, integer-ratio
@@ -73,11 +73,13 @@ object QuerySpec {
     else raw.repartition(target)
   }
 
-  /** Per-sf scratch dir for sink-roundtrip queries (M3–M6). */
+  /** Per-sf scratch dir for sink-roundtrip queries (M3–M6), under
+    * `java.io.tmpdir`. */
   def sinkDir(sfDir: String, name: String): String = {
     val sf = new java.io.File(sfDir).getName
-    val d = s"/tmp/graft_sink/$sf/$name"
-    new java.io.File(d).getParentFile.mkdirs()
-    d
+    val d = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_sink/$sf/$name")
+    d.getParentFile.mkdirs()
+    d.getPath
   }
 }

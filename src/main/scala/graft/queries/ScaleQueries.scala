@@ -48,7 +48,7 @@ object ScaleQueries {
     * measured recall@10 = 0.47 with first-k RAW vectors as centroids at
     * nprobe=4/nlist=16; the shipped operating point — trained centroids,
     * nlist=16, nprobe=12 — measures 0.936 (sf0.01) / 0.934 (sf0.1)
-    * (tools/ProfileRecall; PERF.md r10). The fit is deterministic, so the
+    * (PERF.md r10). The fit is deterministic, so the
     * k×64 rounded-double result is cached per (sfDir, k) and re-planted as
     * a local frame — each graded query pays the two Lloyd's rounds at most
     * once per process, and the collect is metadata scale.

@@ -1446,4 +1446,26 @@ class ScaleNativeSpec extends SparkSpec {
       assert(out == reference, s"parts=$parts diverged from window form")
     }
   }
+
+  test("planning-free scan-partition estimate equals the planned scan's " +
+    "partition count for every fixture table, scale and split size") {
+    import org.apache.spark.sql.graftshim.ScanShim
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    val tables = Seq("region", "nation", "customer", "supplier", "part",
+      "orders", "lineitem", "events", "documents", "embeddings")
+    val cases = for (sf <- Seq("sf0.001", "sf0.01", "sf0.1");
+                     split <- Seq("128m", "64k", "8k");
+                     t <- tables) yield (s"/root/testdata/$sf", split, t)
+    try cases.foreach { case (dir, split, t) =>
+      spark.conf.set(key, split)
+      val df = graft.queries.QuerySpec.t(spark, dir, t)
+      assert(ScanShim.estimatedScanPartitions(df)
+          .contains(df.rdd.getNumPartitions), s"$dir/$t at $split")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    assert(cases.size == 90)
+  }
 }
