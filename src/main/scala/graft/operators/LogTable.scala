@@ -9,13 +9,12 @@ import org.apache.spark.sql.types._
   * writers APPEND uniquely-named parquet files and atomically commit a
   * manifest; readers plan from the manifest, never from a directory
   * listing. That one inversion buys three properties a rename-swapped
-  * layout ([[MergeOps]] + [[TableLog.withExclusive]]) cannot offer:
+  * layout (e.g. [[MergeOps.atomicSwapWrite]]) cannot offer:
   *
   *  1. **Structural reader isolation** — the files a manifest names are
   *     immutable and retained until [[vacuum]], so a reader can never
-  *     race a writer; [[TableLog.readValidated]]'s re-plan-on-drift
-  *     loop (optimistic validation, the best a listing-planned layout
-  *     can do) becomes unnecessary here by construction. The contract
+  *     race a writer; no re-plan-on-drift loop (optimistic validation,
+  *     the best a listing-planned layout can do) is needed. The contract
   *     is Delta's: retention must exceed the longest reader
   *     (vacuum(keepLast) documents it).
   *  2. **Time travel** — [[read]] with `asOf` plans any retained
@@ -33,9 +32,9 @@ import org.apache.spark.sql.types._
   *
   * **Commit metadata is O(touch set), not O(table)** (r12 directive #1
   * — the Delta action-log split): each `_v%08d.json` records ONLY the
-  * commit's DELTA — the files it adds (under `"parts"`, so
-  * [[TableLog.snapshot]] still renders the touch set) and the
-  * `"removes"` it retires — never the full live set. Every
+  * commit's DELTA — the files it adds (under `"parts"`, grouped by
+  * partition) and the `"removes"` it retires — never the full live
+  * set. Every
   * `checkpointInterval` commits (conf
   * `spark.graft.logtable.checkpointInterval`, default 10) the full
   * reconstructed live set is written as a PARQUET checkpoint
@@ -2527,9 +2526,8 @@ object LogTable {
 
   /** OPTIMIZE: bin-pack each partition whose live set holds more than
     * one file under `targetBytes` into ~targetBytes files — the
-    * time-travel-safe compaction (vs [[MergeOps]]' rename-based
-    * compactor for listing-planned layouts): compacted rows are written
-    * as NEW files and a delta commit retires the packed inputs, so
+    * time-travel-safe compaction: compacted rows are written as NEW
+    * files and a delta commit retires the packed inputs, so
     * every prior version still reads bit-identically until [[vacuum]]
     * reclaims it, and a reader planned from the old manifest never sees
     * a file disappear. Only partitions with ≥ 2 sub-target files are
@@ -2876,8 +2874,8 @@ object LogTable {
 
   /** The live files whose zone maps can contain at least one of
     * `updates`' key tuples, when EVERY key column carries zone maps —
-    * [[merge]]'s probe pruner (r12 directive #7: the x167
-    * date-range-pruning lesson applied to copy-on-write merge). The
+    * [[merge]]'s probe pruner (r12 directive #7: partition-style
+    * pruning applied to copy-on-write merge). The
     * bound is the keys' bounding box (one metadata-scale agg over
     * `updates`), typed per column like the zones themselves. None =
     * zones cannot prune (a key column without zone maps, or a bound

@@ -31,12 +31,11 @@ object MergeOps {
     * The clock is injected (`todayOslo`) — the reference's
     * CURRENT_DATE("Europe/Oslo") is untestable unparameterized.
     *
-    * Scale: with the fact partitioned by `start_date_oslo`, the anti-join's
-    * build side is the staging window (small — days× daily volume) and
-    * broadcasts; out-of-window fact partitions are only touched if one of
-    * their ids reappears in staging, and the final write rewrites only
-    * affected date partitions (dynamic partition overwrite via
-    * [[overwriteDatePartitions]]).
+    * Scale: the anti-join's build side is the staging window (small —
+    * days× daily volume) and broadcasts. The sync service commits the
+    * result with [[atomicSwapWrite]]; on a [[LogTable]] fact the same
+    * semantics is one [[LogTable.merge]] with `deleteUnmatchedCond`,
+    * which rewrites only the files holding matched or windowed rows.
     */
   def mergeRefresh(fact: DataFrame, staging: DataFrame, days: Int,
                    todayOslo: LocalDate,
@@ -140,421 +139,6 @@ object MergeOps {
         s"(previous table preserved at $oldP)")
     fs.delete(oldP, true)
   }
-
-  /** Commit helper: rewrite only the date partitions present in `updated`
-    * (dynamic partition overwrite) — the 100 TB refresh path. The fact table
-    * must be written partitioned by `dateCol`.
-    */
-  def overwriteDatePartitions(updated: DataFrame, factPath: String,
-                              dateCol: String = "start_date_oslo"): Unit =
-    // per-writer option, not a session conf mutation — a shared session
-    // (e.g. the HTTP server) must not have every later partitioned
-    // overwrite silently switched to dynamic mode
-    updated.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(dateCol).parquet(factPath)
-
-  /** The full at-scale refresh: M1 semantics against a date-partitioned
-    * fact table, rewriting ONLY the affected partitions. Affected =
-    *   - every window date (upserts + windowed deletes), plus
-    *   - the old partitions of out-of-window fact rows whose id reappears
-    *     in the staging window (their stale copy must vanish).
-    * Untouched partitions are not rewritten (asserted in DedupMergeSpec by
-    * file-level comparison). A window partition whose rows are all deleted
-    * produces no output under dynamic overwrite, so its directory is
-    * dropped explicitly.
-    *
-    * The affected-date list is collected driver-side — it is metadata
-    * (≤ days + a handful of moved dates), not data.
-    */
-  /** Collect a frame of (possibly null) dates driver-side: metadata only —
-    * callers pass distinct partition-key frames bounded by the refresh
-    * window, never data.
-    */
-  private def dateSet(df: DataFrame, dateCol: String): (Set[java.sql.Date], Boolean) = {
-    val raw = df.select(col(dateCol)).distinct().collect().map(r => Option(r.getDate(0)))
-    (raw.flatten.toSet, raw.contains(None))
-  }
-
-  /** Partition directory names of an affected-date set — what the
-    * [[TableLog]] manifest records as a mutation's touch set. */
-  private def partDirs(dateCol: String,
-                       affected: (Set[java.sql.Date], Boolean)): Seq[String] =
-    affected._1.toSeq.map(d => s"$dateCol=$d").sorted ++
-      (if (affected._2) Seq(s"$dateCol=__HIVE_DEFAULT_PARTITION__") else Nil)
-
-  /** Drop affected partitions that the rewrite emitted no rows for —
-    * dynamic overwrite only replaces partitions present in the written
-    * frame, so an emptied partition would otherwise keep its stale files.
-    */
-  private def dropEmptiedPartitions(spark: org.apache.spark.sql.SparkSession,
-                                    factPath: String, dateCol: String,
-                                    affected: (Set[java.sql.Date], Boolean),
-                                    written: (Set[java.sql.Date], Boolean)): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val base = new org.apache.hadoop.fs.Path(factPath)
-    val fs = base.getFileSystem(conf)
-    (affected._1 -- written._1).foreach { d =>
-      fs.delete(new org.apache.hadoop.fs.Path(base, s"$dateCol=$d"), true)
-    }
-    if (affected._2 && !written._2) {
-      fs.delete(new org.apache.hadoop.fs.Path(base,
-        s"$dateCol=__HIVE_DEFAULT_PARTITION__"), true)
-    }
-  }
-
-  /** Id-hash bucket for the id→date index layout: the index is written
-    * `partitionBy(IdxBucketCol)` so a probe for a batch's ids prunes to
-    * the batch's buckets before reading a row. Int-typed so the read-back
-    * partition values (directory names) infer to the same type and the
-    * probe's literal IN prunes statically (a cast around the partition
-    * column is what breaks pruning — see [[SimilarityOps.ivfWritePartitioned]]).
-    */
-  val IdxBucketCol = "__bucket"
-
-  /** Entry-recency column of the id→date index: 0 for bootstrap/compacted
-    * entries, `batchId + 1` for per-batch appends — so compaction can keep
-    * exactly the LATEST date per id without reading the fact. Compaction
-    * resets survivors to 0, so within any one cycle (one streaming
-    * checkpoint's monotone batchIds) appends always outrank carried
-    * entries; a cycle must RESUME its checkpoint (the normal streaming
-    * contract) — a cycle that died before its sweep and was then restarted
-    * on a FRESH checkpoint would replay lower seqs than the orphaned log
-    * holds, and the index should be deleted to heal (it re-bootstraps).
-    */
-  val IdxSeqCol = "__seq"
-
-  private def idxBucket(c: Column, nBuckets: Int): Column =
-    pmod(xxhash64(c), lit(nBuckets.toLong)).cast("int")
-
-  /** Create (or replace) the id→date index from `entries` — a frame with
-    * at least (keyCol, dateCol). Used to bootstrap the index from an
-    * existing fact's two thin columns (one column-pruned scan, paid once
-    * per index LIFETIME — not per cycle; the per-cycle maintenance is
-    * [[appendIdDateIndex]] + [[compactIdDateIndex]]) and at fact
-    * creation. The repartition on the bucket column yields one task → one
-    * file per bucket at any scale — which is also what lets compaction
-    * detect "bucket grew this cycle" as "more than one data file".
-    */
-  def buildIdDateIndex(entries: DataFrame, indexPath: String,
-                       dateCol: String = "start_date_oslo",
-                       keyCol: String = "id", nBuckets: Int = 32): Unit =
-    entries.select(col(keyCol), col(dateCol))
-      .withColumn(IdxSeqCol, lit(0L))
-      .withColumn(IdxBucketCol, idxBucket(col(keyCol), nBuckets))
-      .repartition(col(IdxBucketCol))
-      .write.mode(SaveMode.Overwrite).partitionBy(IdxBucketCol)
-      .parquet(indexPath)
-
-  /** Distinct id-hash buckets of `ids` — driver-collected metadata
-    * (≤ nBuckets ints), the literal partition filter of every index probe.
-    */
-  private def idxBuckets(ids: DataFrame, keyCol: String, nBuckets: Int): Seq[Int] =
-    ids.select(idxBucket(col(keyCol), nBuckets).as(IdxBucketCol))
-      .distinct().collect().map(_.getInt(0)).toSeq
-
-  /** The stale-date probe against the id→date index: reads ONLY the index
-    * partitions (id-hash buckets) that can contain the batch's ids —
-    * PartitionFilters prune the rest before a row is read (plan-asserted
-    * in DedupMergeSpec). Replaces [[upsertPartitioned]]'s whole-fact
-    * (keyCol, dateCol) scan with O(batch-buckets / nBuckets) of a
-    * two-thin-column table.
-    */
-  private[graft] def staleDatesViaIndex(spark: org.apache.spark.sql.SparkSession,
-                                        indexPath: String, ids: DataFrame,
-                                        dateCol: String, keyCol: String,
-                                        nBuckets: Int): DataFrame = {
-    val buckets = idxBuckets(ids, keyCol, nBuckets)
-    spark.read.parquet(indexPath)
-      .filter(col(IdxBucketCol).isin(buckets: _*))
-      .join(broadcast(ids.select(col(keyCol))), Seq(keyCol))
-      .select(col(dateCol))
-  }
-
-  /** Append `rows`' (keyCol, dateCol) entries to the id→date index — the
-    * per-micro-batch maintenance, LOG-STRUCTURED: no read-modify-write,
-    * just one small partitioned append (one file per touched bucket).
-    * The index therefore accumulates SUPERSET entries within a cycle
-    * (an id that moved keeps its old date entry until compaction), which
-    * the probe tolerates by construction: an extra (id, date) entry can
-    * only mark an extra partition "affected", and rewriting an
-    * unaffected partition is correctness-neutral. The same tolerance
-    * makes foreachBatch's at-least-once replay safe — a replayed batch
-    * just re-appends duplicates (same `seq`, same rows — max-by ties are
-    * identical entries). [[sweepPartitionedWindow]] compacts the log back
-    * to exactly the fact's (id, date) projection once per cycle via
-    * [[compactIdDateIndex]] — per TOUCHED bucket, not per fact.
-    *
-    * `seq` stamps entry recency ([[IdxSeqCol]]): pass the micro-batch's
-    * `batchId + 1` so compaction can order an id's entries without
-    * reading the fact (bootstrap/compacted entries carry 0).
-    */
-  def appendIdDateIndex(rows: DataFrame, indexPath: String,
-                        dateCol: String = "start_date_oslo",
-                        keyCol: String = "id", nBuckets: Int = 32,
-                        seq: Long = 1L): Unit =
-    rows.select(col(keyCol), col(dateCol))
-      .withColumn(IdxSeqCol, lit(seq))
-      .withColumn(IdxBucketCol, idxBucket(col(keyCol), nBuckets))
-      .repartition(col(IdxBucketCol))
-      .write.mode(SaveMode.Append).partitionBy(IdxBucketCol)
-      .parquet(indexPath)
-
-  /** End-of-cycle index compaction, INCREMENTAL (r6 VERDICT item 2): only
-    * buckets whose log grew this cycle (detectable from layout — appends
-    * add one file per touched bucket, so "grew" = more than one data
-    * file) plus the buckets holding swept ids are rewritten; every other
-    * bucket's file is left byte-identical (asserted in DedupMergeSpec).
-    * Replaces the previous whole-fact [[buildIdDateIndex]] rebuild, which
-    * was a full two-column fact scan per cycle — O(fact) where this is
-    * O(churned buckets).
-    *
-    * Per touched bucket: keep each id's LATEST entry (max ([[IdxSeqCol]],
-    * date) — the bootstrap holds 0, appends hold their batch's seq, so
-    * the latest append is the fact's current date for the id), drop ids
-    * in `sweptIds`, reset survivors' seq to 0, and rewrite just those
-    * bucket partitions (dynamic overwrite + explicit delete of emptied
-    * buckets). The result is exactly the post-sweep fact's (keyCol,
-    * dateCol) projection — same contract the full rebuild had.
-    */
-  def compactIdDateIndex(spark: org.apache.spark.sql.SparkSession,
-                         indexPath: String, sweptIds: DataFrame,
-                         dateCol: String = "start_date_oslo",
-                         keyCol: String = "id", nBuckets: Int = 32): Unit = {
-    val rootP = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rootP)) return
-    // grown buckets from the directory layout: metadata-scale (nBuckets
-    // dirs), no data read
-    val grown = fs.listStatus(rootP).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$IdxBucketCol="))
-      .filter(d => fs.listStatus(d.getPath)
-        .count(f => f.getPath.getName.endsWith(".parquet")) > 1)
-      .map(_.getPath.getName.stripPrefix(s"$IdxBucketCol=").toInt)
-    val swept = idxBuckets(sweptIds, keyCol, nBuckets)
-    val touched = (grown ++ swept).distinct
-    if (touched.isEmpty) return
-    val idx = spark.read.parquet(indexPath)
-      .filter(col(IdxBucketCol).isin(touched: _*))
-    val latest = idx.groupBy(col(keyCol))
-      .agg(max_by(struct(col(dateCol), col(IdxSeqCol)),
-        struct(col(IdxSeqCol), col(dateCol))).as("__b"))
-      .select(col(keyCol), col("__b")(dateCol).as(dateCol))
-    // localCheckpoint: the overwrite below replaces partitions this plan
-    // is still reading from
-    val compacted = latest
-      .join(sweptIds.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-      .withColumn(IdxSeqCol, lit(0L))
-      .withColumn(IdxBucketCol, idxBucket(col(keyCol), nBuckets))
-      .repartition(col(IdxBucketCol))
-      .localCheckpoint(true)
-    val written = compacted.select(col(IdxBucketCol)).distinct()
-      .collect().map(_.getInt(0)).toSet
-    compacted.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(IdxBucketCol).parquet(indexPath)
-    // a touched bucket whose ids were all swept emits no rows — dynamic
-    // overwrite leaves its stale files; drop the directory explicitly
-    (touched.toSet -- written).foreach { b =>
-      fs.delete(new org.apache.hadoop.fs.Path(rootP, s"$IdxBucketCol=$b"), true)
-    }
-  }
-
-  /** Upsert (replace matched ids, insert new — NO delete) into a
-    * date-partitioned fact, rewriting only the affected partitions: the
-    * incoming rows' dates plus the old partitions of any id that moved
-    * (its stale copy must vanish from where it used to live). The
-    * per-micro-batch kernel of the partitioned streaming merge.
-    *
-    * Cost, stated precisely: WRITES are O(batch + affected partitions) —
-    * out-of-window partition files are never rewritten. The stale-id
-    * probe depends on `indexPath`:
-    *  - None: a column-pruned READ of (keyCol, dateCol) across the whole
-    *    fact per batch — a stale copy of a batch id can live under any
-    *    date, so without a secondary index the probe cannot prune. At
-    *    100 TB that is two thin columns against a broadcast id set (no
-    *    shuffle), but it is O(table ids) per batch.
-    *  - Some(path): the probe reads an id→date index bucketed by
-    *    xxhash64(id) % nBuckets ([[staleDatesViaIndex]]) — partition
-    *    pruning cuts the probe to the batch's buckets, O(batch × bucket
-    *    size). The index is bootstrapped from the fact's two thin columns
-    *    on first use, maintained here by a log-structured APPEND
-    *    ([[appendIdDateIndex]] — O(batch) per batch, no read-modify-
-    *    write), and compacted once per cycle by
-    *    [[sweepPartitionedWindow]]; the fact write path is unchanged by
-    *    the index.
-    *
-    * The index is DERIVED state, never the source of truth: within a
-    * cycle it may hold superset entries (harmless — see
-    * [[appendIdDateIndex]]), and if it is ever suspect (e.g. a crash
-    * mid-write left a partial directory, which could under-mark affected
-    * partitions), deleting the directory heals it — the next batch
-    * re-bootstraps from the fact's own columns.
-    */
-  def upsertPartitioned(spark: org.apache.spark.sql.SparkSession,
-                        factPath: String, rows: DataFrame,
-                        dateCol: String = "start_date_oslo",
-                        keyCol: String = "id",
-                        indexPath: Option[String] = None,
-                        indexBuckets: Int = 32,
-                        indexSeq: Long = 1L): Unit =
-    // serialized + manifest-recorded (TableLog): concurrent mutators of
-    // the same fact root cannot interleave partition renames
-    TableLog.withExclusive(spark, factPath, "upsert") {
-    val fact = spark.read.parquet(factPath)
-    val ids = rows.select(col(keyCol))
-    // a stale copy can live under any date (or the null partition)
-    val staleDates = indexPath match {
-      case Some(ip) =>
-        val ipP = new org.apache.hadoop.fs.Path(ip)
-        if (!ipP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(ipP))
-          buildIdDateIndex(fact, ip, dateCol, keyCol, indexBuckets)
-        staleDatesViaIndex(spark, ip, ids, dateCol, keyCol, indexBuckets)
-      case None =>
-        fact.join(broadcast(ids), Seq(keyCol)).select(col(dateCol))
-    }
-    val affected = dateSet(rows.select(col(dateCol)).unionByName(staleDates), dateCol)
-    def inAffected(c: Column): Column = {
-      val hit = coalesce(c.isin(affected._1.toSeq: _*), lit(false))
-      if (affected._2) hit || c.isNull else hit
-    }
-    // localCheckpoint: the write below overwrites partitions this plan is
-    // still reading from
-    val merged = fact.filter(inAffected(col(dateCol)))
-      .join(broadcast(ids), Seq(keyCol), "left_anti")
-      .unionByName(rows)
-      .localCheckpoint(true)
-    val written = dateSet(merged, dateCol)
-    overwriteDatePartitions(merged, factPath, dateCol)
-    dropEmptiedPartitions(spark, factPath, dateCol, affected, written)
-    indexPath.foreach(ip =>
-      appendIdDateIndex(rows, ip, dateCol, keyCol, indexBuckets, indexSeq))
-    affected
-  }(aff => partDirs(dateCol, aff))
-
-  /** Targeted id deletion against a date-partitioned fact — the
-    * right-to-be-forgotten / takedown primitive a 100 TB warehouse needs:
-    * every row whose `keyCol` is in `ids` is removed, rewriting ONLY the
-    * partitions that actually hold such a row. Partition discovery is
-    * [[upsertPartitioned]]'s stale-date probe verbatim — the bucketed
-    * id→date index (partition-pruned to the ids' buckets) when
-    * `indexPath` is set, a two-thin-column fact scan against the
-    * broadcast id set otherwise — so the deletion cost is
-    * O(affected partitions + probe), never O(table). With the index,
-    * the deleted ids' index entries are compacted away in the same call
-    * ([[compactIdDateIndex]] — per touched bucket); untouched partitions
-    * and buckets stay byte-identical (asserted in DedupMergeSpec).
-    */
-  def deletePartitioned(spark: org.apache.spark.sql.SparkSession,
-                        factPath: String, ids: DataFrame,
-                        dateCol: String = "start_date_oslo",
-                        keyCol: String = "id",
-                        indexPath: Option[String] = None,
-                        indexBuckets: Int = 32): Unit =
-    TableLog.withExclusive(spark, factPath, "delete") {
-    val fact = spark.read.parquet(factPath)
-    val idFrame = ids.select(col(keyCol)).distinct()
-      .localCheckpoint(true) // read twice (probe + anti-join) post-rewrite
-    val hitDates = indexPath match {
-      case Some(ip) =>
-        staleDatesViaIndex(spark, ip, idFrame, dateCol, keyCol, indexBuckets)
-      case None =>
-        fact.join(broadcast(idFrame), Seq(keyCol)).select(col(dateCol))
-    }
-    val affected = dateSet(hitDates, dateCol)
-    if (affected._1.nonEmpty || affected._2) {
-      def inAffected(c: Column): Column = {
-        val hit = coalesce(c.isin(affected._1.toSeq: _*), lit(false))
-        if (affected._2) hit || c.isNull else hit
-      }
-      val kept = fact.filter(inAffected(col(dateCol)))
-        .join(broadcast(idFrame), Seq(keyCol), "left_anti")
-        .localCheckpoint(true)
-      val written = dateSet(kept, dateCol)
-      overwriteDatePartitions(kept, factPath, dateCol)
-      dropEmptiedPartitions(spark, factPath, dateCol, affected, written)
-    }
-    indexPath.foreach(ip =>
-      compactIdDateIndex(spark, ip, idFrame, dateCol, keyCol, indexBuckets))
-    affected
-  }(aff => partDirs(dateCol, aff))
-
-  /** End-of-cycle windowed delete against a date-partitioned fact: drop
-    * in-window rows whose id was not asserted this cycle (`seenIds`),
-    * rewriting only window partitions. Out-of-window partitions are never
-    * read or written. With `indexPath` set, the id→date index's
-    * append-only log is compacted INCREMENTALLY ([[compactIdDateIndex]]):
-    * the swept ids' entries are removed and the cycle's superset entries
-    * collapse back to exactly the fact's (keyCol, dateCol) projection —
-    * touching only the buckets that changed, never the fact itself (the
-    * swept-id set is materialized from the window BEFORE it is
-    * overwritten; it is window-bounded, not table-bounded).
-    */
-  def sweepPartitionedWindow(spark: org.apache.spark.sql.SparkSession,
-                             factPath: String, seenIds: DataFrame,
-                             days: Int, todayOslo: LocalDate,
-                             dateCol: String = "start_date_oslo",
-                             keyCol: String = "id",
-                             indexPath: Option[String] = None,
-                             indexBuckets: Int = 32): Unit =
-    TableLog.withExclusive(spark, factPath, "sweep") {
-    val lo = lit(java.sql.Date.valueOf(todayOslo.minusDays(days.toLong)))
-    val hi = lit(java.sql.Date.valueOf(todayOslo))
-    val inWin = spark.read.parquet(factPath)
-      .filter(coalesce(col(dateCol).between(lo, hi), lit(false)))
-    val affected = dateSet(inWin, dateCol) // BETWEEN is null-false: no null slot
-    // materialize BEFORE the overwrite below invalidates the fact read
-    val sweptIds = indexPath.map(_ =>
-      inWin.join(seenIds.select(col(keyCol)), Seq(keyCol), "left_anti")
-        .select(col(keyCol)).localCheckpoint(true))
-    val kept = inWin.join(seenIds.select(col(keyCol)), Seq(keyCol), "left_semi")
-      .localCheckpoint(true)
-    val written = dateSet(kept, dateCol)
-    overwriteDatePartitions(kept, factPath, dateCol)
-    dropEmptiedPartitions(spark, factPath, dateCol, affected, written)
-    for (ip <- indexPath; sw <- sweptIds)
-      compactIdDateIndex(spark, ip, sw, dateCol, keyCol, indexBuckets)
-    affected
-  }(aff => partDirs(dateCol, aff))
-
-  def refreshPartitioned(spark: org.apache.spark.sql.SparkSession,
-                         factPath: String, staging: DataFrame, days: Int,
-                         todayOslo: LocalDate,
-                         dateCol: String = "start_date_oslo",
-                         keyCol: String = "id"): Unit =
-    TableLog.withExclusive(spark, factPath, "refresh") {
-    val lo = lit(java.sql.Date.valueOf(todayOslo.minusDays(days.toLong)))
-    val hi = lit(java.sql.Date.valueOf(todayOslo))
-    def inWindow(c: Column): Column = c.between(lo, hi)
-
-    val fact = spark.read.parquet(factPath)
-    val stagingW = staging.filter(inWindow(col(dateCol)))
-    val movedDates = fact
-      .join(broadcast(stagingW.select(col(keyCol))), Seq(keyCol))
-      .filter(!coalesce(inWindow(col(dateCol)), lit(false)))
-      .select(col(dateCol))
-    // null dates are a real partition (__HIVE_DEFAULT_PARTITION__): a
-    // null-date fact row whose id reappears in staging must have its old
-    // partition rewritten too, or the stale copy survives as a duplicate
-    val affected = dateSet(stagingW.select(col(dateCol))
-      .unionByName(fact.filter(inWindow(col(dateCol))).select(col(dateCol)))
-      .unionByName(movedDates), dateCol)
-    def inAffected(c: Column): Column = {
-      val hit = coalesce(c.isin(affected._1.toSeq: _*), lit(false))
-      if (affected._2) hit || c.isNull else hit
-    }
-
-    // localCheckpoint: materialize once — the merge plan would otherwise
-    // execute twice (writtenDates collect + the write), and the write
-    // overwrites partitions the plan is still reading from
-    val merged = mergeRefresh(fact, staging, days, todayOslo, dateCol, keyCol)
-      .filter(inAffected(col(dateCol)))
-      .localCheckpoint(true)
-    val written = dateSet(merged, dateCol)
-    overwriteDatePartitions(merged, factPath, dateCol)
-    dropEmptiedPartitions(spark, factPath, dateCol, affected, written)
-    affected
-  }(aff => partDirs(dateCol, aff))
 
   /** SCD Type 2 apply: fold a batch of updates into a slowly-changing
     * dimension that tracks attribute history as (valid_from, valid_to,
@@ -764,146 +348,5 @@ object MergeOps {
       .select(col(partCol), col(idCol), col(bytesCol),
         lit("keep").as("action"), lit(null).cast("long").as("task_id"))
     small.unionByName(kept)
-  }
-
-  /** Build a compaction-plan manifest from a REAL directory listing: one
-    * row per data file under `path` (recursing one partition level), with
-    * the immediate parent directory as the partition key. This is the
-    * production entry point for [[compactionPlan]] — the graded x104
-    * derives its manifest from table data instead so the DuckDB oracle
-    * can rebuild it, but the planner itself is the same.
-    */
-  def fileManifest(spark: org.apache.spark.sql.SparkSession,
-                   path: String): DataFrame = {
-    import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    val rows = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (f.isFile && !name.startsWith("_") && !name.startsWith("."))
-        rows += ((f.getPath.getParent.getName, name, f.getLen))
-    }
-    rows.toSeq.toDF("part", "file", "bytes")
-  }
-
-  /** Execute a compaction plan against a one-level-partitioned parquet
-    * table (`<root>/<partition>/<files>`): every `rewrite` task from
-    * [[compactionPlan]] over [[fileManifest]]'s listing is materialized as
-    * ONE compacted file, `keep` files are preserved byte-identical (moved
-    * by rename, never re-encoded), and each touched partition is committed
-    * with the same write-temp-then-swap contract as [[atomicSwapWrite]]:
-    * build `<part>.tmp` (compacted outputs + renamed keeps), move the old
-    * partition to `<part>.old`, move tmp into place, drop old. A crash
-    * leaves either the old partition, the new one, or a recoverable
-    * `<part>.old`/`<part>.tmp` pair — never nothing. Partitions whose plan
-    * is all-`keep` are NOT touched at all (no rename, no mtime change).
-    *
-    * Scale shape: the plan and listing are metadata; each task's rewrite
-    * reads only its own slices (never the healthy files). The driver loop
-    * is over TOUCHED partitions only — each iteration is an independent
-    * small job, so a 100 TB deployment can submit them concurrently from a
-    * thread pool without changing the commit protocol (swaps are per
-    * partition and do not interact).
-    *
-    * Returns the executed plan (the [[compactionPlan]] output) so callers
-    * can audit what was rewritten.
-    */
-  def compactionExecute(spark: org.apache.spark.sql.SparkSession,
-                        tableRoot: String, targetBytes: Long,
-                        smallThreshold: Long): DataFrame =
-    TableLog.withExclusive(spark, tableRoot, "compaction") {
-      compactionExecuteLocked(spark, tableRoot, targetBytes, smallThreshold)
-    }(_._2)._1
-
-  private def compactionExecuteLocked(
-      spark: org.apache.spark.sql.SparkSession, tableRoot: String,
-      targetBytes: Long, smallThreshold: Long): (DataFrame, Seq[String]) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val rootP = new org.apache.hadoop.fs.Path(tableRoot)
-    val fs = rootP.getFileSystem(conf)
-    // Crash-recovery sweep BEFORE planning (otherwise the manifest would
-    // list residue dirs as partitions): for each interrupted swap, the
-    // live partition present means any `.tmp`/`.old` sibling is residue
-    // (pre-commit build, or post-commit cleanup loss) and is discarded; a
-    // missing live partition with a `.tmp` means the crash hit between
-    // the two commit renames AFTER the build completed — promote the tmp;
-    // failing that, restore the `.old`. Mirrors atomicSwapWrite's
-    // recoverability contract.
-    fs.listStatus(rootP).map(_.getPath.getName)
-      .filter(n => n.endsWith(".tmp") || n.endsWith(".old"))
-      .map(n => n.stripSuffix(".tmp").stripSuffix(".old"))
-      .distinct.foreach { base =>
-        val baseP = new org.apache.hadoop.fs.Path(rootP, base)
-        val tmpP = new org.apache.hadoop.fs.Path(rootP, base + ".tmp")
-        val oldP = new org.apache.hadoop.fs.Path(rootP, base + ".old")
-        if (fs.exists(baseP)) { fs.delete(tmpP, true); fs.delete(oldP, true) }
-        else if (fs.exists(tmpP)) {
-          if (!fs.rename(tmpP, baseP))
-            sys.error(s"compactionExecute: could not promote $tmpP")
-          fs.delete(oldP, true)
-        } else if (fs.exists(oldP)) {
-          if (!fs.rename(oldP, baseP))
-            sys.error(s"compactionExecute: could not restore $oldP")
-        }
-      }
-    val plan = compactionPlan(fileManifest(spark, tableRoot),
-      "part", "file", "bytes", targetBytes, smallThreshold)
-      .localCheckpoint(true) // the listing must not be re-taken mid-swap
-    // metadata-scale collect: one row per FILE in the listing, grouped to
-    // (partition → task → slices); only partitions with ≥1 rewrite task
-    // of ≥2 slices are worth a swap (a 1-slice task is already compact)
-    val byPart = plan.filter(col("action") === "rewrite").collect()
-      .map(r => (r.getString(0), r.getLong(4), r.getString(1)))
-      .groupBy(_._1)
-      .map { case (p, rs) =>
-        p -> rs.groupBy(_._2).view.mapValues(_.map(_._3).toSeq.sorted).toMap }
-      .filter(_._2.exists(_._2.size >= 2))
-    for ((part, tasks) <- byPart.toSeq.sortBy(_._1)) {
-      val partP = new org.apache.hadoop.fs.Path(rootP, part)
-      val tmpP = new org.apache.hadoop.fs.Path(rootP, part + ".tmp")
-      val oldP = new org.apache.hadoop.fs.Path(rootP, part + ".old")
-      fs.delete(tmpP, true)
-      fs.mkdirs(tmpP)
-      val rewritten = tasks.flatMap { case (tid, slices) =>
-        if (slices.size < 2) None // nothing to gain; falls through as keep
-        else {
-          val work = new org.apache.hadoop.fs.Path(tmpP, s".work_$tid")
-          spark.read.parquet(slices.map(s =>
-              new org.apache.hadoop.fs.Path(partP, s).toString): _*)
-            .coalesce(1)
-            .write.mode(SaveMode.Overwrite).parquet(work.toString)
-          // lift the single data file out of Spark's job dir under a
-          // deterministic name; drop _SUCCESS etc. with the job dir
-          val data = fs.listStatus(work).map(_.getPath)
-            .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
-          require(data.length == 1,
-            s"compactionExecute: expected 1 data file in $work, got ${data.length}")
-          if (!fs.rename(data.head,
-              new org.apache.hadoop.fs.Path(tmpP, s"compacted-$tid.parquet")))
-            sys.error(s"compactionExecute: could not place compacted-$tid in $tmpP")
-          fs.delete(work, true)
-          Some(tid -> slices.toSet)
-        }
-      }
-      val rewrittenFiles = rewritten.values.flatten.toSet
-      // keep files move by RENAME — byte-identical, no re-encode, no I/O
-      fs.listStatus(partP).map(_.getPath)
-        .filter(p => !rewrittenFiles.contains(p.getName))
-        .foreach { p =>
-          if (!fs.rename(p, new org.apache.hadoop.fs.Path(tmpP, p.getName)))
-            sys.error(s"compactionExecute: could not move keep file $p")
-        }
-      fs.delete(oldP, true)
-      if (!fs.rename(partP, oldP))
-        sys.error(s"compactionExecute: could not move $partP aside")
-      if (!fs.rename(tmpP, partP))
-        sys.error(s"compactionExecute: could not move $tmpP into place " +
-          s"(partition preserved at $oldP)")
-      fs.delete(oldP, true)
-    }
-    (plan, byPart.keys.toSeq.sorted)
   }
 }

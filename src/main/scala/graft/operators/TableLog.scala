@@ -1,54 +1,31 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** Minimal transactional manifest for the partitioned fact table — the
-  * "no Delta in the jar set" gap-closer (r10 VERDICT residual #2): the
-  * repo has four independent mutators of the same physical table
-  * ([[MergeOps.refreshPartitioned]] / [[MergeOps.upsertPartitioned]] +
-  * [[MergeOps.sweepPartitionedWindow]] / [[MergeOps.deletePartitioned]] /
-  * [[MergeOps.compactionExecute]], plus [[MergeOps.atomicSwapWrite]]),
-  * each individually crash-atomic per partition, but nothing serialized
-  * two of them running concurrently — interleaved partition renames could
-  * lose an update. This object adds:
+/** The lock and version primitives [[LogTable]] builds on: where a
+  * table's commit log lives, which version is current, and the
+  * exclusive table lock that LogTable's locked operations (checkpoint,
+  * partition replace/remove, whole-table compaction, restore, vacuum)
+  * hold. LogTable itself writes and reads the commit files; nothing
+  * here commits.
   *
-  *  1. **Mutual exclusion per table root** — [[withExclusive]] wraps a
-  *     mutation in (a) a JVM-level striped lock (same-process writers,
-  *     e.g. a thread pool submitting refresh ∥ compaction, serialize
-  *     without touching the fs) and (b) an on-disk lock file created with
-  *     `FileSystem.create(overwrite = false)` (atomic create-if-absent on
-  *     HDFS and local fs — cross-process writers). A writer that dies
-  *     mid-mutation leaves a lock whose age exceeds `staleLockMs`; the
-  *     next acquirer breaks it (the mutation itself is still safe to
-  *     re-run — every wrapped mutator is idempotent per its own
-  *     crash-recovery contract). A LIVE holder heartbeats the lock's
-  *     mtime at staleLockMs/4, so a slow mutation is never mistaken for
-  *     a dead one — only a truly crashed writer's lock ages past the
-  *     break threshold. Object stores without atomic create
-  *     (e.g. S3) need a coordination service here — the exact caveat
+  *  1. **Commit log location and version** — commits are
+  *     `<root>/_graft_log/_v%08d.json` (leading underscore: Spark's
+  *     file index treats the directory as hidden). [[currentVersion]]
+  *     is the highest committed version, 0 before the first commit.
+  *  2. **Exclusive table lock** — [[withLock]] runs a body under (a) a
+  *     JVM-level lock per normalized root, so same-process writers
+  *     serialize without touching the file system, and (b) an on-disk
+  *     lock file created with `FileSystem.create(overwrite = false)`
+  *     (atomic create-if-absent on HDFS and the local file system), so
+  *     writers in other processes serialize too. A writer that dies
+  *     while holding the lock leaves a file whose age exceeds
+  *     `staleLockMs`; the next acquirer breaks it. A LIVE holder
+  *     heartbeats the lock's mtime every staleLockMs/4, so a slow body
+  *     is never mistaken for a dead one. Object stores without atomic
+  *     create (e.g. S3) need a coordination service here — the caveat
   *     Delta's LogStore documents; HDFS-compatible stores work as-is.
-  *  2. **A sequenced commit manifest** — after the mutation, [[record]]
-  *     writes `_graft_log/_v%08d.json` (leading underscore: Spark's file
-  *     index and [[MergeOps.fileManifest]] both ignore it as hidden)
-  *     holding the action name, the touched partitions, and the LIVE data
-  *     files (name + length) of every touched partition at commit time.
-  *     Versions are dense and monotone under the lock; the log IS the
-  *     serialization witness — per-partition last-writer-wins is readable
-  *     straight off it ([[snapshot]]).
-  *  3. **Stale-reader safety** — [[validateSnapshot]] re-lists the table
-  *     and diffs it against the latest committed manifest: a reader that
-  *     captured a plan before a concurrent swap can detect the drift
-  *     (files vanished / appeared / changed length) and re-plan, instead
-  *     of failing mid-scan on a deleted file. This is optimistic read
-  *     validation — the cheap half of snapshot isolation, which is all a
-  *     rename-swapped layout can offer without copy-on-write file
-  *     retention.
-  *
-  * Scale shape: everything here is metadata — the lock is one file, a
-  * commit is one JSON of the touched partitions' listings (bounded by the
-  * mutation's own touch set, never the table), and the log listing is
-  * O(commits) (compact with [[truncateLog]] — keeping only the latest
-  * manifest preserves every guarantee; history is an audit convenience).
+  *  3. **A commit-race seam for tests** — [[dmlCommitHook]].
   */
 object TableLog {
 
@@ -101,8 +78,11 @@ object TableLog {
           val age = if (staleMtime < 0) -1L
             else System.currentTimeMillis() - staleMtime
           if (age > staleLockMs) {
-            // dead holder: every wrapped mutator is crash-recoverable, so
-            // breaking the lock is safe — but break carefully. The naive
+            // dead holder: LogTable's locked operations publish through
+            // one atomic commit-file create (vacuum only deletes files no
+            // retained version references), so a holder that died left
+            // no half-made commit and breaking the lock is safe — but
+            // break carefully. The naive
             // delete-and-re-race let two waiters who BOTH observed the
             // stale lock each delete: waiter B (acting on its earlier
             // stat) could remove waiter A's freshly created lock and both
@@ -151,64 +131,18 @@ object TableLog {
           (p.getName, fs.getFileStatus(p).getLen) }
       .sortBy(_._1).toSeq
 
-  /** Append commit version N+1 recording `action` + the touched
-    * partitions' live listings. MUST be called while holding the lock
-    * (withExclusive does); asserts version density as the serialization
-    * witness.
+  /** Run `body` under the table's exclusive lock: the JVM lock for
+    * `tableRoot`, then the on-disk lock file (heartbeat while held,
+    * stale-lock break after `staleLockMs`), both released when `body`
+    * returns or throws. Waits up to `waitMs` for a live holder. Commits
+    * nothing: [[LogTable]]'s locked operations write their own commit
+    * inside `body`.
     */
-  private def record(spark: SparkSession, tableRoot: String, action: String,
-                     touchedParts: Seq[String]): Long = {
-    val (fs, root) = fsFor(spark, tableRoot)
-    val v = currentVersion(spark, tableRoot) + 1
-    val parts = touchedParts.distinct.sorted.map { name =>
-      val files = liveFiles(fs, new org.apache.hadoop.fs.Path(root, name))
-        .map { case (f, len) =>
-          s"""{"file":${graft.JsonUtil.jstr(f)},"bytes":$len}""" }
-        .mkString("[", ",", "]")
-      s"""{"part":${graft.JsonUtil.jstr(name)},"files":$files}"""
-    }.mkString("[", ",", "]")
-    val body = s"""{"version":$v,"action":${graft.JsonUtil.jstr(action)},""" +
-      s""""ts":${System.currentTimeMillis()},"parts":$parts}"""
-    val finalP = new org.apache.hadoop.fs.Path(logDir(root),
-      f"_v$v%08d.json")
-    val tmpP = new org.apache.hadoop.fs.Path(logDir(root),
-      f"._v$v%08d.json.tmp")
-    val out = fs.create(tmpP, true)
-    out.write(body.getBytes("UTF-8"))
-    out.close()
-    // under the lock this rename cannot race; a false return means the
-    // invariant broke (an unserialized writer) — fail loudly
-    if (!fs.rename(tmpP, finalP))
-      sys.error(s"TableLog: commit $finalP already exists — concurrent " +
-        "unserialized writer detected")
-    v
-  }
-
-  /** Run `body` (a table mutation) under the table's exclusive lock, then
-    * commit a manifest entry for `touchedParts` (either given up front,
-    * or derived from the body's result via `touched`). Returns the body's
-    * result.
-    */
-  def withExclusive[T](spark: SparkSession, tableRoot: String,
-                       action: String, waitMs: Long = 300000L,
-                       staleLockMs: Long = 600000L)
-                      (body: => T)(touched: T => Seq[String]): T =
-    withLock(spark, tableRoot, action, waitMs, staleLockMs) {
-      val r = body
-      record(spark, tableRoot, action, touched(r))
-      r
-    }
-
-  /** The exclusive-lock wrapper alone (JVM striped lock + atomic-create
-    * fs lock with heartbeat + stale-break) WITHOUT the directory-listing
-    * manifest commit — the primitive [[LogTable]]'s manifest-native
-    * commits build on (they record explicit file sets, not listings).
-    */
-  private[operators] def withLock[T](spark: SparkSession, tableRoot: String,
-                                     action: String,
-                                     waitMs: Long = 300000L,
-                                     staleLockMs: Long = 600000L)
-                                    (body: => T): T = {
+  private[graft] def withLock[T](spark: SparkSession, tableRoot: String,
+                                 action: String,
+                                 waitMs: Long = 300000L,
+                                 staleLockMs: Long = 600000L)
+                                (body: => T): T = {
     val (fs, root) = fsFor(spark, tableRoot)
     val key = fs.makeQualified(root).toString
     val jl = jvmLocks.computeIfAbsent(key,
@@ -238,160 +172,5 @@ object TableLog {
         fs.delete(lockP, false)
       }
     } finally jl.unlock()
-  }
-
-  /** The commit log as a frame: (version, action, partition, file,
-    * bytes) — one row per recorded live file (a commit touching no
-    * partitions emits one row with null partition). Audit surface; the
-    * per-partition LAST writer is `max_by(action, version)` grouped by
-    * partition.
-    */
-  def snapshot(spark: SparkSession, tableRoot: String): DataFrame = {
-    import spark.implicits._
-    val (fs, root) = fsFor(spark, tableRoot)
-    val ld = logDir(root)
-    val rows = scala.collection.mutable.ArrayBuffer[
-      (Long, String, Option[String], Option[String], Option[Long])]()
-    if (fs.exists(ld)) {
-      fs.listStatus(ld).map(_.getPath).sortBy(_.getName)
-        .filter(p => p.getName.startsWith("_v") &&
-          p.getName.endsWith(".json"))
-        .foreach { p =>
-          val in = fs.open(p)
-          val body = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .mkString finally in.close()
-          val v = p.getName.stripPrefix("_v").stripSuffix(".json").toLong
-          val action = "\"action\":\"([^\"]*)\"".r.findFirstMatchIn(body)
-            .map(_.group(1)).getOrElse("")
-          val partRe =
-            "\\{\"part\":\"([^\"]*)\",\"files\":\\[([^\\]]*)\\]\\}".r
-          val fileRe = "\\{\"file\":\"([^\"]*)\",\"bytes\":(\\d+)\\}".r
-          val matches = partRe.findAllMatchIn(body).toSeq
-          if (matches.isEmpty) rows += ((v, action, None, None, None))
-          else matches.foreach { m =>
-            val part = m.group(1)
-            val files = fileRe.findAllMatchIn(m.group(2)).toSeq
-            if (files.isEmpty) rows += ((v, action, Some(part), None, None))
-            else files.foreach(fm =>
-              rows += ((v, action, Some(part), Some(fm.group(1)),
-                Some(fm.group(2).toLong))))
-          }
-        }
-    }
-    rows.toSeq.toDF("version", "action", "partition", "file", "bytes")
-  }
-
-  /** Stale-reader validation: diff the latest manifest's recorded files
-    * for its touched partitions against the CURRENT fs listing. Empty
-    * result = the snapshot a reader planned against is still live;
-    * non-empty rows name the drifted files (status: missing / new /
-    * resized) so the reader re-plans instead of crashing mid-scan.
-    */
-  def validateSnapshot(spark: SparkSession, tableRoot: String): DataFrame = {
-    import spark.implicits._
-    val (fs, root) = fsFor(spark, tableRoot)
-    val snap = snapshot(spark, tableRoot).collect()
-    val drift = scala.collection.mutable.ArrayBuffer[
-      (String, String, String)]()
-    if (snap.nonEmpty) {
-      val latest = snap.map(_.getLong(0)).max
-      val touched = snap.filter(r => r.getLong(0) == latest &&
-        !r.isNullAt(2))
-      touched.map(_.getString(2)).distinct.foreach { part =>
-        val recorded = touched.filter(r => r.getString(2) == part &&
-            !r.isNullAt(3))
-          .map(r => r.getString(3) -> r.getLong(4)).toMap
-        val live = liveFiles(fs,
-          new org.apache.hadoop.fs.Path(root, part)).toMap
-        (recorded.keySet -- live.keySet)
-          .foreach(f => drift += ((part, f, "missing")))
-        (live.keySet -- recorded.keySet)
-          .foreach(f => drift += ((part, f, "new")))
-        (recorded.keySet & live.keySet)
-          .filter(f => recorded(f) != live(f))
-          .foreach(f => drift += ((part, f, "resized")))
-      }
-    }
-    drift.toSeq.toDF("partition", "file", "status")
-  }
-
-  /** Read-side isolation (r12 directive #4): run `plan` (a read of the
-    * table under `tableRoot`), MATERIALIZE it eagerly, and only return
-    * it if no commit landed while the scan ran. A reader racing a
-    * concurrent swap/compaction either (a) trips a file-not-found as
-    * the mutator renames files out from under the planned listing, or
-    * (b) completes against a half-swapped listing — case (a) is caught
-    * and case (b) is detected by the version watermark moving between
-    * plan time and scan end; both re-plan against the new snapshot
-    * instead of surfacing FileNotFoundException to the caller. The
-    * localCheckpoint is what makes the check sound: after it returns,
-    * the rows live in block storage and no LATER mutation can touch
-    * them (lazy frames would re-list files at every downstream action).
-    *
-    * Retention interplay: [[truncateLog]] only deletes old MANIFESTS,
-    * never data files, so a reader mid-scan is unaffected by log
-    * truncation; `currentVersion` stays monotonic because truncation
-    * always keeps the newest manifest (keep >= 1 is enforced). The
-    * stale-reader grace window is therefore the mutators' own:
-    * partition swaps rename the previous files into the partition's
-    * trash dir rather than deleting in place, and a reader that loses
-    * the race simply retries here — `maxAttempts` bounds livelock under
-    * constant churn (default 5; a table being mutated faster than it
-    * can be scanned five times over has no consistent read point to
-    * offer, and the loud error beats silently torn rows).
-    */
-  def readValidated(spark: SparkSession, tableRoot: String,
-                    maxAttempts: Int = 5)(plan: => DataFrame): DataFrame = {
-    require(maxAttempts >= 1, s"maxAttempts must be >= 1 (got $maxAttempts)")
-    var attempt = 0
-    var lastDrift = ""
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val v0 = currentVersion(spark, tableRoot)
-      try {
-        val out = plan.localCheckpoint(true)
-        val v1 = currentVersion(spark, tableRoot)
-        if (v1 == v0) return out
-        lastDrift = s"version moved $v0 -> $v1 mid-scan"
-        out.unpersist()
-      } catch {
-        case e: Throwable if isFileDrift(e) =>
-          lastDrift = s"file drift: ${e.getMessage}"
-      }
-    }
-    sys.error(s"TableLog.readValidated($tableRoot): no consistent " +
-      s"snapshot in $maxAttempts attempts (last: $lastDrift)")
-  }
-
-  /** A scan failure caused by files moving underneath the planned
-    * listing (the re-plannable kind), vs a genuine error to propagate. */
-  private def isFileDrift(e: Throwable): Boolean = {
-    var c: Throwable = e
-    var seen = 0
-    while (c != null && seen < 16) {
-      if (c.isInstanceOf[java.io.FileNotFoundException]) return true
-      val m = Option(c.getMessage).getOrElse("")
-      if (m.contains("FileNotFoundException") ||
-          m.contains("does not exist")) return true
-      c = if (c.getCause eq c) null else c.getCause
-      seen += 1
-    }
-    false
-  }
-
-  /** Keep only the newest `keep` manifests (the latest one preserves
-    * every guarantee; history is audit sugar). */
-  def truncateLog(spark: SparkSession, tableRoot: String,
-                  keep: Int = 100): Unit = {
-    require(keep >= 1, s"keep must be >= 1 (got $keep)")
-    val (fs, root) = fsFor(spark, tableRoot)
-    val ld = logDir(root)
-    if (fs.exists(ld)) {
-      val vs = fs.listStatus(ld).map(_.getPath)
-        .filter(p => p.getName.startsWith("_v") &&
-          p.getName.endsWith(".json"))
-        .sortBy(_.getName)
-      vs.dropRight(keep).foreach(fs.delete(_, false))
-    }
   }
 }

@@ -83,8 +83,10 @@ object HttpApi {
           val out = capture { Main.run(spark, "health", params) }
           respond(ex, 200,
             s"""{"status":"healthy","service":"$Service","version":"$Version","detail":${jsonStr(out)}}""")
-        case ("POST", p) if p.startsWith("/sync/") =>
-          val cmd = p.stripPrefix("/sync/")
+        // only the six declared sync routes run a pipeline; any other
+        // /sync/<x> (health, describe, …) is an undeclared route and gets
+        // the 404 below, as Flask answers it (main.py:22-207)
+        case ("POST", s"/sync/$cmd") if SyncCommands(cmd) =>
           try {
             val out = capture { Main.run(spark, cmd, params) }
             respond(ex, 200, s"""{"status":"success",${modeFields(cmd, params)}""" +
@@ -103,6 +105,9 @@ object HttpApi {
           jsonStr(Option(e.getMessage).getOrElse(e.getClass.getName))}}""")
     }
   }
+
+  private val SyncCommands =
+    Set("refresh", "full_reindex", "lists", "tasks", "accounts", "apps")
 
   private val Service = "graft-spark-sync"
   private val Version = "2.0.0"

@@ -71,6 +71,8 @@ object Main {
         val merged =
           if (cmd == "refresh") MergeOps.mergeRefresh(fact, staging, days, today)
           else MergeOps.mergeFullReindex(fact, staging)
+        // stays a whole-table swap: on LogTable (date-partitioned, ~4 rows a day
+        // → hundreds of one-file partitions) refresh measured 1.5 → 8.8 s, 4 cores
         MergeOps.atomicSwapWrite(spark, merged, s"$wh/fact_time_entries")
         println(s"$cmd: fact rows = " +
           spark.read.parquet(s"$wh/fact_time_entries").count())

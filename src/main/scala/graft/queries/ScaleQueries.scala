@@ -56,19 +56,12 @@ object ScaleQueries {
   private val centCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Int), Array[(Long, Seq[Double])]]()
 
-  /** Per-process pristine fact+index templates for x167 (the st4b
-    * fixture-template pattern: deterministic inputs build once, each run
-    * mutates its own local-fs copy).
-    */
-  private val deleteTemplates =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Per-process pristine LogTable templates (the same st4b/x167
-    * fixture-template pattern): each LogTable query's PRE-mutation
-    * table builds once per (sfDir, query) — manifests store only
-    * root-relative file names, so the directory is position-independent
-    * — and every graded pass either reads the template directly
-    * (read-only queries) or mutates its own local-fs copy. Bench's
+  /** Per-process pristine LogTable templates (the st4 fixture-template
+    * pattern): each LogTable query's PRE-mutation table builds once per
+    * (sfDir, query) — manifests store only root-relative file names, so
+    * the directory is position-independent — and every graded pass
+    * either reads the template directly (read-only queries) or mutates
+    * its own local-fs copy. Bench's
     * median-of-3 passes then price the OPERATOR, not three rebuilds of
     * the same deterministic fixture. */
   private val logTableTemplates =
@@ -4395,9 +4388,7 @@ object ScaleQueries {
     // group each partition's sub-threshold slices into ~target-byte
     // rewrite tasks (size-desc first-fit via window prefix sum, tasks
     // never span partitions), keep healthy slices untouched. The graded
-    // manifest derives from documents data so the oracle can rebuild it;
-    // MergeOps.fileManifest is the real-FS entry point (tested on an
-    // actual small-file directory in DedupMergeSpec).
+    // manifest derives from documents data so the oracle can rebuild it.
     QuerySpec("x104_compaction_plan", (s, d) => {
       val slices = t(s, d, "documents")
         .groupBy(col("source"), (col("doc_id") % 50).as("slice_id"))
@@ -6874,54 +6865,35 @@ object ScaleQueries {
              |FROM m ORDER BY doc_id, frame_idx""".stripMargin)),
 
     // Targeted id deletion (x167): the right-to-be-forgotten primitive —
-    // rows of the requested ids vanish from a date-partitioned fact by
-    // rewriting ONLY the partitions the id->date index probes out;
-    // deleted ids' index entries compact away in the same call. Oracle =
-    // the surviving projection. Fixture accounting (the st4b template
-    // pattern): the pristine fact + index build once per process, each
-    // graded run deletes against its own local-fs copy.
+    // rows of the requested ids vanish from a LogTable fact in one
+    // commit through merge's delete-only form (`deleteMatchedKeys`, the
+    // path SQL `MERGE … WHEN MATCHED THEN DELETE` takes). The fact
+    // declares a bloom sidecar on `id`, so the probe reads only the
+    // files that may hold a requested id. Oracle = the surviving
+    // projection. Fixture accounting: the pristine table builds once per
+    // process, each graded run deletes against its own local-fs copy.
     QuerySpec("x167_targeted_delete", (s, d) => {
-      val conf = s.sparkContext.hadoopConfiguration
       val ev = t(s, d, "events")
       val fact = ev.select(col("event_id").as("id"), col("ts"),
         graft.functions.Coercers.osloDate(col("ts")).as("start_date_oslo"),
         col("event_type"), col("value"))
-      val tpl = deleteTemplates.computeIfAbsent(d, _ => {
-        val dir = java.nio.file.Files.createTempDirectory("graft_del_tpl").toString
-        fact.write.partitionBy("start_date_oslo").parquet(s"$dir/fact")
-        // 8 index buckets at this SF (default 32): ~240 deleted ids per
-        // bucket either way, but 4x fewer files to probe + compact —
-        // bucket count is a layout knob sized to the table, not a
-        // semantic (oracle-invisible)
-        graft.operators.MergeOps.buildIdDateIndex(
-          s.read.parquet(s"$dir/fact"), s"$dir/idx", nBuckets = 8)
-        dir
-      })
-      val base = java.nio.file.Files.createTempDirectory("graft_del").toString
-      val fs = new org.apache.hadoop.fs.Path(base).getFileSystem(conf)
-      for (part <- Seq("fact", "idx"))
-        org.apache.hadoop.fs.FileUtil.copy(fs,
-          new org.apache.hadoop.fs.Path(s"$tpl/$part"), fs,
-          new org.apache.hadoop.fs.Path(s"$base/$part"), false, conf)
-      // r12: the requested ids live in the first week only, so the
-      // index probe prunes 23 of the 31 date partitions — the previous
-      // all-dates id set rewrote EVERY partition, which demonstrated
-      // nothing of the targeting and priced the query as a full rebuild
+      val base = logTableCopy(s, d, "x167")(dir =>
+        graft.operators.LogTable.init(fact, dir, bloomCols = Seq("id")))
+      // the requested ids live in the first week only, so most files
+      // hold none of them and stay live untouched
       val ids = fact.filter(col("id") % 13 === 0 &&
         col("start_date_oslo") <= lit(java.sql.Date.valueOf("2024-01-08")))
         .select("id")
-      graft.operators.MergeOps.deletePartitioned(s, s"$base/fact", ids,
-        indexPath = Some(s"$base/idx"), indexBuckets = 8)
-      // read-side isolation (r12): plan + materialize through the
-      // table's commit log so a racing mutator would re-plan, not crash
-      val out = graft.operators.TableLog.readValidated(s, s"$base/fact") {
-        s.read.parquet(s"$base/fact")
-          .select(col("id"), col("ts"),
-            col("start_date_oslo").cast("string").as("start_date_oslo"),
-            col("event_type"), col("value"))
-      }
+      graft.operators.LogTable.merge(s, base, fact.limit(0), Seq("id"),
+        deleteMatchedKeys = Some(ids))
+      val out = graft.operators.LogTable.read(s, base)
+        .select(col("id"), col("ts"),
+          col("start_date_oslo").cast("string").as("start_date_oslo"),
+          col("event_type"), col("value"))
+        .localCheckpoint(true)
       val p = new org.apache.hadoop.fs.Path(base)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+      p.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .delete(p.getParent, true)
       out.orderBy("id")
     },
       Some("""SELECT event_id id, ts,

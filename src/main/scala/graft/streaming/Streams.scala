@@ -1018,180 +1018,6 @@ object Streams {
     q.awaitTermination()
   }
 
-  /** Streaming M1 for an INCREMENTALLY SLICED staging feed — the exactness
-    * proof behind st4. [[streamingMerge]] applies the full windowed-delete
-    * MERGE per micro-batch, which is correct only when each batch is a
-    * complete staging snapshot (the reference's per-fetch loop): slicing
-    * one snapshot across batches would let each batch's windowed delete
-    * wipe the previous batches' upserts, keeping only the LAST slice.
-    * This variant decomposes M1 into the pieces that commute with
-    * micro-batch slicing:
-    *
-    *  - per batch: filter to the refresh window W, upsert (replace
-    *    matched ids, insert new — no delete), and append the batch's ids
-    *    to a seen-ids side table (an id column only — metadata-sized
-    *    relative to the data);
-    *  - after the stream drains: ONE windowed sweep deletes fact rows
-    *    with date ∈ W whose id was never asserted this cycle.
-    *
-    * For staging sliced arbitrarily across batches (each id in one slice,
-    * as any partitioned replay of a deduped snapshot gives), the final
-    * fact equals the single-shot `MergeOps.mergeRefresh` byte-for-byte:
-    * upserts compose per id, and the deferred sweep sees the union of all
-    * slices' ids — graded by st4 against the SAME DuckDB oracle as
-    * m1_merge_refresh. If an id appears in several slices, the last slice
-    * wins (the stream's arrival-order analogue of D1 keep-latest).
-    */
-  def streamingMergeIncremental(spark: SparkSession, entries: DataFrame,
-                                factPath: String, seenIdsPath: String,
-                                days: Int, todayOslo: LocalDate,
-                                checkpoint: String,
-                                dateCol: String = "start_date_oslo",
-                                keyCol: String = "id",
-                                prepBatch: DataFrame => DataFrame = identity): Unit = {
-    val lo = lit(java.sql.Date.valueOf(todayOslo.minusDays(days.toLong)))
-    val hi = lit(java.sql.Date.valueOf(todayOslo))
-    def inWindow(c: org.apache.spark.sql.Column) =
-      coalesce(c.between(lo, hi), lit(false))
-    val q = entries.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val bw = prepBatch(batch).filter(inWindow(col(dateCol)))
-        bw.select(col(keyCol)).write.mode(SaveMode.Append).parquet(seenIdsPath)
-        val conf = spark.sparkContext.hadoopConfiguration
-        val factP = new org.apache.hadoop.fs.Path(factPath)
-        val fs = factP.getFileSystem(conf)
-        val fact =
-          if (fs.exists(factP)) spark.read.parquet(factPath)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], bw.schema)
-        val upserted = fact
-          .join(broadcast(bw.select(col(keyCol))), Seq(keyCol), "left_anti")
-          .unionByName(bw)
-        MergeOps.atomicSwapWrite(spark, upserted, factPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // end-of-cycle sweep: in-window fact rows must have been asserted by
-    // some slice this cycle; out-of-window (and null-date) rows are history
-    // and survive untouched — same guard as MergeOps.mergeRefresh
-    val fact = spark.read.parquet(factPath)
-    val seen = spark.read.parquet(seenIdsPath).distinct()
-    val swept = fact.filter(!inWindow(col(dateCol)))
-      .unionByName(fact.filter(inWindow(col(dateCol)))
-        .join(seen, Seq(keyCol), "left_semi"))
-    MergeOps.atomicSwapWrite(spark, swept, factPath)
-  }
-
-  /** [[streamingMergeIncremental]] against a DATE-PARTITIONED fact — the
-    * scale path, graded as st4. The full-table variant above swaps the
-    * whole fact per micro-batch (read + rewrite — O(table) per batch,
-    * which at 100 TB is the whole table once per trigger). Here each batch
-    * runs [[MergeOps.upsertPartitioned]] — rewriting only the batch's date
-    * partitions plus the old partitions of moved ids — and the end-of-cycle
-    * windowed delete runs [[MergeOps.sweepPartitionedWindow]] over window
-    * partitions only. Per-batch WRITE cost: O(batch + affected
-    * partitions); out-of-window partition FILES are never rewritten
-    * (file-level assertion in DedupMergeSpec). The per-batch stale-id
-    * probe either reads (keyCol, dateCol) — column-pruned — across all
-    * partitions, or, with `indexPath` set, probes a bucketed id→date
-    * index with partition pruning; see [[MergeOps.upsertPartitioned]] for
-    * the precise cost statement. Same slicing contract and same final
-    * fact as the full-table variant: byte-equal to single-shot
-    * `MergeOps.mergeRefresh`, graded against the identical m1 oracle.
-    *
-    * The fact at `factPath` must be written `partitionBy(dateCol)`; if the
-    * path does not exist yet, the first batch creates it.
-    *
-    * `indexPath`: optional id→date index (see
-    * [[MergeOps.upsertPartitioned]]) — bootstrapped from the fact on the
-    * first batch, probed instead of the whole-fact (keyCol, dateCol) scan,
-    * and maintained by both the per-batch upsert and the end-of-cycle
-    * sweep. This is the at-scale configuration: per-batch READ cost drops
-    * from O(table ids) to O(batch × bucket size).
-    *
-    * `allowEmptyCycle`: a cycle that asserted NO in-window ids against a
-    * pre-existing fact is, by the window contract, a directive to delete
-    * every in-window row — but an upstream outage produces exactly the
-    * same empty feed. Refuse to sweep (fail loudly) unless the caller
-    * explicitly opts in to empty-cycle deletes.
-    */
-  def streamingMergeIncrementalPartitioned(spark: SparkSession, entries: DataFrame,
-                                           factPath: String, seenIdsPath: String,
-                                           days: Int, todayOslo: LocalDate,
-                                           checkpoint: String,
-                                           dateCol: String = "start_date_oslo",
-                                           keyCol: String = "id",
-                                           prepBatch: DataFrame => DataFrame = identity,
-                                           indexPath: Option[String] = None,
-                                           allowEmptyCycle: Boolean = false): Unit = {
-    val lo = lit(java.sql.Date.valueOf(todayOslo.minusDays(days.toLong)))
-    val hi = lit(java.sql.Date.valueOf(todayOslo))
-    def inWindow(c: org.apache.spark.sql.Column) =
-      coalesce(c.between(lo, hi), lit(false))
-    val q = entries.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // materialize once: the batch feeds three plans (seen-ids append,
-        // stale-date probe, partition rewrite). LAZY checkpoint + count():
-        // the count is the action that materializes the checkpoint, so
-        // emptiness costs no second job per batch (an eager checkpoint
-        // followed by isEmpty ran two).
-        val bw = prepBatch(batch).filter(inWindow(col(dateCol)))
-          .localCheckpoint(false)
-        // An all-out-of-window batch writes NOTHING: a partitioned write of
-        // an empty frame creates a directory with no data files, and the
-        // next batch's schema inference over factPath would then fail.
-        // Leaving factPath nonexistent until the first in-window row keeps
-        // both reads (upsert probe, sweep) well-defined.
-        if (bw.count() > 0) {
-          bw.select(col(keyCol)).write.mode(SaveMode.Append).parquet(seenIdsPath)
-          val factP = new org.apache.hadoop.fs.Path(factPath)
-          val fs = factP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(factP))
-            // seq = batchId + 1: appends outrank the bootstrap/compacted
-            // entries (seq 0) and later batches outrank earlier ones, so
-            // the sweep's per-bucket compaction keeps each id's latest
-            // date without reading the fact (MergeOps.IdxSeqCol)
-            MergeOps.upsertPartitioned(spark, factPath, bw, dateCol, keyCol,
-              indexPath, indexSeq = batchId + 1)
-          else {
-            MergeOps.overwriteDatePartitions(bw, factPath, dateCol)
-            indexPath.foreach(ip =>
-              MergeOps.buildIdDateIndex(bw, ip, dateCol, keyCol))
-          }
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // If no batch carried an in-window row, factPath was never created and
-    // there is nothing to sweep. If the fact pre-existed (e.g. a prior
-    // cycle) but THIS cycle asserted no ids, sweeping would delete every
-    // in-window row — indistinguishable from an upstream outage, so that
-    // path fails loudly unless allowEmptyCycle (ADVICE r5).
-    val factP = new org.apache.hadoop.fs.Path(factPath)
-    val fs = factP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(factP)) {
-      val seenP = new org.apache.hadoop.fs.Path(seenIdsPath)
-      val seen =
-        if (fs.exists(seenP)) spark.read.parquet(seenIdsPath).distinct()
-        else if (allowEmptyCycle)
-          spark.read.parquet(factPath).select(col(keyCol)).limit(0)
-        else sys.error(
-          s"streamingMergeIncrementalPartitioned: this cycle asserted no " +
-            s"in-window ids ($seenIdsPath absent) but a fact exists at " +
-            s"$factPath — sweeping now would delete every in-window row. " +
-            s"If an empty cycle is genuinely expected (not an upstream " +
-            s"outage), pass allowEmptyCycle = true.")
-      MergeOps.sweepPartitionedWindow(spark, factPath, seen, days, todayOslo,
-        dateCol, keyCol, indexPath)
-    }
-  }
-
   /** Streaming table checksum — the streaming twin of
     * [[graft.operators.Analytics.tableChecksum]], and the purest possible
     * streaming state: BIT_XOR is commutative, associative, and its own
@@ -2043,27 +1869,37 @@ object Streams {
       q.awaitTermination()
     }
 
-  /** STREAMING M1 MERGE on a [[graft.operators.LogTable]] (st4c — r12
-    * directive #5): the st4/st4b incremental-refresh pipeline re-based
-    * from the rename-swapped listing layout onto the manifest-native
-    * MVCC table. Per micro-batch: ONE idempotent copy-on-write
-    * [[graft.operators.LogTable.merge]] with txnId =
-    * `st4c:<batchId>` — a REPLAYED batch (the at-least-once delivery
-    * every checkpoint recovery implies) collapses at the commit, so the
-    * table holds exactly-once contents with no dedup bookkeeping in the
-    * data path. End of cycle: the M1 windowed delete
+  /** STREAMING M1 MERGE on a [[graft.operators.LogTable]] (st4, st4b,
+    * st4c): the reference's windowed refresh with staging replayed as
+    * an incrementally sliced micro-batch stream. Per micro-batch: ONE
+    * idempotent copy-on-write [[graft.operators.LogTable.merge]] with
+    * txnId = `st4c:<batchId>` — a REPLAYED batch (the at-least-once
+    * delivery every checkpoint recovery implies) collapses at the
+    * commit, so the table holds exactly-once contents with no dedup
+    * bookkeeping in the data path. End of cycle: the M1 windowed delete
     * (fetch_clickup_data.py:1318-1321 semantics) as manifest commits —
     * only window partitions that actually CONTAIN stale rows are
     * rewritten (filtered to the cycle's seen ids); fully-stale
     * partitions leave by a metadata-only [[LogTable.removePartitions]].
     *
-    * What the LogTable base buys over st4/st4b's layout: readers plan
-    * from immutable manifests, so the optimistic
-    * [[graft.operators.TableLog.readValidated]] re-plan loop is RETIRED
-    * — a scan can never race the writer — and every micro-batch is
-    * atomically visible (manifest flip) instead of partition-by-
-    * partition. Per-batch cost is O(batch + files-hit), the sweep is
-    * O(stale window partitions); the table is never rewritten.
+    * Slicing contract: for staging sliced arbitrarily across batches
+    * (each id in one slice), the final table equals the single-shot
+    * `MergeOps.mergeRefresh` — upserts compose per id and the deferred
+    * sweep sees the union of all slices' ids. If an id appears in
+    * several slices, the last slice wins.
+    *
+    * Which files a batch's merge probes is the table's declaration:
+    * zone maps on the key (`statsCols`, st4), a bloom sidecar
+    * (`bloomCols`, st4b), or every live file (st4c). Readers plan from
+    * immutable manifests, so a scan can never race the writer, and
+    * every micro-batch is atomically visible (manifest flip). Per-batch
+    * cost is O(batch + files-hit), the sweep is O(stale window
+    * partitions); the table is never rewritten.
+    *
+    * `allowEmptyCycle`: a cycle that asserted NO in-window ids is, by
+    * the window contract, a directive to delete every in-window row —
+    * but an upstream outage produces exactly the same empty feed.
+    * Refuse to sweep (fail loudly) unless the caller opts in.
     */
   def runStreamingLogTableMergeAvailableNow(spark: SparkSession,
       entries: DataFrame, tableRoot: String, seenIdsPath: String,
@@ -2098,8 +1934,8 @@ object Streams {
         .start()
       q.awaitTermination()
       // end-of-cycle windowed delete: in-window rows whose id this cycle
-      // never asserted are deleted — same loud-empty-cycle contract as
-      // streamingMergeIncrementalPartitioned (ADVICE r5)
+      // never asserted are deleted, unless the cycle asserted nothing
+      // (see allowEmptyCycle)
       val seenP = new org.apache.hadoop.fs.Path(seenIdsPath)
       val fs = seenP.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val cur = graft.operators.LogTable.read(spark, tableRoot)
@@ -2113,8 +1949,8 @@ object Streams {
             "row. If an empty cycle is genuinely expected (not an " +
             "upstream outage), pass allowEmptyCycle = true.")
       val windowRows = cur.filter(inWindow(col(dateCol)))
-      // x167's lesson applied: probe WHICH window partitions hold stale
-      // rows (metadata-scale collect of dates), rewrite only those
+      // probe WHICH window partitions hold stale rows (metadata-scale
+      // collect of dates), rewrite only those
       val staleDates = windowRows
         .join(broadcast(seen), Seq(keyCol), "left_anti")
         .select(col(dateCol)).distinct().collect()

@@ -46,22 +46,6 @@ class DedupMergeSpec extends SparkSpec {
     assert(kept(0).getAs[java.sql.Timestamp]("at") == null)
   }
 
-  test("refreshPartitioned deletes stale null-date copies of re-matched ids") {
-    val base = java.nio.file.Files.createTempDirectory("graft_nullpart").toString + "/fact"
-    val today = LocalDate.parse("2024-03-01")
-    Seq(("x1", "a", null.asInstanceOf[java.sql.Date], 1.0),
-      ("keepnull", "a", null.asInstanceOf[java.sql.Date], 7.0))
-      .toDF("id", "at", "start_date_oslo", "value")
-      .write.partitionBy("start_date_oslo").parquet(base)
-    // staging re-asserts x1 with a real in-window date
-    val staging = entries(("x1", "y", java.sql.Date.valueOf("2024-02-26"), 2.0))
-    MergeOps.refreshPartitioned(spark, base, staging, days = 7, todayOslo = today)
-    val out = spark.read.parquet(base).orderBy("id")
-      .select("id", "value").as[(String, Double)].collect().toSeq
-    // x1's stale null-date copy is gone; unrelated null-date row survives
-    assert(out == Seq(("keepnull", 7.0), ("x1", 2.0)))
-  }
-
   test("M2 full reindex: fact becomes exactly (deduplicated) staging (ref :1335-1399)") {
     val fact = entries(
       ("a", "x", java.sql.Date.valueOf("2024-01-01"), 1.0),
@@ -113,56 +97,20 @@ class DedupMergeSpec extends SparkSpec {
     assert(rows(once.orderBy("id")) == rows(twice.orderBy("id")))
   }
 
-  test("refreshPartitioned rewrites only affected date partitions") {
-    val base = java.nio.file.Files.createTempDirectory("graft_part").toString + "/fact"
-    val today = LocalDate.parse("2024-03-01")
-    // partitions: hist (2024-01-01, untouched), 02-24 (fully deleted),
-    // 02-26 (updated); staging adds 02-28
-    entries(
-      ("hist", "x", java.sql.Date.valueOf("2024-01-01"), 1.0),
-      ("del1", "x", java.sql.Date.valueOf("2024-02-24"), 9.0),
-      ("r1", "x", java.sql.Date.valueOf("2024-02-26"), 2.0))
-      .write.partitionBy("start_date_oslo").parquet(base)
-
-    def partFiles(d: String): Map[String, Long] = {
-      val dir = new java.io.File(s"$base/start_date_oslo=$d")
-      if (!dir.exists()) Map.empty
-      else dir.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
-    }
-    val histBefore = partFiles("2024-01-01")
-    assert(histBefore.nonEmpty)
-
-    val staging = entries(
-      ("r1", "y", java.sql.Date.valueOf("2024-02-26"), 20.0),
-      ("r4", "y", java.sql.Date.valueOf("2024-02-28"), 5.0))
-    MergeOps.refreshPartitioned(spark, base, staging, days = 7, todayOslo = today)
-
-    val out = spark.read.parquet(base).orderBy("id")
-      .select("id", "value").as[(String, Double)].collect().toSeq
-    assert(out == Seq(("hist", 1.0), ("r1", 20.0), ("r4", 5.0)))
-    // untouched partition: exact same files, same mtimes
-    assert(partFiles("2024-01-01") == histBefore)
-    // fully-deleted window partition directory is gone
-    assert(partFiles("2024-02-24").isEmpty)
-  }
-
   test("partitioned streaming merge: sliced batches upsert only affected " +
     "partitions, sweep deletes unseen window rows, history files untouched") {
-    import org.apache.spark.sql.streaming.Trigger
+    import graft.operators.LogTable
     val root = java.nio.file.Files.createTempDirectory("graft_stpart").toString
     val base = s"$root/fact"
     val today = LocalDate.parse("2024-03-01")
-    entries(
+    LogTable.init(entries(
       ("hist", "x", java.sql.Date.valueOf("2024-01-01"), 1.0),
       ("del1", "x", java.sql.Date.valueOf("2024-02-24"), 9.0),
-      ("r1", "x", java.sql.Date.valueOf("2024-02-26"), 2.0))
-      .write.partitionBy("start_date_oslo").parquet(base)
-    def partFiles(d: String): Map[String, Long] = {
-      val dir = new java.io.File(s"$base/start_date_oslo=$d")
-      if (!dir.exists()) Map.empty
-      else dir.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
+      ("r1", "x", java.sql.Date.valueOf("2024-02-26"), 2.0)), base)
+    def partFiles(d: String): Set[String] = {
+      val m = LogTable.manifest(spark, base,
+        graft.operators.TableLog.currentVersion(spark, base))
+      m.parts.getOrElse(s"start_date_oslo=$d", Nil).map(_.file).toSet
     }
     val histBefore = partFiles("2024-01-01")
     assert(histBefore.nonEmpty)
@@ -183,175 +131,26 @@ class DedupMergeSpec extends SparkSpec {
     val stream = spark.readStream.schema(slices.head.schema)
       .option("pathGlobFilter", "s*.parquet")
       .option("maxFilesPerTrigger", 1).parquet(stagingDir.toString)
-    Streams.streamingMergeIncrementalPartitioned(spark, stream, base,
+    Streams.runStreamingLogTableMergeAvailableNow(spark, stream, base,
       s"$root/seen", days = 7, todayOslo = today, checkpoint = s"$root/ckpt")
-    val out = spark.read.parquet(base).orderBy("id")
+    val out = LogTable.read(spark, base).orderBy("id")
       .select("id", "value").as[(String, Double)].collect().toSeq
     // same result as single-shot mergeRefresh on the unsliced staging
     assert(out == Seq(("hist", 1.0), ("r1", 20.0), ("r4", 5.0)))
-    // history partition: exact same files, same mtimes — never rewritten
+    // history partition: exactly the same live files — never rewritten
     assert(partFiles("2024-01-01") == histBefore)
-    // fully-swept window partition directory is gone
+    // fully-swept window partition has left the table
     assert(partFiles("2024-02-24").isEmpty)
   }
 
-  test("indexed partitioned streaming merge: same result, index == fact " +
-    "projection, probe scans only pruned index buckets") {
-    val root = java.nio.file.Files.createTempDirectory("graft_stidx").toString
-    val base = s"$root/fact"
-    val idx = s"$root/fact_idx"
-    val today = LocalDate.parse("2024-03-01")
-    entries(
-      ("hist", "x", java.sql.Date.valueOf("2024-01-01"), 1.0),
-      ("del1", "x", java.sql.Date.valueOf("2024-02-24"), 9.0),
-      ("r1", "x", java.sql.Date.valueOf("2024-02-26"), 2.0))
-      .write.partitionBy("start_date_oslo").parquet(base)
-    def partFiles(d: String): Map[String, Long] = {
-      val dir = new java.io.File(s"$base/start_date_oslo=$d")
-      if (!dir.exists()) Map.empty
-      else dir.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
-    }
-    val histBefore = partFiles("2024-01-01")
-    val slices = Seq(
-      entries(("r1", "y", java.sql.Date.valueOf("2024-02-26"), 20.0)),
-      entries(("r4", "y", java.sql.Date.valueOf("2024-02-28"), 5.0)))
-    val stagingDir = java.nio.file.Files.createTempDirectory("graft_stidx_in")
-    for ((df, i) <- slices.zipWithIndex) {
-      val sub = stagingDir.resolve(s"g$i")
-      df.coalesce(1).write.parquet(sub.toString)
-      val part = new java.io.File(sub.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, stagingDir.resolve(s"s$i.parquet"))
-    }
-    val stream = spark.readStream.schema(slices.head.schema)
-      .option("pathGlobFilter", "s*.parquet")
-      .option("maxFilesPerTrigger", 1).parquet(stagingDir.toString)
-    Streams.streamingMergeIncrementalPartitioned(spark, stream, base,
-      s"$root/seen", days = 7, todayOslo = today, checkpoint = s"$root/ckpt",
-      indexPath = Some(idx))
-    // same final fact as the unindexed path / single-shot mergeRefresh
-    val out = spark.read.parquet(base).orderBy("id")
-      .select("id", "value").as[(String, Double)].collect().toSeq
-    assert(out == Seq(("hist", 1.0), ("r1", 20.0), ("r4", 5.0)))
-    assert(partFiles("2024-01-01") == histBefore) // history files untouched
-    // the maintained index is exactly the fact's (id, date) projection —
-    // upserts added r4, replaced r1, and the sweep removed del1
-    val idxRows = spark.read.parquet(idx).select("id", "start_date_oslo")
-      .as[(String, java.sql.Date)].collect().toSet
-    val factRows = spark.read.parquet(base).select("id", "start_date_oslo")
-      .as[(String, java.sql.Date)].collect().toSet
-    assert(idxRows == factRows)
-    // plan/file-level: the stale-date probe reads ONLY the index, and its
-    // scan prunes to the probed ids' buckets before reading a row
-    val probe = MergeOps.staleDatesViaIndex(spark, idx,
-      Seq("r1").toDF("id"), "start_date_oslo", "id", nBuckets = 32)
-    probe.collect() // execute THIS plan so its scan metrics populate
-    def scansOf(p: org.apache.spark.sql.execution.SparkPlan):
-        Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
-      p.collect { // AQE wrappers are leaves: recurse explicitly
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          scansOf(a.executedPlan)
-        case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          scansOf(s.plan)
-      }.flatten
-    val scans = scansOf(probe.queryExecution.executedPlan)
-    assert(scans.nonEmpty)
-    assert(scans.forall(_.relation.location.rootPaths
-      .forall(_.toString.contains("fact_idx"))), "probe must scan the index only")
-    val partsRead = scans.map(_.metrics("numPartitions").value).sum
-    val totalBuckets = new java.io.File(idx).listFiles()
-      .count(_.getName.startsWith("__bucket="))
-    assert(partsRead == 1 && totalBuckets > 1,
-      s"expected 1 pruned bucket of $totalBuckets, read $partsRead")
-  }
-
-  test("index compaction is incremental: untouched bucket files are " +
-    "byte-identical across a cycle; touched buckets compact to exactly " +
-    "the fact projection at seq 0, one file per bucket") {
-    val root = java.nio.file.Files.createTempDirectory("graft_stcompact").toString
-    val base = s"$root/fact"
-    val idx = s"$root/fact_idx"
-    val today = LocalDate.parse("2024-03-01")
-    val histIds = (0 until 20).map(i => s"h$i")
-    val winIds = (0 until 20).map(i => s"w$i")
-    val fact = entries(
-      (histIds.map(id => (id, "x", java.sql.Date.valueOf("2024-01-01"), 1.0)) ++
-        winIds.map(id => (id, "x", java.sql.Date.valueOf("2024-02-26"), 2.0))): _*)
-    fact.write.partitionBy("start_date_oslo").parquet(base)
-
-    def runCycle(tag: String, slice: DataFrame): Unit = {
-      val stagingDir = java.nio.file.Files
-        .createTempDirectory(s"graft_stcompact_$tag")
-      val sub = stagingDir.resolve("g")
-      slice.coalesce(1).write.parquet(sub.toString)
-      val part = new java.io.File(sub.toString).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath, stagingDir.resolve("s0.parquet"))
-      val stream = spark.readStream.schema(slice.schema)
-        .option("pathGlobFilter", "s*.parquet")
-        .option("maxFilesPerTrigger", 1).parquet(stagingDir.toString)
-      Streams.streamingMergeIncrementalPartitioned(spark, stream, base,
-        s"$root/seen_$tag", days = 7, todayOslo = today,
-        checkpoint = s"$root/ckpt_$tag", indexPath = Some(idx))
-    }
-    // cycle 1: assert every in-window id (no sweeps) — bootstraps the
-    // index and leaves every bucket compacted to one file at seq 0
-    runCycle("c1", entries(winIds.map(id =>
-      (id, "y", java.sql.Date.valueOf("2024-02-26"), 3.0)): _*))
-    def bucketFiles(): Map[String, Set[String]] =
-      new java.io.File(idx).listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("__bucket="))
-        .map(d => d.getName -> d.listFiles()
-          .filter(_.getName.endsWith(".parquet"))
-          .map(f => s"${f.getName}:${f.length}:${f.lastModified}").toSet)
-        .toMap
-    val before = bucketFiles()
-    assert(before.nonEmpty && before.values.forall(_.size == 1),
-      s"cycle-1 compaction must leave one file per bucket: $before")
-    // cycle 2: w0 moves date, w1..w18 re-asserted, w19 missing → swept
-    runCycle("c2", entries(
-      (("w0", "y", java.sql.Date.valueOf("2024-02-28"), 4.0) +:
-        (1 until 19).map(i => (s"w$i", "y",
-          java.sql.Date.valueOf("2024-02-26"), 3.0))): _*))
-    val after = bucketFiles()
-    // which buckets were touched this cycle? the asserted ids' buckets
-    // (appends) plus the swept id's bucket
-    val bucketOf = (winIds ++ histIds).toDF("id")
-      .select($"id", pmod(xxhash64($"id"), lit(32L)).cast("int").as("b"))
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    val touched = ((0 until 19).map(i => bucketOf(s"w$i")) :+ bucketOf("w19"))
-      .toSet.map((b: Int) => s"__bucket=$b")
-    val untouched = before.keySet -- touched
-    assert(untouched.nonEmpty, "fixture must leave some bucket untouched")
-    for (b <- untouched)
-      assert(after.get(b).contains(before(b)),
-        s"untouched bucket $b was rewritten: ${before(b)} -> ${after.get(b)}")
-    // every remaining bucket: exactly one file (the append log is gone)
-    assert(after.values.forall(_.size == 1), after.toString)
-    // the compacted index is exactly the fact's (id, date) projection,
-    // all entries at seq 0 — w19 swept, w0 at its moved date
-    val idxRows = spark.read.parquet(idx)
-      .select("id", "start_date_oslo", MergeOps.IdxSeqCol)
-      .as[(String, java.sql.Date, Long)].collect().toSet
-    val factRows = spark.read.parquet(base).select("id", "start_date_oslo")
-      .as[(String, java.sql.Date)].collect().toSet
-    assert(idxRows.map(r => (r._1, r._2)) == factRows)
-    assert(idxRows.forall(_._3 == 0L))
-    assert(!idxRows.exists(_._1 == "w19"))
-    assert(idxRows.exists(r => r._1 == "w0" &&
-      r._2 == java.sql.Date.valueOf("2024-02-28")))
-  }
-
   test("empty cycle against a pre-existing fact fails loudly unless opted in") {
+    import graft.operators.LogTable
     val root = java.nio.file.Files.createTempDirectory("graft_stempty").toString
     val base = s"$root/fact"
     val today = LocalDate.parse("2024-03-01")
-    entries(
+    LogTable.init(entries(
       ("hist", "x", java.sql.Date.valueOf("2024-01-01"), 1.0),
-      ("r1", "x", java.sql.Date.valueOf("2024-02-26"), 2.0))
-      .write.partitionBy("start_date_oslo").parquet(base)
+      ("r1", "x", java.sql.Date.valueOf("2024-02-26"), 2.0)), base)
     // the staging feed carries only an out-of-window row — the shape an
     // upstream outage produces: no batch asserts an in-window id
     val staging = entries(("oow", "y", java.sql.Date.valueOf("2024-01-15"), 9.0))
@@ -359,17 +158,18 @@ class DedupMergeSpec extends SparkSpec {
       .createTempDirectory("graft_stempty_in").toString + "/in"
     staging.coalesce(1).write.parquet(stagingDir)
     def run(allow: Boolean, ckpt: String): Unit =
-      Streams.streamingMergeIncrementalPartitioned(spark,
+      Streams.runStreamingLogTableMergeAvailableNow(spark,
         spark.readStream.schema(staging.schema).parquet(stagingDir),
         base, s"$root/seen_$allow", days = 7, todayOslo = today,
         checkpoint = s"$root/$ckpt", allowEmptyCycle = allow)
     val e = intercept[RuntimeException](run(allow = false, "ckpt1"))
     assert(e.getMessage.contains("allowEmptyCycle"))
     // nothing was deleted by the refusal
-    assert(spark.read.parquet(base).count() == 2)
+    assert(graft.operators.TableLog.currentVersion(spark, base) == 1L)
+    assert(LogTable.read(spark, base).count() == 2)
     // explicit opt-in: the windowed delete applies (r1 swept, history kept)
     run(allow = true, "ckpt2")
-    val out = spark.read.parquet(base).select("id").as[String].collect().toSeq
+    val out = LogTable.read(spark, base).select("id").as[String].collect().toSeq
     assert(out == Seq("hist"))
   }
 
@@ -510,378 +310,79 @@ class DedupMergeSpec extends SparkSpec {
     assert(got(("p2", 7L)) == ((100L, "rewrite", 0L)))
   }
 
-  test("fileManifest lists real files with parent-dir partition keys and " +
-    "feeds compactionPlan") {
-    val dir = "/tmp/graft_test_compact"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    // a deliberately fragmented write: one tiny file per repartition slice
-    Seq.tabulate(20)(i => (i.toLong, "x" * (50 + i), s"d${i % 2}"))
-      .toDF("id", "payload", "part")
-      .repartition(5)
-      .write.partitionBy("part").mode("overwrite").parquet(dir)
-    val mf = MergeOps.fileManifest(spark, dir)
-    val rows = mf.collect()
-    assert(rows.nonEmpty && rows.forall(_.getLong(2) > 0))
-    assert(rows.map(_.getString(0)).toSet == Set("part=d0", "part=d1"))
-    assert(rows.forall(r => r.getString(1).endsWith(".parquet")))
-    val plan = MergeOps.compactionPlan(mf, "part", "file", "bytes",
-      targetBytes = 1L << 20, smallThreshold = 1L << 20)
-    // every small parquet fragment lands in task 0 of its partition
-    // (total bytes per partition here ≪ 1 MiB target)
-    val acts = plan.collect()
-    assert(acts.forall(r => r.getString(3) == "rewrite" && r.getLong(4) == 0L))
-    fs.delete(p, true)
-  }
-
-  test("compactionExecute: fragmented partition compacted on disk (file " +
-    "count drops, rows and keep bytes preserved, untouched partition " +
-    "byte-identical)") {
-    val dir = "/tmp/graft_test_compact_exec"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    // part=frag: 6 tiny fragments; part=ok: one healthy file
-    Seq.tabulate(60)(i => (i.toLong, "x" * 40, "frag"))
-      .toDF("id", "payload", "part").repartition(6)
-      .write.partitionBy("part").mode("overwrite").parquet(dir)
-    Seq.tabulate(60)(i => (i.toLong + 1000, "y" * 40, "ok"))
-      .toDF("id", "payload", "part").coalesce(1)
-      .write.partitionBy("part").mode("append").parquet(dir)
-    def listing(part: String): Map[String, (Long, Long)] =
-      fs.listStatus(new org.apache.hadoop.fs.Path(p, part))
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
-        .map(f => f.getPath.getName ->
-          ((f.getLen, f.getModificationTime))).toMap
-    val okBefore = listing("part=ok")
-    val fragBefore = listing("part=frag")
-    assert(fragBefore.size == 6)
-    val before = spark.read.parquet(dir).select("id", "payload", "part")
-      .collect().toSet
-    // healthy files (≥ threshold) keep; the 6 fragments pack into 1 task
-    MergeOps.compactionExecute(spark, dir,
-      targetBytes = 1L << 20, smallThreshold = 8192L)
-    val fragAfter = listing("part=frag")
-    assert(fragAfter.size == 1 &&
-      fragAfter.keySet.head.startsWith("compacted-"))
-    // untouched partition: same files, same bytes, same mtimes (no swap)
-    assert(listing("part=ok") == okBefore)
-    // no tmp/old residue anywhere
-    assert(fs.listStatus(p).map(_.getPath.getName).forall(n =>
-      !n.endsWith(".tmp") && !n.endsWith(".old")))
-    // table contents identical
-    assert(spark.read.parquet(dir).select("id", "payload", "part")
-      .collect().toSet == before)
-    // idempotent: a second run has no multi-slice rewrite task left, so
-    // no partition is touched (same files, same mtimes)
-    val plan2 = MergeOps.compactionExecute(spark, dir,
-      targetBytes = 1L << 20, smallThreshold = 8192L)
-    val multi = plan2.filter(col("action") === "rewrite")
-      .groupBy("part", "task_id").count().filter(col("count") >= 2)
-    assert(multi.isEmpty)
-    assert(listing("part=frag") == fragAfter)
-    fs.delete(p, true)
-  }
-
-  test("compactionExecute: stale .tmp residue from a crashed prior run is " +
-    "discarded, not merged into the new partition") {
-    val dir = "/tmp/graft_test_compact_crash"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    Seq.tabulate(40)(i => (i.toLong, "x" * 40, "frag"))
-      .toDF("id", "payload", "part").repartition(4)
-      .write.partitionBy("part").mode("overwrite").parquet(dir)
-    val before = spark.read.parquet(dir).select("id", "payload", "part")
-      .collect().toSet
-    // simulate a crash mid-swap: a half-built tmp dir with a bogus file
-    // (an unreadable "parquet" — recovery must discard it sight unseen)
-    val staleTmp = new org.apache.hadoop.fs.Path(p, "part=frag.tmp")
-    fs.mkdirs(staleTmp)
-    val out = fs.create(new org.apache.hadoop.fs.Path(staleTmp, "garbage.parquet"))
-    out.write(Array.fill(16)(0xAB.toByte)); out.close()
-    MergeOps.compactionExecute(spark, dir,
-      targetBytes = 1L << 20, smallThreshold = 8192L)
-    // the garbage never reaches the live partition; contents identical
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(p, "part=frag"))
-      .map(_.getPath.getName)
-    assert(!files.contains("garbage.parquet"))
-    assert(spark.read.parquet(dir).select("id", "payload", "part")
-      .collect().toSet == before)
-    assert(fs.listStatus(p).map(_.getPath.getName).forall(n =>
-      !n.endsWith(".tmp") && !n.endsWith(".old")))
-    fs.delete(p, true)
-  }
-
-  test("deletePartitioned: requested ids vanish, only their partitions " +
-    "are rewritten (untouched partition byte-identical), index entries " +
-    "compact away") {
-    val dir = "/tmp/graft_test_delete_ids"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
+  test("delete-only LogTable.merge (x167's path): requested ids vanish " +
+    "in one commit, files holding none of them stay live, deleting an " +
+    "absent id rewrites no file") {
+    import graft.operators.{LogTable, TableLog}
+    val root = java.nio.file.Files.createTempDirectory("graft_ltdel")
+      .toString + "/t"
     def dt(s: String) = java.sql.Date.valueOf(s)
     val fact = Seq(
       (1L, dt("2024-01-01"), "a"), (2L, dt("2024-01-01"), "b"),
       (3L, dt("2024-01-02"), "c"), (4L, dt("2024-01-02"), "d"),
       (5L, dt("2024-01-03"), "e")
     ).toDF("id", "start_date_oslo", "payload")
-    fact.write.partitionBy("start_date_oslo").parquet(s"$dir/fact")
-    MergeOps.buildIdDateIndex(spark.read.parquet(s"$dir/fact"),
-      s"$dir/idx")
-    def listing(part: String) =
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/fact", part))
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
-        .map(f => f.getPath.getName ->
-          ((f.getLen, f.getModificationTime))).toMap
-    val d3Before = listing("start_date_oslo=2024-01-03")
-    MergeOps.deletePartitioned(spark, s"$dir/fact",
-      Seq(1L, 3L).toDF("id"), indexPath = Some(s"$dir/idx"))
-    val left = spark.read.parquet(s"$dir/fact")
-      .select("id").as[Long].collect().sorted.toSeq
-    assert(left == Seq(2L, 4L, 5L))
-    // the date-3 partition held no deleted id: same files, same mtimes
-    assert(listing("start_date_oslo=2024-01-03") == d3Before)
-    // deleted ids are gone from the index; survivors remain
-    val idx = spark.read.parquet(s"$dir/idx").select("id")
-      .as[Long].collect().sorted.toSeq
-    assert(idx == Seq(2L, 4L, 5L))
-    // deleting an id that does not exist touches nothing
-    val allBefore = Seq("start_date_oslo=2024-01-01",
-      "start_date_oslo=2024-01-02", "start_date_oslo=2024-01-03")
-      .map(listing)
-    MergeOps.deletePartitioned(spark, s"$dir/fact",
-      Seq(999L).toDF("id"), indexPath = Some(s"$dir/idx"))
-    assert(Seq("start_date_oslo=2024-01-01", "start_date_oslo=2024-01-02",
-      "start_date_oslo=2024-01-03").map(listing) == allBefore)
-    fs.delete(p, true)
-  }
-
-  test("compactionExecute: crash BETWEEN the two commit renames (tmp " +
-    "fully built, live moved aside) recovers by promoting the tmp — " +
-    "rows converge with no duplicates and no losses") {
-    val dir = "/tmp/graft_test_compact_crash_mid"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    Seq.tabulate(40)(i => (i.toLong, "x" * 40, "frag"))
-      .toDF("id", "payload", "part").repartition(4)
-      .write.partitionBy("part").mode("overwrite").parquet(dir)
-    val before = spark.read.parquet(dir).select("id", "payload", "part")
-      .collect().toSet
-    // replay the commit protocol UP TO the crash point: build a complete
-    // compacted tmp, move the live partition aside — then "die" before
-    // the tmp→live rename (exactly the state compactionExecute's own
-    // swap leaves if killed between its two renames)
-    val partP = new org.apache.hadoop.fs.Path(p, "part=frag")
-    val tmpP = new org.apache.hadoop.fs.Path(p, "part=frag.tmp")
-    val oldP = new org.apache.hadoop.fs.Path(p, "part=frag.old")
-    val work = new org.apache.hadoop.fs.Path(p, ".work_crash")
-    spark.read.parquet(partP.toString).coalesce(1)
-      .write.parquet(work.toString)
-    fs.mkdirs(tmpP)
-    val data = fs.listStatus(work).map(_.getPath)
-      .filter(f => !f.getName.startsWith("_"))
-    assert(data.length == 1)
-    assert(fs.rename(data.head,
-      new org.apache.hadoop.fs.Path(tmpP, "compacted-0.parquet")))
-    fs.delete(work, true)
-    assert(fs.rename(partP, oldP)) // live gone; tmp + old remain — CRASH
-    // re-run: the recovery sweep must promote the tmp and drop the old
-    MergeOps.compactionExecute(spark, dir,
-      targetBytes = 1L << 20, smallThreshold = 8192L)
-    val after = spark.read.parquet(dir).select("id", "payload", "part")
-      .collect()
-    assert(after.toSet == before, "rows changed across crash recovery")
-    assert(after.length == before.size, "duplicate rows after recovery")
-    assert(fs.listStatus(p).map(_.getPath.getName).forall(n =>
-      !n.endsWith(".tmp") && !n.endsWith(".old")))
-    // the promoted partition is the compacted build, not a re-read of old
-    val files = fs.listStatus(partP).map(_.getPath.getName)
-      .filter(n => !n.startsWith("_") && !n.startsWith("."))
-    assert(files.sameElements(Array("compacted-0.parquet")), files.toSeq)
-    fs.delete(p, true)
-  }
-
-  test("compactionExecute: post-commit crash residue (.old beside a live " +
-    "partition) is dropped without touching the live files") {
-    val dir = "/tmp/graft_test_compact_crash_old"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    Seq.tabulate(30)(i => (i.toLong, "z" * 40, "frag"))
-      .toDF("id", "payload", "part").coalesce(1)
-      .write.partitionBy("part").mode("overwrite").parquet(dir)
-    val before = spark.read.parquet(dir).select("id", "payload", "part")
-      .collect().toSet
-    // stale pre-swap partition content left as .old (crash after the
-    // tmp→live rename but before the cleanup delete)
-    val oldP = new org.apache.hadoop.fs.Path(p, "part=frag.old")
-    fs.mkdirs(oldP)
-    val out = fs.create(new org.apache.hadoop.fs.Path(oldP, "stale.parquet"))
-    out.write(Array.fill(16)(0xCD.toByte)); out.close()
-    MergeOps.compactionExecute(spark, dir,
-      targetBytes = 1L << 20, smallThreshold = 8192L)
-    assert(spark.read.parquet(dir).select("id", "payload", "part")
-      .collect().toSet == before)
-    assert(fs.listStatus(p).map(_.getPath.getName).forall(n =>
-      !n.endsWith(".tmp") && !n.endsWith(".old")))
-    fs.delete(p, true)
-  }
-
-  test("TableLog serializes refresh running CONCURRENTLY with compaction " +
-    "on the same fact: rows converge to the sequential result with no " +
-    "losses or duplicates, the commit log is dense, and the latest " +
-    "manifest matches the live listing") {
-    import graft.operators.TableLog
-    val root = java.nio.file.Files.createTempDirectory("graft_txlog")
-      .toString
-    val base = s"$root/fact"
-    val p = new org.apache.hadoop.fs.Path(base)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val today = LocalDate.parse("2024-03-01")
-    // fragmented initial fact: compaction has real work in BOTH the
-    // historical and the window partition
-    entries((1 to 20).map(i =>
-        (s"h$i", "x", java.sql.Date.valueOf("2024-01-01"), i.toDouble)) ++
-      (1 to 20).map(i =>
-        (s"w$i", "x", java.sql.Date.valueOf("2024-02-26"), i.toDouble)): _*)
-      .repartition(4).write.partitionBy("start_date_oslo").parquet(base)
-    val staging = entries((1 to 20).map(i =>
-        (s"w$i", "y", java.sql.Date.valueOf("2024-02-26"), i * 10.0)) ++
-      (1 to 5).map(i =>
-        (s"n$i", "y", java.sql.Date.valueOf("2024-02-28"), i.toDouble)): _*)
-      .localCheckpoint(true) // both threads plan against a pinned input
-    // sequential oracle on a COPY: refresh twice + compaction is
-    // row-idempotent, so any serialized interleaving must land here
-    val seqBase = s"$root/fact_seq"
-    entries((1 to 20).map(i =>
-        (s"h$i", "x", java.sql.Date.valueOf("2024-01-01"), i.toDouble)) ++
-      (1 to 20).map(i =>
-        (s"w$i", "x", java.sql.Date.valueOf("2024-02-26"), i.toDouble)): _*)
-      .repartition(4).write.partitionBy("start_date_oslo").parquet(seqBase)
-    MergeOps.refreshPartitioned(spark, seqBase, staging, days = 7,
-      todayOslo = today)
-    val expected = spark.read.parquet(seqBase)
-      .select("id", "value").collect()
-      .map(r => (r.getString(0), r.getDouble(1))).toSet
-    // concurrent run: interleave 2 refreshes with 3 compactions
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val start = new java.util.concurrent.CountDownLatch(1)
-    def thread(body: => Unit) = new Thread(() => {
-      start.await()
-      try body catch { case t: Throwable => errs.add(t) }
-    })
-    val ta = thread {
-      MergeOps.refreshPartitioned(spark, base, staging, 7, today)
-      MergeOps.refreshPartitioned(spark, base, staging, 7, today)
-    }
-    val tb = thread {
-      (1 to 3).foreach(_ => MergeOps.compactionExecute(spark, base,
-        targetBytes = 1L << 20, smallThreshold = 8192L))
-    }
-    ta.start(); tb.start(); start.countDown()
-    ta.join(180000); tb.join(180000)
-    assert(errs.isEmpty, s"concurrent mutator failed: ${errs.peek()}")
-    val got = spark.read.parquet(base).select("id", "value").collect()
-      .map(r => (r.getString(0), r.getDouble(1)))
-    assert(got.length == got.toSet.size, "duplicate rows after the race")
-    assert(got.toSet == expected, "rows diverged from the serialized result")
-    // commit log: 5 commits, versions dense 1..5, actions accounted for
-    val log = TableLog.snapshot(spark, base)
-      .select("version", "action").distinct().collect()
-      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-    assert(log.map(_._1).toSeq == (1L to 5L), s"log not dense: ${log.toSeq}")
-    assert(log.count(_._2 == "refresh") == 2 &&
-      log.count(_._2 == "compaction") == 3, log.toSeq)
-    // stale-reader safety surface: the latest manifest matches the live
-    // file listing exactly (no missing / new / resized drift)
-    assert(TableLog.validateSnapshot(spark, base).isEmpty)
-    // no swap residue anywhere
-    assert(fs.listStatus(p).map(_.getPath.getName).forall(n =>
-      !n.endsWith(".tmp") && !n.endsWith(".old")))
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
+    LogTable.init(fact, root, bloomCols = Seq("id"))
+    def live(): Map[String, Set[String]] =
+      LogTable.manifest(spark, root, TableLog.currentVersion(spark, root))
+        .parts.map { case (p, fl) => p -> fl.map(_.file).toSet }
+    val before = live()
+    LogTable.merge(spark, root, fact.limit(0), Seq("id"),
+      deleteMatchedKeys = Some(Seq(1L, 3L).toDF("id")))
+    assert(TableLog.currentVersion(spark, root) == 2L)
+    assert(LogTable.read(spark, root).select("id").as[Long].collect()
+      .sorted.toSeq == Seq(2L, 4L, 5L))
+    // the date-3 partition held no deleted id: the same live file
+    val after = live()
+    assert(after("start_date_oslo=2024-01-03") ==
+      before("start_date_oslo=2024-01-03"))
+    // deleting an id that does not exist leaves every live file in place
+    LogTable.merge(spark, root, fact.limit(0), Seq("id"),
+      deleteMatchedKeys = Some(Seq(999L).toDF("id")))
+    assert(live() == after)
+    val p = new org.apache.hadoop.fs.Path(root)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(p.getParent, true)
   }
 
   test("TableLog: a crashed writer's stale lock is broken after " +
-    "staleLockMs; a live lock blocks until released; commits record " +
-    "touched partitions") {
+    "staleLockMs; a live lock blocks until released") {
     import graft.operators.TableLog
     val root = java.nio.file.Files.createTempDirectory("graft_txlock")
       .toString + "/t"
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(root, "part=a"))
-    // normal path: commit recorded with the touched partition's listing
-    TableLog.withExclusive(spark, root, "touch") {
-      val out = fs.create(new org.apache.hadoop.fs.Path(root,
-        "part=a/f1.parquet"), true)
-      out.write(Array.fill(8)(1.toByte)); out.close()
-      ()
-    }(_ => Seq("part=a"))
-    val snap = TableLog.snapshot(spark, root).collect()
-    assert(snap.length == 1)
-    assert(snap.head.getLong(0) == 1L &&
-      snap.head.getString(1) == "touch" &&
-      snap.head.getString(2) == "part=a" &&
-      snap.head.getString(3) == "f1.parquet" && snap.head.getLong(4) == 8L)
-    // crashed writer: plant an orphaned lock, backdate it, and verify a
-    // new writer breaks it instead of timing out
     val lockP = new org.apache.hadoop.fs.Path(root, "_graft_log/_lock")
-    val out = fs.create(lockP, false)
-    out.write("{\"owner\":\"dead\"}".getBytes("UTF-8")); out.close()
-    fs.setTimes(lockP, System.currentTimeMillis() - 3600000L, -1)
-    TableLog.withExclusive(spark, root, "after-crash",
-      waitMs = 5000L, staleLockMs = 60000L) { () }(_ => Seq("part=a"))
-    assert(TableLog.currentVersion(spark, root) == 2L)
-    assert(!fs.exists(lockP), "lock must be released after commit")
+    // another writer's lock file, last touched `ageMs` ago
+    def plant(ageMs: Long): Unit = {
+      val out = fs.create(lockP, false)
+      out.write("{\"owner\":\"other\"}".getBytes("UTF-8")); out.close()
+      fs.setTimes(lockP, System.currentTimeMillis() - ageMs, -1)
+    }
+    // live holder: a fresh lock is never broken — the waiter gives up at
+    // waitMs without running its body
+    plant(0L)
+    var ran = false
+    val e = intercept[RuntimeException](TableLog.withLock(spark, root,
+      "waiter", waitMs = 500L, staleLockMs = 60000L) { ran = true })
+    assert(e.getMessage.contains("held by a live writer"), e.getMessage)
+    assert(!ran && fs.exists(lockP))
+    // released: the next writer acquires
+    fs.delete(lockP, false)
+    TableLog.withLock(spark, root, "after-release", waitMs = 5000L) {
+      ran = true }
+    assert(ran && !fs.exists(lockP))
+    // crashed writer: an orphaned lock older than staleLockMs is broken
+    // instead of timing out
+    plant(3600000L)
+    ran = false
+    TableLog.withLock(spark, root, "after-crash",
+      waitMs = 5000L, staleLockMs = 60000L) { ran = true }
+    assert(ran)
+    assert(!fs.exists(lockP), "lock must be released after the body")
+    // the lock alone commits nothing
+    assert(TableLog.currentVersion(spark, root) == 0L)
     fs.delete(new org.apache.hadoop.fs.Path(root).getParent, true)
-  }
-
-  test("TableLog.readValidated: a reader racing a compaction swap " +
-    "detects the drift and re-plans instead of throwing " +
-    "FileNotFoundException; log truncation never disturbs a reader") {
-    import graft.operators.TableLog
-    val root = java.nio.file.Files.createTempDirectory("graft_txread")
-      .toString
-    val base = s"$root/fact"
-    // fragmented single-partition fact: compaction has real work, so the
-    // swap genuinely replaces the files a pre-swap listing captured
-    entries((1 to 24).map(i =>
-        (s"r$i", "x", java.sql.Date.valueOf("2024-01-01"), i.toDouble)): _*)
-      .repartition(6).write.partitionBy("start_date_oslo").parquet(base)
-    val expected = (1 to 24).map(i => (s"r$i", i.toDouble)).toSet
-    // deterministic race: the FIRST planning captures the pristine file
-    // listing, then a compaction swaps those files away BEFORE the
-    // reader materializes — exactly the mid-scan hazard. readValidated
-    // must catch the resulting drift (file-not-found or version
-    // watermark) and re-plan; the second attempt sees a quiet table.
-    var attempts = 0
-    val out = TableLog.readValidated(spark, base) {
-      attempts += 1
-      val df = spark.read.parquet(base).select("id", "value")
-      if (attempts == 1)
-        MergeOps.compactionExecute(spark, base,
-          targetBytes = 1L << 20, smallThreshold = 8192L)
-      df
-    }
-    assert(attempts == 2, s"expected one drift retry, got $attempts")
-    assert(out.collect().map(r => (r.getString(0), r.getDouble(1))).toSet
-      == expected)
-    // retention: truncating the log to the newest manifest preserves the
-    // version watermark and the read path end-to-end
-    val vBefore = TableLog.currentVersion(spark, base)
-    TableLog.truncateLog(spark, base, keep = 1)
-    assert(TableLog.currentVersion(spark, base) == vBefore)
-    val again = TableLog.readValidated(spark, base) {
-      spark.read.parquet(base).select("id", "value")
-    }
-    assert(again.collect().map(r => (r.getString(0), r.getDouble(1))).toSet
-      == expected)
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
   }
 
   test("LogTable MVCC: time travel reads every retained version " +
@@ -1102,8 +603,8 @@ class DedupMergeSpec extends SparkSpec {
     fs.mkdirs(new org.apache.hadoop.fs.Path(root))
     val lockP = new org.apache.hadoop.fs.Path(root, "_graft_log/_lock")
     val holder = new Thread(() =>
-      TableLog.withExclusive(spark, root, "slow",
-        staleLockMs = 4000L) { Thread.sleep(5500); () }(_ => Seq.empty))
+      TableLog.withLock(spark, root, "slow",
+        staleLockMs = 4000L) { Thread.sleep(5500) })
     holder.start()
     Thread.sleep(1200) // let the lock appear
     val ages = scala.collection.mutable.ArrayBuffer[Long]()
@@ -1119,7 +620,7 @@ class DedupMergeSpec extends SparkSpec {
     assert(ages.nonEmpty, "never observed the live lock")
     assert(ages.max < 3000L,
       s"heartbeat failed to keep the lock fresh (max age ${ages.max} ms)")
-    assert(TableLog.currentVersion(spark, root) == 1L)
+    assert(TableLog.currentVersion(spark, root) == 0L)
     assert(!fs.exists(lockP))
     fs.delete(new org.apache.hadoop.fs.Path(root).getParent, true)
   }

@@ -73,10 +73,14 @@ class HttpApiSpec extends SparkSpec {
       assert(health.body().contains("\"version\":\"2.0.0\""))
       assert(health.body().contains("dim_lists=1"))
 
-      val missing = post("/sync/nonsense")
-      assert(missing.statusCode() == 500)
-      assert(missing.body().contains("\"status\":\"error\""))
-      assert(missing.body().contains("\"error\""))
+      // an undeclared /sync/<x> is no route (Flask's 404), never a run
+      // of some other Main command
+      for (p <- Seq("/sync/nonsense", "/sync/health")) {
+        val missing = post(p)
+        assert(missing.statusCode() == 404, s"$p: ${missing.body()}")
+        assert(missing.body().contains("\"status\":\"error\""))
+        assert(missing.body().contains(s"no route POST $p"))
+      }
 
       val noRoute = get("/sync/lists") // GET on a POST route
       assert(noRoute.statusCode() == 404)
