@@ -35,6 +35,21 @@ object GraftSession {
     .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
     .config("spark.ui.enabled", "false")
 
+  /** Run `body` with each of `confs` set on the session, then restore
+    * every touched key to its prior value (or unset it when it had
+    * none), also when `body` throws: a shared session must not keep a
+    * scoped setting. */
+  def withConfs[T](spark: SparkSession, confs: Seq[(String, String)])
+                  (body: => T): T = {
+    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
     val s = tune(SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")

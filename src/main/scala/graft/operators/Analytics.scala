@@ -723,17 +723,22 @@ object Analytics {
     */
   def mutualInformation(df: DataFrame, aCol: String,
                         bCol: String): DataFrame =
-    mutualInformationFromCells(df
-      .filter(col(aCol).isNotNull && col(bCol).isNotNull)
+    mutualInformationFromCells(mutualInformationCells(df, aCol, bCol))
+
+  /** [[mutualInformation]]'s (`__a`, `__b`, `__o` BIGINT count) cell
+    * census — also the STREAMING state of st39 (the st31/st33
+    * contingency-cells pattern): per-micro-batch counts fold in, bounded
+    * by |categories_a| × |categories_b|. */
+  private[graft] def mutualInformationCells(df: DataFrame, aCol: String,
+                                            bCol: String): DataFrame =
+    df.filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(col(aCol).cast("string").as("__a"),
         col(bCol).cast("string").as("__b"))
-      .agg(count(lit(1)).as("__o")))
+      .agg(count(lit(1)).as("__o"))
 
-  /** [[mutualInformation]]'s finalization over a pre-built (`__a`,
-    * `__b`, `__o` BIGINT count) cell census — split out so the census
-    * can be maintained as STREAMING state (st39, the st31/st33
-    * contingency-cells pattern): per-micro-batch counts fold in, and
-    * MI/NMI/V re-derive entirely census-side as rows arrive. */
+  /** [[mutualInformation]]'s finalization over the
+    * [[mutualInformationCells]] census: MI/NMI/V re-derive entirely
+    * census-side, so the streaming twin updates as rows arrive. */
   private[graft] def mutualInformationFromCells(cells0: DataFrame): DataFrame = {
     val (cells, releaseCells) = Checkpoints.tracked(cells0)
     val rowTot = cells.groupBy(col("__a")).agg(sum(col("__o")).as("__ra"))
@@ -1024,16 +1029,26 @@ object Analytics {
     */
   def kruskalWallis(df: DataFrame, groupCol: String,
                     valueCol: String): DataFrame =
-    kwFromCensus(df
-      .filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
+    kwFromCensus(valueCensus(df, groupCol, valueCol), groupCol)
+
+  /** The (group, `__v` BIGINT value, `__c` count) census that
+    * [[kruskalWallis]], [[brownForsythe]] and
+    * [[ScaleOps.groupedMad]] finalize — and the streaming state of their
+    * twins st41, st42 and st35. Midranks, group medians and MAD are
+    * global order statistics no row-at-a-time state could maintain,
+    * which is why the census, not the ranks or medians, is the state.
+    * State is bounded by |groups| × |distinct values|; a deployment over
+    * unbounded-cardinality values coarsens the value (cents → whole
+    * units) to cap it. Null rows are dropped. */
+  private[graft] def valueCensus(df: DataFrame, groupCol: String,
+                                 valueCol: String): DataFrame =
+    df.filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
       .select(col(groupCol), col(valueCol).cast("long").as("__v"))
       .groupBy(col(groupCol), col("__v"))
-      .agg(count(lit(1)).as("__c")),
-      groupCol)
+      .agg(count(lit(1)).as("__c"))
 
-  /** [[kruskalWallis]]' finalization over a pre-built (group, `__v`,
-    * `__c`) census — the st35/st37 census-state convention, so st41 can
-    * hold the census as streaming state and re-rank on finalize. */
+  /** [[kruskalWallis]]' finalization over the [[valueCensus]]: it
+    * re-ranks the whole census. */
   private[graft] def kwFromCensus(census: DataFrame,
                                   groupCol: String): DataFrame = {
     val global = census.groupBy(col("__v")).agg(sum(col("__c")).as("__t"))
@@ -1101,17 +1116,10 @@ object Analytics {
     */
   def brownForsythe(df: DataFrame, groupCol: String,
                     valueCol: String): DataFrame =
-    bfFromCensus(df
-      .filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(groupCol), col(valueCol).cast("long").as("__v"))
-      .groupBy(col(groupCol), col("__v"))
-      .agg(count(lit(1)).as("__c")),
-      groupCol)
+    bfFromCensus(valueCensus(df, groupCol, valueCol), groupCol)
 
-  /** [[brownForsythe]]'s finalization over a pre-built (group, `__v`,
-    * `__c`) census — the st41 census-state convention, so st42 can hold
-    * the census as streaming state (the group median is a global order
-    * statistic no row-at-a-time state could maintain). */
+  /** [[brownForsythe]]'s finalization over the [[valueCensus]]: each
+    * group's doubled median is recomputed from the whole census. */
   private[graft] def bfFromCensus(census: DataFrame,
                                   groupCol: String): DataFrame = {
     val wg = org.apache.spark.sql.expressions.Window
@@ -1167,18 +1175,21 @@ object Analytics {
     */
   def kendallTau(df: DataFrame, xCol: String, yCol: String,
                  maxCells: Int = 8192): DataFrame =
-    ktFromCensus(df
-      .filter(col(xCol).isNotNull && col(yCol).isNotNull)
+    ktFromCensus(ktCensus(df, xCol, yCol), maxCells)
+
+  /** [[kendallTau]]'s (`__x`, `__y`, `__c`) cell census — also st43's
+    * streaming state: pair ordering is a global property, so the census
+    * is the only incrementally-maintainable form. State is bounded by
+    * |x bins| × |y bins|; the `maxCells` guard applies at finalize. */
+  private[graft] def ktCensus(df: DataFrame, xCol: String,
+                              yCol: String): DataFrame =
+    df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(xCol).cast("long").as("__x"),
         col(yCol).cast("long").as("__y"))
       .groupBy(col("__x"), col("__y"))
-      .agg(count(lit(1)).as("__c")),
-      maxCells)
+      .agg(count(lit(1)).as("__c"))
 
-  /** [[kendallTau]]'s finalization over a pre-built (`__x`, `__y`, `__c`)
-    * census — the st41/st42 census-state convention, so st43 can hold the
-    * cell census as streaming state (pair ordering is a global property;
-    * the census is the only incrementally-maintainable form). */
+  /** [[kendallTau]]'s finalization over the [[ktCensus]]. */
   private[graft] def ktFromCensus(censusRaw: DataFrame,
                                   maxCells: Int): DataFrame = {
     // The census is metadata-scale BY CONTRACT (maxCells is enforced,
@@ -2209,21 +2220,25 @@ object Analytics {
     * (st21); [[kAnonymityFromCells]] is the shared finalization.
     */
   def kAnonymity(df: DataFrame, qiCols: Seq[String], sensitiveCol: String,
-                 k: Int): DataFrame = {
+                 k: Int): DataFrame =
+    kAnonymityFromCells(kAnonymityCells(df, qiCols, sensitiveCol), qiCols, k)
+
+  /** [[kAnonymity]]'s (QI…, `__sv`, `__n`) cell census — also st21's
+    * streaming state: replay-commutative integer counts, so micro-batch
+    * slicing cannot move the census, and a privacy gate watching a CDC
+    * feed keeps its risk summary current without rescanning history. */
+  private[graft] def kAnonymityCells(df: DataFrame, qiCols: Seq[String],
+                                     sensitiveCol: String): DataFrame = {
     require(qiCols.nonEmpty, "kAnonymity needs at least one QI column")
-    val cells = df
-      .groupBy((qiCols.map(col) :+ col(sensitiveCol).as("__sv")): _*)
+    df.groupBy((qiCols.map(col) :+ col(sensitiveCol).as("__sv")): _*)
       .agg(count(lit(1)).as("__n"))
-    kAnonymityFromCells(cells, qiCols, k)
   }
 
-  /** Finalization of [[kAnonymity]] over an already-aggregated
-    * (QI…, __sv, __n) cell frame — split out so the cells can be
-    * maintained as mergeable streaming state and finalized batch-side
-    * (the cusumFromDaily/hllFinalize convention).
+  /** Finalization of [[kAnonymity]] over the [[kAnonymityCells]] frame:
+    * group sizes and diversity over |cells| rows.
     */
-  def kAnonymityFromCells(cells: DataFrame, qiCols: Seq[String],
-                          k: Int): DataFrame = {
+  private[graft] def kAnonymityFromCells(cells: DataFrame, qiCols: Seq[String],
+                                         k: Int): DataFrame = {
     require(k >= 2, s"k must be ≥ 2, got $k")
     cells
       .groupBy(qiCols.map(col): _*)
@@ -2987,22 +3002,41 @@ object Analytics {
     * labeling-quality gate an eval pipeline runs before trusting human
     * labels. Degenerate case (p_e = 1: both raters constant) emits NULL κ.
     *
-    * One scan (agreement count + both margins via grouping on each
-    * column), a |labels|-sized margin join, a one-row reduce. Rows where
-    * either label is NULL are excluded (an unlabeled item measures
-    * coverage, not agreement).
+    * One map-side-combinable (a, b) contingency census
+    * ([[kappaCells]]), then both margins, the agreement count and a
+    * |labels|-sized margin join off the census, a one-row reduce. Rows
+    * where either label is NULL are excluded (an unlabeled item
+    * measures coverage, not agreement). An empty input reports
+    * n_items = 0 and NULL n_agree.
     */
   def cohensKappa(df: DataFrame, raterACol: String,
-                  raterBCol: String): DataFrame = {
-    val base = df
-      .filter(col(raterACol).isNotNull && col(raterBCol).isNotNull)
+                  raterBCol: String): DataFrame =
+    kappaFromCells(kappaCells(df, raterACol, raterBCol))
+
+  /** [[cohensKappa]]'s (`__a`, `__b`, `__c` count) contingency census —
+    * also st31's streaming state: the |labels|²-bounded cell table is
+    * the smallest mergeable sufficient statistic for κ, so a labeling
+    * pipeline watches annotator drift without re-scanning history. */
+  private[graft] def kappaCells(df: DataFrame, raterACol: String,
+                                raterBCol: String): DataFrame =
+    df.filter(col(raterACol).isNotNull && col(raterBCol).isNotNull)
       .select(col(raterACol).as("__a"), col(raterBCol).as("__b"))
-    val ma = base.groupBy(col("__a").as("__l")).agg(count(lit(1)).as("__na"))
-    val mb = base.groupBy(col("__b").as("__l")).agg(count(lit(1)).as("__nb"))
+      .groupBy(col("__a"), col("__b"))
+      .agg(count(lit(1)).as("__c"))
+
+  /** [[cohensKappa]]'s finalization over the [[kappaCells]] census:
+    * margins, chance agreement and the cross-multiplied BIGINT κ
+    * identity. */
+  private[graft] def kappaFromCells(cells: DataFrame): DataFrame = {
+    val ma = cells.groupBy(col("__a").as("__l"))
+      .agg(sum(col("__c")).as("__na"))
+    val mb = cells.groupBy(col("__b").as("__l"))
+      .agg(sum(col("__c")).as("__nb"))
     val pe = ma.join(mb, "__l")
       .agg(coalesce(sum(col("__na") * col("__nb")), lit(0L)).as("__pe"))
-    base.agg(count(lit(1)).as("n_items"),
-        sum(when(col("__a") === col("__b"), 1L).otherwise(0L)).as("n_agree"))
+    cells.agg(coalesce(sum(col("__c")), lit(0L)).as("n_items"),
+        sum(when(col("__a") === col("__b"), col("__c")).otherwise(0L))
+          .as("n_agree"))
       .crossJoin(broadcast(pe))
       .select(col("n_items"), col("n_agree"),
         round(col("n_agree").cast("double") / col("n_items").cast("double"), 6)
@@ -3041,20 +3075,24 @@ object Analytics {
     * map-side combinable; one |categories|-row margin reduce.
     */
   def fleissKappa(df: DataFrame, itemCol: String, raterCol: String,
-                  categoryCol: String): DataFrame = {
-    val base = df
-      .filter(col(itemCol).isNotNull && col(raterCol).isNotNull &&
-        col(categoryCol).isNotNull)
-      .select(col(itemCol).as("__i"), col(raterCol).as("__r"),
-        col(categoryCol).cast("string").as("__c"))
-    fleissFromCells(base.groupBy(col("__i"), col("__c"))
-      .agg(count(lit(1)).as("__n")))
-  }
+                  categoryCol: String): DataFrame =
+    fleissFromCells(fleissCells(df, itemCol, raterCol, categoryCol))
 
-  /** [[fleissKappa]]'s finalization over a pre-built (item `__i`,
-    * category `__c`, count `__n`) cell census — split out so the cells
-    * can be maintained as STREAMING state (st33) and finalized as a
-    * cheap batch, the hllFinalize convention. */
+  /** [[fleissKappa]]'s (item `__i`, category `__c`, count `__n`) vote
+    * cells — also st33's streaming state (the st31 contingency-cells
+    * pattern one rater up), bounded by items × categories, not the
+    * ratings stream. */
+  private[graft] def fleissCells(df: DataFrame, itemCol: String,
+                                 raterCol: String,
+                                 categoryCol: String): DataFrame =
+    df.filter(col(itemCol).isNotNull && col(raterCol).isNotNull &&
+        col(categoryCol).isNotNull)
+      .select(col(itemCol).as("__i"),
+        col(categoryCol).cast("string").as("__c"))
+      .groupBy(col("__i"), col("__c"))
+      .agg(count(lit(1)).as("__n"))
+
+  /** [[fleissKappa]]'s finalization over the [[fleissCells]] census. */
   private[graft] def fleissFromCells(cellsIn: DataFrame): DataFrame = {
     val cells = cellsIn
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -3175,21 +3213,35 @@ object Analytics {
     * excluded.
     */
   def calibrationCurve(df: DataFrame, scoreCol: String, labelCol: String,
-                       nBins: Int = 10): DataFrame = {
+                       nBins: Int = 10): DataFrame =
+    calibrationFromStats(calibrationStats(df, scoreCol, labelCol, nBins))
+
+  /** [[calibrationCurve]]'s per-bin (bin, n, n_pos, `__sp` Σp4, `__se`
+    * Σ(p4−y·10⁴)²) BIGINT sums — also st30's streaming state:
+    * commutative integer sums, |bins| rows regardless of stream
+    * length, so a serving pipeline watches calibration drift live. */
+  private[graft] def calibrationStats(df: DataFrame, scoreCol: String,
+                                      labelCol: String,
+                                      nBins: Int): DataFrame = {
     require(nBins >= 2, s"nBins must be >= 2 (got $nBins)")
-    val base = df
-      .filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
+    df.filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
       .select(round(col(scoreCol) * 10000, 0).cast("long").as("__p4"),
         col(labelCol).cast("boolean").cast("long").as("__y"))
       .withColumn("bin",
         greatest(least(expr(s"__p4 * $nBins div 10000"),
           lit(nBins.toLong - 1)), lit(0L)))
-    base.groupBy(col("bin"))
+      .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"),
         sum(col("__y")).as("n_pos"),
         sum(col("__p4")).as("__sp"),
         sum((col("__p4") - col("__y") * 10000L) *
           (col("__p4") - col("__y") * 10000L)).as("__se"))
+  }
+
+  /** [[calibrationCurve]]'s finalization over the [[calibrationStats]]
+    * sums: every division, each a single display-rounded one. */
+  private[graft] def calibrationFromStats(stats: DataFrame): DataFrame =
+    stats
       .select(col("bin"), col("n"), col("n_pos"),
         round(col("__sp").cast("double") / (col("n") * 10000L).cast("double"), 6)
           .as("mean_pred"),
@@ -3199,7 +3251,6 @@ object Analytics {
           col("__sp").cast("double") / (col("n") * 10000L).cast("double"), 6)
           .as("gap"),
         round(col("__se").cast("double") / 100000000.0, 6).as("sq_err"))
-  }
 
   /** Theil-Sen slope estimator per group — the robust trend line a drift
     * monitor fits through a noisy daily series (median of all pairwise
@@ -3394,13 +3445,19 @@ object Analytics {
     * aggregation, O(1) output — streaming state is 4 BIGINTs.
     */
   def mcnemar(df: DataFrame, aCol: String, bCol: String): DataFrame =
-    mcnemarFromCells(df
-      .filter(col(aCol).isNotNull && col(bCol).isNotNull)
+    mcnemarFromCells(mcnemarCells(df, aCol, bCol))
+
+  /** [[mcnemar]]'s 2×2 paired-outcome (`__a`, `__b`, `__c`) census —
+    * also st47's WHOLE streaming state: four BIGINTs, mergeable by
+    * construction. */
+  private[graft] def mcnemarCells(df: DataFrame, aCol: String,
+                                  bCol: String): DataFrame =
+    df.filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .select(col(aCol).cast("boolean").as("__a"),
         col(bCol).cast("boolean").as("__b"))
-      .groupBy(col("__a"), col("__b")).agg(count(lit(1)).as("__c")))
+      .groupBy(col("__a"), col("__b")).agg(count(lit(1)).as("__c"))
 
-  /** [[mcnemar]]'s finalization over the 4-cell census. */
+  /** [[mcnemar]]'s finalization over the [[mcnemarCells]] census. */
   private[graft] def mcnemarFromCells(cells: DataFrame): DataFrame =
     cells.agg(
       coalesce(sum(when(col("__a") && col("__b"), col("__c"))), lit(0L))
@@ -3449,18 +3506,22 @@ object Analytics {
     */
   def wilcoxonSignedRank(df: DataFrame, aCol: String,
                          bCol: String): DataFrame =
-    wsrFromCensus(df
-      .filter(col(aCol).isNotNull && col(bCol).isNotNull)
+    wsrFromCensus(wsrCensus(df, aCol, bCol))
+
+  /** [[wilcoxonSignedRank]]'s (|d| = `__v`, `__t` ties, `__cp`
+    * positives) census — zero differences ride it as the `__v` = 0 cell
+    * (excluded from ranking, counted in n_pairs), so the census is the
+    * WHOLE streaming state of st51. */
+  private[graft] def wsrCensus(df: DataFrame, aCol: String,
+                               bCol: String): DataFrame =
+    df.filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .select((col(aCol).cast("long") - col(bCol).cast("long")).as("__d"))
       .groupBy(abs(col("__d")).as("__v"))
       .agg(count(lit(1)).as("__t"),
         coalesce(sum(when(col("__d") > 0L, 1L).otherwise(0L)), lit(0L))
-          .as("__cp")))
+          .as("__cp"))
 
-  /** [[wilcoxonSignedRank]]'s finalization over the (|d| = `__v`,
-    * `__t` ties, `__cp` positives) census — zero differences ride the
-    * census as the `__v` = 0 cell (excluded from ranking, counted in
-    * n_pairs), so the census is the WHOLE streaming state (st51). */
+  /** [[wilcoxonSignedRank]]'s finalization over the [[wsrCensus]]. */
   private[graft] def wsrFromCensus(censusRaw: DataFrame): DataFrame = {
     // two consumers (rank chain + the n_pairs total) — pin so the fact
     // is scanned once, release after materializing (fleiss discipline)
@@ -3529,17 +3590,19 @@ object Analytics {
   def jonckheereTerpstra(df: DataFrame, groupCol: String,
                          valueCol: String,
                          maxCells: Int = 8192): DataFrame =
-    jtFromCensus(df
-      .filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
+    jtFromCensus(jtCensus(df, groupCol, valueCol), maxCells)
+
+  /** [[jonckheereTerpstra]]'s (`__g`, `__v`, `__c`) cell census — also
+    * st53's WHOLE streaming state (the st41/st43 census rule). */
+  private[graft] def jtCensus(df: DataFrame, groupCol: String,
+                              valueCol: String): DataFrame =
+    df.filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
       .select(col(groupCol).cast("long").as("__g"),
         col(valueCol).cast("long").as("__v"))
       .groupBy(col("__g"), col("__v"))
-      .agg(count(lit(1)).as("__c")),
-      maxCells)
+      .agg(count(lit(1)).as("__c"))
 
-  /** [[jonckheereTerpstra]]'s finalization over a pre-built (`__g`,
-    * `__v`, `__c`) census — the st41/st43 census-state convention, so
-    * st53 can hold the cell census as streaming state. */
+  /** [[jonckheereTerpstra]]'s finalization over the [[jtCensus]]. */
   private[graft] def jtFromCensus(censusRaw: DataFrame,
                                   maxCells: Int): DataFrame = {
     val census = censusRaw.persist()
@@ -3620,17 +3683,22 @@ object Analytics {
     */
   def friedman(df: DataFrame, blockCol: String, treatCol: String,
                valueCol: String): DataFrame =
-    friedmanFromCells(df
-      .filter(col(blockCol).isNotNull && col(treatCol).isNotNull &&
+    friedmanFromCells(friedmanCells(df, blockCol, treatCol, valueCol))
+
+  /** [[friedman]]'s (block `__b`, treatment `__t`, `__s` sum, `__c`
+    * count) cell grid — two BIGINTs per cell, also st54's streaming
+    * state (the [[fleissCells]] precedent). */
+  private[graft] def friedmanCells(df: DataFrame, blockCol: String,
+                                   treatCol: String,
+                                   valueCol: String): DataFrame =
+    df.filter(col(blockCol).isNotNull && col(treatCol).isNotNull &&
         col(valueCol).isNotNull)
       .select(col(blockCol).as("__b"), col(treatCol).as("__t"),
         col(valueCol).cast("long").as("__v"))
       .groupBy(col("__b"), col("__t"))
-      .agg(sum(col("__v")).as("__s"), count(lit(1)).as("__c")))
+      .agg(sum(col("__v")).as("__s"), count(lit(1)).as("__c"))
 
-  /** [[friedman]]'s finalization over the (block `__b`, treatment
-    * `__t`, `__s` sum, `__c` count) cell grid — shared verbatim by
-    * batch x206 and streaming st54. */
+  /** [[friedman]]'s finalization over the [[friedmanCells]] grid. */
   private[graft] def friedmanFromCells(cells: DataFrame): DataFrame = {
     val pinned = cells.persist()
     val kRow = pinned.agg(countDistinct(col("__t")).as("__k"))
@@ -3671,6 +3739,35 @@ object Analytics {
     out
   }
 
+  /** The (value `__v`, `__ca`, `__cb`) two-sample census over ONE
+    * frame whose boolean `sideCol` names the sample (false → a, true →
+    * b; null value or side rows dropped). It is the whole state of four
+    * statistics — [[cramerVonMises]], [[effectSizes]], [[brunnerMunzel]]
+    * and [[moodMedian]] — and of their streaming twins st55, st56, st57
+    * and st59, which carry both samples on one stream: one state shape,
+    * four monitors (different? by how much? robust test? median
+    * split?). Bounded by the distinct values, not the rows. */
+  private[graft] def sideCensus(rows: DataFrame, valueCol: String,
+                                sideCol: String): DataFrame =
+    rows
+      .filter(col(valueCol).isNotNull && col(sideCol).isNotNull)
+      .select(col(valueCol).cast("long").as("__v"),
+        col(sideCol).cast("boolean").as("__s"))
+      .groupBy(col("__v"))
+      .agg(coalesce(sum(when(!col("__s"), 1L).otherwise(0L)), lit(0L))
+          .as("__ca"),
+        coalesce(sum(when(col("__s"), 1L).otherwise(0L)), lit(0L))
+          .as("__cb"))
+
+  /** [[sideCensus]] over two frames: `a`'s and `b`'s `valueCol`, tagged
+    * with their side. */
+  private[graft] def twoSampleCensus(a: DataFrame, b: DataFrame,
+                                     valueCol: String): DataFrame =
+    sideCensus(a.select(col(valueCol).cast("long").as("__v"),
+        lit(false).as("__side"))
+      .unionByName(b.select(col(valueCol).cast("long").as("__v"),
+        lit(true).as("__side"))), "__v", "__side")
+
   /** Cramér-von Mises two-sample test — the INTEGRATED-distance
     * companion of KS ([[ksStatistic]], x89): where KS reads only the
     * single worst ECDF gap, CvM integrates the SQUARED gap over the
@@ -3700,16 +3797,8 @@ object Analytics {
     * [[kruskalWallis]] shape). Nothing row-scale shuffles.
     */
   def cramerVonMises(a: DataFrame, b: DataFrame,
-                     valueCol: String): DataFrame = {
-    def cen(df: DataFrame, out: String) = df
-      .filter(col(valueCol).isNotNull)
-      .select(col(valueCol).cast("long").as("__v"))
-      .groupBy(col("__v")).agg(count(lit(1)).as(out))
-    cvmFromCensus(cen(a, "__ca")
-      .join(cen(b, "__cb"), Seq("__v"), "full_outer")
-      .select(col("__v"), coalesce(col("__ca"), lit(0L)).as("__ca"),
-        coalesce(col("__cb"), lit(0L)).as("__cb")))
-  }
+                     valueCol: String): DataFrame =
+    cvmFromCensus(twoSampleCensus(a, b, valueCol))
 
   /** [[cramerVonMises]]'s finalization over the (value `__v`, `__ca`,
     * `__cb`) census — the st41/st43 census-state convention, so st55
@@ -3877,16 +3966,8 @@ object Analytics {
     * the median and the cells come off the DISTINCT-value census.
     */
   def moodMedian(a: DataFrame, b: DataFrame,
-                 valueCol: String): DataFrame = {
-    def cen(df: DataFrame, out: String) = df
-      .filter(col(valueCol).isNotNull)
-      .select(col(valueCol).cast("long").as("__v"))
-      .groupBy(col("__v")).agg(count(lit(1)).as(out))
-    mmFromCensus(cen(a, "__ca")
-      .join(cen(b, "__cb"), Seq("__v"), "full_outer")
-      .select(col("__v"), coalesce(col("__ca"), lit(0L)).as("__ca"),
-        coalesce(col("__cb"), lit(0L)).as("__cb")))
-  }
+                 valueCol: String): DataFrame =
+    mmFromCensus(twoSampleCensus(a, b, valueCol))
 
   /** [[moodMedian]]'s finalization over the (value `__v`, `__ca`,
     * `__cb`) census — the fourth monitor on the identical census state
@@ -3966,16 +4047,8 @@ object Analytics {
     * pass. Nothing row-scale shuffles.
     */
   def brunnerMunzel(a: DataFrame, b: DataFrame,
-                    valueCol: String): DataFrame = {
-    def cen(df: DataFrame, out: String) = df
-      .filter(col(valueCol).isNotNull)
-      .select(col(valueCol).cast("long").as("__v"))
-      .groupBy(col("__v")).agg(count(lit(1)).as(out))
-    bmFromCensus(cen(a, "__ca")
-      .join(cen(b, "__cb"), Seq("__v"), "full_outer")
-      .select(col("__v"), coalesce(col("__ca"), lit(0L)).as("__ca"),
-        coalesce(col("__cb"), lit(0L)).as("__cb")))
-  }
+                    valueCol: String): DataFrame =
+    bmFromCensus(twoSampleCensus(a, b, valueCol))
 
   /** [[brunnerMunzel]]'s finalization over the (value `__v`, `__ca`,
     * `__cb`) census — the same census shape st55/st56 hold, so st57
@@ -4075,16 +4148,8 @@ object Analytics {
     * over the DISTINCT-value census. Nothing row-scale shuffles.
     */
   def effectSizes(a: DataFrame, b: DataFrame,
-                  valueCol: String): DataFrame = {
-    def cen(df: DataFrame, out: String) = df
-      .filter(col(valueCol).isNotNull)
-      .select(col(valueCol).cast("long").as("__v"))
-      .groupBy(col("__v")).agg(count(lit(1)).as(out))
-    esFromCensus(cen(a, "__ca")
-      .join(cen(b, "__cb"), Seq("__v"), "full_outer")
-      .select(col("__v"), coalesce(col("__ca"), lit(0L)).as("__ca"),
-        coalesce(col("__cb"), lit(0L)).as("__cb")))
-  }
+                  valueCol: String): DataFrame =
+    esFromCensus(twoSampleCensus(a, b, valueCol))
 
   /** [[effectSizes]]'s finalization over the (value `__v`, `__ca`,
     * `__cb`) census — the SAME census shape [[cvmFromCensus]] holds, so
@@ -4169,17 +4234,21 @@ object Analytics {
     */
   def cochranArmitage(df: DataFrame, doseCol: String,
                       successCol: String): DataFrame =
-    caFromCensus(df
-      .filter(col(doseCol).isNotNull && col(successCol).isNotNull)
+    caFromCensus(caCensus(df, doseCol, successCol))
+
+  /** [[cochranArmitage]]'s k-row (dose `__s`, `__n`, `__r` successes)
+    * census — two BIGINTs per dose level, also st52's streaming state. */
+  private[graft] def caCensus(df: DataFrame, doseCol: String,
+                              successCol: String): DataFrame =
+    df.filter(col(doseCol).isNotNull && col(successCol).isNotNull)
       .select(col(doseCol).cast("long").as("__s"),
         col(successCol).cast("boolean").as("__ok"))
       .groupBy(col("__s"))
       .agg(count(lit(1)).as("__n"),
         coalesce(sum(when(col("__ok"), 1L).otherwise(0L)), lit(0L))
-          .as("__r")))
+          .as("__r"))
 
-  /** [[cochranArmitage]]'s finalization over the (dose `__s`, `__n`,
-    * `__r`) census — shared verbatim by batch x203 and streaming st52. */
+  /** [[cochranArmitage]]'s finalization over the [[caCensus]]. */
   private[graft] def caFromCensus(census: DataFrame): DataFrame =
     census.agg(
       coalesce(sum(col("__n")), lit(0L)).as("__N"),

@@ -67,34 +67,18 @@ object ScaleOps {
     */
   def withAqeSkewJoin[T](spark: SparkSession, thresholdBytes: Long,
                          advisoryBytes: Long, factor: Double = 2.0)
-                        (body: => T): T = {
-    val keys = Seq(
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        thresholdBytes.toString)
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-        factor.toString)
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        advisoryBytes.toString)
+                        (body: => T): T =
+    graft.GraftSession.withConfs(spark, Seq(
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" ->
+        thresholdBytes.toString,
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> factor.toString,
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
+        advisoryBytes.toString,
       // coalescing would re-merge the freshly split partitions at toy sizes
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      body
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"))(body)
 
   /** Write a table bucketed by `key` so repeated joins/aggregations on
     * that key are shuffle-free (co-located scans). Bucketed writes need a
@@ -1134,17 +1118,22 @@ object ScaleOps {
   def groupedWeightedPercentiles(df: DataFrame, groupCol: String,
                                  valueCol: String, weightCol: String,
                                  qs: Seq[Double] = Seq(0.5, 0.9, 0.99)): DataFrame =
-    weightedPercentilesFromCensus(df
-      .filter(col(groupCol).isNotNull && col(valueCol).isNotNull &&
-        col(weightCol).isNotNull && col(weightCol) > 0)
-      .groupBy(col(groupCol), col(valueCol))
-      .agg(sum(col(weightCol).cast("long")).as("__c")),
+    weightedPercentilesFromCensus(
+      weightedPercentilesCensus(df, groupCol, valueCol, weightCol),
       groupCol, valueCol, qs)
 
-  /** [[groupedWeightedPercentiles]]' finalization over a pre-built
-    * (group, value, `__c` summed-weight) census — split out so the
-    * census can be maintained as STREAMING state (st34) and finalized as
-    * a cheap batch, the hllFinalize convention. */
+  /** [[groupedWeightedPercentiles]]' (group, value, `__c` summed-weight)
+    * census — also st34's streaming state, bounded by group × value
+    * cardinality, not the row stream. */
+  private[graft] def weightedPercentilesCensus(df: DataFrame,
+      groupCol: String, valueCol: String, weightCol: String): DataFrame =
+    df.filter(col(groupCol).isNotNull && col(valueCol).isNotNull &&
+        col(weightCol).isNotNull && col(weightCol) > 0)
+      .groupBy(col(groupCol), col(valueCol))
+      .agg(sum(col(weightCol).cast("long")).as("__c"))
+
+  /** [[groupedWeightedPercentiles]]' finalization over the
+    * [[weightedPercentilesCensus]]. */
   private[graft] def weightedPercentilesFromCensus(census: DataFrame,
       groupCol: String, valueCol: String, qs: Seq[Double]): DataFrame = {
     require(qs.nonEmpty && qs.forall(q => q > 0 && q <= 1),
@@ -1178,17 +1167,12 @@ object ScaleOps {
     */
   def groupedMad(df: DataFrame, groupCol: String,
                  valueCol: String): DataFrame =
-    madFromCensus(df
-      .filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(groupCol), col(valueCol).cast("long").as("__v"))
-      .groupBy(col(groupCol), col("__v"))
-      .agg(count(lit(1)).as("__c")),
-      groupCol)
+    madFromCensus(Analytics.valueCensus(df, groupCol, valueCol), groupCol)
 
-  /** [[groupedMad]]'s finalization over a pre-built (group, `__v` long
-    * value, `__c` BIGINT count) census — split out so the census can be
-    * maintained as STREAMING state (st35) and finalized as a cheap
-    * batch, the [[weightedPercentilesFromCensus]] convention. Both
+  /** [[groupedMad]]'s finalization over the [[Analytics.valueCensus]]
+    * (group, `__v` long value, `__c` BIGINT count) — also st35's
+    * streaming state, the robust center+scale pair feeding the x177
+    * outlier gate on live data. Both
     * medians are census-side order statistics: the value median directly
     * off the census, the deviation median off the DERIVED census
     * (|v − med| with the same counts, re-summed — never the rows; the
@@ -1273,23 +1257,27 @@ object ScaleOps {
                          idCol: String, salt: String,
                          level: Double = 0.9): DataFrame = {
     require(level > 0 && level < 1, s"level must be in (0,1) (got $level)")
-    conformalFromCensus(df
-      .filter(col(groupCol).isNotNull && col(valueCol).isNotNull &&
+    conformalFromCensus(conformalCensus(df, groupCol, valueCol, idCol, salt),
+      groupCol, level)
+  }
+
+  /** [[conformalIntervals]]' (group, `__half` "c"/"t", `__v` long
+    * value, `__c` BIGINT count) census — also st37's streaming state:
+    * the md5 coin and the value projection are map-side, so each
+    * micro-batch folds its rows into per-half counts. Bounded by
+    * |groups| × 2 × |distinct values|; coarsen units to cap it. */
+  private[graft] def conformalCensus(df: DataFrame, groupCol: String,
+      valueCol: String, idCol: String, salt: String): DataFrame =
+    df.filter(col(groupCol).isNotNull && col(valueCol).isNotNull &&
         col(idCol).isNotNull)
       .select(col(groupCol), col(valueCol).cast("long").as("__v"),
         when(conv(substring(md5(concat(lit(salt),
           col(idCol).cast("string"))), 1, 8), 16, 10).cast("long") <
           2147483648L, lit("c")).otherwise(lit("t")).as("__half"))
       .groupBy(col(groupCol), col("__half"), col("__v"))
-      .agg(count(lit(1)).as("__c")),
-      groupCol, level)
-  }
+      .agg(count(lit(1)).as("__c"))
 
-  /** [[conformalIntervals]]' finalization over a pre-built (group,
-    * `__half` "c"/"t", `__v` long value, `__c` BIGINT count) census —
-    * split out so the per-half value census can be maintained as
-    * STREAMING state (st37) and finalized as a cheap batch, the
-    * [[weightedPercentilesFromCensus]] / [[madFromCensus]] convention.
+  /** [[conformalIntervals]]' finalization over the [[conformalCensus]].
     * Everything — calibration median, residual census, conformal rank,
     * held-out coverage — derives census-side; output matches the
     * row-level form bit-for-bit.
@@ -1424,14 +1412,19 @@ object ScaleOps {
   }
 
   def keySkewAudit(df: DataFrame, keyCol: String): DataFrame =
-    keySkewFromCensus(df.filter(col(keyCol).isNotNull)
-      .groupBy(col(keyCol)).agg(count(lit(1)).as("__c")), keyCol)
+    keySkewFromCensus(keySkewCensus(df, keyCol), keyCol)
 
-  /** [[keySkewAudit]]'s finalization over a pre-built (key, `__c` count)
-    * census — shared with the streaming twin, whose census is the
-    * mergeable stream state.
-    */
-  def keySkewFromCensus(census: DataFrame, keyCol: String): DataFrame = {
+  /** [[keySkewAudit]]'s per-key (key, `__c` count) census — also st25's
+    * streaming state (commutative integer counts), so a pipeline watches
+    * a partition key drift toward skew while data arrives and makes the
+    * salting decision before the nightly job falls over. */
+  private[graft] def keySkewCensus(df: DataFrame, keyCol: String): DataFrame =
+    df.filter(col(keyCol).isNotNull)
+      .groupBy(col(keyCol)).agg(count(lit(1)).as("__c"))
+
+  /** [[keySkewAudit]]'s finalization over the [[keySkewCensus]]. */
+  private[graft] def keySkewFromCensus(census: DataFrame,
+                                       keyCol: String): DataFrame = {
     val w = Window.orderBy(col("__c").asc, col(keyCol).cast("string").asc)
     val ranked = census
       .select(col("__c"), row_number().over(w).cast("long").as("__r"))

@@ -1180,14 +1180,20 @@ object TextOps {
     * [[tokens]] whitespace convention, empty tokens dropped.
     */
   def vocabularyRichness(docs: DataFrame, textCol: String): DataFrame =
-    richnessFromCensus(docs.filter(col(textCol).isNotNull)
+    richnessFromCensus(richnessCensus(docs, textCol))
+
+  /** [[vocabularyRichness]]'s (`__w`, `__c`) token census — also st46's
+    * streaming state, |vocab| rows, not the stream. Singleton/doubleton
+    * counts DECREASE when a type's second copy arrives, so no
+    * row-at-a-time fold could maintain them: the census is the state. */
+  private[graft] def richnessCensus(docs: DataFrame,
+                                    textCol: String): DataFrame =
+    docs.filter(col(textCol).isNotNull)
       .select(explode(tokens(col(textCol))).as("__w"))
       .filter(length(col("__w")) > 0)
-      .groupBy(col("__w")).agg(count(lit(1)).as("__c")))
+      .groupBy(col("__w")).agg(count(lit(1)).as("__c"))
 
-  /** [[vocabularyRichness]]'s finalization over a (`__w`, `__c`) token
-    * census — the census-state convention, so st46 holds the census as
-    * streaming state. */
+  /** [[vocabularyRichness]]'s finalization over the [[richnessCensus]]. */
   private[graft] def richnessFromCensus(census: DataFrame): DataFrame =
     census.agg(
       coalesce(sum(col("__c")), lit(0L)).as("n_tokens"),

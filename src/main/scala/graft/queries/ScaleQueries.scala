@@ -5319,9 +5319,13 @@ object ScaleQueries {
     // — graded on x126's oracle verbatim.
     QuerySpec("st21_stream_k_anonymity", (s, d) => {
       val schema = s.read.parquet(s"$d/customer.parquet").schema
-      Streams.runStreamingKAnonymityAvailableNow(s, d, "customer.parquet",
-        schema, Seq("c_nationkey", "c_mktsegment"),
-        (col("c_acctbal") > 0), k = 10)
+      val qi = Seq("c_nationkey", "c_mktsegment")
+      val raw = Streams.fileStream(s, d, "customer.parquet", schema,
+        onePerTrigger = true)
+        .select(col("c_nationkey"), col("c_mktsegment"),
+          (col("c_acctbal") > 0).as("in_credit"))
+      Streams.drain(Analytics.kAnonymityCells(raw, qi, "in_credit"),
+        "complete", Analytics.kAnonymityFromCells(_, qi, k = 10))
     },
       Some(x126OracleSql)),
 
@@ -5702,8 +5706,11 @@ object ScaleQueries {
     // graded on x134's oracle verbatim.
     QuerySpec("st25_stream_key_skew", (s, d) => {
       val schema = s.read.parquet(s"$d/orders.parquet").schema
-      Streams.runStreamingKeySkewAvailableNow(s, d, "orders.parquet",
-        schema, "o_custkey")
+      val raw = Streams.fileStream(s, d, "orders.parquet", schema,
+        onePerTrigger = true)
+      Streams.drain(
+        graft.operators.ScaleOps.keySkewCensus(raw, "o_custkey"), "complete",
+        graft.operators.ScaleOps.keySkewFromCensus(_, "o_custkey"))
     },
       Some(keySkewOracleSql)),
 
@@ -6518,8 +6525,8 @@ object ScaleQueries {
           round((graft.functions.CosineSimilarity(col("embedding"),
             typedLit(qv)) + 1) / 2, 4).as("p"),
           (col("label") === qLabel).as("y"))
-      Streams.runStreamingCalibrationAvailableNow(scored, "p", "y",
-        nBins = 10)
+      Streams.drain(Analytics.calibrationStats(scored, "p", "y",
+        nBins = 10), "complete", Analytics.calibrationFromStats)
         .orderBy("bin")
     },
       Some(calibrationOracleSql)),
@@ -6537,8 +6544,8 @@ object ScaleQueries {
         .select(col("event_type").as("rater_a"),
           when(u < 0.7, col("event_type")).otherwise(lit("other"))
             .as("rater_b"))
-      Streams.runStreamingKappaAvailableNow(labeled, "rater_a",
-        "rater_b")
+      Streams.drain(Analytics.kappaCells(labeled, "rater_a", "rater_b"),
+        "complete", Analytics.kappaFromCells)
     },
       Some(kappaOracleSql)),
 
@@ -7092,8 +7099,8 @@ object ScaleQueries {
           .as("r"))
         .select(col("item"), col("r.rater").as("rater"),
           col("r.cat").as("cat"))
-      Streams.runStreamingFleissAvailableNow(ratings, "item", "rater",
-        "cat")
+      Streams.drain(Analytics.fleissCells(ratings, "item", "rater", "cat"),
+        "complete", Analytics.fleissFromCells)
     },
       Some(fleissOracleSql)),
 
@@ -7183,8 +7190,10 @@ object ScaleQueries {
         onePerTrigger = true)
         .select(col("lang"), col("n_chars").cast("long").as("len"),
           col("n_chars").cast("long").as("w"))
-      Streams.runStreamingWeightedPercentilesAvailableNow(raw, "lang",
-        "len", "w", Seq(0.5, 0.9, 0.99))
+      Streams.drain(graft.operators.ScaleOps.weightedPercentilesCensus(raw,
+        "lang", "len", "w"), "complete",
+        graft.operators.ScaleOps.weightedPercentilesFromCensus(_, "lang",
+          "len", Seq(0.5, 0.9, 0.99)))
         .orderBy("lang")
     },
       Some(weightedPctOracleSql)),
@@ -7266,8 +7275,9 @@ object ScaleQueries {
         onePerTrigger = true)
         .select(col("o_orderpriority"),
           round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-      Streams.runStreamingMadAvailableNow(raw, "o_orderpriority",
-        "cents")
+      Streams.drain(Analytics.valueCensus(raw, "o_orderpriority", "cents"),
+        "complete",
+        graft.operators.ScaleOps.madFromCensus(_, "o_orderpriority"))
         .orderBy("o_orderpriority")
     },
       Some(groupedMadOracleSql)),
@@ -7328,8 +7338,10 @@ object ScaleQueries {
         onePerTrigger = true)
         .select(col("o_orderkey"), col("o_orderpriority"),
           round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-      Streams.runStreamingConformalAvailableNow(raw, "o_orderpriority",
-        "cents", "o_orderkey", salt = "cf1:", level = 0.9)
+      Streams.drain(graft.operators.ScaleOps.conformalCensus(raw,
+        "o_orderpriority", "cents", "o_orderkey", salt = "cf1:"),
+        "complete", graft.operators.ScaleOps.conformalFromCensus(_,
+          "o_orderpriority", level = 0.9))
         .orderBy("o_orderpriority")
     },
       Some(conformalOracleSql)),
@@ -7402,8 +7414,8 @@ object ScaleQueries {
           round(col("l_quantity"), 0).cast("long").as("qty"),
           round(col("l_discount") * 100, 0).cast("long").as("disc"),
           round(col("l_extendedprice"), 0).cast("long").as("dollars"))
-      Streams.runStreamingOls2AvailableNow(raw, "l_returnflag",
-        "qty", "disc", "dollars")
+      Streams.drain(Analytics.ols2Stats(raw, "l_returnflag", "qty", "disc",
+        "dollars"), "complete", Analytics.olsFromStats(_, "l_returnflag"))
         .orderBy("l_returnflag")
     },
       Some(ols2OracleSql)),
@@ -7418,8 +7430,8 @@ object ScaleQueries {
         onePerTrigger = true)
       val ev = Streams.normalizeTs(raw)
         .select(col("event_type"), dayofweek(col("ts")).as("dow"))
-      Streams.runStreamingMutualInfoAvailableNow(ev, "event_type",
-        "dow")
+      Streams.drain(Analytics.mutualInformationCells(ev, "event_type",
+        "dow"), "complete", Analytics.mutualInformationFromCells)
     },
       Some(mutualInfoOracleSql)),
 
@@ -7444,8 +7456,8 @@ object ScaleQueries {
         onePerTrigger = true)
         .select(col("o_orderpriority"),
           round(col("o_totalprice"), 0).cast("long").as("dollars"))
-      Streams.runStreamingAnovaAvailableNow(raw, "o_orderpriority",
-        "dollars")
+      Streams.drain(Analytics.anovaStats(raw, "o_orderpriority",
+        "dollars"), "complete", Analytics.anovaFromStats)
     },
       Some(anovaOracleSql)),
 
@@ -7470,8 +7482,8 @@ object ScaleQueries {
         onePerTrigger = true)
         .select(col("o_orderpriority"),
           round(col("o_totalprice"), 0).cast("long").as("dollars"))
-      Streams.runStreamingKruskalAvailableNow(raw, "o_orderpriority",
-        "dollars")
+      Streams.drain(Analytics.valueCensus(raw, "o_orderpriority",
+        "dollars"), "complete", Analytics.kwFromCensus(_, "o_orderpriority"))
     },
       Some(kruskalOracleSql)),
 
@@ -7524,8 +7536,8 @@ object ScaleQueries {
         onePerTrigger = true)
         .select(col("o_orderpriority"),
           round(col("o_totalprice"), 0).cast("long").as("dollars"))
-      Streams.runStreamingBrownForsytheAvailableNow(raw,
-        "o_orderpriority", "dollars")
+      Streams.drain(Analytics.valueCensus(raw, "o_orderpriority",
+        "dollars"), "complete", Analytics.bfFromCensus(_, "o_orderpriority"))
     },
       Some(brownForsytheOracleSql)),
 
@@ -7539,8 +7551,8 @@ object ScaleQueries {
         .select(col("l_quantity").cast("long").as("qty"),
           floor(col("l_extendedprice") / lit(1000.0)).cast("long")
             .as("pricebin"))
-      Streams.runStreamingKendallAvailableNow(raw, "qty", "pricebin",
-        8192)
+      Streams.drain(Analytics.ktCensus(raw, "qty", "pricebin"), "complete",
+        Analytics.ktFromCensus(_, 8192))
     },
       Some(kendallOracleSql)),
 
@@ -7604,8 +7616,9 @@ object ScaleQueries {
       val ev = Streams.normalizeTs(raw)
         .select(col("event_type"),
           round(col("value") * 100, 0).cast("long").as("cents"))
-      Streams.runStreamingWelchAvailableNow(ev, "event_type", "cents",
-        "purchase", "view")
+      Streams.drain(Analytics.welchStats(ev, "event_type", "cents",
+        "purchase", "view"), "complete",
+        Analytics.welchFromStats(_, "purchase", "view"))
     },
       Some(welchOracleSql)),
 
@@ -7639,7 +7652,11 @@ object ScaleQueries {
       val docsSchema = s.read.parquet(s"$d/documents.parquet").schema
       val stream = Streams.fileStream(s, d, "documents.parquet", docsSchema,
         onePerTrigger = true)
-      Streams.runStreamingRichnessAvailableNow(stream, "text")
+        // spread each single-file micro-batch before the tokenize-explode
+        // (the st15 shape); token counts are commutative
+        .repartition(s.sparkContext.defaultParallelism)
+      Streams.drain(TextOps.richnessCensus(stream, "text"), "complete",
+        TextOps.richnessFromCensus)
     },
       Some(richnessOracleSql)),
 
@@ -7858,7 +7875,8 @@ object ScaleQueries {
         .select((length(col("text")) >= 200).as("ga"),
           (size(graft.operators.TextOps.tokens(col("text"))) >= 40)
             .as("gb"))
-      Streams.runStreamingMcnemarAvailableNow(stream, "ga", "gb")
+      Streams.drain(Analytics.mcnemarCells(stream, "ga", "gb"), "complete",
+        Analytics.mcnemarFromCells)
     },
       Some(mcnemarOracleSql)),
 
@@ -9438,7 +9456,8 @@ object ScaleQueries {
         .select(length(col("text")).cast("long").as("a"),
           (size(graft.operators.TextOps.tokens(col("text"))) * 25)
             .cast("long").as("b"))
-      Streams.runStreamingWilcoxonAvailableNow(rows, "a", "b")
+      Streams.drain(Analytics.wsrCensus(rows, "a", "b"), "complete",
+        Analytics.wsrFromCensus)
     },
       Some(wsrOracleSql)),
 
@@ -9465,8 +9484,8 @@ object ScaleQueries {
       val rows = raw
         .select(col("l_quantity").cast("long").as("dose"),
           (col("l_returnflag") === "R").as("ok"))
-      Streams.runStreamingCochranArmitageAvailableNow(rows, "dose",
-        "ok")
+      Streams.drain(Analytics.caCensus(rows, "dose", "ok"), "complete",
+        Analytics.caFromCensus)
     },
       Some(caOracleSql)),
 
@@ -9573,7 +9592,8 @@ object ScaleQueries {
         onePerTrigger = true)
       val rows = raw.select(col("l_linenumber").as("g"),
         col("l_quantity").cast("long").as("v"))
-      Streams.runStreamingJonckheereAvailableNow(rows, "g", "v")
+      Streams.drain(Analytics.jtCensus(rows, "g", "v"), "complete",
+        Analytics.jtFromCensus(_, 8192))
     },
       Some(jtOracleSql)),
 
@@ -9604,7 +9624,8 @@ object ScaleQueries {
       val rows = raw.select(col("o_custkey").as("bl"),
         col("o_orderpriority").as("tr"),
         round(col("o_totalprice") * 100, 0).cast("long").as("v"))
-      Streams.runStreamingFriedmanAvailableNow(rows, "bl", "tr", "v")
+      Streams.drain(Analytics.friedmanCells(rows, "bl", "tr", "v"),
+        "complete", Analytics.friedmanFromCells)
     },
       Some(friedmanOracleSql)),
 
@@ -9638,7 +9659,8 @@ object ScaleQueries {
         .select(round(col("o_totalprice") * 100, 0).cast("long")
             .as("cents"),
           (col("o_orderpriority") === "5-LOW").as("side"))
-      Streams.runStreamingCvmAvailableNow(rows, "cents", "side")
+      Streams.drain(Analytics.sideCensus(rows, "cents", "side"), "complete",
+        Analytics.cvmFromCensus)
     },
       Some(cvmOracleSql)),
 
@@ -9670,8 +9692,8 @@ object ScaleQueries {
         .select(round(col("o_totalprice") * 100, 0).cast("long")
             .as("cents"),
           (col("o_orderpriority") === "5-LOW").as("side"))
-      Streams.runStreamingMoodMedianAvailableNow(rows, "cents",
-        "side")
+      Streams.drain(Analytics.sideCensus(rows, "cents", "side"), "complete",
+        Analytics.mmFromCensus)
     },
       Some(mmOracleSql)),
 
@@ -9750,8 +9772,8 @@ object ScaleQueries {
         .select(round(col("o_totalprice") * 100, 0).cast("long")
             .as("cents"),
           (col("o_orderpriority") === "5-LOW").as("side"))
-      Streams.runStreamingBrunnerMunzelAvailableNow(rows, "cents",
-        "side")
+      Streams.drain(Analytics.sideCensus(rows, "cents", "side"), "complete",
+        Analytics.bmFromCensus)
     },
       Some(bmOracleSql)),
 
@@ -9837,8 +9859,8 @@ object ScaleQueries {
         .select(round(col("o_totalprice") * 100, 0).cast("long")
             .as("cents"),
           (col("o_orderpriority") === "5-LOW").as("side"))
-      Streams.runStreamingEffectSizesAvailableNow(rows, "cents",
-        "side")
+      Streams.drain(Analytics.sideCensus(rows, "cents", "side"), "complete",
+        Analytics.esFromCensus)
     },
       Some(esOracleSql)),
 

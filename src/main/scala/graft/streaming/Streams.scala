@@ -308,35 +308,28 @@ object Streams {
     * under its own session sizing.
     */
   private def withReplayConfs[A](spark: SparkSession)(body: => A): A =
-    withConf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true") {
-      withConf(spark, "spark.sql.shuffle.partitions", "8")(body)
-    }
-
-  private def withConf[A](spark: SparkSession, key: String,
-                          value: String)(body: => A): A = {
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+    graft.GraftSession.withConfs(spark, Seq(
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.shuffle.partitions" -> "8"))(body)
 
   private val drainRun = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** The one bounded drain behind every memory-sink `run*AvailableNow`
-    * runner: `df` runs into a memory sink under Trigger.AvailableNow and
-    * the replay confs, its result is copied out, and `finalize` is applied
-    * to the copy (still under the replay confs, so an eager finalize plans
-    * at the replay partition count). Each call gets its own sink name
+  /** The one bounded drain into a memory sink: the `run*AvailableNow`
+    * runners here and the `st*` queries that drain a batch operator's
+    * own state builder straight into its finalizer (e.g.
+    * `drain(Analytics.wsrCensus(rows, a, b), "complete",
+    * Analytics.wsrFromCensus)`) all go through it. `df` runs into a
+    * memory sink under Trigger.AvailableNow and the replay confs, its
+    * result is copied out, and `finalize` is applied to the copy (still
+    * under the replay confs, so an eager finalize plans at the replay
+    * partition count). Each call gets its own sink name
     * (`graft_drain_<n>`) and temp checkpoint dir (`graft_drain_<n>_ckpt*`);
     * both are removed in a `finally`, so neither a finished nor a failed
     * drain keeps a result table registered in memory or leaves a
     * checkpoint dir behind. `mode` is the sink's output mode.
     */
-  private def drain(df: DataFrame, mode: String,
-                    finalize: DataFrame => DataFrame = identity): DataFrame = {
+  private[graft] def drain(df: DataFrame, mode: String,
+      finalize: DataFrame => DataFrame = identity): DataFrame = {
     val spark = df.sparkSession
     val sink = s"graft_drain_${drainRun.incrementAndGet()}"
     val ckpt = java.nio.file.Files.createTempDirectory(s"${sink}_ckpt").toString
@@ -1045,24 +1038,6 @@ object Streams {
       "complete")
   }
 
-  /** Streaming k-anonymity monitor — the streaming twin of
-    * [[graft.operators.Analytics.kAnonymity]]: the (QI…, sensitive-value)
-    * cell counts are the mergeable state (replay-commutative integer
-    * sums — micro-batch slicing provably cannot move the census), and the
-    * group-size / diversity finalization runs batch-side over |cells|
-    * rows via [[graft.operators.Analytics.kAnonymityFromCells]]. This is
-    * how a privacy gate watches a CDC feed: the risk summary is always
-    * current without rescanning history.
-    */
-  def runStreamingKAnonymityAvailableNow(spark: SparkSession, dir: String,
-                                         glob: String, schema: StructType,
-                                         qiCols: Seq[String],
-                                         sensitive: Column, k: Int): DataFrame =
-    drain(fileStream(spark, dir, glob, schema, onePerTrigger = true)
-      .groupBy((qiCols.map(col) :+ sensitive.as("__sv")): _*)
-      .agg(count(lit(1)).as("__n")), "complete",
-      graft.operators.Analytics.kAnonymityFromCells(_, qiCols, k))
-
   /** Streaming nearest-centroid routing: each embedding on the stream is
     * assigned to its most-cosine-similar member of a SMALL static centroid
     * set, and the state is one (count, Σ fixed-point sim) pair per
@@ -1271,25 +1246,6 @@ object Streams {
       .agg(count(lit(1)).as("n_hits")), "complete")
   }
 
-  /** Streaming key-skew monitor — the streaming twin of
-    * [[graft.operators.ScaleOps.keySkewAudit]]: the per-key row census is
-    * the mergeable stream state (commutative integer counts — replay
-    * slicing provably cannot move it), and the order-statistic
-    * finalization runs batch-side over the |keys|-row sink via
-    * [[graft.operators.ScaleOps.keySkewFromCensus]]. This is how a
-    * pipeline watches a partition key DRIFT toward skew while data
-    * arrives — the salting decision gets made before the nightly job
-    * falls over, not after.
-    */
-  def runStreamingKeySkewAvailableNow(spark: SparkSession, dir: String,
-                                      glob: String, schema: StructType,
-                                      keyCol: String): DataFrame =
-    drain(fileStream(spark, dir, glob, schema, onePerTrigger = true)
-      .filter(col(keyCol).isNotNull)
-      .groupBy(col(keyCol))
-      .agg(count(lit(1)).as("__c")), "complete",
-      graft.operators.ScaleOps.keySkewFromCensus(_, keyCol))
-
   /** Streaming blocked fuzzy linkage — the streaming twin of
     * [[graft.operators.DedupOps.blockedLinkage]]: arriving records are
     * matched against the STATIC registry (a snapshot of the same table)
@@ -1400,124 +1356,6 @@ object Streams {
     })
   }
 
-  /** Streaming calibration monitor — the streaming twin of
-    * [[graft.operators.Analytics.calibrationCurve]]: per-bin
-    * (n, n_pos, Σp4, Σ(p4−y·10⁴)²) integer sums are the streaming state
-    * (commutative BIGINTs — replay slicing provably cannot move them,
-    * |bins| rows regardless of stream length); every division is
-    * finalized batch-side. This is how a serving pipeline watches a
-    * model's calibration drift live. Bitwise equal to the batch
-    * operator, graded on the identical oracle.
-    */
-  def runStreamingCalibrationAvailableNow(scored: DataFrame,
-                                          scoreCol: String, labelCol: String,
-                                          nBins: Int): DataFrame = {
-    require(nBins >= 2, s"nBins must be >= 2 (got $nBins)")
-    drain(scored
-      .filter(col(scoreCol).isNotNull && col(labelCol).isNotNull)
-      .select(round(col(scoreCol) * 10000, 0).cast("long").as("__p4"),
-        col(labelCol).cast("boolean").cast("long").as("__y"))
-      .withColumn("bin",
-        least(expr(s"__p4 * $nBins div 10000"), lit(nBins.toLong - 1)))
-      .groupBy(col("bin"))
-      .agg(count(lit(1)).as("n"), sum(col("__y")).as("n_pos"),
-        sum(col("__p4")).as("__sp"),
-        sum((col("__p4") - col("__y") * 10000L) *
-          (col("__p4") - col("__y") * 10000L)).as("__se")), "complete", _
-      .select(col("bin"), col("n"), col("n_pos"),
-        round(col("__sp").cast("double") /
-          (col("n") * 10000L).cast("double"), 6).as("mean_pred"),
-        round(col("n_pos").cast("double") / col("n").cast("double"), 6)
-          .as("obs_rate"),
-        round(col("n_pos").cast("double") / col("n").cast("double") -
-          col("__sp").cast("double") / (col("n") * 10000L).cast("double"), 6)
-          .as("gap"),
-        round(col("__se").cast("double") / 100000000.0, 6).as("sq_err")))
-  }
-
-  /** Streaming inter-rater agreement — the streaming twin of
-    * [[graft.operators.Analytics.cohensKappa]]: the |labels|²-bounded
-    * contingency table (cell counts) is the streaming state — the
-    * smallest mergeable sufficient statistic for κ — and the margins,
-    * chance agreement, and the cross-multiplied BIGINT κ identity all
-    * finalize batch-side from the drained cells. A live labeling
-    * pipeline watches annotator drift without re-scanning history.
-    */
-  def runStreamingKappaAvailableNow(labeled: DataFrame, raterACol: String,
-                                    raterBCol: String): DataFrame =
-    drain(labeled
-      .filter(col(raterACol).isNotNull && col(raterBCol).isNotNull)
-      .select(col(raterACol).as("__a"), col(raterBCol).as("__b"))
-      .groupBy(col("__a"), col("__b"))
-      .agg(count(lit(1)).as("__c")), "complete", { cells =>
-      val ma = cells.groupBy(col("__a").as("__l"))
-        .agg(sum(col("__c")).as("__na"))
-      val mb = cells.groupBy(col("__b").as("__l"))
-        .agg(sum(col("__c")).as("__nb"))
-      val pe = ma.join(mb, "__l")
-        .agg(coalesce(sum(col("__na") * col("__nb")), lit(0L)).as("__pe"))
-      cells.agg(sum(col("__c")).as("n_items"),
-          coalesce(sum(when(col("__a") === col("__b"), col("__c"))
-            .otherwise(0L)), lit(0L)).as("n_agree"))
-        .crossJoin(broadcast(pe))
-        .select(col("n_items"), col("n_agree"),
-          round(col("n_agree").cast("double") /
-            col("n_items").cast("double"), 6).as("p_observed"),
-          round(col("__pe").cast("double") /
-            (col("n_items") * col("n_items")).cast("double"), 6)
-            .as("p_expected"),
-          when(col("n_items") * col("n_items") === col("__pe"),
-            lit(null).cast("double"))
-            .otherwise(round(
-              (col("n_items") * col("n_agree") - col("__pe")).cast("double") /
-              (col("n_items") * col("n_items") - col("__pe")).cast("double"),
-              6))
-            .as("kappa"))
-    })
-
-  /** STREAMING byte-weighted percentiles (st34): the (group, value) →
-    * summed-weight census is the mergeable stream state (bounded by
-    * group × value cardinality, not the row stream), finalized
-    * batch-side by
-    * [[graft.operators.ScaleOps.weightedPercentilesFromCensus]] — the
-    * mass-weighted length profile updates as documents arrive.
-    */
-  def runStreamingWeightedPercentilesAvailableNow(rows: DataFrame,
-      groupCol: String, valueCol: String, weightCol: String,
-      qs: Seq[Double]): DataFrame =
-    drain(rows
-      .filter(col(groupCol).isNotNull && col(valueCol).isNotNull &&
-        col(weightCol).isNotNull && col(weightCol) > 0)
-      .groupBy(col(groupCol), col(valueCol))
-      .agg(sum(col(weightCol).cast("long")).as("__c")), "complete",
-      graft.operators.ScaleOps.weightedPercentilesFromCensus(_, groupCol,
-        valueCol, qs))
-
-  /** The (group, value) → row-count census: the stream state st35,
-    * st41 and st42 share (values cast to BIGINT, null rows dropped). */
-  private def valueCensus(rows: DataFrame, groupCol: String,
-                          valueCol: String): DataFrame =
-    rows
-      .filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(groupCol), col(valueCol).cast("long").as("__v"))
-      .groupBy(col(groupCol), col("__v"))
-      .agg(count(lit(1)).as("__c"))
-
-  /** STREAMING grouped MAD (st35): the (group, value) census is the
-    * mergeable stream state (per-micro-batch counts fold in — the st34
-    * census-as-state pattern), finalized batch-side by
-    * [[graft.operators.ScaleOps.madFromCensus]] — the robust
-    * center+scale pair (median, MAD) updates as rows arrive, feeding
-    * the x177 outlier gate on live data. State is bounded by
-    * |groups| × |distinct values| (the census, not the stream); a
-    * production deployment over unbounded-cardinality values coarsens
-    * the census key (cents → whole units) to cap it.
-    */
-  def runStreamingMadAvailableNow(rows: DataFrame, groupCol: String,
-                                  valueCol: String): DataFrame =
-    drain(valueCensus(rows, groupCol, valueCol), "complete",
-      graft.operators.ScaleOps.madFromCensus(_, groupCol))
-
   /** STREAMING data contracts (st36): the x160 five-constraint suite
     * ([[graft.operators.Contracts]]) monitored on a live table. ONE
     * streaming query carries everything: per-row violation flags for
@@ -1588,159 +1426,6 @@ object Streams {
     })
   }
 
-  /** STREAMING split-conformal intervals (st37): the per-half (group,
-    * value) census is the mergeable stream state — the md5 coin and the
-    * value projection are map-side, so each micro-batch folds its rows
-    * into (group, half, value) counts — finalized batch-side by
-    * [[graft.operators.ScaleOps.conformalFromCensus]]: calibration
-    * median, conformal rank q̂, and held-out coverage all re-derive from
-    * the census, so the interval tightens continuously as live rows
-    * arrive. State is bounded by |groups| × 2 × |distinct values| (the
-    * st35 cardinality rule; coarsen units to cap it).
-    */
-  def runStreamingConformalAvailableNow(rows: DataFrame, groupCol: String,
-      valueCol: String, idCol: String, salt: String,
-      level: Double): DataFrame =
-    drain(rows
-      .filter(col(groupCol).isNotNull && col(valueCol).isNotNull &&
-        col(idCol).isNotNull)
-      .select(col(groupCol), col(valueCol).cast("long").as("__v"),
-        when(conv(substring(md5(concat(lit(salt),
-          col(idCol).cast("string"))), 1, 8), 16, 10).cast("long") <
-          2147483648L, lit("c")).otherwise(lit("t")).as("__half"))
-      .groupBy(col(groupCol), col("__half"), col("__v"))
-      .agg(count(lit(1)).as("__c")), "complete",
-      graft.operators.ScaleOps.conformalFromCensus(_, groupCol, level))
-
-  /** STREAMING two-regressor OLS (st38): the ten exact-BIGINT
-    * sufficient statistics per group ARE the stream state — sums are
-    * the ultimate mergeable sketch, so unlike the value-census twins
-    * (st35/st37) the state here is O(1) PER GROUP regardless of stream
-    * volume. Each micro-batch folds its rows into the sums; the Cramer
-    * solve ([[graft.operators.Analytics.olsFromStats]], shared verbatim
-    * with batch x180) runs batch-side on |groups| rows — a live
-    * regression whose coefficients update as rows arrive.
-    */
-  def runStreamingOls2AvailableNow(rows: DataFrame, groupCol: String,
-      x1Col: String, x2Col: String, yCol: String): DataFrame = {
-    val x1 = col(x1Col).cast("long")
-    val x2 = col(x2Col).cast("long")
-    val y = col(yCol).cast("long")
-    drain(rows
-      .filter(col(x1Col).isNotNull && col(x2Col).isNotNull &&
-        col(yCol).isNotNull && col(groupCol).isNotNull)
-      .select(col(groupCol), x1.as("__x1"), x2.as("__x2"), y.as("__y"))
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n"),
-        sum(col("__x1")).as("__s1"), sum(col("__x2")).as("__s2"),
-        sum(col("__y")).as("__sy"),
-        sum(col("__x1") * col("__x1")).as("__s11"),
-        sum(col("__x2") * col("__x2")).as("__s22"),
-        sum(col("__x1") * col("__x2")).as("__s12"),
-        sum(col("__x1") * col("__y")).as("__s1y"),
-        sum(col("__x2") * col("__y")).as("__s2y"),
-        sum(col("__y") * col("__y")).as("__syy")), "complete",
-      graft.operators.Analytics.olsFromStats(_, groupCol))
-  }
-
-  /** STREAMING mutual information (st39): the (a, b) contingency-cell
-    * census is the mergeable stream state (the st31/st33 cells pattern
-    * for association instead of agreement), finalized batch-side by
-    * [[graft.operators.Analytics.mutualInformationFromCells]] — MI, NMI
-    * and Cramér's V re-derive census-side, so the association strength
-    * between two live categorical columns updates as rows arrive.
-    * State is bounded by |categories_a| × |categories_b|.
-    */
-  def runStreamingMutualInfoAvailableNow(rows: DataFrame, aCol: String,
-                                         bCol: String): DataFrame =
-    drain(rows
-      .filter(col(aCol).isNotNull && col(bCol).isNotNull)
-      .groupBy(col(aCol).cast("string").as("__a"),
-        col(bCol).cast("string").as("__b"))
-      .agg(count(lit(1)).as("__o")), "complete",
-      graft.operators.Analytics.mutualInformationFromCells(_))
-
-  /** STREAMING one-way ANOVA (st40): the three exact-BIGINT sums per
-    * group (n, Σv, Σv²) are the stream state — the st38 O(1)-per-group
-    * sums shape — finalized batch-side by
-    * [[graft.operators.Analytics.anovaFromStats]]: the
-    * does-the-label-drive-the-metric F statistic updates as rows
-    * arrive. State is |groups| rows regardless of stream volume.
-    */
-  def runStreamingAnovaAvailableNow(rows: DataFrame, groupCol: String,
-                                    valueCol: String): DataFrame = {
-    val v = col(valueCol).cast("long")
-    drain(rows
-      .filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(groupCol), v.as("__v"))
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("__ng"), sum(col("__v")).as("__sg"),
-        sum(col("__v") * col("__v")).as("__ssg")), "complete",
-      graft.operators.Analytics.anovaFromStats(_))
-  }
-
-  /** STREAMING Kruskal-Wallis (st41): the (group, value) census is the
-    * stream state (the st35 shape) and the finalize RE-RANKS the whole
-    * census — midrank ties are global properties a row-at-a-time rank
-    * could never maintain incrementally, which is exactly why the
-    * census, not the ranks, is the state. The distribution-shift screen
-    * updates as rows arrive; state bounded by |groups| × |distinct
-    * values|.
-    */
-  def runStreamingKruskalAvailableNow(rows: DataFrame, groupCol: String,
-                                      valueCol: String): DataFrame =
-    drain(valueCensus(rows, groupCol, valueCol), "complete",
-      graft.operators.Analytics.kwFromCensus(_, groupCol))
-
-  /** STREAMING Brown-Forsythe (st42): the (group, value) census is the
-    * stream state (the st41 shape) and the finalize recomputes each
-    * group's doubled median from the whole census — a global order
-    * statistic no row-at-a-time state could maintain, which is exactly
-    * why the census, not the medians, is the state. The
-    * variance-homogeneity gate updates as rows arrive; state bounded by
-    * |groups| × |distinct values|.
-    */
-  def runStreamingBrownForsytheAvailableNow(rows: DataFrame,
-                                            groupCol: String,
-                                            valueCol: String): DataFrame =
-    drain(valueCensus(rows, groupCol, valueCol), "complete",
-      graft.operators.Analytics.bfFromCensus(_, groupCol))
-
-  /** STREAMING Kendall τ-b (st43): the (x, y) cell census is the stream
-    * state (pair ORDERING is a global property — the census is the only
-    * incrementally-maintainable form), finalized by the batch operator's
-    * own census×census concordance count. State bounded by |x bins| ×
-    * |y bins| — the batch maxCells guard applies at finalize verbatim.
-    */
-  def runStreamingKendallAvailableNow(rows: DataFrame, xCol: String,
-                                      yCol: String, maxCells: Int): DataFrame =
-    drain(rows
-      .filter(col(xCol).isNotNull && col(yCol).isNotNull)
-      .select(col(xCol).cast("long").as("__x"),
-        col(yCol).cast("long").as("__y"))
-      .groupBy(col("__x"), col("__y"))
-      .agg(count(lit(1)).as("__c")), "complete",
-      graft.operators.Analytics.ktFromCensus(_, maxCells))
-
-  /** STREAMING Fleiss' kappa (st33): the (item, category) vote cells are
-    * the mergeable stream state (per-micro-batch counts fold in, the
-    * st31 contingency-cells pattern one rater up), finalized batch-side
-    * by [[graft.operators.Analytics.fleissFromCells]] — the panel's
-    * multi-rater agreement updates as ratings arrive. State is bounded
-    * by items × categories (the cells census, not the ratings stream).
-    */
-  def runStreamingFleissAvailableNow(ratings: DataFrame, itemCol: String,
-                                     raterCol: String,
-                                     categoryCol: String): DataFrame =
-    drain(ratings
-      .filter(col(itemCol).isNotNull && col(raterCol).isNotNull &&
-        col(categoryCol).isNotNull)
-      .select(col(itemCol).as("__i"),
-        col(categoryCol).cast("string").as("__c"))
-      .groupBy(col("__i"), col("__c"))
-      .agg(count(lit(1)).as("__n")), "complete",
-      graft.operators.Analytics.fleissFromCells(_))
-
   /** STREAMING Theil-Sen slope over per-(group, t) event counts (st44):
     * the daily-count census IS the series AND the stream state —
     * pairwise slopes are global properties (every new point pairs with
@@ -1766,64 +1451,6 @@ object Streams {
       .agg(count(lit(1)).as("__v")), "complete", census =>
       graft.operators.Analytics.tsFromCensus(
         census.select(col("__g"), col("__t"), col("__v")), maxPoints))
-
-  /** STREAMING Welch's t (st45): the two levels' (n, Σv, Σv²) exact
-    * BIGINT sums are the WHOLE stream state — 2×3 numbers, the st38
-    * sums-are-a-sketch endpoint — finalized by the batch operator's own
-    * [[graft.operators.Analytics.welchFromStats]], so the A/B gate
-    * (t, Welch df, Cohen's d, Hedges' g) updates as rows arrive.
-    */
-  def runStreamingWelchAvailableNow(rows: DataFrame, factorCol: String,
-                                    valueCol: String, levelA: String,
-                                    levelB: String): DataFrame = {
-    val v = col(valueCol).cast("long")
-    drain(rows
-      .filter(col(factorCol).cast("string").isin(levelA, levelB) &&
-        col(valueCol).isNotNull)
-      .select(col(factorCol).cast("string").as("__lvl"), v.as("__v"))
-      .groupBy(col("__lvl"))
-      .agg(count(lit(1)).as("__n"), sum(col("__v")).as("__s"),
-        sum(col("__v") * col("__v")).as("__ss")), "complete",
-      graft.operators.Analytics.welchFromStats(_, levelA, levelB))
-  }
-
-  /** STREAMING vocabulary richness (st46): the token census is the
-    * stream state (the st35 cardinality rule — |vocab| rows, not the
-    * stream), finalized by the batch
-    * [[graft.operators.TextOps.richnessFromCensus]]: Chao1 and the
-    * Good-Turing unseen mass update continuously, answering "is this
-    * feed still surfacing new vocabulary" live. Singleton/doubleton
-    * counts are exactly the statistics a row-at-a-time fold could never
-    * maintain — they DECREASE when a type's second copy arrives — which
-    * is why the census is the state.
-    */
-  def runStreamingRichnessAvailableNow(docs: DataFrame,
-                                       textCol: String): DataFrame =
-    drain(docs
-      .filter(col(textCol).isNotNull)
-      // spread docs BEFORE the tokenize-explode (the st15 single-file
-      // micro-batch shape); token counts are commutative
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-      .select(explode(graft.operators.TextOps.tokens(col(textCol)))
-        .as("__w"))
-      .filter(length(col("__w")) > 0)
-      .groupBy(col("__w")).agg(count(lit(1)).as("__c")), "complete",
-      graft.operators.TextOps.richnessFromCensus(_))
-
-  /** STREAMING McNemar (st47): the 2×2 paired-outcome cell census is
-    * the WHOLE stream state — four BIGINTs, mergeable by construction —
-    * finalized by the batch operator's own
-    * [[graft.operators.Analytics.mcnemarFromCells]]: the
-    * which-gate-wins verdict updates as paired outcomes arrive.
-    */
-  def runStreamingMcnemarAvailableNow(rows: DataFrame, aCol: String,
-                                      bCol: String): DataFrame =
-    drain(rows
-      .filter(col(aCol).isNotNull && col(bCol).isNotNull)
-      .select(col(aCol).cast("boolean").as("__a"),
-        col(bCol).cast("boolean").as("__b"))
-      .groupBy(col("__a"), col("__b")).agg(count(lit(1)).as("__c")),
-      "complete", graft.operators.Analytics.mcnemarFromCells(_))
 
   /** STREAMING Bloom-filter audit (st48): the BUILD side streams in and
     * its distinct-key census is the stream state (the dedup-state
@@ -1872,11 +1499,13 @@ object Streams {
   /** STREAMING M1 MERGE on a [[graft.operators.LogTable]] (st4, st4b,
     * st4c): the reference's windowed refresh with staging replayed as
     * an incrementally sliced micro-batch stream. Per micro-batch: ONE
-    * idempotent copy-on-write [[graft.operators.LogTable.merge]] with
-    * txnId = `st4c:<batchId>` — a REPLAYED batch (the at-least-once
-    * delivery every checkpoint recovery implies) collapses at the
-    * commit, so the table holds exactly-once contents with no dedup
-    * bookkeeping in the data path. End of cycle: the M1 windowed delete
+    * idempotent copy-on-write [[graft.operators.LogTable.merge]] whose
+    * txnId names the batch's source files ([[filesTxnId]]) — a REPLAYED
+    * batch (the at-least-once delivery every checkpoint recovery
+    * implies) reads the same files and collapses at the commit, so the
+    * table holds exactly-once contents with no dedup bookkeeping in the
+    * data path, while a later cycle's new files always merge. `entries`
+    * must therefore be a file stream (`input_file_name()` set). End of cycle: the M1 windowed delete
     * (fetch_clickup_data.py:1318-1321 semantics) as manifest commits —
     * only window partitions that actually CONTAIN stale rows are
     * rewritten (filtered to the cycle's seen ids); fully-stale
@@ -1915,17 +1544,22 @@ object Streams {
         s"runStreamingLogTableMerge: $tableRoot has no LogTable — init " +
           "the fact first")
       val q = entries.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // lazy checkpoint + count: one job materializes and answers
-          // emptiness; the pinned rows satisfy merge's determinism
-          // contract (updates are re-evaluated for probe and write)
-          val bw = batch.filter(inWindow(col(dateCol)))
-            .localCheckpoint(false)
-          if (bw.count() > 0) {
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          // lazy checkpoint + one aggregate: one job materializes,
+          // answers emptiness and names the source files; the pinned
+          // rows satisfy merge's determinism contract (updates are
+          // re-evaluated for probe and write)
+          val tagged = batch.withColumn("__src", input_file_name())
+            .filter(inWindow(col(dateCol))).localCheckpoint(false)
+          val seen = tagged.agg(count(lit(1)), collect_set(col("__src")))
+            .head()
+          if (seen.getLong(0) > 0) {
+            val bw = tagged.drop("__src")
             bw.select(col(keyCol)).write.mode(org.apache.spark.sql
               .SaveMode.Append).parquet(seenIdsPath)
             graft.operators.LogTable.merge(spark, tableRoot, bw,
-              Seq(keyCol), dateCol, txnId = Some(s"st4c:$batchId"))
+              Seq(keyCol), dateCol,
+              txnId = Some(filesTxnId(spark, seen.getSeq[String](1))))
           }
           ()
         }
@@ -1971,6 +1605,23 @@ object Streams {
             emptied.toSeq)
       }
     }
+
+  /** The merge txnId of a micro-batch read from `files`
+    * (`input_file_name()` URIs): `st4c:` + SHA-256 over the sorted
+    * (path, length, mtime) set. A replay of the same files gets the same
+    * id; a rewritten or new file a different one. */
+  private def filesTxnId(spark: SparkSession, files: Seq[String]): String = {
+    require(files.forall(_.nonEmpty), "runStreamingLogTableMerge: " +
+      "entries must be a file stream (input_file_name() was empty)")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val sig = files.sorted.map { f =>
+      val p = new org.apache.hadoop.fs.Path(new java.net.URI(f))
+      val st = p.getFileSystem(conf).getFileStatus(p)
+      s"$f\t${st.getLen}\t${st.getModificationTime}"
+    }.mkString("\n")
+    "st4c:" + java.security.MessageDigest.getInstance("SHA-256")
+      .digest(sig.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+  }
 
   /** STREAMING SOURCE over the [[graft.operators.LogTable]] change feed
     * (st60 — r13 directive #2, Delta's streaming-CDF role): a
@@ -2319,109 +1970,6 @@ object Streams {
     q.awaitTermination()
   }
 
-  /** STREAMING Wilcoxon signed-rank (st51): the (|d|, tie count,
-    * positive count) census is the WHOLE stream state — the Kruskal
-    * discretized-census rule; zero differences ride as the |d| = 0
-    * cell so n_pairs stays exact — finalized by the batch operator's
-    * own [[graft.operators.Analytics.wsrFromCensus]], so the paired
-    * shift verdict updates as pairs arrive.
-    */
-  def runStreamingWilcoxonAvailableNow(rows: DataFrame, aCol: String,
-                                       bCol: String): DataFrame =
-    drain(rows
-      .filter(col(aCol).isNotNull && col(bCol).isNotNull)
-      .select((col(aCol).cast("long") - col(bCol).cast("long"))
-        .as("__d"))
-      .groupBy(abs(col("__d")).as("__v"))
-      .agg(count(lit(1)).as("__t"),
-        coalesce(sum(when(col("__d") > 0L, 1L).otherwise(0L)),
-          lit(0L)).as("__cp")), "complete",
-      graft.operators.Analytics.wsrFromCensus(_))
-
-  /** STREAMING Jonckheere-Terpstra trend (st53): the (group, value,
-    * count) cell census is the WHOLE stream state — the st41/st43
-    * census rule — finalized by the batch operator's own
-    * [[graft.operators.Analytics.jtFromCensus]] verbatim, so the
-    * ordered-trend z updates as rows arrive.
-    */
-  def runStreamingJonckheereAvailableNow(rows: DataFrame, groupCol: String,
-                                         valueCol: String,
-                                         maxCells: Int = 8192): DataFrame =
-    drain(rows
-      .filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(groupCol).cast("long").as("__g"),
-        col(valueCol).cast("long").as("__v"))
-      .groupBy(col("__g"), col("__v"))
-      .agg(count(lit(1)).as("__c")), "complete",
-      graft.operators.Analytics.jtFromCensus(_, maxCells))
-
-  /** STREAMING Friedman (st54): the (block, treatment, sum, count)
-    * cell grid — two BIGINTs per cell, the Fleiss st33 cell-state
-    * precedent — is the stream state, finalized by the batch
-    * operator's own [[graft.operators.Analytics.friedmanFromCells]]
-    * verbatim; the repeated-measures verdict updates as rows arrive.
-    */
-  def runStreamingFriedmanAvailableNow(rows: DataFrame, blockCol: String,
-                                       treatCol: String,
-                                       valueCol: String): DataFrame =
-    drain(rows
-      .filter(col(blockCol).isNotNull && col(treatCol).isNotNull &&
-        col(valueCol).isNotNull)
-      .select(col(blockCol).as("__b"), col(treatCol).as("__t"),
-        col(valueCol).cast("long").as("__v"))
-      .groupBy(col("__b"), col("__t"))
-      .agg(sum(col("__v")).as("__s"), count(lit(1)).as("__c")), "complete",
-      graft.operators.Analytics.friedmanFromCells(_))
-
-  /** The (value, count_a, count_b) census over a boolean side column:
-    * the stream state st55, st56, st57 and st59 share (`sideCol` false →
-    * sample a, true → sample b). */
-  private def sideCensus(rows: DataFrame, valueCol: String,
-                         sideCol: String): DataFrame =
-    rows
-      .filter(col(valueCol).isNotNull && col(sideCol).isNotNull)
-      .select(col(valueCol).cast("long").as("__v"),
-        col(sideCol).cast("boolean").as("__s"))
-      .groupBy(col("__v"))
-      .agg(coalesce(sum(when(!col("__s"), 1L).otherwise(0L)), lit(0L))
-          .as("__ca"),
-        coalesce(sum(when(col("__s"), 1L).otherwise(0L)), lit(0L))
-          .as("__cb"))
-
-  /** STREAMING Cramér-von Mises (st55): one stream carries BOTH
-    * samples (a boolean side column); the (value, count_a, count_b)
-    * census is the WHOLE stream state — the Kruskal census rule —
-    * finalized by the batch operator's own
-    * [[graft.operators.Analytics.cvmFromCensus]] verbatim, so the
-    * integrated ECDF distance updates as rows arrive.
-    */
-  def runStreamingCvmAvailableNow(rows: DataFrame, valueCol: String,
-                                  sideCol: String): DataFrame =
-    drain(sideCensus(rows, valueCol, sideCol), "complete",
-      graft.operators.Analytics.cvmFromCensus(_))
-
-  /** STREAMING effect sizes (st56): the identical (value, count_a,
-    * count_b) census st55 carries — one state shape serves both the
-    * CvM "different?" monitor and this "by how much?" monitor —
-    * finalized by the batch operator's own
-    * [[graft.operators.Analytics.esFromCensus]] verbatim.
-    */
-  def runStreamingEffectSizesAvailableNow(rows: DataFrame, valueCol: String,
-                                          sideCol: String): DataFrame =
-    drain(sideCensus(rows, valueCol, sideCol), "complete",
-      graft.operators.Analytics.esFromCensus(_))
-
-  /** STREAMING Brunner-Munzel (st57): the identical (value, count_a,
-    * count_b) census st55/st56 carry — one state shape, three monitors
-    * (different? how big? robust test) — finalized by the batch
-    * operator's own [[graft.operators.Analytics.bmFromCensus]].
-    */
-  def runStreamingBrunnerMunzelAvailableNow(rows: DataFrame,
-                                            valueCol: String,
-                                            sideCol: String): DataFrame =
-    drain(sideCensus(rows, valueCol, sideCol), "complete",
-      graft.operators.Analytics.bmFromCensus(_))
-
   /** STREAMING log-rank (st58): a streaming query allows ONE
     * aggregation, and the survival framing needs two (per-subject
     * first-seen/first-event, THEN the time census), so the stream
@@ -2456,33 +2004,4 @@ object Streams {
       perUser.unpersist()
       out
     })
-
-  /** STREAMING Mood's median (st59): the FOURTH monitor on the
-    * identical (value, count_a, count_b) census state st55–st57 carry,
-    * finalized by the batch operator's own
-    * [[graft.operators.Analytics.mmFromCensus]].
-    */
-  def runStreamingMoodMedianAvailableNow(rows: DataFrame, valueCol: String,
-                                         sideCol: String): DataFrame =
-    drain(sideCensus(rows, valueCol, sideCol), "complete",
-      graft.operators.Analytics.mmFromCensus(_))
-
-  /** STREAMING Cochran-Armitage trend (st52): the k-row (dose, n,
-    * successes) census — two BIGINTs per dose level — is the stream
-    * state, finalized by the batch operator's own
-    * [[graft.operators.Analytics.caFromCensus]] verbatim, so the
-    * dose-response trend z updates as rows arrive.
-    */
-  def runStreamingCochranArmitageAvailableNow(rows: DataFrame,
-                                              doseCol: String,
-                                              successCol: String): DataFrame =
-    drain(rows
-      .filter(col(doseCol).isNotNull && col(successCol).isNotNull)
-      .select(col(doseCol).cast("long").as("__s"),
-        col(successCol).cast("boolean").as("__ok"))
-      .groupBy(col("__s"))
-      .agg(count(lit(1)).as("__n"),
-        coalesce(sum(when(col("__ok"), 1L).otherwise(0L)), lit(0L))
-          .as("__r")), "complete",
-      graft.operators.Analytics.caFromCensus(_))
 }

@@ -57,15 +57,6 @@ object Ab {
     df.select(xxhash64(df.columns.map(c => col(s"`$c`")): _*).as("h"))
       .agg(coalesce(sum(col("h")), lit(0L))).head().getLong(0)
 
-  private def withConfs[T](spark: SparkSession, v: Variant)(body: => T): T = {
-    val prev = v.confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    v.confs.foreach { case (k, value) => spark.conf.set(k, value) }
-    try body finally prev.foreach {
-      case (k, Some(value)) => spark.conf.set(k, value)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** Job spans (start, end) in epoch ms, as the scheduler stamped them. */
   private final class JobSpans extends SparkListener {
     private val starts = TrieMap.empty[Int, Long]
@@ -110,7 +101,8 @@ object Ab {
       s"variant label '${Base.label}' is reserved for the unchanged session")
     val all = Base +: variants
     val hashes = (for ((name, q) <- queries; v <- all) yield {
-      val h = try Right(withConfs(spark, v)(hashOf(q(spark, sfDir))))
+      val h = try Right(GraftSession.withConfs(spark, v.confs)(
+          hashOf(q(spark, sfDir))))
         catch { case e: Exception =>
           Left(s"FAILED ${e.getClass.getSimpleName}: ${e.getMessage}".take(200)) }
       unpersistAll(spark)
@@ -130,7 +122,7 @@ object Ab {
              v <- if (pass % 2 == 1) all else all.reverse
              if status(name, v.label) == "ok") {
       runs((name, v.label)) :+= measure(spark, jobs) {
-        withConfs(spark, v)(
+        GraftSession.withConfs(spark, v.confs)(
           q(spark, sfDir).write.format("noop").mode("overwrite").save())
       }
       unpersistAll(spark)

@@ -173,6 +173,29 @@ class DedupMergeSpec extends SparkSpec {
     assert(out == Seq("hist"))
   }
 
+  test("streaming merge: a second refresh cycle on a fresh checkpoint " +
+    "applies its own merges (its batches read new files, so their txn " +
+    "ids differ from the first cycle's)") {
+    import graft.operators.LogTable
+    val root = java.nio.file.Files.createTempDirectory("graft_st2cyc").toString
+    val base = s"$root/fact"
+    val today = LocalDate.parse("2024-03-01")
+    val day = java.sql.Date.valueOf("2024-02-27")
+    LogTable.init(entries(("a", "x", day, 1.0)), base)
+    def cycle(n: Int, staging: DataFrame): Unit = {
+      staging.coalesce(1).write.parquet(s"$root/in$n")
+      Streams.runStreamingLogTableMergeAvailableNow(spark,
+        spark.readStream.schema(staging.schema).parquet(s"$root/in$n"),
+        base, s"$root/seen$n", days = 7, todayOslo = today,
+        checkpoint = s"$root/c$n")
+    }
+    cycle(1, entries(("a", "y", day, 2.0)))
+    cycle(2, entries(("a", "z", day, 3.0), ("b", "z", day, 4.0)))
+    val out = LogTable.read(spark, base).orderBy("id")
+      .select("id", "value").as[(String, Double)].collect().toSeq
+    assert(out == Seq(("a", 3.0), ("b", 4.0)))
+  }
+
   test("M1 null-date fact rows are kept (BigQuery NULL BETWEEN → not deleted)") {
     val fact = Seq(("n1", "x", null: java.sql.Date, 1.0))
       .toDF("id", "at", "start_date_oslo", "value")

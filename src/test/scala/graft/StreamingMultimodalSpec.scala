@@ -716,24 +716,138 @@ class StreamingMultimodalSpec extends SparkSpec {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
-  test("streaming k-anonymity census equals the batch summary under " +
-    "1-file micro-batch slicing") {
-    import graft.operators.Analytics
-    val rows = Seq(
+  test("census-state streaming twins: each of the 25 statistics drained " +
+    "one file per trigger through its batch operator's state builder and " +
+    "finalizer equals the batch operator on the same rows") {
+    import graft.operators.{Analytics => A, ScaleOps, TextOps}
+    import org.apache.spark.sql.DataFrame
+    // one wide fixture serves most statistics: three groups, a null
+    // group row, a null value row, complete (bl, g) blocks but one
+    val wide = (0 until 36).map { i =>
+      (if (i == 35) None else Some(Seq("a", "b", "c")(i % 3)),
+        if (i == 34) None else Some((i * 7 % 11 + i % 3 * 2).toLong),
+        (i % 5).toLong, (i * 3 % 7).toLong, i.toLong, i % 2 == 0,
+        i * 5 % 3 == 0, (i % 4).toLong, (i / 3).toLong)
+    }.toDF("g", "v", "x", "y", "id", "side", "ok", "w", "bl")
+    // the k-anonymity rows pin a hand-checked summary below
+    val kaRows = Seq(
       ("a", "x", Some(1)), ("a", "x", Some(2)), ("a", "x", Some(1)),
       ("a", "y", Some(1)), ("a", "y", Some(1)),
       ("b", "x", None: Option[Int])
     ).toDF("q1", "q2", "sv")
-    val dir = Files.createTempDirectory("graft_stka_test").toString
-    rows.repartition(3).write.parquet(s"$dir/in")
-    val got = Streams.runStreamingKAnonymityAvailableNow(spark, s"$dir/in",
-      "*.parquet", rows.schema, Seq("q1", "q2"), col("sv"), k = 3)
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
-    val want = Analytics.kAnonymity(rows, Seq("q1", "q2"), "sv", k = 3)
-      .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
-    assert(got == want && got == Seq((6L, 3L, 1L, 2L, 3L, 2L)))
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    // out-of-range scores land in the edge bins, never a negative bin
+    val calRows = Seq(-0.3, -0.001, 0.4, 1.7, 0.05, 0.15, 0.55, 0.95, 1.0,
+      0.42).zipWithIndex.map { case (p, i) => (Option(p), i % 2 == 0) }
+      .:+((None: Option[Double], true)).toDF("p", "y")
+    val kappaRows = Seq(("x", "x"), ("x", "y"), ("y", "y"), ("z", "z"),
+      ("y", "x"), (null, "x"), ("z", "z"), ("x", "x")).toDF("a", "b")
+    // every key null: the census (the stream state) is empty
+    val kappaEmpty = Seq((null: String, "x"), (null, "y"), (null, "z"))
+      .toDF("a", "b")
+    val fleissRows = (for (item <- 1 to 6; r <- 1 to 3)
+      yield (item.toLong, s"r$r", Seq("x", "y", "z")(item * r % 3)))
+      .toDF("item", "rater", "cat")
+    val docs = Seq("a b c", "a a d", "e f", "b c c", null, "g  h a")
+      .toDF("text")
+    def twoSample(f: (DataFrame, DataFrame, String) => DataFrame)
+        : DataFrame => DataFrame =
+      df => f(df.filter(!col("side")), df.filter(col("side")), "v")
+    def twin(census: DataFrame => DataFrame,
+             fin: DataFrame => DataFrame): DataFrame => DataFrame =
+      src => Streams.drain(census(src), "complete", fin)
+    val qi = Seq("q1", "q2")
+    // (statistic, rows, streaming twin over the file stream, batch operator)
+    val cases: Seq[(String, DataFrame, DataFrame => DataFrame,
+        DataFrame => DataFrame)] = Seq(
+      ("kAnonymity", kaRows,
+        twin(A.kAnonymityCells(_, qi, "sv"), A.kAnonymityFromCells(_, qi, 3)),
+        A.kAnonymity(_, qi, "sv", 3)),
+      ("keySkew", wide, twin(ScaleOps.keySkewCensus(_, "g"),
+        ScaleOps.keySkewFromCensus(_, "g")), ScaleOps.keySkewAudit(_, "g")),
+      ("calibration", calRows, twin(A.calibrationStats(_, "p", "y", 10),
+        A.calibrationFromStats), A.calibrationCurve(_, "p", "y", 10)),
+      ("kappa", kappaRows, twin(A.kappaCells(_, "a", "b"), A.kappaFromCells),
+        A.cohensKappa(_, "a", "b")),
+      ("kappa (empty state)", kappaEmpty, twin(A.kappaCells(_, "a", "b"),
+        A.kappaFromCells), A.cohensKappa(_, "a", "b")),
+      ("fleiss", fleissRows, twin(A.fleissCells(_, "item", "rater", "cat"),
+        A.fleissFromCells), A.fleissKappa(_, "item", "rater", "cat")),
+      ("weightedPercentiles", wide,
+        twin(ScaleOps.weightedPercentilesCensus(_, "g", "v", "w"),
+          ScaleOps.weightedPercentilesFromCensus(_, "g", "v",
+            Seq(0.5, 0.9))),
+        ScaleOps.groupedWeightedPercentiles(_, "g", "v", "w", Seq(0.5, 0.9))),
+      ("mad", wide, twin(A.valueCensus(_, "g", "v"),
+        ScaleOps.madFromCensus(_, "g")), ScaleOps.groupedMad(_, "g", "v")),
+      ("conformal", wide,
+        twin(ScaleOps.conformalCensus(_, "g", "v", "id", "cf1:"),
+          ScaleOps.conformalFromCensus(_, "g", 0.8)),
+        ScaleOps.conformalIntervals(_, "g", "v", "id", "cf1:", 0.8)),
+      ("ols2", wide, twin(A.ols2Stats(_, "g", "x", "y", "v"),
+        A.olsFromStats(_, "g")), A.groupedOls2(_, "g", "x", "y", "v")),
+      ("mutualInformation", wide, twin(A.mutualInformationCells(_, "g", "x"),
+        A.mutualInformationFromCells), A.mutualInformation(_, "g", "x")),
+      ("anova", wide, twin(A.anovaStats(_, "g", "v"), A.anovaFromStats),
+        A.oneWayAnova(_, "g", "v")),
+      ("kruskal", wide, twin(A.valueCensus(_, "g", "v"),
+        A.kwFromCensus(_, "g")), A.kruskalWallis(_, "g", "v")),
+      ("brownForsythe", wide, twin(A.valueCensus(_, "g", "v"),
+        A.bfFromCensus(_, "g")), A.brownForsythe(_, "g", "v")),
+      ("kendall", wide, twin(A.ktCensus(_, "x", "y"),
+        A.ktFromCensus(_, 8192)), A.kendallTau(_, "x", "y", 8192)),
+      ("welch", wide, twin(A.welchStats(_, "g", "v", "a", "b"),
+        A.welchFromStats(_, "a", "b")), A.welchT(_, "g", "v", "a", "b")),
+      ("richness", docs, twin(TextOps.richnessCensus(_, "text"),
+        TextOps.richnessFromCensus), TextOps.vocabularyRichness(_, "text")),
+      ("mcnemar", wide, twin(A.mcnemarCells(_, "side", "ok"),
+        A.mcnemarFromCells), A.mcnemar(_, "side", "ok")),
+      ("wilcoxon", wide, twin(A.wsrCensus(_, "x", "y"), A.wsrFromCensus),
+        A.wilcoxonSignedRank(_, "x", "y")),
+      ("cochranArmitage", wide, twin(A.caCensus(_, "x", "ok"),
+        A.caFromCensus), A.cochranArmitage(_, "x", "ok")),
+      ("jonckheere", wide, twin(A.jtCensus(_, "x", "v"),
+        A.jtFromCensus(_, 8192)), A.jonckheereTerpstra(_, "x", "v")),
+      ("friedman", wide, twin(A.friedmanCells(_, "bl", "g", "v"),
+        A.friedmanFromCells), A.friedman(_, "bl", "g", "v")),
+      ("cvm", wide, twin(A.sideCensus(_, "v", "side"), A.cvmFromCensus),
+        twoSample(A.cramerVonMises)),
+      ("effectSizes", wide, twin(A.sideCensus(_, "v", "side"),
+        A.esFromCensus), twoSample(A.effectSizes)),
+      ("brunnerMunzel", wide, twin(A.sideCensus(_, "v", "side"),
+        A.bmFromCensus), twoSample(A.brunnerMunzel)),
+      ("moodMedian", wide, twin(A.sideCensus(_, "v", "side"),
+        A.mmFromCensus), twoSample(A.moodMedian)))
+    assert(cases.map(_._1).distinct.size == 26) // 25 statistics + empty κ
+    val dir = Files.createTempDirectory("graft_twins").toString
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def norm(df: DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
+    val got = cases.zipWithIndex.map { case ((name, rows, stream, batch), i) =>
+      // three files, one per trigger: cross-batch state is exercised
+      val in = s"$dir/c$i"
+      val all = rows.collect().toSeq
+      for (k <- 0 until 3)
+        spark.createDataFrame(java.util.Arrays.asList(
+            all.zipWithIndex.filter(_._2 % 3 == k).map(_._1): _*),
+            rows.schema)
+          .coalesce(1).write.mode("append").parquet(in)
+      assert(fs.listStatus(new org.apache.hadoop.fs.Path(in))
+        .count(_.getPath.getName.endsWith(".parquet")) == 3, name)
+      val src = Streams.fileStream(spark, in, "*.parquet", rows.schema,
+        onePerTrigger = true)
+      val (s, b) = (norm(stream(src)), norm(batch(rows)))
+      assert(b.nonEmpty, name)
+      assert(s == b, s"$name: stream $s != batch $b")
+      name -> s
+    }.toMap
+    assert(got("kAnonymity") == Seq("6|3|1|2|3|2"))
+    assert(got("calibration").map(_.split('|').head.toLong)
+      .forall(b => b >= 0 && b <= 9))
+    // empty input: n_items 0, n_agree NULL, as the batch operator reports
+    assert(got("kappa (empty state)").map(_.split('|').take(2).toSeq) ==
+      Seq(Seq("0", "null")))
+    fs.delete(new org.apache.hadoop.fs.Path(dir), true)
   }
 
   test("synthPpmVideo + frameSample: every-kth frame extracted intact " +
