@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -40,8 +40,4 @@ object Dedup {
     */
   def dedupTimeEntries(df: DataFrame): DataFrame =
     latestByKey(df, Seq("id"), "at", "start_utc", nullsWin = true)
-
-  /** Window spec reusable inside query-level expressions. */
-  def latestWindow(key: Seq[Column], order: Seq[Column]) =
-    Window.partitionBy(key: _*).orderBy(order: _*)
 }

@@ -35,24 +35,13 @@ object DedupOps {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** MinHash signatures via double hashing (Kirsch-Mitzenmacher):
-    * h_j(s) = h1(s) + j·h2(s), so each shingle is hashed twice regardless
-    * of `numHashes`. Computed as explode → per-shingle hash → groupBy(id)
-    * with `numHashes` MIN aggregates: map-side partial aggregation means
-    * only `numHashes` longs per document cross the shuffle — the plan that
-    * holds at 100 TB. Documents with no shingles are dropped (they cannot
-    * be near-duplicates).
-    */
-  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        shingleWords: Int, numHashes: Int): DataFrame =
-    signaturesFromHashes(shingleHashes(docs, idCol, textCol, shingleWords),
-      numHashes)
-
-  /** MinHash signatures from a [[shingleHashes]] table: h1 is the stored
-    * per-shingle hash, h2 re-hashes the 8-byte h1 (halving the string-hash
-    * work per shingle). The single implementation both the standalone
-    * signature API and [[minhashLshPairs]] call — the two must never
-    * drift, or candidate recall silently changes.
+  /** MinHash signatures via double hashing (Kirsch-Mitzenmacher) from a
+    * [[shingleHashes]] table: h_j(s) = h1(s) + j·h2(s), where h1 is the
+    * stored per-shingle hash and h2 re-hashes the 8-byte h1, so each
+    * shingle is hashed twice regardless of `numHashes`. Computed as
+    * explode → groupBy(id) with `numHashes` MIN aggregates: map-side
+    * partial aggregation means only `numHashes` longs per document cross
+    * the shuffle.
     */
   private def signaturesFromHashes(hs: DataFrame, numHashes: Int): DataFrame = {
     val hashed = hs.select(col("id"), explode(col("hs")).as("h1"))
@@ -63,9 +52,61 @@ object DedupOps {
       .select(col("id"), array((0 until numHashes).map(j => col(s"m$j")): _*).as("sig"))
   }
 
+  /** MinHash band keys: a [[shingleHashes]] table → (id, ks), where ks(b)
+    * hashes signature rows [b·rows, (b+1)·rows) with rows =
+    * numHashes/bands. The one banding of [[minhashLshPairs]] and
+    * [[incrementalDedup]] — a doc's keys depend only on its text, so the
+    * two operators' recall cannot drift apart. Validates eagerly, before
+    * the caller caches anything.
+    */
+  private def minhashBandKeys(numHashes: Int, bands: Int): DataFrame => DataFrame = {
+    require(bands >= 1 && numHashes % bands == 0,
+      s"numHashes ($numHashes) must be a positive multiple of bands ($bands): " +
+        "rows=0 degenerates every band key to a constant (O(n^2) join) and a " +
+        "remainder silently discards hash functions")
+    val rows = numHashes / bands
+    hs => signaturesFromHashes(hs, numHashes).select(col("id"),
+      array((0 until bands).map(b =>
+        xxhash64(lit(b), slice(col("sig"), b * rows + 1, rows))): _*).as("ks"))
+  }
+
+  /** Banded-LSH candidate pairs: the one candidate stage of the near-dup
+    * family ([[minhashLshPairs]], [[incrementalDedup]], [[hammingPairs]]
+    * and [[SimilarityOps.rhpNearDupPairs]]). `keys` is (id, ks:
+    * array<bigint>, payload…) with `bands` keys per row; a pair is a
+    * candidate iff it agrees on the key of at least one band. Rows explode
+    * to (band, ks[band]) and equi-join on it — within `keys` with
+    * `l.id < r.id` when `probe` is absent, `keys` × `probe` otherwise.
+    *
+    * Each pair is emitted once, from its FIRST shared band: band b keeps a
+    * match only if ks[b'] differs for every b' < b. The check reads both
+    * rows' key arrays on the joined row, so the candidate stream needs no
+    * distinct shuffle. That equals a distinct over pairs only when ids are
+    * unique within each frame — the input contract. Output: (id_a, id_b)
+    * with id_a from `keys`, plus `<c>_a`, `<c>_b` per payload column c.
+    */
+  private[graft] def bandedCandidates(keys: DataFrame, bands: Int,
+      probe: Option[DataFrame] = None): DataFrame = {
+    def banded(df: DataFrame): DataFrame =
+      df.select(col("*"), posexplode(col("ks")).as(Seq("band", "bkey")))
+    val sameKey = col("l.band") === col("r.band") && col("l.bkey") === col("r.bkey")
+    val firstShared = (0 until bands - 1).map { bp =>
+      col("l.band") <= lit(bp) ||
+        element_at(col("l.ks"), bp + 1) =!= element_at(col("r.ks"), bp + 1)
+    }.foldLeft(lit(true))(_ && _)
+    val payload = keys.columns.toSeq.filterNot(Set("id", "ks"))
+    banded(keys).as("l")
+      .join(banded(probe.getOrElse(keys)).as("r"),
+        if (probe.isEmpty) sameKey && col("l.id") < col("r.id") else sameKey)
+      .filter(firstShared)
+      .select(col("l.id").as("id_a") +: col("r.id").as("id_b") +:
+        payload.flatMap(c => Seq(col(s"l.$c").as(s"${c}_a"), col(s"r.$c").as(s"${c}_b"))): _*)
+  }
+
   /** MinHash+LSH candidate pairs: band the signature (`bands` bands of
-    * rows/band), bucket-join on (band index, band hash), emit each pair
-    * once, then verify with exact shingle-set Jaccard ≥ `threshold`.
+    * rows/band), bucket-join on (band index, band hash) through
+    * [[bandedCandidates]], then verify with exact shingle-set Jaccard ≥
+    * `threshold`.
     *
     * Plan: explode to n·bands rows → self-join on the band key (hash
     * shuffle, bucket sizes are tiny for honest thresholds) → pairwise
@@ -75,28 +116,14 @@ object DedupOps {
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       shingleWords: Int = 5, numHashes: Int = 16,
                       bands: Int = 4, threshold: Double = 0.5): DataFrame = {
-    require(bands >= 1 && numHashes % bands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of bands ($bands): " +
-        "rows=0 degenerates every band key to a constant (O(n^2) join) and a " +
-        "remainder silently discards hash functions")
-    val rows = numHashes / bands
+    val bandKeys = minhashBandKeys(numHashes, bands)
     // ONE shingling pass: h1 of the minhash double-hashing scheme IS
     // xxhash64(shingle), so the verifier's sorted-hash array doubles as
     // the signature input. The text is shingled once and only longs are
     // cached/shuffled from here on.
     val hs = shingleHashes(docs, idCol, textCol, shingleWords)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sig = signaturesFromHashes(hs, numHashes)
-    val banded = sig.select(col("id"), explode(
-      transform(sequence(lit(0), lit(bands - 1)),
-        b => struct(b.as("band"),
-          xxhash64(b, slice(col("sig"), b * rows + 1, lit(rows))).as("bkey")))
-      ).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-    val cands = banded.as("l").join(banded.as("r"),
-        col("l.band") === col("r.band") && col("l.bkey") === col("r.bkey") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b")).distinct()
+    val cands = bandedCandidates(bandKeys(hs), bands)
     // materialize the (small) verified pair set, then release the cached
     // shingle-hash table — operators that cache internally must not leak
     // storage for the session lifetime
@@ -118,9 +145,9 @@ object DedupOps {
       .filter(col("n") > 0)
 
   /** Exact shingle-set Jaccard for candidate pairs (verification step).
-    * Works on the hash-sorted long arrays of [[shingleHashes]] + the
-    * native O(n+m) merge-scan — the same verification shape as
-    * [[ngramJaccardPairs]] — so what gets joined is one long per distinct
+    * Works on the hash-sorted long arrays of [[shingleHashes]] (or any
+    * (id, hs, n) table, as [[ngramJaccardPairs]]' blocked one) + the
+    * native O(n+m) merge-scan, so what gets joined is one long per distinct
     * shingle, never the string shingles themselves (exact up to 64-bit
     * hash collisions, ~pairs·n²/2⁶⁴; the DuckDB oracle computes true
     * string-set Jaccard and agrees).
@@ -164,31 +191,18 @@ object DedupOps {
                        idCol: String, textCol: String,
                        shingleWords: Int = 5, numHashes: Int = 16,
                        bands: Int = 8, threshold: Double = 0.5): DataFrame = {
-    require(bands >= 1 && numHashes % bands == 0,
-      s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
-    val rows = numHashes / bands
+    val bandKeys = minhashBandKeys(numHashes, bands)
     def fp(df: DataFrame): DataFrame = df
       .select(col(idCol).as("id"), md5(normalized(col(textCol))).as("__fp"))
       .filter(col("__fp").isNotNull)
     val exact = fp(batch).join(fp(corpus).select(col("__fp"),
         col("id").as("__cid")), "__fp")
       .groupBy(col("id")).agg(min(col("__cid")).as("__exact_id"))
-    def bandKeys(hs: DataFrame): DataFrame =
-      signaturesFromHashes(hs, numHashes)
-        .select(col("id"), explode(
-          transform(sequence(lit(0), lit(bands - 1)),
-            b => struct(b.as("band"),
-              xxhash64(b, slice(col("sig"), b * rows + 1, lit(rows))).as("bkey")))
-        ).as("bb"))
-        .select(col("id"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
     val hsB = shingleHashes(batch, idCol, textCol, shingleWords)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val hsC = shingleHashes(corpus, idCol, textCol, shingleWords)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cands = bandKeys(hsB).as("l")
-      .join(bandKeys(hsC).as("r"),
-        col("l.band") === col("r.band") && col("l.bkey") === col("r.bkey"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b")).distinct()
+    val cands = bandedCandidates(bandKeys(hsB), bands, Some(bandKeys(hsC)))
     // ids are one namespace across both frames (caller contract), so the
     // shared verifier can read sizes/arrays from the unioned table
     val near = verifyJaccard(cands, hsB.unionByName(hsC), threshold)
@@ -246,20 +260,9 @@ object DedupOps {
         col("l.blk") === col("r.blk") && col("l.tok") === col("r.tok") &&
           col("l.id") < col("r.id"))
       .select(col("l.id").as("id_a"), col("r.id").as("id_b")).distinct()
-    // verification via the native O(n+m) merge-scan over the already
-    // hash-sorted arrays (exact up to 64-bit shingle-hash collisions —
-    // ~n²·pairs/2⁶⁴, vanishingly small; the DuckDB oracle computes true
-    // string-set Jaccard and agrees)
-    val full = sh.select(col("id"), col("hs"), col("n"))
-    val out = candsPre
-      .join(full.select(col("id").as("id_a"), col("hs").as("hs_a"), col("n").as("n_a")), "id_a")
-      .join(full.select(col("id").as("id_b"), col("hs").as("hs_b"), col("n").as("n_b")), "id_b")
-      .withColumn("inter",
-        graft.functions.SortedArrayIntersectCount(col("hs_a"), col("hs_b")))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("n_a") + col("n_b") - col("inter")).cast("double"), 4))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    // the shared exact verifier: native O(n+m) merge-scan over the
+    // already hash-sorted arrays
+    val out = verifyJaccard(candsPre, sh, threshold)
       .localCheckpoint(true)
     sh.unpersist()
     out
@@ -440,14 +443,14 @@ object DedupOps {
   private def shingleHash(s: Column): Column =
     conv(substring(md5(s), 1, 15), 16, 10).cast("long")
 
-  /** (chunk idx, start bit, width) triples for the pigeonhole blocking
-    * shared by [[hammingPairs]] and the streaming near-dup
+  /** (start bit, mask) of each chunk of the pigeonhole blocking shared
+    * by [[hammingPairs]] and the streaming near-dup
     * (graft.streaming.Streams.streamingSimhashPairs): a pair within
     * Hamming distance h must agree exactly on at least one of h+1
     * signature chunks — the chunk count must track maxHamming or recall
     * silently degrades.
     */
-  private[graft] def chunkBounds(nBits: Int, maxHamming: Int): Seq[(Int, Int, Int)] = {
+  private[graft] def chunkMasks(nBits: Int, maxHamming: Int): Seq[(Int, Long)] = {
     val chunks = maxHamming + 1
     require(chunks >= 2 && chunks <= 15, s"maxHamming=$maxHamming out of range")
     require(nBits >= chunks && nBits <= 64, s"nBits=$nBits out of range")
@@ -455,9 +458,16 @@ object DedupOps {
     (0 until chunks).map { c =>
       val start = c * base
       val width = if (c == chunks - 1) nBits - start else base
-      (c, start, width)
+      (start, if (width >= 64) -1L else (1L << width) - 1)
     }
   }
+
+  /** The chunk-key array of a signature column: element c is chunk c of
+    * [[chunkMasks]] — the `ks` of a [[bandedCandidates]] key frame. */
+  private[graft] def chunkKeys(sig: Column, nBits: Int, maxHamming: Int): Column =
+    array(chunkMasks(nBits, maxHamming).map { case (start, mask) =>
+      shiftright(sig, start).bitwiseAND(mask)
+    }: _*)
 
   /** Distinct-shingle 60-bit hash array for one row — the materialize-once
     * operand of [[simhashSigFromHashes]]. Callers MUST bind this to its
@@ -623,32 +633,20 @@ object DedupOps {
   /** Hamming-distance ≤ `maxHamming` pairs over precomputed `nBits`-bit
     * long signatures, chunk-blocked: a pair within hamming h must agree
     * exactly on at least one of h+1 signature chunks (pigeonhole — the
-    * blocking is LOSSLESS), so candidates come from h+1 equi-joins on
-    * chunk keys, never an all-pairs product; every candidate is verified
-    * by popcount of XOR. Output: (id_a, id_b, hamming), id_a < id_b.
+    * blocking is LOSSLESS), so candidates come from the chunk-key join of
+    * [[bandedCandidates]], never an all-pairs product; every candidate is
+    * verified by popcount of XOR. Ids must be unique (one signature per
+    * id). Output: (id_a, id_b, hamming), id_a < id_b.
     */
   def hammingPairs(sigs0: DataFrame, idCol: String, sigCol: String,
                    nBits: Int, maxHamming: Int): DataFrame = {
-    val bounds = chunkBounds(nBits, maxHamming)
+    val ks = chunkKeys(col("sig"), nBits, maxHamming)
     val sigs = sigs0.select(col(idCol).as("id"), col(sigCol).as("sig"))
       .filter(col("sig").isNotNull)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val chunked = sigs.select(col("id"), col("sig"), explode(
-      array(bounds.map { case (c, start, width) =>
-        val mask = if (width >= 64) -1L else (1L << width) - 1
-        struct(lit(c).as("chunk"),
-          shiftright(col("sig"), start).bitwiseAND(mask).as("ckey"))
-      }: _*))
-      .as("cc"))
-      .select(col("id"), col("sig"), col("cc.chunk").as("chunk"), col("cc.ckey").as("ckey"))
-    val popcountXor = (a: Column, b: Column) =>
-      bit_count(a.bitwiseXOR(b)).cast("int")
-    val out = chunked.as("l").join(chunked.as("r"),
-        col("l.chunk") === col("r.chunk") && col("l.ckey") === col("r.ckey") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        col("l.sig").as("sig_a"), col("r.sig").as("sig_b")).distinct()
-      .withColumn("hamming", popcountXor(col("sig_a"), col("sig_b")))
+    val out = bandedCandidates(sigs.select(col("id"), ks.as("ks"), col("sig")),
+        maxHamming + 1)
+      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("int"))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
       .localCheckpoint(true)

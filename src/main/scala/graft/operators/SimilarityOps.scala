@@ -15,9 +15,8 @@ import graft.functions.{CosineSimilarity => NativeCos, L2DistanceSq => NativeL2}
   *    the corpus.
   *  - [[ivfAssign]] / [[ivfTopK]]: IVF-style scale path (coarse
   *    quantization as in Jégou et al., "Product Quantization for Nearest
-  *    Neighbor Search", TPAMI 2011; random-hyperplane LSH alternative per
-  *    Charikar 2002 in [[rhpBucket]]) — vectors are
-  *    bucketed by nearest centroid; a query probes only `nprobe` buckets,
+  *    Neighbor Search", TPAMI 2011) — vectors are bucketed by nearest
+  *    centroid; a query probes only `nprobe` buckets,
   *    cutting scanned vectors by ~nlist/nprobe. At 100 TB the table is
   *    written partitioned by `centroid` so probing is partition pruning.
   *    Centroids should be TRAINED ([[graft.operators.ClusterOps.kmeansFit]]),
@@ -25,7 +24,9 @@ import graft.functions.{CosineSimilarity => NativeCos, L2DistanceSq => NativeL2}
   *    nprobe=4/nlist=16 measured recall@10 = 0.47 ([[annRecallAudit]]),
   *    while trained centroids at nprobe=12 measure 0.93+ (PERF.md r10).
   *    Re-run the audit whenever centroids or nprobe change.
-  *  - [[embeddingNearDupPairs]]: cosine near-dup pairs within blocks.
+  *  - [[embeddingNearDupPairs]]: cosine near-dup pairs within blocks
+  *    (exact, quadratic per block); [[rhpNearDupPairs]]: the scale path,
+  *    banded random-hyperplane LSH (Charikar 2002) with exact verify.
   *
   * Hot-path scoring uses the native codegen expression
   * [[graft.functions.CosineSimilarity]] (HOF lambdas are interpreted in
@@ -48,12 +49,6 @@ object SimilarityOps {
     val nb = l2norm(b)
     when(na > 0 && nb > 0, dot(a, b) / (na * nb)).otherwise(lit(0.0))
   }
-
-  /** Cosine from a precomputed dot and norms (norms computed once per
-    * vector instead of once per pair — the O(n·k) plan for pair scoring).
-    */
-  def cosineFrom(d: Column, na: Column, nb: Column): Column =
-    when(na > 0 && nb > 0, d / (na * nb)).otherwise(lit(0.0))
 
   /** Exact top-k by cosine against one query vector. The `orderBy + limit`
     * compiles to TakeOrderedAndProject: per-partition top-k then a k-sized
@@ -350,90 +345,6 @@ object SimilarityOps {
         1000L) / 1000.0) - 0.5
     }.toArray
 
-  /** Random-hyperplane LSH bucket key (sign bits of `nbits` deterministic
-    * pseudo-random projections, Charikar 2002).
-    */
-  def rhpBucket(vec: Column, dims: Int, nbits: Int): Column = {
-    val bits = (0 until nbits).map { b =>
-      val proj = aggregate(zip_with(vec, lit(rhpPlane(b, dims)),
-        (x, p) => x.cast("double") * p), lit(0.0), (acc, x) => acc + x)
-      when(proj >= 0, shiftleft(lit(1L), b)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
-
-  /** Scale-safe cosine near-dup pairs: banded random-hyperplane LSH.
-    *
-    * The label-blocked [[embeddingNearDupPairs]] demo is exact but
-    * quadratic within a block — with a handful of labels that is quadratic
-    * in the corpus. Here the block key is data-independent: an `nbits`
-    * sign-bit signature ([[rhpBucket]]) split into `bands` bands of
-    * nbits/bands bits; a candidate pair must share at least one band key,
-    * and every candidate is verified exactly with native cosine ≥
-    * `threshold`. Same contract as [[DedupOps.minhashLshPairs]]:
-    * probabilistic candidate generation — P(caught) = 1-(1-p^rows)^bands
-    * with p = 1-θ/π — then exact verification, so no false positives.
-    *
-    * Scale: bucket population is corpus/2^rows per band on centered data;
-    * grow `rows` (bits per band) with log₂(corpus) to bound bucket sizes,
-    * and `bands` with the recall target. The band-key self-join is the
-    * only shuffle; no O(n²) stage.
-    */
-  def rhpNearDupPairs(vectors: DataFrame, idCol: String, vecCol: String,
-                      dims: Int, nbits: Int, bands: Int,
-                      threshold: Double): DataFrame = {
-    require(bands >= 1 && nbits >= bands && nbits % bands == 0 && nbits <= 63,
-      s"nbits ($nbits) must be a positive multiple of bands ($bands), ≤ 63: " +
-        "nbits=0 would leave every vector in one bucket (O(n^2) join)")
-    val rows = nbits / bands
-    val mask = (1L << rows) - 1
-    val sig = vectors.select(col(idCol).as("id"), col(vecCol).as("v"),
-      rhpBucket(col(vecCol), dims, nbits).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded0 = sig.select(col("id"), col("sig"), explode(
-      array((0 until bands).map(b => struct(lit(b).as("band"),
-        shiftright(col("sig"), b * rows).bitwiseAND(mask).as("bkey"))): _*))
-      .as("bb"))
-      .select(col("id"), col("sig"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-    // r19 (guide §2.5 "one huge unsplittable input"): the candidate
-    // expansion + exact verify FUSE into the probe-side stage when the
-    // verify joins broadcast, so its task count is the corpus scan's —
-    // a single-file corpus serialized the whole O(candidates) dot-
-    // product work onto one core (measured: the 3 s job of x5b,
-    // plans/r19/x5b_*). Round-robin to the session's parallelism ONLY
-    // when the scan planned fewer partitions; at cluster scale the
-    // guard sees >= cores partitions and this is a no-op. Exact-safe:
-    // everything downstream is per-pair math (no cross-row float
-    // fold), so partition assignment cannot move the result.
-    val target = vectors.sparkSession.sparkContext.defaultParallelism
-    val banded =
-      if (banded0.rdd.getNumPartitions >= target) banded0
-      else banded0.repartition(target)
-    // emit each pair from its FIRST shared band only (band b is first iff
-    // no band b' < b also matches, read off the signature XOR map-side) —
-    // dedup without a distinct, so the wide candidate stream never
-    // shuffles: it flows straight into the (broadcast) verify joins
-    val xorSig = col("l.sig").bitwiseXOR(col("r.sig"))
-    val firstMatch = (0 until bands).map { bp =>
-      (col("l.band") <= lit(bp)) ||
-        (shiftright(xorSig, bp * rows).bitwiseAND(mask) =!= 0)
-    }.reduce(_ && _)
-    val cands = banded.as("l").join(banded.as("r"),
-        col("l.band") === col("r.band") && col("l.bkey") === col("r.bkey") &&
-          col("l.id") < col("r.id"))
-      .filter(firstMatch)
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-    val out = cands
-      .join(sig.select(col("id").as("id_a"), col("v").as("v_a")), "id_a")
-      .join(sig.select(col("id").as("id_b"), col("v").as("v_b")), "id_b")
-      .withColumn("score", round(NativeCos(col("v_a"), col("v_b")), 4))
-      .filter(col("score") >= threshold)
-      .select(col("id_a"), col("id_b"), col("score"))
-      .localCheckpoint(true)
-    sig.unpersist()
-    out
-  }
-
   /** splitmix64 (Steele/Lea/Flood, "Fast Splittable Pseudorandom Number
     * Generators", OOPSLA 2014) — the full add-constant + finalizer. The V2
     * plane family needs a stronger mixer than [[rhpPlane]]'s
@@ -462,35 +373,45 @@ object SimilarityOps {
         splitmix64(b.toLong * 1000003L + d), 100000L) / 100000.0) - 0.5
     }.toArray
 
-  /** Banded random-hyperplane near-dup pairs, WIDE band keys: band `i`
-    * packs the sign bits of planes [i·rowsPerBand, (i+1)·rowsPerBand) into
-    * its own long, so total bits = bands × rowsPerBand is NOT capped at 63
-    * (the single-signature [[rhpNearDupPairs]] limit — its 9-bit bands cap
-    * selectivity at 512 buckets/band). Planes are the decorrelated
-    * [[rhpPlaneV2]] family.
+  /** Scale-safe cosine near-dup pairs: banded random-hyperplane LSH
+    * (Charikar 2002).
     *
-    * Same contract as [[rhpNearDupPairs]]: candidate pair ⇔ ≥ 1 shared
-    * band key; every candidate exactly verified (native cosine ≥
-    * `threshold`), so no false positives; each pair emitted from its FIRST
-    * shared band only (map-side array compare — no distinct shuffle of the
-    * candidate stream). Recall 1-(1-p^rows)^bands with p = 1-θ/π.
+    * The label-blocked [[embeddingNearDupPairs]] demo is exact but
+    * quadratic within a block — with a handful of labels that is quadratic
+    * in the corpus. Here the block key is data-independent: band `i`
+    * packs the sign bits of planes [i·rowsPerBand, (i+1)·rowsPerBand) of
+    * the `plane` family into its own long (bit r = plane i·rowsPerBand +
+    * r), so total bits = bands × rowsPerBand is not capped at 63. A
+    * candidate pair shares at least one band key
+    * ([[DedupOps.bandedCandidates]], each pair from its first shared band)
+    * and every candidate is verified exactly with native cosine ≥
+    * `threshold`. Same contract as [[DedupOps.minhashLshPairs]]:
+    * probabilistic candidate generation — P(caught) = 1-(1-p^rows)^bands
+    * with p = 1-θ/π — then exact verification, so no false positives.
     *
-    * The production regime this enables (x5d, rowsPerBand=12, bands=10):
-    * 4096 buckets/band — measured ≥ 250× candidate pruning vs all-pairs at
+    * `plane` is [[rhpPlane]] (x5b/x5c) or the decorrelated [[rhpPlaneV2]]
+    * (x5d); each query's oracle embeds its family's plane literals. The
+    * V2 production regime (x5d, rowsPerBand=12, bands=10, 4096
+    * buckets/band) measured ≥ 250× candidate pruning vs all-pairs at
     * sf0.01 AND sf0.1 with full recall on every derived near-dup (PERF.md
-    * r7), vs 26× for x5c's 9-bit bands on correlated planes. Bucket
-    * population is corpus/2^rowsPerBand per band: grow rowsPerBand with
-    * log₂(corpus) to hold it constant at 100 TB.
+    * r7), vs 26× for x5c's 9-bit bands on correlated planes.
+    *
+    * Scale: bucket population is corpus/2^rowsPerBand per band on
+    * centered data; grow rowsPerBand with log₂(corpus) to bound bucket
+    * sizes, and `bands` with the recall target. The band-key self-join is
+    * the only shuffle; no O(n²) stage.
     */
-  def rhpNearDupPairsBanded(vectors: DataFrame, idCol: String, vecCol: String,
-                            dims: Int, rowsPerBand: Int, bands: Int,
-                            threshold: Double): DataFrame = {
+  def rhpNearDupPairs(vectors: DataFrame, idCol: String, vecCol: String,
+                      dims: Int, rowsPerBand: Int, bands: Int,
+                      plane: (Int, Int) => Array[Double],
+                      threshold: Double): DataFrame = {
     require(rowsPerBand >= 1 && rowsPerBand <= 63 && bands >= 1,
-      s"rowsPerBand ($rowsPerBand) must be in [1, 63] and bands ($bands) >= 1")
+      s"rowsPerBand ($rowsPerBand) must be in [1, 63] and bands ($bands) >= 1: " +
+        "rowsPerBand=0 would leave every vector in one bucket (O(n^2) join)")
     val keyCols = (0 until bands).map { band =>
       (0 until rowsPerBand).map { r =>
         val proj = aggregate(
-          zip_with(col(vecCol), lit(rhpPlaneV2(band * rowsPerBand + r, dims)),
+          zip_with(col(vecCol), lit(plane(band * rowsPerBand + r, dims)),
             (x, p) => x.cast("double") * p), lit(0.0), (acc, x) => acc + x)
         when(proj >= 0, shiftleft(lit(1L), r)).otherwise(lit(0L))
       }.reduce((a, b) => a.bitwiseOR(b))
@@ -498,32 +419,22 @@ object SimilarityOps {
     val sig = vectors.select(col(idCol).as("id"), col(vecCol).as("v"),
       array(keyCols: _*).as("ks"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded0 = sig.select(col("id"), col("ks"),
-      explode(array((0 until bands).map(b => struct(lit(b).as("band"),
-        element_at(col("ks"), b + 1).as("bkey"))): _*)).as("bb"))
-      .select(col("id"), col("ks"), col("bb.band").as("band"),
-        col("bb.bkey").as("bkey"))
-    // r19: same guarded fan-out as [[rhpNearDupPairs]] — the expansion
-    // + verify stage inherits the corpus scan's task count; see the
-    // measured 3.7× there (plans/r19/rhppar_run1.log). Exact-safe:
-    // per-pair math only downstream.
+    // r19, one huge unsplittable input: the candidate
+    // expansion + exact verify FUSE into the probe-side stage when the
+    // verify joins broadcast, so its task count is the corpus scan's —
+    // a single-file corpus serialized the whole O(candidates) dot-
+    // product work onto one core (measured 3.7×, plans/r19/
+    // rhppar_run1.log). Round-robin to the session's parallelism ONLY
+    // when the scan planned fewer partitions; at cluster scale the
+    // guard sees >= cores partitions and this is a no-op. Exact-safe:
+    // everything downstream is per-pair math (no cross-row float
+    // fold), so partition assignment cannot move the result.
+    val keys0 = sig.select(col("id"), col("ks"))
     val target = vectors.sparkSession.sparkContext.defaultParallelism
-    val banded =
-      if (banded0.rdd.getNumPartitions >= target) banded0
-      else banded0.repartition(target)
-    // first-shared-band dedup, the rhpNearDupPairs trick with the XOR map
-    // replaced by an element-wise array compare: band b emits the pair iff
-    // no earlier band b' also matched
-    val firstMatch = (0 until bands).map { bp =>
-      (col("l.band") <= lit(bp)) ||
-        (element_at(col("l.ks"), bp + 1) =!= element_at(col("r.ks"), bp + 1))
-    }.reduce(_ && _)
-    val cands = banded.as("l").join(banded.as("r"),
-        col("l.band") === col("r.band") && col("l.bkey") === col("r.bkey") &&
-          col("l.id") < col("r.id"))
-      .filter(firstMatch)
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-    val out = cands
+    val keys =
+      if (keys0.rdd.getNumPartitions >= target) keys0
+      else keys0.repartition(target)
+    val out = DedupOps.bandedCandidates(keys, bands)
       .join(sig.select(col("id").as("id_a"), col("v").as("v_a")), "id_a")
       .join(sig.select(col("id").as("id_b"), col("v").as("v_b")), "id_b")
       .withColumn("score", round(NativeCos(col("v_a"), col("v_b")), 4))

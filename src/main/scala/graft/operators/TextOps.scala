@@ -164,35 +164,6 @@ object TextOps {
   def piiCounts(text: Column): (Column, Column) =
     (regexp_count(text, lit(emailPattern)), regexp_count(text, lit(phonePattern)))
 
-  /** Quality-scoring signals: length, token stats, punctuation/alpha ratios,
-    * stopword ratio, type-token ratio. `stopwords` must be lowercase.
-    */
-  def qualitySignals(df: DataFrame, text: Column, stopwords: Seq[String]): DataFrame = {
-    val toks = tokens(lower(text))
-    val n = size(toks)
-    val sw = lit(stopwords.toArray)
-    val nStop = size(filter(toks, t => array_contains(sw, t)))
-    val nChars = length(text)
-    val nAlpha = length(regexp_replace(text, "[^A-Za-z]", ""))
-    val nPunct = length(regexp_replace(text, "[a-zA-Z0-9\\s]", ""))
-    df.withColumn("n_chars_m", nChars.cast("long"))
-      .withColumn("n_tokens", n.cast("long"))
-      .withColumn("n_types", size(array_distinct(toks)).cast("long"))
-      .withColumn("mean_word_len",
-        round(when(n > 0, coalesce(aggregate(toks, lit(0L),
-          (acc, t) => acc + length(t)), lit(0L)).cast("double") / n)
-          .otherwise(lit(0.0)), 4))
-      .withColumn("alpha_ratio",
-        round(when(nChars > 0, nAlpha.cast("double") / nChars).otherwise(lit(0.0)), 4))
-      .withColumn("punct_ratio",
-        round(when(nChars > 0, nPunct.cast("double") / nChars).otherwise(lit(0.0)), 4))
-      .withColumn("stopword_ratio",
-        round(when(n > 0, nStop.cast("double") / n).otherwise(lit(0.0)), 4))
-      .withColumn("type_token_ratio",
-        round(when(n > 0, size(array_distinct(toks)).cast("double") / n)
-          .otherwise(lit(0.0)), 4))
-  }
-
   /** Composite quality score in [0,1]: favors mid-length docs with healthy
     * stopword presence and low punctuation density.
     */

@@ -675,8 +675,8 @@ object ScaleQueries {
     // hash-checked, not just rows-only.
     QuerySpec("x5b_embed_rhp_neardup",
       (s, d) => SimilarityOps.rhpNearDupPairs(t(s, d, "embeddings"),
-        "vec_id", "embedding", dims = 64, nbits = 32, bands = 16,
-        threshold = 0.44)
+        "vec_id", "embedding", dims = 64, rowsPerBand = 2, bands = 16,
+        plane = SimilarityOps.rhpPlane, threshold = 0.44)
         .orderBy("id_a", "id_b"),
       Some {
         val dims = 64; val nbits = 32; val nBands = 16; val rows = nbits / nBands
@@ -709,8 +709,8 @@ object ScaleQueries {
       }),
 
     // x5c — the PRODUCTION regime of the RHP family (r5 VERDICT item 3):
-    // high threshold (τ=0.92), 9-bit band keys (nbits=63, bands=7 → 512
-    // buckets per band), where LSH actually prunes: candidates ≪
+    // high threshold (τ=0.92), 9-bit band keys (7 bands × 9 rhpPlane
+    // planes → 512 buckets per band), where LSH actually prunes: candidates ≪
     // all-pairs (measured in PERF.md). The base corpus's max pair cosine
     // is ~0.51, so near-duplicates are DERIVED deterministically in both
     // engines: every 25th vector blended with its successor at
@@ -721,8 +721,8 @@ object ScaleQueries {
     // order in both engines.
     QuerySpec("x5c_embed_rhp_selective",
       (s, d) => SimilarityOps.rhpNearDupPairs(augmentedEmbeddings(s, d),
-        "vec_id", "embedding", dims = 64, nbits = 63, bands = 7,
-        threshold = 0.92)
+        "vec_id", "embedding", dims = 64, rowsPerBand = 9, bands = 7,
+        plane = SimilarityOps.rhpPlane, threshold = 0.92)
         .orderBy("id_a", "id_b"),
       Some {
         val dims = 64; val nbits = 63; val nBands = 7; val rows = nbits / nBands
@@ -765,16 +765,16 @@ object ScaleQueries {
     // augmented corpus and τ=0.92 as x5c, but (a) planes drawn from the
     // splitmix64-mixed rhpPlaneV2 family — x5c's Long.hashCode planes are
     // mutually CORRELATED (mean |bit corr| 0.21 vs 0.087), which is what
-    // collapsed its pruning to 26× — and (b) 12-bit band keys packed
-    // per-band (4096 buckets/band × 10 bands = 120 planes, impossible in
-    // the single-63-bit-signature form). Measured with the oracle's own
-    // cand CTE: ~267×/~265× candidate pruning vs all-pairs at
+    // collapsed its pruning to 26× — and (b) 12-bit band keys (4096
+    // buckets/band × 10 bands = 120 planes). Same operator as x5b/x5c,
+    // only the plane family and band shape differ. Measured with the
+    // oracle's own cand CTE: ~267×/~265× candidate pruning vs all-pairs at
     // sf0.01/sf0.1 with FULL recall (every pair ≥ τ caught — x5c itself
     // misses one at sf0.01). PERF.md r7 has the numbers.
     QuerySpec("x5d_embed_rhp_banded",
-      (s, d) => SimilarityOps.rhpNearDupPairsBanded(augmentedEmbeddings(s, d),
+      (s, d) => SimilarityOps.rhpNearDupPairs(augmentedEmbeddings(s, d),
         "vec_id", "embedding", dims = 64, rowsPerBand = 12, bands = 10,
-        threshold = 0.92)
+        plane = SimilarityOps.rhpPlaneV2, threshold = 0.92)
         .orderBy("id_a", "id_b"),
       Some {
         val dims = 64; val rows = 12; val nBands = 10; val nbits = rows * nBands

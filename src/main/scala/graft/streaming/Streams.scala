@@ -465,7 +465,7 @@ object Streams {
     * per row (DedupOps.simhashSigFromHashes — no groupBy, so the whole
     * chain stays append-mode), pigeonhole chunk blocking identical to the
     * batch [[graft.operators.DedupOps.hammingPairs]] (shared
-    * `chunkBounds`), and per-bucket `flatMapGroupsWithState` holding the
+    * `chunkKeys`), and per-bucket `flatMapGroupsWithState` holding the
     * bucket's (doc_id, sig) history: a new doc pairs against every prior
     * doc in any shared bucket with XOR-popcount ≤ maxHamming. The
     * streaming twin of x4 — a training-data ingest can now flag fuzzy
@@ -476,9 +476,11 @@ object Streams {
     * LATER member is processed, and batch iterators are sorted by doc_id
     * before processing — so the emitted SET is independent of how the
     * stream is sliced into micro-batches (asserted against the batch x4
-    * oracle, which knows nothing of batches). A pair sharing c chunks is
-    * emitted from c buckets; consumers dedup — the bounded runner
-    * returns `.distinct()`.
+    * oracle, which knows nothing of batches). A pair sharing several
+    * chunks is emitted only from the bucket of its FIRST shared chunk —
+    * the batch [[graft.operators.DedupOps.bandedCandidates]] rule, read
+    * off `osig ^ sig` since the bucket holds both signatures — so the
+    * stream emits each pair once and needs no consumer-side distinct.
     *
     * Scale: state per bucket is its signature population (16 bytes/doc);
     * buckets are the shuffle key, so state distributes across executors.
@@ -496,29 +498,27 @@ object Streams {
     // a micro-batch has as many partitions as FILES; spread the docs
     // first or the md5-per-shingle signature stage runs in one task (the
     // st29 single-task map shape, PERF.md r10). The emitted pair set is
-    // placement-independent (per-bucket sort + consumer distinct).
+    // placement-independent (per-bucket sort + first-shared-chunk rule).
     val sigs = docs
       .repartition(spark.sparkContext.defaultParallelism)
       .withColumn("__hs", DedupOps.shingleHashArray(col(textCol), shingleWords))
       .select(col(idCol).cast("long").as("doc_id"),
         DedupOps.simhashSigFromHashes(col("__hs")).as("sig"))
       .filter(col("sig").isNotNull)
-    val buckets = DedupOps.chunkBounds(nBits, maxHamming).map {
-      case (c, start, width) =>
-        val mask = if (width >= 64) -1L else (1L << width) - 1
-        struct(lit(c).as("chunk"),
-          shiftright(col("sig"), start).bitwiseAND(mask).as("ckey"))
-    }
+    val masks = DedupOps.chunkMasks(nBits, maxHamming)
+    // chunk c is a pair's first shared chunk iff every earlier chunk of
+    // the signature XOR is nonzero
+    def firstShared(c: Int, x: Long): Boolean =
+      (0 until c).forall(cp => ((x >>> masks(cp)._1) & masks(cp)._2) != 0)
     val chunked = sigs
       .select(col("doc_id"), col("sig"),
-        explode(array(buckets: _*)).as("cc"))
-      .select(col("doc_id"), col("cc.chunk").as("chunk"),
-        col("cc.ckey").as("ckey"), col("sig"))
+        posexplode(DedupOps.chunkKeys(col("sig"), nBits, maxHamming))
+          .as(Seq("chunk", "ckey")))
       .as[ChunkRow]
     chunked.groupByKey(r => (r.chunk, r.ckey))
       .flatMapGroupsWithState[BucketDocs, HamPair](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: (Int, Long), it: Iterator[ChunkRow], state: GroupState[BucketDocs]) =>
+        (key: (Int, Long), it: Iterator[ChunkRow], state: GroupState[BucketDocs]) =>
           val rows = it.toSeq.sortBy(_.doc_id)
           val seen = scala.collection.mutable.ArrayBuffer[(Long, Long)](
             state.getOption.map(_.docs).getOrElse(Nil): _*)
@@ -527,8 +527,9 @@ object Streams {
             // a re-delivered id must not self-pair or duplicate state
             if (!seen.exists(_._1 == r.doc_id)) {
               seen.foreach { case (oid, osig) =>
-                val ham = java.lang.Long.bitCount(osig ^ r.sig)
-                if (ham <= maxHamming)
+                val x = osig ^ r.sig
+                val ham = java.lang.Long.bitCount(x)
+                if (ham <= maxHamming && firstShared(key._1, x))
                   out += HamPair(math.min(oid, r.doc_id),
                     math.max(oid, r.doc_id), ham)
               }
@@ -542,14 +543,13 @@ object Streams {
 
   /** Bounded (AvailableNow) runner for [[streamingSimhashPairs]]: drains
     * `stream` through the stateful pairing into a memory sink and returns
-    * the deduplicated pair set (a pair sharing c chunks is emitted c
-    * times — the `.distinct()` here is the consumer-side collapse).
+    * the pair set (each pair emitted once, from its first shared chunk).
     */
   def runStreamingSimhashAvailableNow(stream: DataFrame, idCol: String,
                                       textCol: String, shingleWords: Int,
                                       maxHamming: Int): DataFrame =
     drain(streamingSimhashPairs(stream.sparkSession, stream, idCol, textCol,
-      shingleWords, maxHamming), "append", _.distinct())
+      shingleWords, maxHamming), "append")
 
   /** Streaming CUSUM drift alarms — the streaming twin of
     * [[graft.operators.Analytics.cusumAlarms]]: per-(group, day) event

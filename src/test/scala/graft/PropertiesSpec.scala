@@ -280,6 +280,40 @@ class PropertiesSpec extends SparkSpec {
     }
   }
 
+  test("bandedCandidates property: first-shared-band emission equals the " +
+    "distinct plain band join, self and cross-frame, each pair once") {
+    import graft.operators.DedupOps
+    import org.apache.spark.sql.DataFrame
+    def plainJoin(l: DataFrame, r: DataFrame, self: Boolean): Set[(Long, Long)] = {
+      def ex(df: DataFrame) =
+        df.select(col("id"), posexplode(col("ks")).as(Seq("band", "bkey")))
+      val on = col("l.band") === col("r.band") && col("l.bkey") === col("r.bkey")
+      ex(l).as("l").join(ex(r).as("r"), if (self) on && col("l.id") < col("r.id") else on)
+        .select(col("l.id"), col("r.id")).distinct()
+        .as[(Long, Long)].collect().toSet
+    }
+    for (bands <- Seq(1, 3, 5)) {
+      // three key values per band: most pairs share several bands
+      val rows = samples(Gen.listOfN(bands, Gen.choose(0L, 2L)), 30 + bands)
+        .zipWithIndex.map { case (ks, i) => (i.toLong, ks, i * 10L) }
+      val keys = rows.toDF("id", "ks", "p")
+      val self = DedupOps.bandedCandidates(keys, bands)
+        .as[(Long, Long, Long, Long)].collect().toSeq
+      assert(self.size == self.toSet.size, s"bands=$bands self pair emitted twice")
+      assert(self.map(r => (r._1, r._2)).toSet == plainJoin(keys, keys, self = true),
+        s"bands=$bands self")
+      assert(self.forall(r => r._3 == r._1 * 10 && r._4 == r._2 * 10),
+        s"bands=$bands payload columns follow their rows")
+      val (l, r) = (keys.filter(col("id") % 2 === 0).drop("p"),
+        keys.filter(col("id") % 2 === 1).drop("p"))
+      val cross = DedupOps.bandedCandidates(l, bands, Some(r))
+        .as[(Long, Long)].collect().toSeq
+      assert(cross.size == cross.toSet.size, s"bands=$bands cross pair emitted twice")
+      assert(cross.toSet == plainJoin(l, r, self = false), s"bands=$bands cross")
+      assert(self.size > 0 && cross.size > 0)
+    }
+  }
+
   test("calibrationCurve property: bins partition the rows exactly and " +
     "every mean prediction lies inside its bin") {
     import graft.operators.Analytics

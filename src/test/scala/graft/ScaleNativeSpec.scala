@@ -99,8 +99,10 @@ class ScaleNativeSpec extends SparkSpec {
       plan.contains("skewed"), plan)
   }
 
-  test("rhpNearDupPairs matches exact all-pairs cosine near-dups (no false " +
-    "positives by construction; full recall on the seed corpus)") {
+  // exact all-pairs cosine near-dups of the seed corpus, and the LSH pair
+  // set of one plane family in the recall-1 regime (2-bit bands, 16 bands)
+  private def rhpExactAndLsh(plane: (Int, Int) => Array[Double])
+      : (Set[(Long, Long, Double)], Set[(Long, Long, Double)]) = {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val exact = emb.as("a").join(emb.as("b"), col("a.vec_id") < col("b.vec_id"))
       .withColumn("score", round(NativeCos(col("a.embedding"), col("b.embedding")), 4))
@@ -108,8 +110,15 @@ class ScaleNativeSpec extends SparkSpec {
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"), col("score"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val lsh = SimilarityOps.rhpNearDupPairs(emb, "vec_id", "embedding",
-      dims = 64, nbits = 32, bands = 16, threshold = 0.44)
+      dims = 64, rowsPerBand = 2, bands = 16, plane = plane, threshold = 0.44)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    (exact, lsh)
+  }
+
+  test("rhpNearDupPairs matches exact all-pairs cosine near-dups (no false " +
+    "positives by construction; full recall on the seed corpus)") {
+    // the rhpPlane family of x5b/x5c
+    val (exact, lsh) = rhpExactAndLsh(SimilarityOps.rhpPlane)
     assert(lsh.subsetOf(exact), s"false positives: ${lsh -- exact}")
     assert(lsh == exact, s"missed pairs (recall < 1 on this corpus): ${exact -- lsh}")
     assert(exact.nonEmpty, "corpus should contain at least one near-dup pair")
@@ -117,16 +126,9 @@ class ScaleNativeSpec extends SparkSpec {
 
   test("rhpNearDupPairsBanded: no false positives, full recall on the seed " +
     "corpus, and decorrelated planes") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val exact = emb.as("a").join(emb.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .withColumn("score", round(NativeCos(col("a.embedding"), col("b.embedding")), 4))
-      .filter(col("score") >= 0.44)
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"), col("score"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // recall-1 regime on the tiny corpus: 2-bit bands, 16 bands
-    val lsh = SimilarityOps.rhpNearDupPairsBanded(emb, "vec_id", "embedding",
-      dims = 64, rowsPerBand = 2, bands = 16, threshold = 0.44)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    // the decorrelated rhpPlaneV2 family of x5d (the former
+    // rhpNearDupPairsBanded, now rhpNearDupPairs with plane = rhpPlaneV2)
+    val (exact, lsh) = rhpExactAndLsh(SimilarityOps.rhpPlaneV2)
     assert(lsh.subsetOf(exact), s"false positives: ${lsh -- exact}")
     assert(lsh == exact, s"missed pairs: ${exact -- lsh}")
     assert(exact.nonEmpty)
