@@ -50,10 +50,11 @@ import org.apache.spark.sql.types._
   * Scale shape: commits move only the new files' rows plus one
   * touch-set-sized metadata JSON; replacePartitions appends the
   * replacement rows and commits — old files are never rewritten,
-  * [[vacuum]] reclaims them after retention. Reads are
-  * explicit-file-list parquet scans with `basePath` partition
-  * inference, so partition pruning and column pruning behave exactly
-  * as on a directory-planned table.
+  * [[vacuum]] reclaims them after retention. Every read plans the
+  * manifest's file list through one Catalyst FileIndex
+  * ([[graft.sources.LogTableFileIndex]]): no read lists the
+  * filesystem, and partition, zone-map, bloom and column pruning
+  * happen in Spark's own file scan.
   */
 object LogTable {
 
@@ -1001,8 +1002,8 @@ object LogTable {
     * (metadata columns only resolve there). Column order is preserved;
     * `keepIdentity` retains the `__dvf`/`__dvp` identity columns for
     * callers ([[delete]]) that need each surviving row's (file,
-    * position). Shared by the explicit-file scans and the FileIndex
-    * read path. */
+    * position). Shared by every LogTable scan ([[scanLive]]) and the
+    * provider path's [[graft.plans.LogTableDvRule]]. */
   private[graft] def applyDv(spark: SparkSession, tableRoot: String,
                              dvIds: Seq[String], base: DataFrame,
                              keepIdentity: Boolean = false,
@@ -1025,40 +1026,71 @@ object LogTable {
       else alive.select(cols.map(col).toSeq: _*)
     }
 
-  /** Plan an explicit file list with the manifest's schema (when
-    * recorded): files written before a column was added null-fill it,
-    * and EVERY internal scan goes through here so a mixed-schema live
-    * set can never silently resolve to one file's schema (parquet's
-    * default no-merge behavior — the footgun schema evolution exists
-    * to remove). Deletion vectors of the planned files are anti-joined
-    * away ([[applyDv]]); `dvFrom` overrides WHICH version's DV mapping
-    * applies (the change feed scans removed files under the FROM
-    * version's vectors while keeping the TO version's schema). */
-  private def rawScan(spark: SparkSession, tableRoot: String,
-                      m: Manifest, files: Seq[String]): DataFrame = {
-    val r = spark.read.option("basePath", tableRoot)
-    m.schemaDdl match {
-      case Some(ddl) =>
-        r.schema(StructType.fromDDL(ddl)).parquet(files: _*)
-      case None => r.parquet(files: _*)
+  /** Plan `m`'s live set through the manifest FileIndex
+    * ([[graft.sources.LogTableScan.relation]]) under `schema`, the
+    * version's recorded schema: files written before a column was added
+    * null-fill it, so a mixed-schema live set can never resolve to one
+    * file's footer. Deletion vectors of the planned files are
+    * anti-joined away ([[applyDv]]); columns come in schema order, then
+    * the (`__dvf`, `__dvp`) identity when `keepIdentity`. Data columns
+    * read nullable, as Spark's own file sources read them, so a column
+    * derived from them can be added by schema evolution. EVERY LogTable
+    * read goes through here, and none lists the filesystem. */
+  private def scanLive(spark: SparkSession, tableRoot: String,
+                       schema: StructType, m: Manifest,
+                       keepIdentity: Boolean = false): DataFrame = {
+    val partCols = partColsOfManifest(m).toSet
+    val readSchema = StructType(schema.map(f =>
+      if (partCols(f.name)) f
+      else f.copy(dataType = normalizedType(f.dataType), nullable = true)))
+    val dvIds = m.parts.values.flatten.flatMap(_.dv).toSeq.distinct
+    val out = schema.fieldNames.toSeq ++
+      (if (keepIdentity) Seq("__dvf", "__dvp") else Seq.empty)
+    applyDv(spark, tableRoot, dvIds, scanPhysical(spark, tableRoot,
+      readSchema, m), keepIdentity, partLevels(m))
+      .select(out.map(c => col(s"`${c.replace("`", "``")}`")): _*)
+  }
+
+  /** The PHYSICAL rows of `m`'s files under `schema`: the FileIndex
+    * relation alone, no deletion vectors applied. [[scanLive]] builds
+    * on it; the commit-time stats and bloom jobs read it directly
+    * (over a bare manifest of the new files, which prunes nothing),
+    * since a file's row count, zones and blooms describe every row it
+    * holds. */
+  private def scanPhysical(spark: SparkSession, tableRoot: String,
+                           schema: StructType, m: Manifest): DataFrame =
+    org.apache.spark.sql.graftshim.PlanShim.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.LogicalRelation(
+        graft.sources.LogTableScan.relation(spark, tableRoot, schema, m,
+          dvPending = false)))
+
+  private def filesOnly(parts: Map[String, Seq[FileStat]]): Manifest =
+    Manifest(0L, "", Seq.empty, None, parts)
+
+  /** `m` with its live set restricted to `files` (`$tableRoot/<tail>`
+    * paths), each of which must be live in `m`. */
+  private def restrictTo(m: Manifest, files: Seq[String]): Manifest = {
+    val levels = partLevels(m)
+    val live = m.parts.toSeq.flatMap { case (p, fl) =>
+      fl.map(f => s"$p/${f.file}" -> (p, f)) }.toMap
+    val picked = files.map { path =>
+      val t = tailOf(path, levels)
+      live.getOrElse(t, sys.error(
+        s"LogTable: file $t is not live at version ${m.version}"))
     }
+    m.copy(parts = picked.groupBy(_._1).map { case (p, pf) =>
+      p -> pf.map(_._2) })
   }
 
-  private def dvIdsFor(m: Manifest, files: Seq[String]): Seq[String] = {
-    val statByTail = m.parts.toSeq.flatMap { case (p, fl) =>
-      fl.map(f => s"$p/${f.file}" -> f) }.toMap
-    files.map(tailOf(_, partLevels(m)))
-      .flatMap(t => statByTail.get(t).flatMap(_.dv))
-      .distinct
-  }
-
+  /** Scan an explicit subset of `m`'s live files under `m`'s schema.
+    * `dvFrom` names the version the files are live IN, whose deletion
+    * vectors apply (the change feed scans removed files under the FROM
+    * version's vectors while keeping the TO version's schema). */
   private def scanFiles(spark: SparkSession, tableRoot: String,
                         m: Manifest, files: Seq[String],
-                        dvFrom: Option[Manifest] = None): DataFrame = {
-    val dvM = dvFrom.getOrElse(m)
-    applyDv(spark, tableRoot, dvIdsFor(dvM, files),
-      rawScan(spark, tableRoot, m, files), levels = partLevels(dvM))
-  }
+                        dvFrom: Option[Manifest] = None): DataFrame =
+    scanLive(spark, tableRoot, graft.sources.LogTableScan.schemaOf(
+      tableRoot, m), restrictTo(dvFrom.getOrElse(m), files))
 
   /** [[scanFiles]] keeping each live row's (`__dvf` file tail, `__dvp`
     * row position) identity — what [[delete]] records and [[merge]]'s
@@ -1067,9 +1099,8 @@ object LogTable {
   private def scanWithIdentity(spark: SparkSession, tableRoot: String,
                                m: Manifest,
                                files: Seq[String]): DataFrame =
-    applyDv(spark, tableRoot, dvIdsFor(m, files),
-      rawScan(spark, tableRoot, m, files), keepIdentity = true,
-      levels = partLevels(m))
+    scanLive(spark, tableRoot, graft.sources.LogTableScan.schemaOf(
+      tableRoot, m), restrictTo(m, files), keepIdentity = true)
 
   /** `dt` with every nested nullability flag forced true — the
     * comparison form for schema-evolution type checks (DDL cannot
@@ -1252,15 +1283,12 @@ object LogTable {
     * DML probe could prune a file whose only matching rows are NaN.
     * No zone → the file is always planned → superset preserved. */
   private def fileStats(spark: SparkSession, tableRoot: String,
-                        statsCols: Seq[String],
+                        schema: StructType, statsCols: Seq[String],
                         parts: Map[String, Seq[FileStat]])
       : Map[String, (Long, Map[String, Zone])] = {
-    val paths = parts.toSeq.flatMap { case (p, fl) =>
-      fl.map(f => s"$tableRoot/$p/${f.file}") }
-    if (paths.isEmpty) Map.empty
+    if (parts.values.forall(_.isEmpty)) Map.empty
     else {
-      val df = spark.read.option("basePath", tableRoot).parquet(paths: _*)
-      val schema = df.schema
+      val df = scanPhysical(spark, tableRoot, schema, filesOnly(parts))
       // 'n' numeric (double zones), 's' lexical (string zones)
       val kinds: Map[String, Char] = statsCols.map { c =>
         c -> (schema(c).dataType match {
@@ -1556,14 +1584,29 @@ object LogTable {
         s"be auto|true|false, got $other")
     }
 
+  /** Zone maps, then bloom sidecars, for a commit's new files, read
+    * under the schema `ddl` the commit records. */
+  private def statted(spark: SparkSession, tableRoot: String,
+                      ddl: Option[String], statsCols: Seq[String],
+                      bloomCols: Seq[String],
+                      parts: Map[String, Seq[FileStat]])
+      : Map[String, Seq[FileStat]] = {
+    val schema = StructType.fromDDL(ddl.getOrElse(
+      sys.error(s"LogTable: a commit to $tableRoot records no schema")))
+    withBlooms(spark, tableRoot, schema, bloomCols,
+      withStats(spark, tableRoot, schema, statsCols, parts))
+  }
+
   /** Attach zone maps to the new files of a commit (no-op without
     * stats columns): footer-based when routed there and
     * type-compatible ([[fileStatsFooter]]), otherwise the scanning
     * agg job ([[fileStats]]) — both produce the same zones
-    * (spec-pinned). */
+    * (spec-pinned). `footers = false` forces the scan (a foreign
+    * writer's footers are not trusted — see [[convert]]). */
   private def withStats(spark: SparkSession, tableRoot: String,
-                        statsCols: Seq[String],
-                        parts: Map[String, Seq[FileStat]])
+                        schema: StructType, statsCols: Seq[String],
+                        parts: Map[String, Seq[FileStat]],
+                        footers: Boolean = true)
       : Map[String, Seq[FileStat]] =
     if (statsCols.isEmpty) parts
     else {
@@ -1571,10 +1614,10 @@ object LogTable {
         s"LogTable stats columns must be plain identifiers, got " +
           statsCols.mkString(","))
       val stats =
-        (if (footerStatsEnabled(spark, parts))
+        (if (footers && footerStatsEnabled(spark, parts))
           fileStatsFooter(spark, tableRoot, statsCols, parts)
          else None)
-          .getOrElse(fileStats(spark, tableRoot, statsCols, parts))
+          .getOrElse(fileStats(spark, tableRoot, schema, statsCols, parts))
       parts.map { case (p, fl) =>
         p -> fl.map { f =>
           stats.get(s"$p/${f.file}") match {
@@ -1652,17 +1695,13 @@ object LogTable {
     * content (filter bits are a pure function of the inserted values
     * and the fixed sizing), so the write is idempotent. */
   private def withBlooms(spark: SparkSession, tableRoot: String,
-                         bloomCols: Seq[String],
+                         schema: StructType, bloomCols: Seq[String],
                          parts: Map[String, Seq[FileStat]])
       : Map[String, Seq[FileStat]] =
-    if (bloomCols.isEmpty || parts.isEmpty) parts
+    if (bloomCols.isEmpty || parts.values.forall(_.isEmpty)) parts
     else {
-      val paths = parts.toSeq.flatMap { case (p, fl) =>
-        fl.map(f => s"$tableRoot/$p/${f.file}") }
-      if (paths.isEmpty) return parts
-      val df = spark.read.option("basePath", tableRoot).parquet(paths: _*)
-      val present = bloomCols.filter(df.columns.contains)
-      val usable = present.filter(c => df.schema(c).dataType match {
+      val df = scanPhysical(spark, tableRoot, schema, filesOnly(parts))
+      val usable = bloomCols.filter(c => df.schema(c).dataType match {
         case ByteType | ShortType | IntegerType | LongType |
              StringType => true
         case _ => false
@@ -1913,7 +1952,8 @@ object LogTable {
         // re-points EVERY live entry with its snapshot DV — abort if
         // a lock-free DML moved one concurrently (readSet)
         writeCommit(spark, tableRoot, "bloomcols", prev.statsCols,
-          prev.schemaDdl, withBlooms(spark, tableRoot, cols, blank),
+          prev.schemaDdl,
+          statted(spark, tableRoot, prev.schemaDdl, Seq.empty, cols, blank),
           fileKeys(prev.parts), bloomColsOv = Some(cols),
           snapshotV = Some(v),
           readSet = prev.parts.toSeq.flatMap { case (p, fl) =>
@@ -1998,8 +2038,8 @@ object LogTable {
   /** Create the table: write `df` date-partitioned and commit delta v1
     * (adds = the full initial live set, removes = none). `statsCols`
     * (optional — numeric, date, timestamp or string) records per-file
-    * zone maps of each named column for [[readSkipping]]. Returns the
-    * committed version (1).
+    * zone maps of each named column for [[read]]'s file pruning.
+    * Returns the committed version (1).
     *
     * The data write STAGES like [[append]]'s (r14): v1's adds are the
     * staged files, never a directory listing — a crashed-and-retried
@@ -2040,8 +2080,8 @@ object LogTable {
       promoteStage(fs, root, stagePath, stagedParts, "init")
       if (!tryCommitDelta(spark, tableRoot, 1L, action, statsCols,
           Some(df.schema.toDDL),
-          withBlooms(spark, tableRoot, bloomCols,
-            withStats(spark, tableRoot, statsCols, stagedParts)),
+          statted(spark, tableRoot, Some(df.schema.toDDL), statsCols,
+            bloomCols, stagedParts),
           Seq.empty, bloomCols))
         sys.error(s"LogTable.init: $tableRoot already has commits " +
           "(a concurrent init won the v1 race)")
@@ -2117,31 +2157,19 @@ object LogTable {
     require(parts.nonEmpty,
       s"LogTable.convert: no '${partCols.head}=' partition " +
         s"directories with data files under $tableRoot")
-    // schema (incl. typed partition columns) from the files themselves
+    // schema (incl. typed partition columns) inferred from the files
+    // themselves — the one read no recorded schema can plan yet
     val paths = parts.toSeq.flatMap { case (p, fl) =>
       fl.map(f => s"$tableRoot/$p/${f.file}") }
     val df = spark.read.option("basePath", tableRoot).parquet(paths: _*)
     validatePartTypes(df, partCols, "convert")
     validateBloomCols(df.schema, bloomCols, "convert")
     // scan-path stats, never footers (foreign writer — see Scaladoc)
-    val statted =
-      if (statsCols.isEmpty) parts
-      else {
-        require(statsCols.forall(_.matches("[A-Za-z0-9_]+")),
-          "LogTable.convert: stats columns must be plain identifiers")
-        val stats = fileStats(spark, tableRoot, statsCols, parts)
-        parts.map { case (p, fl) =>
-          p -> fl.map { f =>
-            stats.get(s"$p/${f.file}") match {
-              case Some((n, zones)) => f.copy(rows = n, zones = zones)
-              case None => f
-            }
-          }
-        }
-      }
+    val statted = withStats(spark, tableRoot, df.schema, statsCols, parts,
+      footers = false)
     if (!tryCommitDelta(spark, tableRoot, 1L, "convert", statsCols,
         Some(df.schema.toDDL),
-        withBlooms(spark, tableRoot, bloomCols, statted),
+        withBlooms(spark, tableRoot, df.schema, bloomCols, statted),
         Seq.empty, bloomCols))
       sys.error(s"LogTable.convert: $tableRoot already has commits " +
         "(a concurrent init won the v1 race)")
@@ -2176,9 +2204,8 @@ object LogTable {
       promoteStage(fs, root, stagePath, stagedParts, "overwrite")
       val staged = stagedParts.values.flatten.map(_.file).toSet
       writeCommit(spark, tableRoot, "overwrite", sc, Some(ddl),
-        withBlooms(spark, tableRoot,
-          prevM.map(_.bloomCols).getOrElse(Seq.empty),
-          withStats(spark, tableRoot, sc, stagedParts)),
+        statted(spark, tableRoot, Some(ddl), sc,
+          prevM.map(_.bloomCols).getOrElse(Seq.empty), stagedParts),
         prevM.map(m => fileKeys(m.parts)).getOrElse(Seq.empty),
         removesFor = Some(m => fileKeys(m.parts)
           .filterNot(t => staged.contains(splitTail(t)._2))))
@@ -2217,8 +2244,8 @@ object LogTable {
       val staged = stagedParts.values.flatten.map(_.file).toSet
       writeCommit(spark, tableRoot, "replace", prev.statsCols,
         Some(ddl),
-        withBlooms(spark, tableRoot, prev.bloomCols,
-          withStats(spark, tableRoot, prev.statsCols, stagedParts)),
+        statted(spark, tableRoot, Some(ddl), prev.statsCols,
+          prev.bloomCols, stagedParts),
         Seq.empty,
         removesFor = Some(m => fileKeys(m.parts.view
           .filterKeys(touched.contains).toMap)
@@ -2325,8 +2352,8 @@ object LogTable {
             allowMissingNullable = true)
           if (!promoted) {
             promoteStage(fs, root, stagePath, stagedParts, "append")
-            statted = withBlooms(spark, tableRoot, bc,
-              withStats(spark, tableRoot, sc, stagedParts))
+            statted = LogTable.statted(spark, tableRoot, Some(ddl), sc,
+              bc, stagedParts)
             promoted = true
           }
           if (tryCommitDelta(spark, tableRoot, v + 1L, action, sc,
@@ -2342,19 +2369,31 @@ object LogTable {
     }
   }
 
-  /** Plan the table at `asOf` (default: latest) from its manifest — an
-    * explicit-file-list scan with `basePath` partition inference, so
-    * the partition column survives and prunes normally. */
+  /** Plan the table at `asOf` (default: latest) from its manifest: one
+    * [[graft.sources.LogTableFileIndex]] scan, so ordinary `.filter`s on
+    * the partition column prune directories and filters on declared
+    * stats / bloom columns prune files at physical-plan time
+    * (FileSourceScanExec hands its pushed filters to the index), with
+    * no side API. Columns come in the recorded schema's order.
+    *
+    * `scanPreds` pre-prunes the snapshot at BUILD time: only files whose
+    * zone maps can hold a row satisfying EVERY predicate are planned
+    * (bounds inclusive; files without stats are always planned), so the
+    * deletion-vector anti-join reads only the admitted files' vectors —
+    * per-file vectors shrink with the file set, safely. The scan is a
+    * SUPERSET of the matching rows (zone maps are necessary, not
+    * sufficient): callers apply the exact row filter on the result.
+    * Each predicate must name a declared stats column. An empty version,
+    * or one where every zone misses, returns the schema'd empty frame. */
   def read(spark: SparkSession, tableRoot: String,
-           asOf: Option[Long] = None): DataFrame = {
-    val v = asOf.getOrElse(TableLog.currentVersion(spark, tableRoot))
-    require(v > 0L, s"LogTable.read: $tableRoot has no committed version")
-    val m = manifest(spark, tableRoot, v)
-    val files = m.parts.toSeq.sortBy(_._1).flatMap { case (p, fl) =>
-      fl.map(f => s"$tableRoot/$p/${f.file}") }
-    require(files.nonEmpty,
-      s"LogTable.read: version $v of $tableRoot is empty")
-    scanFiles(spark, tableRoot, m, files)
+           asOf: Option[Long] = None,
+           scanPreds: Seq[ZonePred] = Seq.empty): DataFrame = {
+    val (schema, m) = graft.sources.LogTableScan.snapshot(spark,
+      tableRoot, asOf, scanPreds)
+    if (m.parts.isEmpty)
+      spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+    else scanLive(spark, tableRoot, schema, m)
   }
 
   /** [[readKeyed]]'s planned file set, spec-testable: the same
@@ -2415,7 +2454,7 @@ object LogTable {
       case Some(z) => pred match {
         case NumRange(c, lo, hi) =>
           require(z.num, s"LogTable: zone map for $c is DATE/STRING " +
-            "(lexical) — probe it with StrRange / readSkippingStr, " +
+            "(lexical) — probe it with StrRange, " +
             "not a numeric range")
           val (zlo, zhi) = (z.lo.toDouble, z.hi.toDouble)
           if (zlo.isNaN || zhi.isNaN) true
@@ -2427,102 +2466,14 @@ object LogTable {
           else (hi.isNaN || zlo <= hi) && (lo.isNaN || zhi >= lo)
         case StrRange(c, lo, hi) =>
           require(!z.num, s"LogTable: zone map for $c is numeric — " +
-            "probe it with NumRange / readSkipping, not a string range")
+            "probe it with NumRange, not a string range")
           z.hi >= lo && z.lo <= hi
         case StrBounds(c, lo, hi) =>
           require(!z.num, s"LogTable: zone map for $c is numeric — " +
-            "probe it with NumRange / readSkipping, not a string range")
+            "probe it with NumRange, not a string range")
           lo.forall(z.hi >= _) && hi.forall(z.lo <= _)
       }
     }
-
-  /** General multi-predicate data skipping: plan only the files whose
-    * zone maps can contain a row satisfying EVERY predicate at once —
-    * the manifest-level file-pruning move (Delta/Iceberg data
-    * skipping). The scan is a SUPERSET of the matching rows (zone maps
-    * are necessary, not sufficient): callers apply the exact row filter
-    * on the returned frame; what skipping buys is that at 100 TB the
-    * files whose zones miss the range are never listed, opened, or
-    * footer-read at all — driver-side planning over O(manifest)
-    * metadata, zero data I/O. Files without stats are always planned.
-    * Bounds are inclusive. Fails loudly when a probed column is not one
-    * of the manifest's declared stats columns. The scan goes through
-    * the version-pinned schema ([[scanFiles]] — ADVICE r12: a
-    * mixed-schema live set must never resolve to one file's footer). */
-  def readSkippingPreds(spark: SparkSession, tableRoot: String,
-                        preds: Seq[ZonePred],
-                        asOf: Option[Long] = None): DataFrame = {
-    require(preds.nonEmpty,
-      "LogTable.readSkippingPreds needs at least one predicate")
-    val v = asOf.getOrElse(TableLog.currentVersion(spark, tableRoot))
-    require(v > 0L,
-      s"LogTable.readSkippingPreds: $tableRoot has no committed version")
-    val m = manifest(spark, tableRoot, v)
-    preds.foreach { p =>
-      require(m.statsCols.contains(p.column),
-        s"LogTable.readSkippingPreds: version $v records zone maps for " +
-          s"[${m.statsCols.mkString(",")}], not ${p.column}")
-    }
-    val files = m.parts.toSeq.sortBy(_._1).flatMap { case (p, fl) =>
-      fl.filter(f => preds.forall(zoneAdmits(f, _)))
-        .map(f => s"$tableRoot/$p/${f.file}")
-    }
-    if (files.isEmpty)
-      // every zone missed: an empty frame with the table's schema
-      read(spark, tableRoot, Some(v)).limit(0)
-    else scanFiles(spark, tableRoot, m, files)
-  }
-
-  /** Plan the table through a manifest-backed Catalyst
-    * [[org.apache.spark.sql.execution.datasources.FileIndex]]
-    * ([[graft.sources.LogTableFileIndex]] — r12 directive #4): ordinary
-    * `.filter($"v".between(a, b))` / `.filter($"date" >= lit(...))`
-    * DataFrame code prunes files via the zone maps at PHYSICAL PLAN
-    * time (FileSourceScanExec hands its pushed filters to the index),
-    * with no side API — what a real user writes. Column order, values
-    * and partition pruning match [[read]]; planned-file counts on
-    * stats-column predicates match [[readSkipping]] /
-    * [[readSkippingAll]] (spec-asserted). An empty version returns the
-    * schema'd empty frame. `scanPreds` pre-prunes the snapshot at
-    * BUILD time (zone semantics of [[readSkippingPreds]]) so the
-    * deletion-vector anti-join reads only the admitted files' vectors
-    * — per-file vectors shrink with the file set, safely. `dateCol`
-    * optionally pins the expected partition column (validated against
-    * the manifest instead of trusting first-key inference). */
-  def readIndexed(spark: SparkSession, tableRoot: String,
-                  asOf: Option[Long] = None,
-                  scanPreds: Seq[ZonePred] = Seq.empty,
-                  dateCol: Option[String] = None): DataFrame =
-    graft.sources.LogTableScan(spark, tableRoot, asOf, scanPreds, dateCol)
-
-  /** Single numeric-range data skipping — see [[readSkippingPreds]]. */
-  def readSkipping(spark: SparkSession, tableRoot: String, col: String,
-                   lo: Double, hi: Double,
-                   asOf: Option[Long] = None): DataFrame =
-    readSkippingPreds(spark, tableRoot, Seq(NumRange(col, lo, hi)), asOf)
-
-  /** Single lexical-range data skipping over a DATE / TIMESTAMP /
-    * STRING stats column (r12 directive #3) — bounds are compared
-    * lexically, which for ISO date strings (`"2024-01-15"`) IS
-    * temporal order, so `readSkippingStr(spark, root,
-    * "start_date_oslo", "2024-01-01", "2024-01-31")` prunes files on
-    * the fact's own hottest predicate with no epoch-day encoding. See
-    * [[readSkippingPreds]]. */
-  def readSkippingStr(spark: SparkSession, tableRoot: String, col: String,
-                      lo: String, hi: String,
-                      asOf: Option[Long] = None): DataFrame =
-    readSkippingPreds(spark, tableRoot, Seq(StrRange(col, lo, hi)), asOf)
-
-  /** Multi-column numeric data skipping: the conjunction prunes the
-    * INTERSECTION of the per-column survivor sets in one manifest walk
-    * — exactly what [[optimizeZorder]]'s hyper-rectangle files exist
-    * for (a 2-D probe on a 4-cell tiling plans ONE file where either
-    * single-column probe plans two). See [[readSkippingPreds]]. */
-  def readSkippingAll(spark: SparkSession, tableRoot: String,
-                      preds: Seq[(String, Double, Double)],
-                      asOf: Option[Long] = None): DataFrame =
-    readSkippingPreds(spark, tableRoot,
-      preds.map { case (c, lo, hi) => NumRange(c, lo, hi) }, asOf)
 
   /** OPTIMIZE: bin-pack each partition whose live set holds more than
     * one file under `targetBytes` into ~targetBytes files — the
@@ -2635,8 +2586,8 @@ object LogTable {
         TableLog.dmlCommitHook("compact")
         writeCommit(spark, tableRoot, "compact", prev.statsCols,
           prev.schemaDdl,
-          withBlooms(spark, tableRoot, prev.bloomCols,
-            withStats(spark, tableRoot, prev.statsCols, stagedAll)),
+          statted(spark, tableRoot, prev.schemaDdl, prev.statsCols,
+            prev.bloomCols, stagedAll),
           removes,
           snapshotV = Some(v),
           readSet = removes.map(t => t -> statByTail(t)).toMap)
@@ -2713,7 +2664,7 @@ object LogTable {
     * the Morton curve of `zCols` ([[ScaleOps.zorderValue]] — the public
     * bit-interleave behind Delta/Iceberg `ZORDER BY`), so each new file
     * owns a contiguous curve segment = a small hyper-rectangle in ALL
-    * clustered dimensions at once. Zone maps ([[readSkipping]]) then
+    * clustered dimensions at once. Zone maps ([[read]]) then
     * prune on ANY clustered column — a table appended in arrival order
     * has every file's zone spanning the whole value range, and zone
     * skipping prunes nothing until this rewrite tightens the zones.
@@ -2864,8 +2815,8 @@ object LogTable {
         TableLog.dmlCommitHook("zorder")
         writeCommit(spark, tableRoot, "zorder", prev.statsCols,
           prev.schemaDdl,
-          withBlooms(spark, tableRoot, prev.bloomCols,
-            withStats(spark, tableRoot, prev.statsCols, stagedAll)),
+          statted(spark, tableRoot, prev.schemaDdl, prev.statsCols,
+            prev.bloomCols, stagedAll),
           removes,
           snapshotV = Some(v),
           readSet = removes.map(t => t -> statByTail(t)).toMap)
@@ -3450,8 +3401,8 @@ object LogTable {
       try
         writeCommit(spark, tableRoot, action, prev.statsCols,
           commitDdl,
-          withBlooms(spark, tableRoot, prev.bloomCols,
-            withStats(spark, tableRoot, prev.statsCols, stagedParts)),
+          statted(spark, tableRoot, commitDdl, prev.statsCols,
+            prev.bloomCols, stagedParts),
           hitTails.toSeq,
           snapshotV = Some(v),
           readSet = hitTails.toSeq.map(t => t -> statByTail(t)).toMap,
@@ -3474,7 +3425,7 @@ object LogTable {
     * per-file deletion vector and committing manifest entries that
     * reference it — ZERO data files are rewritten, every prior version
     * still time-travels to the undeleted rows, and every scan
-    * ([[read]], [[readSkipping]]*, [[readIndexed]], [[merge]]'s
+    * ([[read]], [[merge]]'s
     * probe/survivors, [[compact]], [[changes]]) anti-joins the dead
     * positions away. A file whose every physical row is dead (known
     * row count fully covered) simply LEAVES the live set — a
@@ -3678,8 +3629,8 @@ object LogTable {
             }
           }
         promoteStage(fs, root, stagePath, stagedParts, "update")
-        val statted = withBlooms(spark, tableRoot, prev.bloomCols,
-          withStats(spark, tableRoot, prev.statsCols, stagedParts))
+        val statted = LogTable.statted(spark, tableRoot, prev.schemaDdl,
+          prev.statsCols, prev.bloomCols, stagedParts)
         val dvAdds = hitTails.toSeq.flatMap { t =>
           val f = statByTail(t)
           val dead = deadCounts(t)
@@ -3831,7 +3782,7 @@ object LogTable {
     * for tables whose manifests predate a stats-contract fix (ADVICE
     * r14: zones committed before the NaN hardening may record finite
     * min/max for NaN-infected float files, and a one-sided probe
-    * through readIndexed or the DML pruner would silently skip those
+    * through read or the DML pruner would silently skip those
     * rows; the current write path can no longer PRODUCE such zones,
     * but old manifests keep them until re-statted). Metadata-wise
     * this is a remove+re-add of every live tail in ONE commit (the
@@ -3907,8 +3858,8 @@ object LogTable {
         // a lock-free DML moved one concurrently (readSet)
         writeCommit(spark, tableRoot, "restat", prev.statsCols,
           prev.schemaDdl,
-          withBlooms(spark, tableRoot, prev.bloomCols,
-            withStats(spark, tableRoot, prev.statsCols, blank)),
+          statted(spark, tableRoot, prev.schemaDdl, prev.statsCols,
+            prev.bloomCols, blank),
           fileKeys(prev.parts),
           snapshotV = Some(v),
           readSet = prev.parts.toSeq.flatMap { case (p, fl) =>

@@ -68,17 +68,15 @@ object MergeOps {
       .unionByName(updatedOrKept)
   }
 
-  /** M3 — truncate-and-load a dimension table (WRITE_TRUNCATE,
-    * fetch_clickup_data.py:971-982, 1034-1045, 1092-1116, 1162-1185).
+  /** M3/M4 — truncate-and-load a dimension or staging table
+    * (WRITE_TRUNCATE, fetch_clickup_data.py:971-982, 1034-1045,
+    * 1092-1116, 1162-1185, 1253-1271). Atomic like the reference's
+    * WRITE_TRUNCATE: the new content lands through [[atomicSwapWrite]],
+    * so a load whose job fails leaves the old table readable — a plain
+    * parquet overwrite deletes the old files before the job runs.
     */
   def truncateLoad(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-
-  /** M4 — staging load (WRITE_TRUNCATE to staging with explicit schema,
-    * fetch_clickup_data.py:1253-1271).
-    */
-  def loadStaging(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
+    atomicSwapWrite(df.sparkSession, df, path)
 
   /** M5 — CSV backup sink (df.to_csv, fetch_clickup_data.py:1779-1782 etc.).
     * Single file to mirror the reference's one-file backup; callers at
@@ -101,15 +99,27 @@ object MergeOps {
   /** M6 — idempotent ensure-table (CREATE IF NOT EXISTS with explicit schema,
     * fetch_clickup_data.py:938-948 etc.): path-based — write an empty frame
     * with the declared schema if the location does not exist yet.
+    *
+    * A missing `path` beside a `<path>.old` is an [[atomicSwapWrite]]
+    * interrupted between its two renames: the second rename is the
+    * commit point, so `.old` is the last committed table. It is renamed
+    * back (and the uncommitted `.tmp` dropped) instead of creating an
+    * empty table that a following merge would fill with only its window.
     */
   def ensureTable(spark: org.apache.spark.sql.SparkSession,
                   schema: org.apache.spark.sql.types.StructType,
                   path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
+    val oldP = new org.apache.hadoop.fs.Path(path + ".old")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .write.mode(SaveMode.ErrorIfExists).parquet(path)
+      if (fs.exists(oldP)) {
+        fs.delete(new org.apache.hadoop.fs.Path(path + ".tmp"), true)
+        if (!fs.rename(oldP, p))
+          sys.error(s"ensureTable: could not restore $oldP to $p")
+      } else
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+          .write.mode(SaveMode.ErrorIfExists).parquet(path)
     }
   }
 

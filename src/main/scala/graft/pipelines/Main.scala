@@ -64,7 +64,7 @@ object Main {
         val staging = Pipelines.timeEntryPipeline(
           raw("time_entries", ClickUpSchemas.rawTimeEntry)).localCheckpoint(true)
         MergeOps.csvBackup(staging, s"$wh/csv_backups/time_entries", stamp = Some(stamp))
-        MergeOps.loadStaging(staging, s"$wh/staging_time_entries")
+        MergeOps.truncateLoad(staging, s"$wh/staging_time_entries")
         MergeOps.ensureTable(spark, ClickUpSchemas.factTimeEntries, s"$wh/fact_time_entries")
         val fact = spark.read.schema(ClickUpSchemas.factTimeEntries)
           .parquet(s"$wh/fact_time_entries")

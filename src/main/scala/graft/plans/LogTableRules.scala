@@ -91,7 +91,7 @@ object LogTableRules {
   * deletion vectors marks its [[LogTableFileIndex]] and THIS rule
   * rewrites the relation into (the same file scan) ⟕̸ (its dead
   * positions) — the exact [[graft.operators.LogTable.applyDv]]
-  * anti-join readIndexed builds eagerly. The rewritten relation keeps
+  * anti-join LogTable.read builds eagerly. The rewritten relation keeps
   * the ORIGINAL output attribute ids (the projection selects them by
   * name off the same relation node), so references above are
   * untouched; the discharged index cannot match again — one-shot,
@@ -235,8 +235,8 @@ object LogTableDmlRule extends Rule[LogicalPlan] {
       ti: org.apache.spark.sql.catalyst.TableIdentifier,
       tableRoot: String): Unit = {
     val cat = spark.sessionState.catalog
-    val newSchema =
-      graft.operators.LogTable.readIndexed(spark, tableRoot).schema
+    val (newSchema, _) = graft.sources.LogTableScan.snapshot(spark,
+      tableRoot, None, Seq.empty)
     val meta = cat.getTableMetadata(ti)
     val pc = meta.partitionColumnNames.toSet
     cat.alterTableDataSchema(ti, StructType(
@@ -878,7 +878,7 @@ object LogTableTimeTravelRule extends Rule[LogicalPlan] {
               }
             }
             org.apache.spark.sql.graftshim.PlanShim.logical(
-              graft.operators.LogTable.readIndexed(spark, location,
+              graft.operators.LogTable.read(spark, location,
                 asOf))
         }
     }

@@ -1053,7 +1053,7 @@ object ParityQueries {
     QuerySpec("m4_staging_load", (s, d) => {
       val staging = Dedup.latestByKey(t(s, d, "events"), Seq("user_id"), "ts", "event_id")
       val path = sinkDir(d, "m4_staging")
-      MergeOps.loadStaging(staging, path)
+      MergeOps.truncateLoad(staging, path)
       s.read.parquet(path).groupBy("event_type").agg(count(lit(1)).as("n"))
         .orderBy("event_type")
     },

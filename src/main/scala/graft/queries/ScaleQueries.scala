@@ -4149,17 +4149,18 @@ object ScaleQueries {
     },
       Some {
         val head =
-          """WITH li AS (SELECT DISTINCT l_orderkey o, l_partkey p
-            |  FROM lineitem),
-            |c AS (SELECT DISTINCT a.p u, b.p v
+          """WITH li AS MATERIALIZED (SELECT DISTINCT l_orderkey o,
+            |  l_partkey p FROM lineitem),
+            |c AS MATERIALIZED (SELECT DISTINCT a.p u, b.p v
             |  FROM li a JOIN li b ON a.o = b.o AND a.p < b.p),
-            |e0 AS (SELECT CAST(u AS VARCHAR) s, CAST(v AS VARCHAR) t FROM c
+            |e0 AS MATERIALIZED (SELECT CAST(u AS VARCHAR) s,
+            |  CAST(v AS VARCHAR) t FROM c
             |  UNION ALL SELECT CAST(v AS VARCHAR), CAST(u AS VARCHAR)
             |  FROM c)""".stripMargin
         val rounds = (1 to 6).map { i =>
-          s"""n$i AS (SELECT s FROM (SELECT s, count(*) dg
+          s"""n$i AS MATERIALIZED (SELECT s FROM (SELECT s, count(*) dg
              |    FROM e${i - 1} GROUP BY 1) WHERE dg >= 80),
-             |e$i AS (SELECT e.s, e.t FROM e${i - 1} e
+             |e$i AS MATERIALIZED (SELECT e.s, e.t FROM e${i - 1} e
              |  JOIN n$i a ON e.s = a.s JOIN n$i b ON e.t = b.s)""".stripMargin
         }.mkString(",\n", ",\n", "\n")
         head + rounds +
@@ -7948,8 +7949,9 @@ object ScaleQueries {
       Some(jsdOracleSql)),
 
     // LogTable zone-map skipping (x198): three appends land three files
-    // with disjoint event_id zones; readSkipping over the middle third
-    // must plan EXACTLY ONE file (n_files_planned is graded — the
+    // with disjoint event_id zones; a build-time NumRange probe
+    // (LogTable.read's scanPreds) over the middle third must plan
+    // EXACTLY ONE file (n_files_planned is graded — the
     // pruning itself is in the oracle gate, not just the values), and
     // the skim + exact filter must agree with DuckDB on the band.
     QuerySpec("x198_logtable_skipping", (s, d) => {
@@ -7969,8 +7971,9 @@ object ScaleQueries {
         graft.operators.LogTable.append(s, dir,
           rows.filter(col("eid") > q2).repartition(1))
       }
-      val skim = graft.operators.LogTable.readSkipping(s, base, "eid",
-        (q1 + 1).toDouble, q2.toDouble)
+      val skim = graft.operators.LogTable.read(s, base, scanPreds = Seq(
+        graft.operators.LogTable.NumRange("eid", (q1 + 1).toDouble,
+          q2.toDouble)))
       val planned = skim.inputFiles.length.toLong
       skim
         .filter(col("eid") > q1 && col("eid") <= q2)
@@ -7993,9 +7996,10 @@ object ScaleQueries {
     // column is a DATE — the fact's own hottest predicate shape
     // (docs/TASKS_SYNC_FEATURE.md:147,165) — and three appends land
     // three files with disjoint event_date zones (ISO-string lexical
-    // bounds in the manifest). readSkippingStr over the middle third
-    // must plan EXACTLY ONE file (n_files_planned is graded), with the
-    // band's content matching DuckDB — no epoch-day encoding anywhere.
+    // bounds in the manifest). A build-time StrRange probe over the
+    // middle third must plan EXACTLY ONE file (n_files_planned is
+    // graded), with the band's content matching DuckDB — no epoch-day
+    // encoding anywhere.
     QuerySpec("x214_logtable_date_skipping", (s, d) => {
       val rows = t(s, d, "events")
         .select(graft.functions.Coercers.osloDate(col("ts"))
@@ -8019,8 +8023,9 @@ object ScaleQueries {
           rows.filter(col("event_date") > lit(q2)).repartition(1))
       }
       val probeLo = q1.toLocalDate.plusDays(1).toString
-      val skim = graft.operators.LogTable.readSkippingStr(s, base,
-        "event_date", probeLo, q2.toString)
+      val skim = graft.operators.LogTable.read(s, base, scanPreds = Seq(
+        graft.operators.LogTable.StrRange("event_date", probeLo,
+          q2.toString)))
       val planned = skim.inputFiles.length.toLong
       skim
         .filter(col("event_date") > lit(q1) && col("event_date") <= lit(q2))
@@ -8042,11 +8047,12 @@ object ScaleQueries {
 
     // LogTable Catalyst FileIndex (x215, r12 directive #4): the SAME
     // band as x214 expressed as an ORDINARY DataFrame filter over
-    // LogTable.readIndexed — no side API. The scan's own numFiles
+    // LogTable.read — no build-time probe. The scan's own numFiles
     // metric is graded: the manifest-backed FileIndex must receive the
     // pushed-down date predicates and plan exactly ONE file, proving
-    // zone maps serve what a real user writes. (readSkipping parity is
-    // additionally plan-asserted in ExtensionRuleSpec.)
+    // zone maps serve what a real user writes. (Parity with the
+    // build-time probe is additionally plan-asserted in
+    // ExtensionRuleSpec.)
     QuerySpec("x215_logtable_fileindex_scan", (s, d) => {
       val rows = t(s, d, "events")
         .select(graft.functions.Coercers.osloDate(col("ts"))
@@ -8069,7 +8075,7 @@ object ScaleQueries {
         graft.operators.LogTable.append(s, dir,
           rows.filter(col("event_date") > lit(q2)).repartition(1))
       }
-      val agg = graft.operators.LogTable.readIndexed(s, base)
+      val agg = graft.operators.LogTable.read(s, base)
         .filter(col("event_date") > lit(q1) && col("event_date") <= lit(q2))
         .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sum_cents"))
       // collect() (NOT head(), which would build a separate limit plan
@@ -9003,7 +9009,7 @@ object ScaleQueries {
         .manifest(s, base, graft.operators.TableLog.currentVersion(s,
           base)).parts.values.map(_.size.toLong).sum
       val ids = Seq(7L, 203L, 401L, 607L, 809L)
-      val probe = graft.operators.LogTable.readIndexed(s, base)
+      val probe = graft.operators.LogTable.read(s, base)
         .filter(col("event_id").isin(ids: _*))
         .select(col("event_id"), col("grp"), col("cents"))
         .orderBy(col("event_id"))
@@ -9396,7 +9402,7 @@ object ScaleQueries {
           dateCol = "grp,m", statsCols = Seq("cents"))
       }
       val m0 = rows.agg(min(col("m"))).head.getDate(0)
-      val agg = graft.operators.LogTable.readIndexed(s, base)
+      val agg = graft.operators.LogTable.read(s, base)
         .filter(col("grp") === "click" && col("m") === lit(m0))
         .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sum_cents"))
       val row = agg.collect().head // ONE action, then read the metric
@@ -9499,7 +9505,7 @@ object ScaleQueries {
     // quadrant-shaped hyper-rectangle: a low-band probe on EITHER
     // column must plan exactly the 2 files whose quadrant touches that
     // column's low half, and the CONJUNCTIVE 2-D probe
-    // (readSkippingAll) exactly the ONE (low, low) quadrant file —
+    // (both NumRanges at once) exactly the ONE (low, low) quadrant file —
     // all three counts exact in the oracle: the cross-dimension pruning
     // a linear sort cannot give. Rows bit-identical, and the
     // pre-rewrite version still time-travels to its 3 arrival-order
@@ -9522,24 +9528,20 @@ object ScaleQueries {
       }
       val q = maxId / 6
       val uq = maxUid / 7
-      val beforeN = graft.operators.LogTable
-        .readSkipping(s, base, "eid", 1.0, q.toDouble)
-        .inputFiles.length.toLong
+      val eidLow = graft.operators.LogTable.NumRange("eid", 1.0, q.toDouble)
+      val uidLow = graft.operators.LogTable.NumRange("uid", 0.0, uq.toDouble)
+      def probe(ranges: graft.operators.LogTable.ZonePred*) =
+        graft.operators.LogTable.read(s, base, scanPreds = ranges)
+      val beforeN = probe(eidLow).inputFiles.length.toLong
       val preV = graft.operators.TableLog.currentVersion(s, base)
       graft.operators.LogTable.optimizeZorder(s, base,
         Seq("eid", "uid"), bits = 8, filesPerPartition = 4)
-      val skim = graft.operators.LogTable
-        .readSkipping(s, base, "eid", 1.0, q.toDouble)
+      val skim = probe(eidLow)
       val eidN = skim.inputFiles.length.toLong
-      val uidN = graft.operators.LogTable
-        .readSkipping(s, base, "uid", 0.0, uq.toDouble)
-        .inputFiles.length.toLong
+      val uidN = probe(uidLow).inputFiles.length.toLong
       // the conjunction intersects the survivor sets: exactly the one
       // (eid-low, uid-low) quadrant file — what the tiling exists for
-      val bothN = graft.operators.LogTable
-        .readSkippingAll(s, base,
-          Seq(("eid", 1.0, q.toDouble), ("uid", 0.0, uq.toDouble)))
-        .inputFiles.length.toLong
+      val bothN = probe(eidLow, uidLow).inputFiles.length.toLong
       val ttFiles = graft.operators.LogTable.read(s, base, Some(preV))
         .inputFiles.length.toLong
       val out = skim.filter(col("eid") <= q)

@@ -39,8 +39,8 @@ import graft.operators.{LogTable, TableLog}
   * }}}
   *
   * READS return the SAME manifest-backed `HadoopFsRelation` +
-  * [[LogTableFileIndex]] that [[LogTable.readIndexed]] plans
-  * ([[LogTableScan.relationFor]]) — pushed `WHERE` predicates prune
+  * [[LogTableFileIndex]] that [[LogTable.read]] plans
+  * ([[LogTableScan.relation]]) — pushed `WHERE` predicates prune
   * files via zone maps and partition dirs at physical-plan time, with
   * the scan's own `numFiles` metric as the witness. This is the
   * pre-DSv2 Delta wiring (a `RelationProvider` handing the session
@@ -113,30 +113,22 @@ class LogTableSource extends RelationProvider
       : BaseRelation = {
     val spark = sqlContext.sparkSession
     val path = pathOf(parameters)
-    val (schema, relOpt) = LogTableScan.relationFor(spark, path,
-      asOfOf(spark, path, parameters), Seq.empty, None,
-      dvPending = true)
-    relOpt match {
-      case None => new EmptyLogTableRelation(sqlContext, schema)
-      case Some((rel, m, _)) =>
-        val idx = rel.location.asInstanceOf[LogTableFileIndex]
-        if (idx.dvIds.isEmpty)
-          // no deletion vectors: the native file relation is exact
-          rel.copy(location = idx.dvApplied)(spark)
-        else {
-          // the anti-join needs the analysis rule — fail loudly when
-          // the session doesn't carry it (silent resurrection of
-          // deleted rows is the one unacceptable failure mode)
-          val installed = spark.sessionState.analyzer
-            .extendedResolutionRules
-            .exists(_ eq graft.plans.LogTableDvRule)
-          require(installed,
-            s"logtable: $path carries deletion vectors, which the " +
-              "DataSource read path applies via " +
-              "graft.plans.LogTableDvRule — start the session with " +
-              "spark.sql.extensions=graft.GraftExtensions")
-          rel
-        }
+    val (schema, m) = LogTableScan.snapshot(spark, path,
+      asOfOf(spark, path, parameters), Seq.empty)
+    if (m.parts.isEmpty) new EmptyLogTableRelation(sqlContext, schema)
+    else {
+      // without deletion vectors the native file relation is exact;
+      // with them the anti-join needs the analysis rule — fail loudly
+      // when the session doesn't carry it (silent resurrection of
+      // deleted rows is the one unacceptable failure mode)
+      val dvPending = m.parts.values.exists(_.exists(_.dv.isDefined))
+      require(!dvPending || spark.sessionState.analyzer
+          .extendedResolutionRules.exists(_ eq graft.plans.LogTableDvRule),
+        s"logtable: $path carries deletion vectors, which the " +
+          "DataSource read path applies via " +
+          "graft.plans.LogTableDvRule — start the session with " +
+          "spark.sql.extensions=graft.GraftExtensions")
+      LogTableScan.relation(spark, path, schema, m, dvPending)
     }
   }
 

@@ -22,7 +22,7 @@ import graft.operators.LogTable
   * Registered through `SparkSessionExtensions.injectTableFunction`
   * ([[graft.GraftExtensions]]), the public hook Spark resolves
   * table-function references with. The plan returned is
-  * [[LogTable.readIndexed]]'s — a manifest-backed Catalyst FileIndex —
+  * [[LogTable.read]]'s — a manifest-backed Catalyst FileIndex —
   * so ordinary SQL `WHERE` predicates on declared stats columns prune
   * FILES via zone maps at physical-plan time, partition predicates
   * prune directories, and deletion vectors apply: SQL users get
@@ -125,7 +125,7 @@ object LogTableTvf {
         case None => Some(asVersion(spark, path, a))
       })
       org.apache.spark.sql.graftshim.PlanShim.logical(
-        LogTable.readIndexed(spark, path, asOf))
+        LogTable.read(spark, path, asOf))
     })
 
   /** The change-data feed as a SQL table function —

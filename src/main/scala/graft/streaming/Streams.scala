@@ -991,16 +991,12 @@ object Streams {
         val staging =
           if (batch.filter(col("at").isNotNull).isEmpty) batch
           else Dedup.dedupTimeEntries(batch)
-        val conf = spark.sparkContext.hadoopConfiguration
-        val factP = new org.apache.hadoop.fs.Path(factPath)
-        val fs = factP.getFileSystem(conf)
-        // only a genuinely-absent fact is treated as empty; any read error
-        // on an existing table must abort the batch — an empty `fact` here
-        // would make the merge silently truncate all out-of-window history
-        val fact =
-          if (fs.exists(factP)) spark.read.parquet(factPath)
-          else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
+        // one absent-table rule with the batch pipeline: an interrupted
+        // swap is finished, only a genuinely-absent fact starts empty, and
+        // any read error on an existing table aborts the batch — an empty
+        // `fact` here would make the merge truncate out-of-window history
+        MergeOps.ensureTable(spark, batch.schema, factPath)
+        val fact = spark.read.parquet(factPath)
         val merged = MergeOps.mergeRefresh(fact, staging, days, todayOslo)
         MergeOps.atomicSwapWrite(spark, merged, factPath)
         ()

@@ -25,7 +25,13 @@ class CliPipelineSpec extends SparkSpec {
        |"task_location":{"list_id":"l1","folder_id":"f1","space_id":"s1"}}
        |""".stripMargin.replaceAll("\n", "")
 
-  test("full_reindex then refresh preserves history (BUG_FIX integration)") {
+  /** Backfill `hist` (Jan 1) and `r1` (Feb 25), then refresh with a
+    * 7-day window at 2024-03-01: r1 updated (duration doubled, later
+    * `at`), r2 new, `hist` absent from staging but outside the window.
+    * `interruptSwap` first leaves the fact as a crash between
+    * atomicSwapWrite's two renames does: moved aside to `.old`, with
+    * no table at the path. Returns the warehouse dir. */
+  private def backfillThenRefresh(interruptSwap: Boolean): String = {
     val in = Files.createTempDirectory("graft_cli_in").toString
     val wh = Files.createTempDirectory("graft_cli_wh").toString
 
@@ -38,17 +44,21 @@ class CliPipelineSpec extends SparkSpec {
       entry("r1", feb25, feb25, 3600000L)))
     Main.run(spark, "full_reindex", Map("in" -> in, "warehouse" -> wh))
     assert(spark.read.parquet(s"$wh/fact_time_entries").count() == 2)
+    if (interruptSwap)
+      Files.move(Paths.get(wh, "fact_time_entries"),
+        Paths.get(wh, "fact_time_entries.old"))
 
-    // Refresh with a 7-day window at 2024-03-01: r1 updated (duration
-    // doubled, later `at`), r2 new; `hist` absent from staging but outside
-    // the window → must survive.
     val in2 = Files.createTempDirectory("graft_cli_in2").toString
     writeFixture(in2, "time_entries", Seq(
       entry("r1", feb25, feb25 + 1000, 7200000L),
       entry("r2", feb27, feb27, 1800000L)))
     Main.run(spark, "refresh", Map("in" -> in2, "warehouse" -> wh,
       "days" -> "7", "today" -> "2024-03-01"))
+    wh
+  }
 
+  test("full_reindex then refresh preserves history (BUG_FIX integration)") {
+    val wh = backfillThenRefresh(interruptSwap = false)
     val fact = spark.read.parquet(s"$wh/fact_time_entries")
     val byId = fact.collect().map(r =>
       r.getAs[String]("id") -> r.getAs[Double]("duration_hours")).toMap
@@ -56,6 +66,13 @@ class CliPipelineSpec extends SparkSpec {
     // CSV backup written (M5)
     assert(Files.walk(Paths.get(wh, "csv_backups", "time_entries"))
       .anyMatch(p => p.toString.endsWith(".csv")))
+  }
+
+  test("refresh after a crash between the swap's two renames keeps history") {
+    val wh = backfillThenRefresh(interruptSwap = true)
+    val ids = spark.read.parquet(s"$wh/fact_time_entries")
+      .collect().map(_.getAs[String]("id")).sorted.toSeq
+    assert(ids == Seq("hist", "r1", "r2"))
   }
 
   test("timestamped CSV backups retain history across runs (C13 retention)") {

@@ -492,7 +492,8 @@ class DedupMergeSpec extends SparkSpec {
     val full = LogTable.read(spark, root)
     assert(full.inputFiles.length == 3)
     // the [12,13] probe must plan exactly the middle file
-    val skip = LogTable.readSkipping(spark, root, "value", 12.0, 13.0)
+    val skip = LogTable.read(spark, root,
+      scanPreds = Seq(LogTable.NumRange("value", 12.0, 13.0)))
     assert(skip.inputFiles.length == 1,
       s"zone skipping planned ${skip.inputFiles.length} files")
     def vals(df: org.apache.spark.sql.DataFrame) =
@@ -500,11 +501,13 @@ class DedupMergeSpec extends SparkSpec {
         .select("id").as[String].collect().toSet
     assert(vals(skip) == vals(full) && vals(skip) == Set("e12", "e13"))
     // a zone-missing range plans nothing and returns an empty frame
-    assert(LogTable.readSkipping(spark, root, "value", 500.0, 600.0)
+    assert(LogTable.read(spark, root,
+      scanPreds = Seq(LogTable.NumRange("value", 500.0, 600.0)))
       .count() == 0L)
     // probing a column without zone maps fails loudly
     val e = intercept[IllegalArgumentException] {
-      LogTable.readSkipping(spark, root, "id", 1.0, 2.0)
+      LogTable.read(spark, root,
+        scanPreds = Seq(LogTable.NumRange("id", 1.0, 2.0)))
     }
     assert(e.getMessage.contains("zone maps"))
     // OPTIMIZE: bin-pack the three small files; every version survives
@@ -520,7 +523,8 @@ class DedupMergeSpec extends SparkSpec {
     assert(LogTable.read(spark, root, Some(preVersion))
       .inputFiles.length == 3)
     // the packed file was re-statted: skipping still works post-compact
-    assert(vals(LogTable.readSkipping(spark, root, "value", 12.0, 13.0))
+    assert(vals(LogTable.read(spark, root,
+      scanPreds = Seq(LogTable.NumRange("value", 12.0, 13.0))))
       == Set("e12", "e13"))
     // an already-compact table is a no-op commit-wise
     assert(LogTable.compact(spark, root, 1L << 30) == v)
@@ -769,14 +773,16 @@ class DedupMergeSpec extends SparkSpec {
       statsCols = Seq("value", "x"))
     LogTable.append(spark, root, slice(1).repartition(1))
     LogTable.append(spark, root, slice(2).repartition(1))
-    val before = LogTable.readSkipping(spark, root, "value", 12.0, 13.0)
+    val before = LogTable.read(spark, root,
+      scanPreds = Seq(LogTable.NumRange("value", 12.0, 13.0)))
     assert(before.inputFiles.length == 3,
       "interleaved zones must defeat skipping pre-rewrite")
     val preV = graft.operators.TableLog.currentVersion(spark, root)
     val v = LogTable.optimizeZorder(spark, root, Seq("value", "x"),
       bits = 6, filesPerPartition = 3)
     assert(v == preV + 1)
-    val after = LogTable.readSkipping(spark, root, "value", 12.0, 13.0)
+    val after = LogTable.read(spark, root,
+      scanPreds = Seq(LogTable.NumRange("value", 12.0, 13.0)))
     assert(after.inputFiles.length < 3,
       s"z-order rewrite failed to tighten zones " +
         s"(${after.inputFiles.length} files planned)")
@@ -794,10 +800,12 @@ class DedupMergeSpec extends SparkSpec {
     // conjunctive 2-D probe: the intersection of the per-column
     // survivor sets — on the cell tiling this is exactly one quadrant
     // file where each single-column probe plans its half
-    val both = LogTable.readSkippingAll(spark, root,
-      Seq(("value", 12.0, 13.0), ("x", 2.0, 3.0)))
+    val both = LogTable.read(spark, root, scanPreds = Seq(
+      LogTable.NumRange("value", 12.0, 13.0),
+      LogTable.NumRange("x", 2.0, 3.0)))
     assert(both.inputFiles.length <
-      LogTable.readSkipping(spark, root, "value", 12.0, 13.0)
+      LogTable.read(spark, root,
+        scanPreds = Seq(LogTable.NumRange("value", 12.0, 13.0)))
         .inputFiles.length ||
       both.inputFiles.length == 1,
       s"conjunction failed to intersect (${both.inputFiles.length})")
@@ -850,7 +858,8 @@ class DedupMergeSpec extends SparkSpec {
       .collect().toSet == before)
     // zones tightened in EVERY partition: a narrow value probe plans
     // fewer than all 12 files
-    val probe = LogTable.readSkipping(spark, root, "value", 12.0, 13.0)
+    val probe = LogTable.read(spark, root,
+      scanPreds = Seq(LogTable.NumRange("value", 12.0, 13.0)))
     assert(probe.inputFiles.length < 12,
       s"zones did not tighten (${probe.inputFiles.length} planned)")
     // time travel: the pre-rewrite version still plans its 6 files
@@ -1460,11 +1469,6 @@ class DedupMergeSpec extends SparkSpec {
         val got = LogTable.read(spark, root)
           .select("id", "value").as[(String, Double)].collect().toMap
         assert(got == model, s"seed=$seed v=$v: $got != $model")
-        // the FileIndex path (manifest-planned scan + DV anti-join)
-        // must agree with the explicit-file path at every state
-        val gotIdx = LogTable.readIndexed(spark, root)
-          .select("id", "value").as[(String, Double)].collect().toMap
-        assert(gotIdx == model, s"seed=$seed v=$v readIndexed: $gotIdx")
         // bloom-admission police (r15): a point probe — sometimes a
         // live id, sometimes an absent one — through the FileIndex
         // must equal the model at EVERY state, whatever sidecar
@@ -1473,23 +1477,18 @@ class DedupMergeSpec extends SparkSpec {
           if (model.nonEmpty && rnd.nextBoolean())
             model.keys.toSeq.sorted.apply(rnd.nextInt(model.size))
           else s"absent${rnd.nextInt(100)}"
-        val gotPt = LogTable.readIndexed(spark, root)
+        val gotPt = LogTable.read(spark, root)
           .filter(col("id") === probeId)
           .select("id", "value").as[(String, Double)].collect().toMap
         assert(gotPt == model.filter(_._1 == probeId),
           s"seed=$seed v=$v point probe $probeId: $gotPt")
       }
-      // time travel: every recorded version still reads its own state,
-      // through both paths
+      // time travel: every recorded version still reads its own state
       val probe = rnd.shuffle(history.keys.toSeq).take(3)
       probe.foreach { v =>
         val got = LogTable.read(spark, root, Some(v))
           .select("id", "value").as[(String, Double)].collect().toMap
         assert(got == history(v), s"seed=$seed time travel v=$v")
-        val gotIdx = LogTable.readIndexed(spark, root, Some(v))
-          .select("id", "value").as[(String, Double)].collect().toMap
-        assert(gotIdx == history(v),
-          s"seed=$seed indexed time travel v=$v")
       }
       spark.conf.unset("spark.graft.logtable.footerStats")
       fs.delete(new org.apache.hadoop.fs.Path(root).getParent, true)
@@ -1580,10 +1579,11 @@ class DedupMergeSpec extends SparkSpec {
       .toSeq == Seq("delete"))
     assert(ids(feed) == Set("e12", "e13", "e15"))
     // zone skipping and the FileIndex read agree and hide dead rows
-    assert(ids(LogTable.readSkipping(spark, root, "value", 11.0, 20.0)
+    assert(ids(LogTable.read(spark, root,
+      scanPreds = Seq(LogTable.NumRange("value", 11.0, 20.0)))
       .filter(col("value").between(11.0, 20.0))) ==
       Set(11, 14, 16, 17, 18, 19, 20).map(i => s"e$i"))
-    assert(ids(LogTable.readIndexed(spark, root)
+    assert(ids(LogTable.read(spark, root)
       .filter(col("value").between(11.0, 20.0))) ==
       Set(11, 14, 16, 17, 18, 19, 20).map(i => s"e$i"))
     // merge on a DV'd table must not resurrect dead rows (the hit file
@@ -1849,23 +1849,26 @@ class DedupMergeSpec extends SparkSpec {
     LogTable.append(spark, root, month(3, "c").repartition(1))
     assert(LogTable.read(spark, root).inputFiles.length == 3)
     // DATE probe: the February band plans exactly the middle file
-    val feb = LogTable.readSkippingStr(spark, root, "event_date",
-      "2024-02-01", "2024-02-28")
+    val feb = LogTable.read(spark, root, scanPreds = Seq(
+      LogTable.StrRange("event_date", "2024-02-01", "2024-02-28")))
     assert(feb.inputFiles.length == 1,
       s"date zones planned ${feb.inputFiles.length} files")
     assert(feb.filter(col("event_date").between("2024-02-01", "2024-02-28"))
       .count() == 10L)
     // a cross-month band plans two files, never fewer (superset)
-    assert(LogTable.readSkippingStr(spark, root, "event_date",
-      "2024-01-05", "2024-02-03").inputFiles.length == 2)
+    assert(LogTable.read(spark, root, scanPreds = Seq(
+      LogTable.StrRange("event_date", "2024-01-05", "2024-02-03")))
+      .inputFiles.length == 2)
     // STRING probe: the b_* band plans exactly the middle file
-    val bs = LogTable.readSkippingStr(spark, root, "label", "b_", "b~")
+    val bs = LogTable.read(spark, root,
+      scanPreds = Seq(LogTable.StrRange("label", "b_", "b~")))
     assert(bs.inputFiles.length == 1,
       s"string zones planned ${bs.inputFiles.length} files")
     assert(bs.filter(col("label").startsWith("b_")).count() == 10L)
     // kind mismatch fails loudly both ways
     assert(intercept[IllegalArgumentException] {
-      LogTable.readSkipping(spark, root, "label", 1.0, 2.0).inputFiles
+      LogTable.read(spark, root,
+        scanPreds = Seq(LogTable.NumRange("label", 1.0, 2.0))).inputFiles
     }.getMessage.contains("lexical"))
     // a long-string column records a truncated-incremented upper bound
     // that stays a SUPERSET: the probe inside the long value's range
@@ -1875,8 +1878,9 @@ class DedupMergeSpec extends SparkSpec {
     val longVal = "x" * 200
     LogTable.init(Seq((longVal, d)).toDF("blob", "start_date_oslo")
       .repartition(1), root2, statsCols = Seq("blob"))
-    assert(LogTable.readSkippingStr(spark, root2, "blob",
-      longVal, longVal).inputFiles.length == 1,
+    assert(LogTable.read(spark, root2,
+      scanPreds = Seq(LogTable.StrRange("blob", longVal, longVal)))
+      .inputFiles.length == 1,
       "truncated upper bound must stay a superset")
     fs.delete(new org.apache.hadoop.fs.Path(root).getParent, true)
     fs.delete(new org.apache.hadoop.fs.Path(root2).getParent, true)
@@ -2228,14 +2232,14 @@ class DedupMergeSpec extends SparkSpec {
     // the legacy bug, reproduced: NaN orders above every value, so
     // v >= 100 matches ONLY the NaN row — and the finite zone [1,3]
     // prunes its file
-    assert(LogTable.readIndexed(spark, root)
+    assert(LogTable.read(spark, root)
       .filter(col("v") >= 100.0).count() == 0L,
       "fixture must reproduce the legacy silent miss")
     // one maintenance commit re-derives the zones under the current
     // contract (NaN-infected file → no zone → unprunable)
     val v3 = LogTable.recomputeStats(spark, root)
     assert(v3 == 3L)
-    assert(LogTable.readIndexed(spark, root)
+    assert(LogTable.read(spark, root)
       .filter(col("v") >= 100.0).select("id").as[String]
       .collect().toSeq == Seq("aN"),
       "restat must resurrect the NaN row")
@@ -2243,7 +2247,8 @@ class DedupMergeSpec extends SparkSpec {
     // zone still prunes (a [100, 200] probe excludes it), while the
     // NaN file is unprunable by design — exactly one file planned
     assert(LogTable.read(spark, root).count() == 7L)
-    assert(LogTable.readSkipping(spark, root, "v", 100.0, 200.0)
+    assert(LogTable.read(spark, root,
+      scanPreds = Seq(LogTable.NumRange("v", 100.0, 200.0)))
       .inputFiles.length == 1)
     fs.delete(new org.apache.hadoop.fs.Path(root).getParent, true)
   }
@@ -2487,7 +2492,7 @@ class DedupMergeSpec extends SparkSpec {
       val want = (Seq(0) ++ (1 to 5).map(_ * 10))
         .flatMap(lo => (lo until lo + 4).map(i => s"e$i")).toSet
       assert(got == want)
-      assert(LogTable.readIndexed(spark, root).count() == 24L)
+      assert(LogTable.read(spark, root).count() == 24L)
       // a version beneath the newest checkpoint still reconstructs
       assert(LogTable.read(spark, root, Some(2L)).count() == 8L)
       assert(TableLog.currentVersion(spark, root) == 6L)
@@ -3634,21 +3639,21 @@ class DedupMergeSpec extends SparkSpec {
       zones.toString)
     // the one-sided pushed filter that used to lose the NaN row:
     // v >= 100 matches ONLY the NaN (NaN >= 100 is TRUE in Spark)
-    val got = LogTable.readIndexed(spark, root)
+    val got = LogTable.read(spark, root)
       .filter(col("v") >= 100.0).select("id").as[String].collect().toSet
     assert(got == Set("aN"),
       s"one-sided probe must keep the NaN-infected file planned: $got")
     // equality at NaN: NaN = NaN is TRUE in Spark — same contract
-    assert(LogTable.readIndexed(spark, root)
+    assert(LogTable.read(spark, root)
       .filter(col("v") === Double.NaN).select("id").as[String]
       .collect().toSet == Set("aN"))
     // the converse bug (ADVICE r14): a NaN LITERAL as a pushed bound
     // must not prune CLEAN files — 'v <= NaN' is true for every
     // finite v, so all 7 rows must come back through the FileIndex
-    assert(LogTable.readIndexed(spark, root)
+    assert(LogTable.read(spark, root)
       .filter(col("v") <= Double.NaN).count() == 7L,
       "'v <= NaN' must plan every file")
-    assert(LogTable.readIndexed(spark, root)
+    assert(LogTable.read(spark, root)
       .filter(col("v").isin(10.0, Double.NaN)).select("id").as[String]
       .collect().toSet == Set("b1", "aN"),
       "IN with a NaN member must not poison the envelope")

@@ -353,37 +353,36 @@ class ExtensionRuleSpec extends SparkSpec {
     LogTable.append(spark, root, quadrant(11, 11, d1))
     LogTable.append(spark, root, quadrant(1, 1, d2))
     // 1-D: value ∈ [2, 3] admits the two vLo=1 files of d1 + the d2 file
-    val oneD = LogTable.readIndexed(spark, root)
+    val oneD = LogTable.read(spark, root)
       .filter($"value".between(2.0, 3.0))
-    val oneDSkip = LogTable.readSkipping(spark, root, "value", 2.0, 3.0)
+    val oneDSkip = LogTable.read(spark, root,
+      scanPreds = Seq(LogTable.NumRange("value", 2.0, 3.0)))
     val oneDPlanned = plannedFiles(oneD)
     assert(oneDPlanned == oneDSkip.inputFiles.length.toLong,
       s"$oneDPlanned != ${oneDSkip.inputFiles.length}")
     assert(oneDPlanned == 3L)
-    assert(LogTable.readIndexed(spark, root)
-      .filter($"value".between(2.0, 3.0))
-      .select("id").as[String].collect().sorted.toSeq ==
-      LogTable.read(spark, root).filter($"value".between(2.0, 3.0))
+    assert(oneD.select("id").as[String].collect().sorted.toSeq ==
+      oneDSkip.filter($"value".between(2.0, 3.0))
         .select("id").as[String].collect().sorted.toSeq)
     // conjunctive 2-D: value ∈ [2,3] ∧ x ∈ [12,13] admits exactly the
     // (vLo=1, xLo=11) quadrant file — tighter than either 1-D probe
-    val twoD = LogTable.readIndexed(spark, root)
+    val twoD = LogTable.read(spark, root)
       .filter($"value".between(2.0, 3.0) && $"x".between(12L, 13L))
-    val twoDSkip = LogTable.readSkippingAll(spark, root,
-      Seq(("value", 2.0, 3.0), ("x", 12.0, 13.0)))
+    val twoDSkip = LogTable.read(spark, root, scanPreds = Seq(
+      LogTable.NumRange("value", 2.0, 3.0), LogTable.NumRange("x", 12.0, 13.0)))
     val twoDPlanned = plannedFiles(twoD)
     assert(twoDPlanned == twoDSkip.inputFiles.length.toLong)
     assert(twoDPlanned == 1L, s"2-D probe planned $twoDPlanned files")
     assert(twoD.count() == 2L) // (value 2, x 12) and (value 3, x 13)
     // partition pruning: the dateCol filter plans only d2's file
-    val partPruned = LogTable.readIndexed(spark, root)
+    val partPruned = LogTable.read(spark, root)
       .filter($"start_date_oslo" === lit(d2))
     assert(plannedFiles(partPruned) == 1L)
     assert(partPruned.count() == 10L)
-    // column order and full-scan values match the classic read path
-    assert(LogTable.readIndexed(spark, root).columns.toSeq ==
-      LogTable.read(spark, root).columns.toSeq)
-    assert(LogTable.readIndexed(spark, root).count() == 50L)
+    // columns follow the recorded schema's order
+    assert(LogTable.read(spark, root).columns.toSeq ==
+      Seq("id", "value", "x", "start_date_oslo"))
+    assert(LogTable.read(spark, root).count() == 50L)
     fs.delete(new org.apache.hadoop.fs.Path(root).getParent, true)
   }
 
@@ -434,8 +433,8 @@ class ExtensionRuleSpec extends SparkSpec {
         .map(_.metrics("numFiles").value).sum
     }
     def probe(c: org.apache.spark.sql.Column): (Long, Seq[Long]) = {
-      val df = LogTable.readIndexed(spark, root).filter(c)
-      val vals = LogTable.readIndexed(spark, root).filter(c)
+      val df = LogTable.read(spark, root).filter(c)
+      val vals = LogTable.read(spark, root).filter(c)
         .select("id").as[Long].collect().sorted.toSeq
       (tablePlanned(df), vals)
     }
@@ -601,7 +600,7 @@ class ExtensionRuleSpec extends SparkSpec {
       filesBefore, "convert must not touch data files")
     // content and schema
     assert(LogTable.read(spark, root).count() == 40L)
-    assert(LogTable.readIndexed(spark, root)
+    assert(LogTable.read(spark, root)
       .filter($"k" === 7L).select("v").as[Double].collect().toSeq ==
       Seq(14.0))
     // NaN-infected foreign files must have NO v-zone (the scan path's
@@ -614,14 +613,14 @@ class ExtensionRuleSpec extends SparkSpec {
     assert(m1.parts.values.flatten.exists(f => !f.zones.contains("v")),
       "no adopted file dropped its v zone — NaN census missing")
     assert(m1.parts.values.flatten.forall(_.zones.contains("k")))
-    val nanProbe = LogTable.readIndexed(spark, root)
+    val nanProbe = LogTable.read(spark, root)
       .filter($"v" >= 1000.0).select("k").as[Long].collect().sorted
     assert(nanProbe.toSeq ==
       LogTable.read(spark, root).filter($"v" >= 1000.0)
         .select("k").as[Long].collect().sorted.toSeq)
     assert(nanProbe.nonEmpty, "the NaN rows must survive pruning")
     // partition pruning through the adopted layout
-    val d2Scan = LogTable.readIndexed(spark, root)
+    val d2Scan = LogTable.read(spark, root)
       .filter($"start_date_oslo" === lit(d2))
     assert(d2Scan.count() == 20L)
     // the table is now an ordinary logtable: append + DV delete +
@@ -663,11 +662,11 @@ class ExtensionRuleSpec extends SparkSpec {
     LogTable.init(month(1, "a"), root, statsCols = Seq("event_date"))
     LogTable.append(spark, root, month(2, "b"))
     LogTable.append(spark, root, month(3, "c"))
-    val feb = LogTable.readIndexed(spark, root)
+    val feb = LogTable.read(spark, root)
       .filter($"event_date".between(
         lit("2024-02-01").cast("date"), lit("2024-02-28").cast("date")))
-    val febSkip = LogTable.readSkippingStr(spark, root, "event_date",
-      "2024-02-01", "2024-02-28")
+    val febSkip = LogTable.read(spark, root, scanPreds = Seq(
+      LogTable.StrRange("event_date", "2024-02-01", "2024-02-28")))
     val febPlanned = plannedFiles(feb)
     assert(febPlanned == febSkip.inputFiles.length.toLong)
     assert(febPlanned == 1L, s"date zones planned $febPlanned files")
@@ -675,11 +674,11 @@ class ExtensionRuleSpec extends SparkSpec {
     fs.delete(new org.apache.hadoop.fs.Path(root).getParent, true)
   }
 
-  test("LogTable.readIndexed generality (r13 #5) + scoped DV anti-join " +
+  test("LogTable.read generality (r13 #5) + scoped DV anti-join " +
     "(r13 #3): an empty version returns the schema'd empty frame, a " +
-    "non-default partition column works inferred and pinned (a wrong " +
-    "pin fails loudly), and scanPreds shrink the deletion-vector scan " +
-    "with the file set — identical rows, fewer planned files") {
+    "non-default partition column works, and scanPreds shrink the " +
+    "deletion-vector scan with the file set — identical rows, fewer " +
+    "planned files") {
     import graft.operators.LogTable
     import graft.operators.LogTable.NumRange
     val root = java.nio.file.Files.createTempDirectory("graft_lfigen")
@@ -696,12 +695,7 @@ class ExtensionRuleSpec extends SparkSpec {
       statsCols = Seq("k"))
     LogTable.append(spark, root, batch(11, 20), dateCol = "event_date")
     LogTable.append(spark, root, batch(21, 30), dateCol = "event_date")
-    assert(LogTable.readIndexed(spark, root).count() == 30L)
-    assert(LogTable.readIndexed(spark, root,
-      dateCol = Some("event_date")).count() == 30L)
-    intercept[IllegalArgumentException] {
-      LogTable.readIndexed(spark, root, dateCol = Some("start_date_oslo"))
-    }
+    assert(LogTable.read(spark, root).count() == 30L)
     // two deletes -> two per-file vectors (file2's and file3's)
     LogTable.delete(spark, root, col("k") === 15L)
     LogTable.delete(spark, root, col("k") === 25L)
@@ -716,9 +710,9 @@ class ExtensionRuleSpec extends SparkSpec {
     // end to end: same rows as the classic path, strictly fewer
     // planned files (base scan prunes EITHER way via the pushed
     // filter; only the DV side differs)
-    val unscoped = LogTable.readIndexed(spark, root)
+    val unscoped = LogTable.read(spark, root)
       .filter($"k".between(11L, 20L))
-    val withPreds = LogTable.readIndexed(spark, root,
+    val withPreds = LogTable.read(spark, root,
       scanPreds = Seq(NumRange("k", 11.0, 20.0)))
       .filter($"k".between(11L, 20L))
     assert(withPreds.select("k").as[Long].collect().sorted.toSeq ==
@@ -726,12 +720,12 @@ class ExtensionRuleSpec extends SparkSpec {
     val (pU, pS) = (plannedFiles(unscoped), plannedFiles(withPreds))
     assert(pS < pU, s"scoped DV scan must plan fewer files ($pS !< $pU)")
     // preds that admit nothing: the schema'd empty frame
-    assert(LogTable.readIndexed(spark, root,
+    assert(LogTable.read(spark, root,
       scanPreds = Seq(NumRange("k", 500.0, 600.0))).count() == 0L)
     // a fully-emptied version reads as the schema'd empty frame
     LogTable.removePartitions(spark, root,
       Seq("event_date=2024-01-01"))
-    val empty = LogTable.readIndexed(spark, root)
+    val empty = LogTable.read(spark, root)
     assert(empty.columns.toSeq == Seq("k", "value", "event_date"))
     assert(empty.count() == 0L)
     fs.delete(new org.apache.hadoop.fs.Path(root).getParent, true)
@@ -763,7 +757,7 @@ class ExtensionRuleSpec extends SparkSpec {
     assert(spark.sql(
       s"SELECT count(*) FROM logtable('$root', '$tMid')")
       .collect().head.getLong(0) == 5L)
-    // WHERE on the TVF pushes into the FileIndex like readIndexed
+    // WHERE on the TVF pushes into the FileIndex like LogTable.read
     assert(spark.sql(
       s"SELECT sum(v) FROM logtable('$root') WHERE k BETWEEN 2 AND 4")
       .collect().head.getLong(0) == 18L)
@@ -958,14 +952,14 @@ class ExtensionRuleSpec extends SparkSpec {
     // invisible files; prove reads come from the manifest alone
     assert(LogTable.read(spark, root).count() == 21L)
     // DV'd snapshot by name: delete two rows, the rule discharges the
-    // anti-join — values equal readIndexed
+    // anti-join — values equal LogTable.read
     LogTable.delete(spark, root, $"v".isin(3L, 13L))
     assert(spark.read.format("logtable").load(root).count() == 19L)
     assert(spark.sql("SELECT count(*) FROM graft_cat_t")
       .head.getLong(0) == 19L)
     assert(spark.table("graft_cat_t").select("id").as[String]
       .collect().sorted.toSeq ==
-      LogTable.readIndexed(spark, root).select("id").as[String]
+      LogTable.read(spark, root).select("id").as[String]
         .collect().sorted.toSeq)
     // INSERT OVERWRITE = one atomic manifest swap
     spark.sql("INSERT OVERWRITE graft_cat_t VALUES " +
@@ -1044,7 +1038,7 @@ class ExtensionRuleSpec extends SparkSpec {
     // equality with the Column-API state
     assert(spark.table("graft_dml_t").select("id", "v")
       .as[(String, Long)].collect().toSet ==
-      LogTable.readIndexed(spark, root).select("id", "v")
+      LogTable.read(spark, root).select("id", "v")
         .as[(String, Long)].collect().toSet)
     // every pre-DML version still time-travels
     assert(LogTable.read(spark, root, Some(1L)).count() == 10L)
@@ -1582,9 +1576,8 @@ class ExtensionRuleSpec extends SparkSpec {
       s"region=eu west/start_date_oslo=$d2",
       s"region=us/start_date_oslo=$d1",
       s"region=us/start_date_oslo=$d2"), m.parts.keySet.toString)
-    def all = LogTable.readIndexed(spark, root)
+    def all = LogTable.read(spark, root)
     assert(all.count() == 40L)
-    assert(all.columns.toSeq == LogTable.read(spark, root).columns.toSeq)
     // directory pruning, level 1: one region → 2 of 4 files
     assert(plannedFiles(all.filter($"region" === "eu west")) == 2L)
     // both levels → exactly 1 file
@@ -1594,16 +1587,16 @@ class ExtensionRuleSpec extends SparkSpec {
     // zone maps stay orthogonal to the directory levels: v ∈ [22, 23]
     // admits only the (us, d1) file by zones alone
     assert(plannedFiles(all.filter($"v".between(22L, 23L))) == 1L)
-    // readIndexed ≡ read+filter on a mixed predicate
+    // a pruned scan ≡ the filter over an unpruned (checkpointed) scan
+    // on a mixed predicate
     val p = $"region" === "eu west" && $"v" >= 12L
     assert(all.filter(p).select("id").as[String].collect().sorted.toSeq
-      == LogTable.read(spark, root).filter(p).select("id").as[String]
+      == all.localCheckpoint().filter(p).select("id").as[String]
         .collect().sorted.toSeq)
     // DV delete on a multi-level table: identities carry the full
     // partition path (a 2-segment tail would collide across regions)
     LogTable.delete(spark, root, $"v" % 10L === 5L) // one row per file
     assert(LogTable.read(spark, root).count() == 36L)
-    assert(LogTable.readIndexed(spark, root).count() == 36L)
     // merge replaces a matched row in its (region, date) leaf only
     val upd = slice("us", d2, 31L).filter($"id".endsWith("/3"))
       .withColumn("v", lit(999L))
@@ -1622,7 +1615,7 @@ class ExtensionRuleSpec extends SparkSpec {
     val (_, reclaimed) = LogTable.vacuum(spark, root, keepLast = 1, minAgeMs = 0L)
     assert(reclaimed >= 1, s"vacuum reclaimed $reclaimed")
     assert(LogTable.read(spark, root).count() == 36L)
-    assert(LogTable.readIndexed(spark, root)
+    assert(LogTable.read(spark, root)
       .filter($"region" === "eu west").count() == 18L)
     fs.delete(new org.apache.hadoop.fs.Path(root).getParent, true)
   }
@@ -1758,7 +1751,8 @@ class ExtensionRuleSpec extends SparkSpec {
       s"SELECT * FROM logtable_zorder('$root', 'value,x', 4, 6)")
       .as[Long].collect()
     assert(zv.toSeq == Seq(v0 + 2) && liveFiles() == 4)
-    assert(LogTable.readSkipping(spark, root, "value", 2.0, 3.0)
+    assert(LogTable.read(spark, root,
+      scanPreds = Seq(LogTable.NumRange("value", 2.0, 3.0)))
       .inputFiles.length < 4, "zorder must tighten value zones")
     // restore to the compacted state (a NEW commit; nothing deleted)
     val rv = spark.sql(

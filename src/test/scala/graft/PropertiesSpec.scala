@@ -13,8 +13,10 @@ import graft.functions.Coercers._
 class PropertiesSpec extends SparkSpec {
   import spark.implicits._
 
-  private def samples[A](g: Gen[A], n: Int): Seq[A] =
-    (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(i.toLong)))
+  /** `n` draws of `g`; draw i of the `seed`-th batch uses Seed(seed * n + i),
+    * so loops that pass their loop variable test a fresh input each turn. */
+  private def samples[A](g: Gen[A], n: Int, seed: Long = 0L): Seq[A] =
+    (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(seed * n + i)))
 
   test("safe_int property: matches int(float(x)) over generated numeric strings") {
     val gen = Gen.oneOf(
@@ -87,9 +89,9 @@ class PropertiesSpec extends SparkSpec {
     import graft.operators.Analytics
     val gen = Gen.listOfN(40, Gen.chooseNum(-50.0, 50.0))
     for (seed <- 0 until 3) {
-      val xs = samples(gen, 1).head.map(v => math.rint(v * 100) / 100)
-      val ys = samples(gen, 1).flatten.take(40).map(_ + seed * 3.0)
-        .map(v => math.rint(v * 100) / 100)
+      val Seq(x0, y0) = samples(gen, 2, seed)
+      val xs = x0.map(v => math.rint(v * 100) / 100)
+      val ys = y0.map(_ + seed * 3.0).map(v => math.rint(v * 100) / 100)
       val a = xs.toDF("v")
       val b = ys.toDF("v")
       val kab = Analytics.ksStatistic(a, b, "v").collect().head.getDouble(2)
@@ -117,7 +119,7 @@ class PropertiesSpec extends SparkSpec {
     val rowGen = Gen.zip(Gen.chooseNum(0L, 60L),
       Gen.oneOf("g1", "g2", "g3", "g4"), Gen.chooseNum(-30.0, 90.0))
     for (seed <- 0 until 3) {
-      val before = samples(Gen.listOfN(40, rowGen), 1).flatten
+      val before = samples(Gen.listOfN(40, rowGen), 1, seed).flatten
         .groupBy(_._1).map(_._2.head).toSeq  // unique keys
       // next snapshot: drop ~1/3, mutate ~1/3 (value and/or group), add new
       val after = before.zipWithIndex.collect {
@@ -139,7 +141,7 @@ class PropertiesSpec extends SparkSpec {
     val gen = Gen.listOfN(25, Gen.chooseNum(0, 12))
     for (seed <- 0 until 3) {
       // counts per day offset; ~1/4 of days dropped entirely (gap days)
-      val counts = samples(gen, 1).flatten.zipWithIndex
+      val counts = samples(gen, 1, seed).flatten.zipWithIndex
         .filter { case (_, i) => (i + seed) % 4 != 0 || i == 0 }
       val rows = counts.flatMap { case (c, i) =>
         (0 until c).map(j =>
@@ -173,7 +175,7 @@ class PropertiesSpec extends SparkSpec {
     import graft.operators.DedupOps
     val pairGen = Gen.listOfN(20, Gen.zip(Gen.chooseNum(0, 14), Gen.chooseNum(0, 14)))
     for (seed <- 0 until 3) {
-      val pairs = samples(pairGen, 1).flatten
+      val pairs = samples(pairGen, 1, seed).flatten
         .collect { case (x, y) if x != y => (x.toLong, y.toLong) }
       val universe = (0L to 14L).map(i => (i, ((i * 7 + seed) % 5).toDouble))
       val got = DedupOps.dedupResolution(
@@ -205,7 +207,7 @@ class PropertiesSpec extends SparkSpec {
     val edgeGen = Gen.listOfN(60,
       Gen.zip(Gen.chooseNum(0, 11), Gen.chooseNum(0, 11)))
     for (seed <- 0 until 3) {
-      val edges = samples(edgeGen, 1).flatten
+      val edges = samples(edgeGen, 1, seed).flatten
         .map { case (x, y) => (s"n$x", s"n$y") }
       val base = GraphOps.triangleCounts(edges.toDF("s", "t"), "s", "t")
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -224,7 +226,7 @@ class PropertiesSpec extends SparkSpec {
     val rowGen = Gen.listOfN(120,
       Gen.zip(Gen.chooseNum(0, 4), Gen.chooseNum(-50, 50)))
     for (seed <- 0 until 4) {
-      val rows = samples(rowGen, 1).flatten.zipWithIndex
+      val rows = samples(rowGen, 1, seed).flatten.zipWithIndex
         .map { case ((g, v), i) => (s"g$g", v.toLong, i.toLong) }
       val df = rows.toDF("g", "v", "rid")
       val w = W.partitionBy(col("g")).orderBy(col("v").asc, col("rid").asc)
@@ -247,7 +249,7 @@ class PropertiesSpec extends SparkSpec {
     val wordGen = Gen.listOfN(12, Gen.oneOf("a", "b", "c", "d", "e", "f"))
     val docGen = Gen.listOfN(10, wordGen.map(_.mkString(" ")))
     for (seed <- 0 until 3) {
-      val texts = samples(docGen, 1).flatten
+      val texts = samples(docGen, 1, seed).flatten
       val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t, "en") }
       val df = docs.toDF("doc_id", "text", "lang")
       val tau = 0.6
@@ -320,7 +322,7 @@ class PropertiesSpec extends SparkSpec {
     val gen = Gen.listOfN(200,
       Gen.zip(Gen.chooseNum(0.0, 1.0), Gen.oneOf(true, false)))
     for (seed <- 0 until 3) {
-      val rows = samples(gen, 1).flatten
+      val rows = samples(gen, 1, seed).flatten
         .map { case (p, y) => (math.rint(p * 1e4) / 1e4, y) }
       val df = rows.toDF("p", "y")
       val out = Analytics.calibrationCurve(df, "p", "y", nBins = 10)
@@ -382,7 +384,7 @@ class PropertiesSpec extends SparkSpec {
     val gen = Gen.chooseNum(2, 40).flatMap(len =>
       Gen.listOfN(len, Gen.chooseNum(-5L, 5L)))
     for (seed <- 0 until 40) {
-      val vals = samples(gen, 1).flatten.toIndexedSeq
+      val vals = samples(gen, 1, seed).flatten.toIndexedSeq
       val df = vals.zipWithIndex
         .map { case (v, i) => ("g", i.toLong, v) }.toDF("g", "t", "v")
       val got = Analytics.changepoint(df, "g", "t", "v").collect().head
@@ -502,7 +504,7 @@ class PropertiesSpec extends SparkSpec {
     val gen = Gen.chooseNum(1, 60).flatMap(len =>
       Gen.listOfN(len, Gen.zip(Gen.chooseNum(-2L, 2L), Gen.chooseNum(-2L, 2L))))
     for (seed <- 0 until 30) {
-      val rows = samples(gen, 1).flatten.toIndexedSeq
+      val rows = samples(gen, 1, seed).flatten.toIndexedSeq
       val df = rows.toDF("x", "y")
       val got = Analytics.kendallTau(df, "x", "y").collect().head
       val (n, c, d, tau) = ref(rows)
@@ -554,7 +556,7 @@ class PropertiesSpec extends SparkSpec {
       Gen.listOfN(len, Gen.zip(Gen.oneOf("a", "b", "c"),
         Gen.chooseNum(-3L, 3L))))
     for (seed <- 0 until 30) {
-      val rows = samples(gen, 1).flatten.toIndexedSeq
+      val rows = samples(gen, 1, seed).flatten.toIndexedSeq
       val df = rows.toDF("g", "v")
       val got = Analytics.kruskalWallis(df, "g", "v").collect().head
       val (n, k, h, ht) = ref(rows)
@@ -608,7 +610,7 @@ class PropertiesSpec extends SparkSpec {
       bs <- Gen.listOfN(nb, Gen.chooseNum(-4L, 4L))
     } yield (as, bs)
     for (seed <- 0 until 30) {
-      val (as, bs) = samples(gen, 1).head
+      val (as, bs) = samples(gen, 1, seed).head
       val df = (as.map(("a", _)) ++ bs.map(("b", _))).toDF("lvl", "v")
       val got = Analytics.welchT(df, "lvl", "v", "a", "b").collect().head
       val (t, dfw, d, g) = ref(as, bs)
@@ -641,7 +643,7 @@ class PropertiesSpec extends SparkSpec {
     val gen = Gen.chooseNum(1, 25).flatMap(len =>
       Gen.listOfN(len, Gen.chooseNum(-3L, 3L)))
     for (seed <- 0 until 30) {
-      val vals = samples(gen, 1).flatten.toIndexedSeq
+      val vals = samples(gen, 1, seed).flatten.toIndexedSeq
       val pts = vals.zipWithIndex.map { case (v, i) => (i.toLong, v) }
       val df = pts.map { case (t, v) => ("g", t, v) }.toDF("g", "t", "v")
       val got = Analytics.theilSen(df, "g", "t", "v").collect().head
@@ -681,7 +683,7 @@ class PropertiesSpec extends SparkSpec {
       Gen.listOfN(len, Gen.zip(Gen.chooseNum(-3L, 3L),
         Gen.chooseNum(-3L, 3L))))
     for (seed <- 0 until 30) {
-      val pairs = samples(gen, 1).flatten.toIndexedSeq
+      val pairs = samples(gen, 1, seed).flatten.toIndexedSeq
       val got = Analytics.wilcoxonSignedRank(
         pairs.toDF("a", "b"), "a", "b").collect().head
       val (np, n, w, z) = ref(pairs)
@@ -732,7 +734,7 @@ class PropertiesSpec extends SparkSpec {
       Gen.listOfN(len, Gen.zip(Gen.chooseNum(-2L, 2L),
         Gen.chooseNum(-3L, 3L))))
     for (seed <- 0 until 30) {
-      val rows = samples(gen, 1).flatten.toIndexedSeq
+      val rows = samples(gen, 1, seed).flatten.toIndexedSeq
       val got = Analytics.jonckheereTerpstra(
         rows.toDF("g", "v"), "g", "v").collect().head
       val (nn, k, cells, j, z) = ref(rows)
@@ -782,7 +784,7 @@ class PropertiesSpec extends SparkSpec {
       Gen.listOfN(len, Gen.zip(Gen.chooseNum(0L, 4L),
         Gen.chooseNum(0L, 2L), Gen.chooseNum(-3L, 3L))))
     for (seed <- 0 until 30) {
-      val rows = samples(gen, 1).flatten.toIndexedSeq
+      val rows = samples(gen, 1, seed).flatten.toIndexedSeq
         .map(t => (t._1, t._2, t._3))
       val got = Analytics.friedman(
         rows.toDF("bl", "tr", "v"), "bl", "tr", "v").collect().head
@@ -818,7 +820,7 @@ class PropertiesSpec extends SparkSpec {
       Gen.chooseNum(0, 25).flatMap(l => Gen.listOfN(l, Gen.chooseNum(-4L, 4L))),
       Gen.chooseNum(0, 25).flatMap(l => Gen.listOfN(l, Gen.chooseNum(-4L, 4L))))
     for (seed <- 0 until 30) {
-      val (a, b) = samples(gen, 1).head
+      val (a, b) = samples(gen, 1, seed).head
       val got = Analytics.cramerVonMises(
         a.toDF("v"), b.toDF("v"), "v").collect().head
       val (n, m, t) = ref(a, b)
@@ -862,7 +864,7 @@ class PropertiesSpec extends SparkSpec {
       Gen.chooseNum(0, 25).flatMap(l => Gen.listOfN(l, Gen.chooseNum(-4L, 4L))),
       Gen.chooseNum(0, 25).flatMap(l => Gen.listOfN(l, Gen.chooseNum(-4L, 4L))))
     for (seed <- 0 until 30) {
-      val (a, b) = samples(gen, 1).head
+      val (a, b) = samples(gen, 1, seed).head
       val got = Analytics.effectSizes(
         a.toDF("v"), b.toDF("v"), "v").collect().head
       val (n, m, d, g, delta) = ref(a, b)
@@ -915,7 +917,7 @@ class PropertiesSpec extends SparkSpec {
       Gen.chooseNum(0, 25).flatMap(l => Gen.listOfN(l, Gen.chooseNum(-4L, 4L))),
       Gen.chooseNum(0, 25).flatMap(l => Gen.listOfN(l, Gen.chooseNum(-4L, 4L))))
     for (seed <- 0 until 30) {
-      val (a, b) = samples(gen, 1).head
+      val (a, b) = samples(gen, 1, seed).head
       val got = Analytics.brunnerMunzel(
         a.toDF("v"), b.toDF("v"), "v").collect().head
       val (n, m, p, w) = ref(a, b)
@@ -963,7 +965,7 @@ class PropertiesSpec extends SparkSpec {
       Gen.listOfN(len, Gen.zip(Gen.chooseNum(0L, 6L),
         Gen.oneOf(true, false), Gen.oneOf(true, false))))
     for (seed <- 0 until 30) {
-      val rows = samples(gen, 1).flatten.toIndexedSeq
+      val rows = samples(gen, 1, seed).flatten.toIndexedSeq
         .map(t => (t._1, t._2, t._3))
       val got = Analytics.logRank(
         rows.toDF("t", "e", "g"), "t", "e", "g").collect().head
@@ -1000,7 +1002,7 @@ class PropertiesSpec extends SparkSpec {
       Gen.chooseNum(1, 25).flatMap(l => Gen.listOfN(l, Gen.chooseNum(-4L, 4L))),
       Gen.chooseNum(1, 25).flatMap(l => Gen.listOfN(l, Gen.chooseNum(-4L, 4L))))
     for (seed <- 0 until 30) {
-      val (a, b) = samples(gen, 1).head
+      val (a, b) = samples(gen, 1, seed).head
       val got = Analytics.moodMedian(
         a.toDF("v"), b.toDF("v"), "v").collect().head
       val (n, m, med, aa, bb, chi2) = ref(a, b)
@@ -1040,7 +1042,7 @@ class PropertiesSpec extends SparkSpec {
       Gen.listOfN(len, Gen.zip(Gen.chooseNum(-2L, 3L),
         Gen.oneOf(true, false))))
     for (seed <- 0 until 30) {
-      val rows = samples(gen, 1).flatten.toIndexedSeq
+      val rows = samples(gen, 1, seed).flatten.toIndexedSeq
       val got = Analytics.cochranArmitage(
         rows.toDF("dose", "ok"), "dose", "ok").collect().head
       val (nn, k, rr, z) = ref(rows)
@@ -1127,7 +1129,7 @@ class PropertiesSpec extends SparkSpec {
     // exercise bloom admission — equality/IN leaves under And prune
     // through the filters, Or/Not-wrapped ones must extract NOTHING
     // (a bloom miss under negation would wrongly prune), and the
-    // readIndexed ≡ read+filter invariant polices both directions
+    // pruned ≡ unpruned invariant polices both directions
     LogTable.init(slice(0), root, statsCols = Seq("k", "s", "dt", "v2"),
       bloomCols = Seq("k", "s"))
     (1 to 5).foreach(i => LogTable.append(spark, root, slice(i * 10)))
@@ -1186,15 +1188,17 @@ class PropertiesSpec extends SparkSpec {
         case 2 => !tree(depth - 1)
       }
     var prunedSome = 0
+    // a checkpointed full scan: filters above it never reach the index
+    val unpruned = LogTable.read(spark, root).localCheckpoint()
     (1 to 35).foreach { i =>
       val cond = tree(2 + rnd.nextInt(2))
-      val viaIndex = LogTable.readIndexed(spark, root).filter(cond)
-      val exact = LogTable.read(spark, root).filter(cond)
+      val viaIndex = LogTable.read(spark, root).filter(cond)
+      val exact = unpruned.filter(cond)
         .select("rid").as[Long].collect().sorted.toSeq
       val got = viaIndex.select("rid").as[Long].collect().sorted.toSeq
       assert(got == exact,
-        s"tree #$i: readIndexed returned ${got.size} rows, " +
-          s"read+filter ${exact.size} — $cond")
+        s"tree #$i: the pruned scan returned ${got.size} rows, " +
+          s"the unpruned one ${exact.size} — $cond")
       if (plannedFiles(viaIndex) < totalFiles) prunedSome += 1
     }
     assert(prunedSome >= 5,

@@ -554,6 +554,11 @@ class StreamingMultimodalSpec extends SparkSpec {
     MergeOps.truncateLoad(Seq((1, "a"), (2, "b")).toDF("k", "v"), path)
     MergeOps.truncateLoad(Seq((3, "c")).toDF("k", "v"), path) // WRITE_TRUNCATE
     assert(spark.read.parquet(path).as[(Int, String)].collect().toSeq == Seq((3, "c")))
+    // a load whose job fails in a task throws and leaves the old rows
+    val failing = spark.range(4, 5).select(col("id").cast("int").as("k"),
+      raise_error(lit("load failed")).cast("string").as("v"))
+    intercept[Exception](MergeOps.truncateLoad(failing, path))
+    assert(spark.read.parquet(path).as[(Int, String)].collect().toSeq == Seq((3, "c")))
   }
 
   test("stream-static enrich over per-file micro-batches equals the batch join") {
