@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
   * writers APPEND uniquely-named parquet files and atomically commit a
   * manifest; readers plan from the manifest, never from a directory
   * listing. That one inversion buys three properties a rename-swapped
-  * layout (e.g. [[MergeOps.atomicSwapWrite]]) cannot offer:
+  * directory cannot offer:
   *
   *  1. **Structural reader isolation** — the files a manifest names are
   *     immutable and retained until [[vacuum]], so a reader can never
@@ -24,8 +24,10 @@ import org.apache.spark.sql.types._
   *     partition from the table by a manifest commit: ZERO data I/O,
   *     instantly undoable by reading the previous version.
   *
-  * Layout: `root/<dateCol>=D/part-*.parquet` (append-only data files),
-  * `root/_graft_log/_v%08d.json` commit manifests ([[TableLog]]'s
+  * Layout: `root/<dateCol>=D/part-*.parquet` (append-only data files;
+  * `dateCol = ""` is the unpartitioned layout, `root/part-*.parquet`,
+  * pruned by zone maps alone), `root/_graft_log/_v%08d.json` commit
+  * manifests ([[TableLog]]'s
   * filename scheme — [[TableLog.currentVersion]] works on a LogTable
   * root unchanged), plus `root/_graft_log/_cp%08d` parquet snapshot
   * checkpoints.
@@ -459,7 +461,7 @@ object LogTable {
         if (readSet.nonEmpty) {
           val liveByTail: Map[String, FileStat] =
             hm.parts.toSeq.flatMap { case (p, fl) =>
-              fl.map(f => s"$p/${f.file}" -> f) }.toMap
+              fl.map(f => tailKey(p, f.file) -> f) }.toMap
           readSet.foreach { case (t, snap) =>
             liveByTail.get(t) match {
               case None => throw new ConcurrentWriteException(
@@ -753,7 +755,7 @@ object LogTable {
       }
       d.adds.foreach { case (p, fl) =>
         fl.foreach { f =>
-          val t = s"$p/${f.file}"
+          val t = tailKey(p, f.file)
           removedFromCp += t // a re-added tail REPLACES its cp-era row
           addsAcc = addsAcc + (t -> (p, f))
         }
@@ -1032,17 +1034,16 @@ object LogTable {
     * null-fill it, so a mixed-schema live set can never resolve to one
     * file's footer. Deletion vectors of the planned files are
     * anti-joined away ([[applyDv]]); columns come in schema order, then
-    * the (`__dvf`, `__dvp`) identity when `keepIdentity`. Data columns
-    * read nullable, as Spark's own file sources read them, so a column
-    * derived from them can be added by schema evolution. EVERY LogTable
-    * read goes through here, and none lists the filesystem. */
+    * the (`__dvf`, `__dvp`) identity when `keepIdentity`. Every column
+    * reads nullable, as Spark's own file sources read them, so a column
+    * derived from them can be added by schema evolution, and an empty
+    * live set (a relation over no files) reads the same schema as a
+    * non-empty one. EVERY LogTable read goes through here, and none
+    * lists the filesystem. */
   private def scanLive(spark: SparkSession, tableRoot: String,
                        schema: StructType, m: Manifest,
                        keepIdentity: Boolean = false): DataFrame = {
-    val partCols = partColsOfManifest(m).toSet
-    val readSchema = StructType(schema.map(f =>
-      if (partCols(f.name)) f
-      else f.copy(dataType = normalizedType(f.dataType), nullable = true)))
+    val readSchema = normalizedType(schema).asInstanceOf[StructType]
     val dvIds = m.parts.values.flatten.flatMap(_.dv).toSeq.distinct
     val out = schema.fieldNames.toSeq ++
       (if (keepIdentity) Seq("__dvf", "__dvp") else Seq.empty)
@@ -1072,7 +1073,7 @@ object LogTable {
   private def restrictTo(m: Manifest, files: Seq[String]): Manifest = {
     val levels = partLevels(m)
     val live = m.parts.toSeq.flatMap { case (p, fl) =>
-      fl.map(f => s"$p/${f.file}" -> (p, f)) }.toMap
+      fl.map(f => tailKey(p, f.file) -> (p, f)) }.toMap
     val picked = files.map { path =>
       val t = tailOf(path, levels)
       live.getOrElse(t, sys.error(
@@ -1173,10 +1174,15 @@ object LogTable {
     * manifest keys, the FileIndex, zone maps and vacuum all treat the
     * full relative dir path as the partition identity. Plain
     * identifiers only (the same constraint as statsCols — partition
-    * dir names are embedded in the regex-parsed manifest). */
+    * dir names are embedded in the regex-parsed manifest). An EMPTY
+    * list is the unpartitioned layout: data files sit at the table
+    * root (manifest key `""`, depth 0), and zone maps do the pruning
+    * directories would. */
   private def partColsOf(dateCol: String): Seq[String] = {
-    val cols = dateCol.split(',').map(_.trim).toSeq
-    require(cols.nonEmpty && cols.forall(_.matches("[A-Za-z0-9_]+")),
+    val cols =
+      if (dateCol.trim.isEmpty) Seq.empty
+      else dateCol.split(',').map(_.trim).toSeq
+    require(cols.forall(_.matches("[A-Za-z0-9_]+")),
       "LogTable: partition columns must be plain identifiers " +
         s"(comma-separated for multi-level layouts), got '$dateCol'")
     cols
@@ -1227,43 +1233,46 @@ object LogTable {
 
   /** The partition column sequence a manifest's dir keys encode
     * (`k1=v1/k2=v2` → `Seq(k1, k2)`), validated uniform across the
-    * live set. Empty for an empty live set. */
+    * live set. Empty for an unpartitioned table and for an empty live
+    * set. */
   private[graft] def partColsOfManifest(m: Manifest): Seq[String] = {
-    val seqs = m.parts.keys.map(_.split('/').toSeq.map { seg =>
-      val i = seg.indexOf('=')
-      require(i > 0, s"LogTable: corrupt partition dir segment '$seg'")
-      seg.substring(0, i)
-    }).toSet
+    val seqs = m.parts.keys.map(k =>
+      if (k.isEmpty) Seq.empty[String]
+      else k.split('/').toSeq.map { seg =>
+        val i = seg.indexOf('=')
+        require(i > 0, s"LogTable: corrupt partition dir segment '$seg'")
+        seg.substring(0, i)
+      }).toSet
     require(seqs.size <= 1,
       s"LogTable: mixed partition layouts in one table: " +
         seqs.map(_.mkString(",")).toSeq.sorted.mkString(" vs "))
     seqs.headOption.getOrElse(Seq.empty)
   }
 
-  /** Partition-path depth of a manifest's layout (1 for the default
-    * single-column tables, and for an empty live set). File tails —
+  /** Partition-path depth of a manifest's layout (0 for an
+    * unpartitioned table and for an empty live set). File tails —
     * the `"k1=v1/.../file"` identities DVs and commits key on — carry
     * the FULL partition path, so their segment count is depth+1. */
-  private def partLevels(m: Manifest): Int =
-    math.max(1, partColsOfManifest(m).size)
+  private def partLevels(m: Manifest): Int = partColsOfManifest(m).size
 
-  /** Split a `"k1=v1/.../file"` tail into (partition dir, file name)
-    * at the LAST slash — first-slash splits break multi-level
-    * layouts. */
+  /** The `"k1=v1/.../file"` tail of a live file in partition dir `p`
+    * — the bare file name at the root of an unpartitioned table. */
+  private[graft] def tailKey(p: String, file: String): String =
+    if (p.isEmpty) file else s"$p/$file"
+
+  /** Split a tail into (partition dir, file name) at the LAST slash —
+    * first-slash splits break multi-level layouts; a tail without a
+    * slash is a root file (dir `""`). */
   private def splitTail(t: String): (String, String) = {
     val i = t.lastIndexOf('/')
-    require(i > 0, s"LogTable: corrupt file tail '$t'")
-    (t.substring(0, i), t.substring(i + 1))
+    require(i != 0 && i != t.length - 1,
+      s"LogTable: corrupt file tail '$t'")
+    (t.substring(0, math.max(i, 0)), t.substring(i + 1))
   }
 
   /** "part/file" keys of a live-set map. */
   private def fileKeys(parts: Map[String, Seq[FileStat]]): Seq[String] =
-    parts.toSeq.flatMap { case (p, fl) => fl.map(f => s"$p/${f.file}") }
-
-  /** Partition-path depth of a live-set map's dir keys (1 when empty). */
-  private def levelsOfParts(parts: Map[String, Seq[FileStat]]): Int =
-    parts.keys.headOption
-      .map(k => k.count(_ == '/') + 1).getOrElse(1)
+    parts.toSeq.flatMap { case (p, fl) => fl.map(f => tailKey(p, f.file)) }
 
   /** Zone-map the given files: ONE metadata-scale job computing per-file
     * (rows, min/max of EVERY stats column), TYPED by the column's
@@ -1320,7 +1329,7 @@ object LogTable {
             Seq(min(col(c)).as(s"__lo:$c"), max(col(c)).as(s"__hi:$c"))
         }
       }
-      val lvl = levelsOfParts(parts)
+      val lvl = partLevels(filesOnly(parts))
       df.groupBy(input_file_name().as("__f"))
         .agg(count(lit(1)).as("__n"), aggs: _*)
         .collect()
@@ -1408,13 +1417,13 @@ object LogTable {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import scala.jdk.CollectionConverters._
     val paths = parts.toSeq.flatMap { case (p, fl) =>
-      fl.map(f => s"$tableRoot/$p/${f.file}") }
+      fl.map(f => s"$tableRoot/${tailKey(p, f.file)}") }
     if (paths.isEmpty) return Some(Map.empty)
     val hconf = org.apache.spark.sql.graftshim.ConfShim.broadcast(
       spark.sparkContext, spark.sparkContext.hadoopConfiguration)
     val colSet = statsCols.toSet
     val zMax = StrZoneMax
-    val lvl = levelsOfParts(parts)
+    val lvl = partLevels(filesOnly(parts))
     // (tail, rows, per-column Either[unsupported-type, Option[Zone]])
     val perFile: Seq[(String, Long, Map[String, Either[Unit, Option[Zone]]])] =
       spark.sparkContext
@@ -1620,7 +1629,7 @@ object LogTable {
           .getOrElse(fileStats(spark, tableRoot, schema, statsCols, parts))
       parts.map { case (p, fl) =>
         p -> fl.map { f =>
-          stats.get(s"$p/${f.file}") match {
+          stats.get(tailKey(p, f.file)) match {
             case Some((n, zones)) => f.copy(rows = n, zones = zones)
             case None => f
           }
@@ -1707,7 +1716,7 @@ object LogTable {
         case _ => false
       })
       if (usable.isEmpty) return parts
-      val lvl = levelsOfParts(parts)
+      val lvl = partLevels(filesOnly(parts))
       val fpp = spark.conf
         .get("spark.graft.logtable.bloomFpp", "0.01").toDouble
       val maxItems = spark.conf
@@ -1715,7 +1724,7 @@ object LogTable {
       val sizing: Map[String, Long] = parts.toSeq.flatMap {
         case (p, fl) => fl.map { f =>
           val est = if (f.rows >= 0L) f.rows else f.bytes / 32L
-          s"$p/${f.file}" -> math.min(maxItems, math.max(64L, est))
+          tailKey(p, f.file) -> math.min(maxItems, math.max(64L, est))
         }
       }.toMap
       val id = java.util.UUID.randomUUID().toString.replace("-", "")
@@ -1821,7 +1830,7 @@ object LogTable {
       val tagged = written.toSet
       parts.map { case (p, fl) =>
         p -> fl.map { f =>
-          if (tagged(s"$p/${f.file}")) f.copy(bloom = Some(id)) else f
+          if (tagged(tailKey(p, f.file))) f.copy(bloom = Some(id)) else f
         }
       }
     }
@@ -1957,7 +1966,7 @@ object LogTable {
           fileKeys(prev.parts), bloomColsOv = Some(cols),
           snapshotV = Some(v),
           readSet = prev.parts.toSeq.flatMap { case (p, fl) =>
-            fl.map(f => s"$p/${f.file}" -> f) }.toMap)
+            fl.map(f => tailKey(p, f.file) -> f) }.toMap)
       }
     }
 
@@ -1986,25 +1995,27 @@ object LogTable {
       s".stage_append_${java.util.UUID.randomUUID()}")
     rows.write.mode(SaveMode.Append).partitionBy(partCols: _*)
       .parquet(stagePath.toString)
-    // walk to the LEAF partition dirs (multi-level layouts nest) and
-    // key each by its full relative path
-    def leaves(p: org.apache.hadoop.fs.Path, rel: String)
-        : Seq[(String, Seq[FileStat])] = {
-      // a partition dir is `col=value` — keyed on the '=', NOT on a
-      // leading underscore (metadata dirs like _graft_log carry no
-      // '='; a partition COLUMN may legitimately start with '_')
-      val subs = fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
-        .filter(d => d.getName.contains('=') &&
-          !d.getName.startsWith("."))
-      if (subs.isEmpty) {
+    // walk to the LEAF partition dirs (multi-level layouts nest; an
+    // unpartitioned layout's leaf is the stage root itself) and key
+    // each by its full relative path. Files above the leaf level (the
+    // schema-only file Spark writes at the root for an empty
+    // partitioned frame) hold no rows and are left behind.
+    def leaves(p: org.apache.hadoop.fs.Path, rel: String, depth: Int)
+        : Seq[(String, Seq[FileStat])] =
+      if (depth == partCols.length) {
         val fl = TableLog.liveFiles(fs, p)
           .map { case (f, len) => FileStat(f, len) }
-        if (rel.isEmpty || fl.isEmpty) Seq.empty else Seq(rel -> fl)
-      } else subs.toSeq.flatMap(d =>
-        leaves(d, if (rel.isEmpty) d.getName else s"$rel/${d.getName}"))
-    }
+        if (fl.isEmpty) Seq.empty else Seq(rel -> fl)
+      } else
+        // a partition dir is `col=value` — keyed on the '=', NOT on a
+        // leading underscore (metadata dirs like _graft_log carry no
+        // '='; a partition COLUMN may legitimately start with '_')
+        fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
+          .filter(d => d.getName.contains('=') &&
+            !d.getName.startsWith(".")).toSeq
+          .flatMap(d => leaves(d, tailKey(rel, d.getName), depth + 1))
     val stagedParts: Map[String, Seq[FileStat]] =
-      (if (fs.exists(stagePath)) leaves(stagePath, "") else Seq.empty)
+      (if (fs.exists(stagePath)) leaves(stagePath, "", 0) else Seq.empty)
         .toMap
     (stagePath, stagedParts)
   }
@@ -2022,11 +2033,11 @@ object LogTable {
                            stagedParts: Map[String, Seq[FileStat]],
                            op: String): Unit = {
     stagedParts.foreach { case (p, fl) =>
-      val dest = new org.apache.hadoop.fs.Path(root, p)
+      val dest = if (p.isEmpty) root else new org.apache.hadoop.fs.Path(root, p)
       fs.mkdirs(dest)
       fl.foreach { f =>
         if (!fs.rename(
-            new org.apache.hadoop.fs.Path(stagePath, s"$p/${f.file}"),
+            new org.apache.hadoop.fs.Path(stagePath, tailKey(p, f.file)),
             new org.apache.hadoop.fs.Path(dest, f.file)))
           sys.error(s"LogTable.$op: staged file ${f.file} could not " +
             s"move into $p — name collision?")
@@ -2099,7 +2110,8 @@ object LogTable {
     * rewrite; the commit manifest simply references what is already
     * there. The directory layout must match `dateCol`'s
     * comma-separated partition columns level for level
-    * (`k1=v1/k2=v2/…`); hidden/underscore entries are skipped.
+    * (`k1=v1/k2=v2/…`; `""` adopts a flat directory of data files as
+    * an unpartitioned table); hidden/underscore entries are skipped.
     * `statsCols` zone maps (and `bloomCols` sidecars) are computed by
     * the SCAN path regardless of the `footerStats` conf — the footer
     * fast path's NaN/ordering contract is proven only for files THIS
@@ -2149,18 +2161,16 @@ object LogTable {
             s"LogTable.convert: directory '$seg' at level $depth does " +
               s"not match partition column '${partCols(depth)}' — the " +
               "layout must be Hive-style k=v for every declared level")
-          walk(st.getPath,
-            depth + 1, if (prefix.isEmpty) seg else s"$prefix/$seg")
+          walk(st.getPath, depth + 1, tailKey(prefix, seg))
         }
       }
     val parts: Map[String, Seq[FileStat]] = walk(root, 0, "").toMap
-    require(parts.nonEmpty,
-      s"LogTable.convert: no '${partCols.head}=' partition " +
-        s"directories with data files under $tableRoot")
+    require(parts.nonEmpty, s"LogTable.convert: no data files under " +
+      s"$tableRoot${partCols.headOption.fold("")(c => s" in '$c=' directories")}")
     // schema (incl. typed partition columns) inferred from the files
     // themselves — the one read no recorded schema can plan yet
     val paths = parts.toSeq.flatMap { case (p, fl) =>
-      fl.map(f => s"$tableRoot/$p/${f.file}") }
+      fl.map(f => s"$tableRoot/${tailKey(p, f.file)}") }
     val df = spark.read.option("basePath", tableRoot).parquet(paths: _*)
     validatePartTypes(df, partCols, "convert")
     validateBloomCols(df.schema, bloomCols, "convert")
@@ -2384,16 +2394,13 @@ object LogTable {
     * SUPERSET of the matching rows (zone maps are necessary, not
     * sufficient): callers apply the exact row filter on the result.
     * Each predicate must name a declared stats column. An empty version,
-    * or one where every zone misses, returns the schema'd empty frame. */
+    * or one where every zone misses, plans a scan of no files. */
   def read(spark: SparkSession, tableRoot: String,
            asOf: Option[Long] = None,
            scanPreds: Seq[ZonePred] = Seq.empty): DataFrame = {
     val (schema, m) = graft.sources.LogTableScan.snapshot(spark,
       tableRoot, asOf, scanPreds)
-    if (m.parts.isEmpty)
-      spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-    else scanLive(spark, tableRoot, schema, m)
+    scanLive(spark, tableRoot, schema, m)
   }
 
   /** [[readKeyed]]'s planned file set, spec-testable: the same
@@ -2540,7 +2547,7 @@ object LogTable {
         val totalSlots = nOutByPart.map(_._2).sum
         val allPaths = todo.toSeq.sortBy(_._1).flatMap { case (p, fl) =>
           fl.filter(_.bytes < targetBytes)
-            .map(f => s"$tableRoot/$p/${f.file}") }
+            .map(f => s"$tableRoot/${tailKey(p, f.file)}") }
         // identity scan: __dvf carries "part/.../file", whose dir
         // prefix keys the slot-count lookup (DV-filtered — packing
         // folds deletion vectors away, like before)
@@ -2574,7 +2581,7 @@ object LogTable {
         val (sp, stagedAll) = stageRows(spark, fs, root, packed, pCols)
         promoteStage(fs, root, sp, stagedAll, "compact")
         val removes = todo.toSeq.flatMap { case (p, fl) =>
-          fl.filter(_.bytes < targetBytes).map(f => s"$p/${f.file}") }
+          fl.filter(_.bytes < targetBytes).map(f => tailKey(p, f.file)) }
         // a whole-table compact holds the table lock (vs other
         // whole-table maintenance); a parts-scoped one is lock-free
         // (r16 verdict #4) and lock-free DML can interleave either
@@ -2582,7 +2589,7 @@ object LogTable {
         // concurrent DV on a packed file must abort the pack, never
         // resurrect rows (readSet)
         val statByTail = prev.parts.toSeq.flatMap { case (p, fl) =>
-          fl.map(f => s"$p/${f.file}" -> f) }.toMap
+          fl.map(f => tailKey(p, f.file) -> f) }.toMap
         TableLog.dmlCommitHook("compact")
         writeCommit(spark, tableRoot, "compact", prev.statsCols,
           prev.schemaDdl,
@@ -2767,7 +2774,7 @@ object LogTable {
         val chunked = partList.grouped(partsPerChunk).toSeq.map { chunk =>
           val chunkCells = nCells * chunk.size // ≤ max(maxSlots, nCells)+
           val chunkPaths = chunk.flatMap(p =>
-            todo(p).map(f => s"$tableRoot/$p/${f.file}"))
+            todo(p).map(f => s"$tableRoot/${tailKey(p, f.file)}"))
           // identity scan: __dvf's dir prefix keys the partition-index
           // lookup (DV-filtered — clustering folds vectors away)
           val src = scanWithIdentity(spark, tableRoot, prev, chunkPaths)
@@ -2806,12 +2813,12 @@ object LogTable {
           ).toMap
         }
         val removes = todo.toSeq.flatMap { case (p, fl) =>
-          fl.map(f => s"$p/${f.file}") }
+          fl.map(f => tailKey(p, f.file)) }
         // same contract as compact: clustered rows came from this
         // snapshot's vectors — abort on a concurrent DV, never
         // resurrect (readSet); parts-scoped runs are lock-free
         val statByTail = prev.parts.toSeq.flatMap { case (p, fl) =>
-          fl.map(f => s"$p/${f.file}" -> f) }.toMap
+          fl.map(f => tailKey(p, f.file) -> f) }.toMap
         TableLog.dmlCommitHook("zorder")
         writeCommit(spark, tableRoot, "zorder", prev.statsCols,
           prev.schemaDdl,
@@ -2930,8 +2937,8 @@ object LogTable {
     else Some(m.parts.toSeq.sortBy(_._1).flatMap { case (p, fl) =>
       fl.filter(f => preds.forall(zoneAdmits(f, _)))
         .filter(f => bloomProbes.isEmpty ||
-          bloomAdmits(spark, tableRoot, s"$p/${f.file}", f, bloomProbes))
-        .map(f => s"$p/${f.file}")
+          bloomAdmits(spark, tableRoot, tailKey(p, f.file), f, bloomProbes))
+        .map(f => tailKey(p, f.file))
     })
   }
 
@@ -3002,8 +3009,8 @@ object LogTable {
     m.parts.toSeq.sortBy(_._1).flatMap { case (p, fl) =>
       fl.filter(f => all.forall(admitsLenient(f, _)))
         .filter(f => bloomProbes.isEmpty || tableRoot.forall(root =>
-          bloomAdmits(spark, root, s"$p/${f.file}", f, bloomProbes)))
-        .map(f => s"$p/${f.file}")
+          bloomAdmits(spark, root, tailKey(p, f.file), f, bloomProbes)))
+        .map(f => tailKey(p, f.file))
     }
   }
 
@@ -3344,7 +3351,7 @@ object LogTable {
       promoteStage(fs, root, stagePath, stagedParts, "merge")
       // identity read set: every retired tail at its snapshot stat
       val statByTail = prev.parts.toSeq.flatMap { case (p, fl) =>
-        fl.map(f => s"$p/${f.file}" -> f) }.toMap
+        fl.map(f => tailKey(p, f.file) -> f) }.toMap
       // phantom-insert check (run per rebase head): a file added since
       // this op's snapshot that actually CONTAINS one of the merge's
       // keys makes the planned write wrong — a row the merge would
@@ -3354,7 +3361,7 @@ object LogTable {
       val snapTails = statByTail.keySet
       val phantomCheck: Manifest => Unit = { hm =>
         val phantomParts = hm.parts.map { case (p, fl) =>
-          p -> fl.filter(f => !snapTails.contains(s"$p/${f.file}"))
+          p -> fl.filter(f => !snapTails.contains(tailKey(p, f.file)))
         }.filter(_._2.nonEmpty)
         if (phantomParts.nonEmpty) {
           val pm = hm.copy(parts = phantomParts)
@@ -3490,7 +3497,7 @@ object LogTable {
       if (hitTails.isEmpty) v
       else {
         val statByTail = prev.parts.toSeq.flatMap { case (p, fl) =>
-          fl.map(f => s"$p/${f.file}" -> f) }.toMap
+          fl.map(f => tailKey(p, f.file) -> f) }.toMap
         val dvId = f"dv_v${v + 1}%08d_" +
           java.util.UUID.randomUUID().toString.take(8)
         val dvOut = s"$tableRoot/$DvDirName/$dvId"
@@ -3592,7 +3599,7 @@ object LogTable {
       if (hitTails.isEmpty) v
       else {
         val statByTail = prev.parts.toSeq.flatMap { case (p, fl) =>
-          fl.map(f => s"$p/${f.file}" -> f) }.toMap
+          fl.map(f => tailKey(p, f.file) -> f) }.toMap
         val dvId = f"dv_v${v + 1}%08d_" +
           java.util.UUID.randomUUID().toString.take(8)
         val dvOut = s"$tableRoot/$DvDirName/$dvId"
@@ -3671,7 +3678,7 @@ object LogTable {
     def keyed(m: Manifest): Map[String, String] = // dv-keyed -> tail
       m.parts.toSeq.flatMap { case (p, fl) =>
         fl.map(f =>
-          s"$p/${f.file}@${f.dv.getOrElse("")}" -> s"$p/${f.file}")
+          s"$p/${f.file}@${f.dv.getOrElse("")}" -> tailKey(p, f.file))
       }.toMap
     val ka = keyed(a)
     val kb = keyed(b)
@@ -3760,14 +3767,14 @@ object LogTable {
       // rows dead)
       def byTail(m: Manifest): Map[String, FileStat] =
         m.parts.toSeq.flatMap { case (p, fl) =>
-          fl.map(f => s"$p/${f.file}" -> f) }.toMap
+          fl.map(f => tailKey(p, f.file) -> f) }.toMap
       val curByTail = byTail(cur)
       val tgtByTail = byTail(target)
       val removes = curByTail.toSeq.collect {
         case (t, f) if !tgtByTail.get(t).contains(f) => t }
       val adds = target.parts.map { case (p, fl) =>
         p -> fl.filterNot(f =>
-          curByTail.get(s"$p/${f.file}").contains(f))
+          curByTail.get(tailKey(p, f.file)).contains(f))
       }.filter(_._2.nonEmpty)
       // the diff was computed against THIS snapshot — a lock-free DML
       // landing mid-restore must abort it, not be silently undone
@@ -3863,7 +3870,7 @@ object LogTable {
           fileKeys(prev.parts),
           snapshotV = Some(v),
           readSet = prev.parts.toSeq.flatMap { case (p, fl) =>
-            fl.map(f => s"$p/${f.file}" -> f) }.toMap)
+            fl.map(f => tailKey(p, f.file) -> f) }.toMap)
       }
     }
 
@@ -4084,7 +4091,9 @@ object LogTable {
       // 0 disables the shield and is single-writer-only.
       val ageFloor = System.currentTimeMillis() - minAgeMs
       allParts.sortBy(p => (-p.count(_ == '/'), p)).foreach { p =>
-        val dir = new org.apache.hadoop.fs.Path(root, p)
+        // "" is the root of an unpartitioned table: its unreferenced
+        // files go, the root itself never does
+        val dir = if (p.isEmpty) root else new org.apache.hadoop.fs.Path(root, p)
         val keep = referenced.getOrElse(p, Set.empty)
         if (fs.exists(dir))
           TableLog.liveFiles(fs, dir).foreach { case (f, _) =>
@@ -4101,7 +4110,7 @@ object LogTable {
         // "empty" = nothing visible left (checksum sidecars and
         // hidden markers don't keep a retired dir alive; a young
         // in-flight file under minAgeMs does)
-        if (keep.isEmpty && !anyNested && fs.exists(dir) &&
+        if (p.nonEmpty && keep.isEmpty && !anyNested && fs.exists(dir) &&
             fs.listStatus(dir).forall(st => !st.isDirectory &&
               (st.getPath.getName.startsWith(".") ||
                 st.getPath.getName.startsWith("_"))))

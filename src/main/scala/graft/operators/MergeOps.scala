@@ -5,11 +5,15 @@ import java.time.LocalDate
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
-/** M1/M2 — MERGE semantics as Spark plans, plus the sink operators M3–M6
-  * (SURVEY.md §2.9). No Delta in the jar set, so MERGE is expressed as a
-  * declarative union/anti-join plan and committed with an atomic
-  * write-temp-then-swap (the reference's staging+MERGE gives the same
-  * all-or-nothing property, docs/reference.md:193-197).
+/** M1/M2 — MERGE semantics as Spark plans, plus the CSV backup sink M5
+  * (SURVEY.md §2.9). These are the reference's plans, kept as the oracles
+  * the M1/M2 queries and the streaming twins are graded against. The
+  * sync service commits the same semantics to the warehouse through
+  * [[LogTable]]: M1 is one [[LogTable.merge]] with a windowed
+  * `deleteUnmatchedCond`, M2 and the M3/M4 truncate-and-loads
+  * (WRITE_TRUNCATE) are [[LogTable.overwrite]] — one manifest commit
+  * each, all-or-nothing like the reference's staging+MERGE
+  * (docs/reference.md:193-197).
   */
 object MergeOps {
 
@@ -33,24 +37,30 @@ object MergeOps {
     *
     * Scale: the anti-join's build side is the staging window (small —
     * days× daily volume) and broadcasts. The sync service commits the
-    * result with [[atomicSwapWrite]]; on a [[LogTable]] fact the same
-    * semantics is one [[LogTable.merge]] with `deleteUnmatchedCond`,
-    * which rewrites only the files holding matched or windowed rows.
+    * same semantics as one [[LogTable.merge]] with `deleteUnmatchedCond
+    * = refreshWindow(..)`, which rewrites only the files holding matched
+    * or windowed rows.
     */
   def mergeRefresh(fact: DataFrame, staging: DataFrame, days: Int,
                    todayOslo: LocalDate,
                    dateCol: String = "start_date_oslo",
                    keyCol: String = "id"): DataFrame = {
-    val lo = lit(java.sql.Date.valueOf(todayOslo.minusDays(days.toLong)))
-    val hi = lit(java.sql.Date.valueOf(todayOslo))
-    def inWindow(c: Column): Column = c.between(lo, hi)
-
-    val stagingW = staging.filter(inWindow(col(dateCol)))
+    val inWindow = refreshWindow(col(dateCol), days, todayOslo)
+    val stagingW = staging.filter(inWindow)
     val survivors = fact
       .join(broadcast(stagingW.select(col(keyCol))), Seq(keyCol), "left_anti")
-      .filter(!coalesce(inWindow(col(dateCol)), lit(false)))
+      .filter(!coalesce(inWindow, lit(false)))
     survivors.unionByName(stagingW)
   }
+
+  /** M1's window W = [today_oslo - days, today_oslo] on `c` (BETWEEN,
+    * inclusive; NULL for a NULL `c`) — the one definition the batch
+    * plan, the sync service's merge and the streaming refresh share.
+    * A plain conjunction of two comparisons, so LogTable's zone maps
+    * prune on it. */
+  def refreshWindow(c: Column, days: Int, todayOslo: LocalDate): Column =
+    c.between(lit(java.sql.Date.valueOf(todayOslo.minusDays(days.toLong))),
+      lit(java.sql.Date.valueOf(todayOslo)))
 
   /** M2 — full-reindex MERGE (fetch_clickup_data.py:1335-1399): update
     * matched, insert not-matched (the explicit-column INSERT of the
@@ -68,16 +78,6 @@ object MergeOps {
       .unionByName(updatedOrKept)
   }
 
-  /** M3/M4 — truncate-and-load a dimension or staging table
-    * (WRITE_TRUNCATE, fetch_clickup_data.py:971-982, 1034-1045,
-    * 1092-1116, 1162-1185, 1253-1271). Atomic like the reference's
-    * WRITE_TRUNCATE: the new content lands through [[atomicSwapWrite]],
-    * so a load whose job fails leaves the old table readable — a plain
-    * parquet overwrite deletes the old files before the job runs.
-    */
-  def truncateLoad(df: DataFrame, path: String): Unit =
-    atomicSwapWrite(df.sparkSession, df, path)
-
   /** M5 — CSV backup sink (df.to_csv, fetch_clickup_data.py:1779-1782 etc.).
     * Single file to mirror the reference's one-file backup; callers at
     * cluster scale drop the coalesce.
@@ -94,60 +94,6 @@ object MergeOps {
     val out = if (singleFile) df.coalesce(1) else df
     val dest = stamp.fold(path)(s => s"$path/$s")
     out.write.mode(SaveMode.Overwrite).option("header", "true").csv(dest)
-  }
-
-  /** M6 — idempotent ensure-table (CREATE IF NOT EXISTS with explicit schema,
-    * fetch_clickup_data.py:938-948 etc.): path-based — write an empty frame
-    * with the declared schema if the location does not exist yet.
-    *
-    * A missing `path` beside a `<path>.old` is an [[atomicSwapWrite]]
-    * interrupted between its two renames: the second rename is the
-    * commit point, so `.old` is the last committed table. It is renamed
-    * back (and the uncommitted `.tmp` dropped) instead of creating an
-    * empty table that a following merge would fill with only its window.
-    */
-  def ensureTable(spark: org.apache.spark.sql.SparkSession,
-                  schema: org.apache.spark.sql.types.StructType,
-                  path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val oldP = new org.apache.hadoop.fs.Path(path + ".old")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) {
-      if (fs.exists(oldP)) {
-        fs.delete(new org.apache.hadoop.fs.Path(path + ".tmp"), true)
-        if (!fs.rename(oldP, p))
-          sys.error(s"ensureTable: could not restore $oldP to $p")
-      } else
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-          .write.mode(SaveMode.ErrorIfExists).parquet(path)
-    }
-  }
-
-  /** Crash-safe full-table replacement: write to `<dest>.tmp`, move the
-    * old table aside, move the new one in, then drop the old. A crash at
-    * any point leaves either the old table, or the new table, or the old
-    * table recoverable at `<dest>.old` — never nothing (the reference gets
-    * the same property from staging+MERGE, docs/reference.md:193-197).
-    */
-  def atomicSwapWrite(spark: org.apache.spark.sql.SparkSession,
-                      df: DataFrame, dest: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val destP = new org.apache.hadoop.fs.Path(dest)
-    val tmpP = new org.apache.hadoop.fs.Path(dest + ".tmp")
-    val oldP = new org.apache.hadoop.fs.Path(dest + ".old")
-    val fs = destP.getFileSystem(conf)
-    fs.delete(tmpP, true)
-    df.write.mode(SaveMode.Overwrite).parquet(tmpP.toString)
-    fs.delete(oldP, true)
-    // Hadoop rename reports failure by RETURNING FALSE — an unchecked
-    // false here would either nest tmp inside a still-existing dest or
-    // delete the only surviving copy below
-    if (fs.exists(destP) && !fs.rename(destP, oldP))
-      sys.error(s"atomicSwapWrite: could not move $destP aside")
-    if (!fs.rename(tmpP, destP))
-      sys.error(s"atomicSwapWrite: could not move $tmpP into place " +
-        s"(previous table preserved at $oldP)")
-    fs.delete(oldP, true)
   }
 
   /** SCD Type 2 apply: fold a batch of updates into a slowly-changing

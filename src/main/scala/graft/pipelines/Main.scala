@@ -3,9 +3,10 @@ package graft.pipelines
 import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.GraftSession
-import graft.operators.{Dedup, MergeOps}
+import graft.operators.{LogTable, MergeOps, TableLog}
 import graft.schemas.ClickUpSchemas
 
 /** CLI mirroring the reference's six endpoints (main.py:22-207) and its
@@ -20,9 +21,14 @@ import graft.schemas.ClickUpSchemas
   *   command ∈ refresh | full_reindex | lists | tasks | accounts | apps |
   *             health | describe
   *
-  * Layout written under --warehouse (parquet; CSV backups per M5):
+  * Layout written under --warehouse (unpartitioned LogTables, every
+  * sync one manifest commit; CSV backups per M5):
   *   staging_time_entries/ fact_time_entries/ dim_lists/ dim_tasks/
   *   dim_accounts/ dim_apps/ csv_backups/<pipeline>/
+  * A table directory written before the warehouse moved onto LogTable
+  * (plain parquet, no `_graft_log`) is adopted in place on its next
+  * sync. Old versions stay on disk until [[LogTable.vacuum]]; the
+  * service itself never vacuums.
   */
 object Main {
 
@@ -53,6 +59,28 @@ object Main {
     def raw(name: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
       spark.read.schema(schema).json(s"$in/$name")
 
+    /** The LogTable at `path`'s current version (0 when absent); a
+      * plain parquet table written before the move onto LogTable is
+      * adopted in place first, so its rows stay live and vacuum never
+      * reclaims them. */
+    def adopt(path: String, statsCols: Seq[String] = Seq.empty): Long = {
+      val v = TableLog.currentVersion(spark, path)
+      val p = new org.apache.hadoop.fs.Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (v == 0L && fs.exists(p) && fs.listStatus(p).exists(st =>
+          st.isFile && !st.getPath.getName.matches("[._].*")))
+        LogTable.convert(spark, path, "", statsCols)
+      else v
+    }
+
+    /** M5 CSV backup, then the M3/M4 truncate-and-load of `table`: one
+      * overwrite commit. */
+    def load(backup: String, table: String, df: DataFrame): Unit = {
+      MergeOps.csvBackup(df, s"$wh/csv_backups/$backup", stamp = Some(stamp))
+      adopt(s"$wh/$table")
+      println(s"$table: version ${LogTable.overwrite(spark, s"$wh/$table", df, "")}")
+    }
+
     cmd match {
       case "refresh" | "full_reindex" =>
         // fact pipeline: flatten → dedup → CSV backup → staging → merge
@@ -63,54 +91,48 @@ object Main {
         // differently per sink
         val staging = Pipelines.timeEntryPipeline(
           raw("time_entries", ClickUpSchemas.rawTimeEntry)).localCheckpoint(true)
-        MergeOps.csvBackup(staging, s"$wh/csv_backups/time_entries", stamp = Some(stamp))
-        MergeOps.truncateLoad(staging, s"$wh/staging_time_entries")
-        MergeOps.ensureTable(spark, ClickUpSchemas.factTimeEntries, s"$wh/fact_time_entries")
-        val fact = spark.read.schema(ClickUpSchemas.factTimeEntries)
-          .parquet(s"$wh/fact_time_entries")
-        val merged =
-          if (cmd == "refresh") MergeOps.mergeRefresh(fact, staging, days, today)
-          else MergeOps.mergeFullReindex(fact, staging)
-        // stays a whole-table swap: on LogTable (date-partitioned, ~4 rows a day
-        // → hundreds of one-file partitions) refresh measured 1.5 → 8.8 s, 4 cores
-        MergeOps.atomicSwapWrite(spark, merged, s"$wh/fact_time_entries")
-        println(s"$cmd: fact rows = " +
-          spark.read.parquet(s"$wh/fact_time_entries").count())
+        load("time_entries", "staging_time_entries", staging)
+        // M1 is MergeOps.mergeRefresh's semantics as one merge commit
+        // that rewrites only the files holding matched or in-window rows;
+        // M2 (and M1 over an empty fact) is one overwrite
+        val fact = s"$wh/fact_time_entries"
+        val window = MergeOps.refreshWindow(col("start_date_oslo"), days, today)
+        val rows = if (cmd == "refresh") staging.filter(window) else staging
+        val v =
+          if (adopt(fact, Seq("start_date_oslo")) == 0L)
+            LogTable.init(rows, fact, "", statsCols = Seq("start_date_oslo"))
+          else if (cmd == "refresh")
+            LogTable.merge(spark, fact, rows, Seq("id"), "",
+              deleteUnmatchedCond = Some(window))
+          else LogTable.overwrite(spark, fact, rows, "")
+        println(s"$cmd: fact_time_entries version $v")
 
       case "lists" =>
-        val dim = Pipelines.denormalizeLists(
+        load("lists", "dim_lists", Pipelines.denormalizeLists(
           raw("spaces", ClickUpSchemas.rawSpace),
           raw("folders", ClickUpSchemas.rawFolder),
-          raw("lists", ClickUpSchemas.rawList))
-        MergeOps.csvBackup(dim, s"$wh/csv_backups/lists", stamp = Some(stamp))
-        MergeOps.truncateLoad(dim, s"$wh/dim_lists")
-        println(s"lists: ${spark.read.parquet(s"$wh/dim_lists").count()} rows")
+          raw("lists", ClickUpSchemas.rawList)))
 
       case "tasks" =>
-        val dim = Pipelines.transformTasks(raw("tasks", ClickUpSchemas.rawTask))
-        MergeOps.csvBackup(dim, s"$wh/csv_backups/tasks", stamp = Some(stamp))
-        MergeOps.truncateLoad(dim, s"$wh/dim_tasks")
-        println(s"tasks: ${spark.read.parquet(s"$wh/dim_tasks").count()} rows")
+        load("tasks", "dim_tasks",
+          Pipelines.transformTasks(raw("tasks", ClickUpSchemas.rawTask)))
 
       case "accounts" =>
-        val dim = Pipelines.transformAccounts(raw("accounts", ClickUpSchemas.rawTask))
-        MergeOps.csvBackup(dim, s"$wh/csv_backups/accounts", stamp = Some(stamp))
-        MergeOps.truncateLoad(dim, s"$wh/dim_accounts")
-        println(s"accounts: ${spark.read.parquet(s"$wh/dim_accounts").count()} rows")
+        load("accounts", "dim_accounts",
+          Pipelines.transformAccounts(raw("accounts", ClickUpSchemas.rawTask)))
 
       case "apps" =>
-        val dim = Pipelines.transformApps(raw("apps", ClickUpSchemas.rawTask))
-        MergeOps.csvBackup(dim, s"$wh/csv_backups/apps", stamp = Some(stamp))
-        MergeOps.truncateLoad(dim, s"$wh/dim_apps")
-        println(s"apps: ${spark.read.parquet(s"$wh/dim_apps").count()} rows")
+        load("apps", "dim_apps",
+          Pipelines.transformApps(raw("apps", ClickUpSchemas.rawTask)))
 
       case "health" =>
         // main.py:210-222 analog: session + warehouse reachability
         val tables = Seq("fact_time_entries", "dim_lists", "dim_tasks",
           "dim_accounts", "dim_apps")
         val status = tables.map { t =>
-          val n = try spark.read.parquet(s"$wh/$t").count().toString
-          catch { case _: Throwable => "absent" }
+          val n =
+            if (TableLog.currentVersion(spark, s"$wh/$t") == 0L) "absent"
+            else LogTable.read(spark, s"$wh/$t").count().toString
           s"$t=$n"
         }
         println(s"healthy ${status.mkString(" ")}")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.Coercers._
-import graft.operators.{Dedup, MergeOps}
+import graft.operators.{Dedup, LogTable, MergeOps}
 import graft.queries.QuerySpec.{sinkDir, t}
 
 /** Reference-parity query corpus: one graded query per SURVEY.md §2 operator
@@ -1036,25 +1036,19 @@ object ParityQueries {
       val dim = t(s, d, "nation")
         .join(t(s, d, "region"), col("n_regionkey") === col("r_regionkey"))
         .select(col("n_nationkey"), col("n_name"), col("r_name"))
-      val path = sinkDir(d, "m3_dim")
-      // wipe the sink so the CREATE branch of ensureTable runs every time,
-      // not just on pristine machines
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      MergeOps.ensureTable(s, dim.schema, path) // M6: create-if-not-exists
-      MergeOps.truncateLoad(dim, path)          // M3: WRITE_TRUNCATE
-      MergeOps.ensureTable(s, dim.schema, path) // M6: idempotent re-ensure
-      s.read.parquet(path).orderBy("n_nationkey")
+      val path = java.nio.file.Files.createTempDirectory("graft_m3_dim").toString + "/t"
+      LogTable.overwrite(s, path, dim.limit(0), "") // M6: create, declared schema
+      LogTable.overwrite(s, path, dim, "")          // M3: WRITE_TRUNCATE
+      LogTable.read(s, path).orderBy("n_nationkey")
     },
       Some("""SELECT n_nationkey, n_name, r_name FROM nation
              |JOIN region ON n_regionkey = r_regionkey ORDER BY n_nationkey""".stripMargin)),
 
     QuerySpec("m4_staging_load", (s, d) => {
       val staging = Dedup.latestByKey(t(s, d, "events"), Seq("user_id"), "ts", "event_id")
-      val path = sinkDir(d, "m4_staging")
-      MergeOps.truncateLoad(staging, path)
-      s.read.parquet(path).groupBy("event_type").agg(count(lit(1)).as("n"))
+      val path = java.nio.file.Files.createTempDirectory("graft_m4_staging").toString + "/t"
+      LogTable.overwrite(s, path, staging, "")
+      LogTable.read(s, path).groupBy("event_type").agg(count(lit(1)).as("n"))
         .orderBy("event_type")
     },
       Some("""WITH dd AS (SELECT * FROM events QUALIFY row_number() OVER (

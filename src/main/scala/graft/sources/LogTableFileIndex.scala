@@ -54,7 +54,7 @@ final class LogTableFileIndex(
     * [[LogTableDvRule]]) and its partition-path depth. */
   def dvIds: Seq[String] =
     m.parts.values.flatten.flatMap(_.dv).toSeq.distinct
-  def levels: Int = math.max(1, partitionSchema.length)
+  def levels: Int = partitionSchema.length
 
   /** This index with the DV debt discharged (the rule wraps the scan
     * in the anti-join and plans THIS index underneath). */
@@ -70,7 +70,7 @@ final class LogTableFileIndex(
     * them. */
   private val dirs: Seq[(String, InternalRow, Seq[FileStat])] =
     m.parts.toSeq.sortBy(_._1).map { case (p, fl) =>
-      val segs = p.split('/')
+      val segs = if (p.isEmpty) Array.empty[String] else p.split('/')
       require(segs.length == partitionSchema.length,
         s"LogTableFileIndex: partition dir '$p' has ${segs.length} " +
           s"levels, schema declares ${partitionSchema.length}")
@@ -102,7 +102,7 @@ final class LogTableFileIndex(
 
   override def inputFiles: Array[String] =
     dirs.flatMap { case (p, _, fl) =>
-      fl.map(f => s"$tableRoot/$p/${f.file}") }.toArray
+      fl.map(f => s"$tableRoot/${LogTable.tailKey(p, f.file)}") }.toArray
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression])
@@ -138,10 +138,10 @@ final class LogTableFileIndex(
       val admitted =
         if (bloomProbes.isEmpty) admitted0
         else admitted0.filter(f => LogTable.bloomAdmits(spark,
-          tableRoot, s"$p/${f.file}", f, bloomProbes))
+          tableRoot, LogTable.tailKey(p, f.file), f, bloomProbes))
       val statuses = admitted.map { f =>
         new FileStatus(f.bytes, false, 1, 128L * 1024 * 1024, 0L,
-          new Path(s"$tableRoot/$p/${f.file}"))
+          new Path(s"$tableRoot/${LogTable.tailKey(p, f.file)}"))
       }.toArray
       PartitionDirectory(row, statuses)
     }.filter(_.files.nonEmpty)
@@ -422,10 +422,12 @@ object LogTableScan {
     (schemaOf(tableRoot, m), m.copy(parts = admittedParts(m, scanPreds)))
   }
 
-  /** The file relation over `m`'s (non-empty) live set under `schema`.
-    * A uniform `k1=v1[/k2=v2...]` layout is the LogTable contract — the
+  /** The file relation over `m`'s live set under `schema`. A uniform
+    * `k1=v1[/k2=v2...]` layout is the LogTable contract — the
     * manifest's own dir keys declare the partition columns (validated
-    * uniform by [[LogTable.partColsOfManifest]]). `dvPending = true`
+    * uniform by [[LogTable.partColsOfManifest]]); root files (an
+    * unpartitioned table) and an empty live set declare none, so every
+    * column is a data column. `dvPending = true`
     * defers the deletion-vector anti-join to
     * [[graft.plans.LogTableDvRule]] (the provider path — a BaseRelation
     * cannot carry the join itself). */
@@ -433,9 +435,6 @@ object LogTableScan {
       schema: StructType, m: Manifest, dvPending: Boolean)
       : HadoopFsRelation = {
     val partCols = LogTable.partColsOfManifest(m)
-    require(partCols.nonEmpty,
-      s"LogTable.read: no partition columns in the layout — " +
-        "corrupt manifest")
     partCols.foreach(c => require(schema.fieldNames.contains(c),
       s"LogTable.read: partition column '$c' missing " +
         "from the recorded schema — corrupt manifest"))

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode,
   SparkSession}
 import org.apache.spark.sql.execution.streaming.{Offset => V1Offset,
@@ -9,7 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources.{BaseRelation,
   CreatableRelationProvider, DataSourceRegister, RelationProvider,
-  StreamSinkProvider, StreamSourceProvider, TableScan}
+  StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
   StructType}
@@ -115,21 +114,18 @@ class LogTableSource extends RelationProvider
     val path = pathOf(parameters)
     val (schema, m) = LogTableScan.snapshot(spark, path,
       asOfOf(spark, path, parameters), Seq.empty)
-    if (m.parts.isEmpty) new EmptyLogTableRelation(sqlContext, schema)
-    else {
-      // without deletion vectors the native file relation is exact;
-      // with them the anti-join needs the analysis rule — fail loudly
-      // when the session doesn't carry it (silent resurrection of
-      // deleted rows is the one unacceptable failure mode)
-      val dvPending = m.parts.values.exists(_.exists(_.dv.isDefined))
-      require(!dvPending || spark.sessionState.analyzer
-          .extendedResolutionRules.exists(_ eq graft.plans.LogTableDvRule),
-        s"logtable: $path carries deletion vectors, which the " +
-          "DataSource read path applies via " +
-          "graft.plans.LogTableDvRule — start the session with " +
-          "spark.sql.extensions=graft.GraftExtensions")
-      LogTableScan.relation(spark, path, schema, m, dvPending)
-    }
+    // without deletion vectors the native file relation is exact;
+    // with them the anti-join needs the analysis rule — fail loudly
+    // when the session doesn't carry it (silent resurrection of
+    // deleted rows is the one unacceptable failure mode)
+    val dvPending = m.parts.values.exists(_.exists(_.dv.isDefined))
+    require(!dvPending || spark.sessionState.analyzer
+        .extendedResolutionRules.exists(_ eq graft.plans.LogTableDvRule),
+      s"logtable: $path carries deletion vectors, which the " +
+        "DataSource read path applies via " +
+        "graft.plans.LogTableDvRule — start the session with " +
+        "spark.sql.extensions=graft.GraftExtensions")
+    LogTableScan.relation(spark, path, schema, m, dvPending)
   }
 
   override def createRelation(sqlContext: SQLContext, mode: SaveMode,
@@ -340,15 +336,6 @@ object LogTableSource {
   }
 }
 
-/** The schema'd empty relation an empty LogTable version reads as. */
-private[graft] final class EmptyLogTableRelation(
-    ctx: SQLContext, override val schema: StructType)
-    extends BaseRelation with TableScan {
-  override def sqlContext: SQLContext = ctx
-  override def buildScan(): RDD[Row] =
-    ctx.sparkContext.emptyRDD[Row]
-}
-
 /** The change feed as a Structured Streaming SOURCE (r14 directive
   * #3): offsets ARE table versions, so Spark's own offset log carries
   * the exactly-once contract the hand-rolled watermark file used to —
@@ -452,7 +439,7 @@ private[graft] final class LogTableChangeSource(
   private lazy val bootFiles: IndexedSeq[(String, Long)] = {
     val m = LogTable.manifest(spark, path, 1L)
     m.parts.toSeq.sortBy(_._1).flatMap { case (p, fl) =>
-      fl.sortBy(_.file).map(f => (s"$p/${f.file}", f.bytes))
+      fl.sortBy(_.file).map(f => (LogTable.tailKey(p, f.file), f.bytes))
     }.toIndexedSeq
   }
 

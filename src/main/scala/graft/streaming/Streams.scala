@@ -1,13 +1,11 @@
 package graft.streaming
 
-import java.time.LocalDate
-
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.{Dedup, MergeOps}
+import graft.operators.MergeOps
 
 /** Structured-Streaming re-expression of the reference's incremental
   * semantics (SURVEY.md §2.10): the 6-hourly scheduler-driven batch refresh
@@ -429,7 +427,8 @@ object Streams {
     * occurrence in ARRIVAL order wins — across micro-batches that is the
     * earlier batch; within one batch it follows partition order, so which
     * same-key row survives is not value-deterministic (the batch D1
-    * keep-latest variant needs the upsert in [[streamingMerge]]).
+    * keep-latest variant needs the keyed upsert of
+    * [[runStreamingLogTableMergeAvailableNow]]).
     */
   def streamingDedup(events: DataFrame, keyCols: Seq[String], tsCol: String,
                      watermark: String = "1 hour"): DataFrame =
@@ -974,39 +973,6 @@ object Streams {
     drain(sessionize(spark, normalizeTs(fileStream(spark, dir, glob, schema)),
       gapMinutes), "append")
 
-  /** Streaming upsert: each micro-batch is deduped (D1) and merged into the
-    * fact path with M1's windowed-refresh semantics via foreachBatch — the
-    * idiomatic Spark shape of the reference's staging+MERGE loop
-    * (fetch_clickup_data.py:1759-1797).
-    */
-  def streamingMerge(spark: SparkSession, entries: DataFrame, factPath: String,
-                     days: Int, todayOslo: LocalDate, checkpoint: String,
-                     sinkName: String): Unit = {
-    val q = entries.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // mirror the batch pipeline's guard (Pipelines.timeEntryPipeline /
-        // fetch_clickup_data.py:1775): dedup only when at least one `at`
-        // is non-null — an all-null-`at` micro-batch passes through
-        // unchanged, keeping stream and batch runs byte-identical
-        val staging =
-          if (batch.filter(col("at").isNotNull).isEmpty) batch
-          else Dedup.dedupTimeEntries(batch)
-        // one absent-table rule with the batch pipeline: an interrupted
-        // swap is finished, only a genuinely-absent fact starts empty, and
-        // any read error on an existing table aborts the batch — an empty
-        // `fact` here would make the merge truncate out-of-window history
-        MergeOps.ensureTable(spark, batch.schema, factPath)
-        val fact = spark.read.parquet(factPath)
-        val merged = MergeOps.mergeRefresh(fact, staging, days, todayOslo)
-        MergeOps.atomicSwapWrite(spark, merged, factPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
   /** Streaming table checksum — the streaming twin of
     * [[graft.operators.Analytics.tableChecksum]], and the purest possible
     * streaming state: BIT_XOR is commutative, associative, and its own
@@ -1532,10 +1498,8 @@ object Streams {
       dateCol: String = "start_date_oslo", keyCol: String = "id",
       allowEmptyCycle: Boolean = false): Unit =
     withReplayConfs(spark) {
-      val lo = lit(java.sql.Date.valueOf(todayOslo.minusDays(days.toLong)))
-      val hi = lit(java.sql.Date.valueOf(todayOslo))
       def inWindow(c: org.apache.spark.sql.Column) =
-        coalesce(c.between(lo, hi), lit(false))
+        coalesce(MergeOps.refreshWindow(c, days, todayOslo), lit(false))
       require(graft.operators.TableLog.currentVersion(spark, tableRoot) > 0L,
         s"runStreamingLogTableMerge: $tableRoot has no LogTable — init " +
           "the fact first")

@@ -2,9 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import graft.operators.{LogTable, TableLog}
 import graft.pipelines.Main
 
-/** End-to-end CLI test: fixture JSON in, warehouse parquet out, through the
+/** End-to-end CLI test: fixture JSON in, warehouse LogTables out, through the
   * same entry points a user of the reference would call (main.py:22-207).
   * Includes the BUG_FIX_SUMMARY.md:68-71 integration sequence: full
   * backfill → 60-day refresh → historical rows survive.
@@ -25,54 +26,70 @@ class CliPipelineSpec extends SparkSpec {
        |"task_location":{"list_id":"l1","folder_id":"f1","space_id":"s1"}}
        |""".stripMargin.replaceAll("\n", "")
 
-  /** Backfill `hist` (Jan 1) and `r1` (Feb 25), then refresh with a
-    * 7-day window at 2024-03-01: r1 updated (duration doubled, later
-    * `at`), r2 new, `hist` absent from staging but outside the window.
-    * `interruptSwap` first leaves the fact as a crash between
-    * atomicSwapWrite's two renames does: moved aside to `.old`, with
-    * no table at the path. Returns the warehouse dir. */
-  private def backfillThenRefresh(interruptSwap: Boolean): String = {
+  private val jan1 = 1704103200000L // 2024-01-01 10:00:00Z
+  private val feb25 = 1708855200000L // 2024-02-25 10:00:00Z
+  private val feb27 = 1709028000000L // 2024-02-27 10:00:00Z
+
+  /** Backfill `hist` (Jan 1) and `r1` (Feb 25) into a fresh warehouse.
+    * Returns (raw input dir, warehouse dir). */
+  private def backfill(): (String, String) = {
     val in = Files.createTempDirectory("graft_cli_in").toString
     val wh = Files.createTempDirectory("graft_cli_wh").toString
-
-    // Backfill: Jan 1 (historical) + Feb 25 (recent); epoch ms in UTC
-    val jan1 = 1704103200000L // 2024-01-01 10:00:00Z
-    val feb25 = 1708855200000L // 2024-02-25 10:00:00Z
-    val feb27 = 1709028000000L // 2024-02-27 10:00:00Z
     writeFixture(in, "time_entries", Seq(
       entry("hist", jan1, jan1, 3600000L),
       entry("r1", feb25, feb25, 3600000L)))
     Main.run(spark, "full_reindex", Map("in" -> in, "warehouse" -> wh))
-    assert(spark.read.parquet(s"$wh/fact_time_entries").count() == 2)
-    if (interruptSwap)
-      Files.move(Paths.get(wh, "fact_time_entries"),
-        Paths.get(wh, "fact_time_entries.old"))
+    assert(fact(wh).count() == 2)
+    (in, wh)
+  }
 
+  /** Refresh with a 7-day window at 2024-03-01: r1 updated (duration
+    * doubled, later `at`), r2 new, `hist` absent from staging but
+    * outside the window. */
+  private def refresh(wh: String): Unit = {
     val in2 = Files.createTempDirectory("graft_cli_in2").toString
     writeFixture(in2, "time_entries", Seq(
       entry("r1", feb25, feb25 + 1000, 7200000L),
       entry("r2", feb27, feb27, 1800000L)))
     Main.run(spark, "refresh", Map("in" -> in2, "warehouse" -> wh,
       "days" -> "7", "today" -> "2024-03-01"))
-    wh
   }
 
-  test("full_reindex then refresh preserves history (BUG_FIX integration)") {
-    val wh = backfillThenRefresh(interruptSwap = false)
-    val fact = spark.read.parquet(s"$wh/fact_time_entries")
-    val byId = fact.collect().map(r =>
+  private def fact(wh: String, asOf: Option[Long] = None) =
+    LogTable.read(spark, s"$wh/fact_time_entries", asOf)
+
+  private def hoursById(wh: String): Map[String, Double] =
+    fact(wh).collect().map(r =>
       r.getAs[String]("id") -> r.getAs[Double]("duration_hours")).toMap
-    assert(byId == Map("hist" -> 1.0, "r1" -> 2.0, "r2" -> 0.5))
+
+  test("full_reindex then refresh preserves history (BUG_FIX integration)") {
+    val (_, wh) = backfill()
+    refresh(wh)
+    assert(hoursById(wh) == Map("hist" -> 1.0, "r1" -> 2.0, "r2" -> 0.5))
     // CSV backup written (M5)
     assert(Files.walk(Paths.get(wh, "csv_backups", "time_entries"))
       .anyMatch(p => p.toString.endsWith(".csv")))
   }
 
-  test("refresh after a crash between the swap's two renames keeps history") {
-    val wh = backfillThenRefresh(interruptSwap = true)
-    val ids = spark.read.parquet(s"$wh/fact_time_entries")
-      .collect().map(_.getAs[String]("id")).sorted.toSeq
-    assert(ids == Seq("hist", "r1", "r2"))
+  test("a refresh failing at its commit point keeps the last commit") {
+    val (_, wh) = backfill()
+    TableLog.dmlCommitHook = a => if (a == "merge") sys.error("crash at commit")
+    try intercept[RuntimeException](refresh(wh))
+    finally TableLog.dmlCommitHook = _ => ()
+    assert(hoursById(wh) == Map("hist" -> 1.0, "r1" -> 1.0))
+    refresh(wh) // the retry commits
+    assert(hoursById(wh) == Map("hist" -> 1.0, "r1" -> 2.0, "r2" -> 0.5))
+  }
+
+  test("a plain-parquet fact from before LogTable is adopted with history") {
+    val (_, wh) = backfill()
+    val legacy = Files.createTempDirectory("graft_cli_legacy").toString
+    fact(wh).write.parquet(s"$legacy/fact_time_entries")
+    refresh(legacy)
+    assert(hoursById(legacy) == Map("hist" -> 1.0, "r1" -> 2.0, "r2" -> 0.5))
+    // the adopted files are version 1 and still time-travel
+    assert(fact(legacy, Some(1L)).collect().map(_.getAs[String]("id"))
+      .sorted.toSeq == Seq("hist", "r1"))
   }
 
   test("timestamped CSV backups retain history across runs (C13 retention)") {
@@ -112,10 +129,14 @@ class CliPipelineSpec extends SparkSpec {
     for (c <- Seq("lists", "tasks", "accounts", "apps"))
       Main.run(spark, c, Map("in" -> in, "warehouse" -> wh))
 
-    assert(spark.read.parquet(s"$wh/dim_lists").count() == 2)
-    assert(spark.read.parquet(s"$wh/dim_tasks").count() == 1)
-    assert(spark.read.parquet(s"$wh/dim_accounts").count() == 2) // exploded
-    assert(spark.read.parquet(s"$wh/dim_apps").count() == 1)     // filtered
-    Main.run(spark, "health", Map("warehouse" -> wh)) // must not throw
+    def n(t: String) = LogTable.read(spark, s"$wh/$t").count()
+    assert(n("dim_lists") == 2)
+    assert(n("dim_tasks") == 1)
+    assert(n("dim_accounts") == 2) // exploded
+    assert(n("dim_apps") == 1)     // filtered
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(Main.run(spark, "health", Map("warehouse" -> wh)))
+    assert(out.toString.trim == "healthy fact_time_entries=absent " +
+      "dim_lists=2 dim_tasks=1 dim_accounts=2 dim_apps=1")
   }
 }

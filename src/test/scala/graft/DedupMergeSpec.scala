@@ -1288,8 +1288,10 @@ class DedupMergeSpec extends SparkSpec {
     // model: id -> value (single partition; ids unique per table state);
     // interval 3 so reconstruction crosses parquet checkpoints mid-run
     spark.conf.set("spark.graft.logtable.checkpointInterval", "3")
-    try for (seed <- 0 until 4) {
+    try for (seed <- 0 until 6) {
       val rnd = new scala.util.Random(1000 + seed)
+      // seeds 4-5 run the same sequences over the unpartitioned layout
+      val dateCol = if (seed >= 4) "" else "start_date_oslo"
       val root = java.nio.file.Files.createTempDirectory(
         s"graft_logmb$seed").toString + "/t"
       val fs = new org.apache.hadoop.fs.Path(root)
@@ -1305,12 +1307,12 @@ class DedupMergeSpec extends SparkSpec {
       // (r15) instead of init — the whole random op sequence then
       // runs over adopted files
       if (seed % 2 == 1) {
-        frame(model).repartition(2)
-          .write.partitionBy("start_date_oslo").parquet(root)
-        LogTable.convert(spark, root, statsCols = Seq("value"),
+        frame(model).repartition(2).write
+          .partitionBy(Seq(dateCol).filter(_.nonEmpty): _*).parquet(root)
+        LogTable.convert(spark, root, dateCol, statsCols = Seq("value"),
           bloomCols = Seq("id"))
       } else {
-        LogTable.init(frame(model).repartition(2), root,
+        LogTable.init(frame(model).repartition(2), root, dateCol,
           statsCols = Seq("value"), bloomCols = Seq("id"))
       }
       history(1L) = model
@@ -1331,7 +1333,7 @@ class DedupMergeSpec extends SparkSpec {
                 .take(1 + rnd.nextInt(2))
               val ins = { val id = s"e$nextId"; nextId += 1
                 Map(id -> (rnd.nextInt(1000) + 8000).toDouble) }
-              LogTable.merge(spark, root, frame(ins), Seq("id"),
+              LogTable.merge(spark, root, frame(ins), Seq("id"), dateCol,
                 deleteMatchedKeys = Some(toDel.toDF("id")))
               model = (model -- toDel) ++ ins
             }
@@ -1353,7 +1355,7 @@ class DedupMergeSpec extends SparkSpec {
                 targetBytes = 1L << 30, parts = Some(pnames))
               catch { case _: LogTable.ConcurrentWriteException => -1L })
             val fA = Future(LogTable.append(spark, root,
-              frame(add).repartition(1)))
+              frame(add).repartition(1), dateCol))
             Await.result(fC, 180.seconds)
             Await.result(fA, 180.seconds)
             model = model ++ add
@@ -1392,7 +1394,7 @@ class DedupMergeSpec extends SparkSpec {
               val id = s"e$nextId"; nextId += 1
               id -> (rnd.nextInt(1000) + 1).toDouble
             }.toMap
-            LogTable.append(spark, root, frame(add).repartition(1))
+            LogTable.append(spark, root, frame(add).repartition(1), dateCol)
             model = model ++ add
           case 6 => // INTERLEAVED writers (r14 #4): two lock-free
             // appends race the commit CAS; both must land, in either
@@ -1405,9 +1407,9 @@ class DedupMergeSpec extends SparkSpec {
             import scala.concurrent.duration._
             import scala.concurrent.ExecutionContext.Implicits.global
             val fA = Future(LogTable.append(spark, root,
-              frame(addA).repartition(1)))
+              frame(addA).repartition(1), dateCol))
             val fB = Future(LogTable.append(spark, root,
-              frame(addB).repartition(1)))
+              frame(addB).repartition(1), dateCol))
             val vs = Seq(Await.result(fA, 180.seconds),
               Await.result(fB, 180.seconds)).sorted
             assert(vs(1) == vs(0) + 1,
@@ -1418,7 +1420,7 @@ class DedupMergeSpec extends SparkSpec {
               val id = s"e$nextId"; nextId += 1
               id -> (rnd.nextInt(1000) + 6000).toDouble
             }.toMap
-            LogTable.overwrite(spark, root, frame(fresh).repartition(1))
+            LogTable.overwrite(spark, root, frame(fresh).repartition(1), dateCol)
             model = fresh
           case 8 => // RESTAT (r15): re-derive zones, no semantic change
             LogTable.recomputeStats(spark, root)
@@ -1432,7 +1434,7 @@ class DedupMergeSpec extends SparkSpec {
               .map(k => k -> (rnd.nextInt(1000) + 2000).toDouble).toMap
             val ins = { val id = s"e$nextId"; nextId += 1
               Map(id -> (rnd.nextInt(1000) + 3000).toDouble) }
-            LogTable.merge(spark, root, frame(upd ++ ins), Seq("id"))
+            LogTable.merge(spark, root, frame(upd ++ ins), Seq("id"), dateCol)
             model = model ++ upd ++ ins
           case 2 => // DV delete by value band (never emptying the table)
             val lo = rnd.nextInt(3000).toDouble
@@ -1493,6 +1495,65 @@ class DedupMergeSpec extends SparkSpec {
       spark.conf.unset("spark.graft.logtable.footerStats")
       fs.delete(new org.apache.hadoop.fs.Path(root).getParent, true)
     } finally spark.conf.unset("spark.graft.logtable.checkpointInterval")
+  }
+
+  test("LogTable unpartitioned layout (dateCol \"\"): root data files, " +
+    "a zone-pruned windowed merge, delete, overwrite, time travel, one " +
+    "read schema for empty and non-empty snapshots, and a vacuum that " +
+    "keeps every referenced root file") {
+    import graft.operators.{LogTable, TableLog}
+    val root = java.nio.file.Files.createTempDirectory("graft_ltflat")
+      .toString + "/t"
+    val rootP = new org.apache.hadoop.fs.Path(root)
+    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def d(s: String) = java.sql.Date.valueOf(s)
+    def rows(v: Long) = LogTable.read(spark, root, Some(v))
+      .select("id", "value").as[(String, Double)].collect().toMap
+    def liveFiles(v: Long) = LogTable.manifest(spark, root, v).parts
+      .toSeq.flatMap { case (p, fl) => fl.map(f => (p, f.file)) }.toSet
+    def rootDataFiles = fs.listStatus(rootP).map(_.getPath.getName)
+      .filterNot(_.matches("[._].*")).toSet
+    // v1 + v2: one file outside the refresh window, one inside
+    LogTable.init(entries(("old", "x", d("2024-01-01"), 1.0)).coalesce(1),
+      root, "", statsCols = Seq("start_date_oslo"))
+    LogTable.append(spark, root, entries(("w1", "x", d("2024-02-26"), 2.0),
+      ("w2", "x", d("2024-02-27"), 3.0)).coalesce(1), "")
+    assert(fs.listStatus(rootP).filter(_.isDirectory).map(_.getPath.getName)
+      .toSet == Set("_graft_log"))
+    assert(liveFiles(2).map(_._1) == Set(""))
+    assert(liveFiles(2).map(_._2) == rootDataFiles)
+    // v3: M1 — w1 replaced, n1 inserted, in-window w2 deleted; the
+    // window's zone maps leave the out-of-window file untouched
+    val window = MergeOps.refreshWindow(col("start_date_oslo"), 7,
+      LocalDate.parse("2024-03-01"))
+    assert(LogTable.dmlCandidateFiles(spark, LogTable.manifest(spark, root,
+      2L), window) == (liveFiles(2) -- liveFiles(1)).map(_._2).toSeq)
+    assert(LogTable.merge(spark, root, entries(
+      ("w1", "x", d("2024-02-26"), 20.0), ("n1", "x", d("2024-02-28"), 4.0)),
+      Seq("id"), "", deleteUnmatchedCond = Some(window)) == 3L)
+    assert(rows(3) == Map("old" -> 1.0, "w1" -> 20.0, "n1" -> 4.0))
+    assert(liveFiles(1).subsetOf(liveFiles(3)))
+    // v4: deletion vector on a root file; v5: overwrite
+    LogTable.delete(spark, root, col("id") === "n1")
+    assert(rows(4) == Map("old" -> 1.0, "w1" -> 20.0))
+    LogTable.overwrite(spark, root, entries(("o1", "x", d("2024-03-01"), 5.0)), "")
+    assert(rows(5) == Map("o1" -> 5.0))
+    // empty snapshot (every zone misses) and non-empty read alike;
+    // `value` is NOT NULL in the recorded schema
+    val missed = LogTable.read(spark, root, scanPreds = Seq(
+      LogTable.StrRange("start_date_oslo", "1990-01-01", "1990-01-01")))
+    assert(missed.count() == 0L)
+    assert(missed.schema == LogTable.read(spark, root).schema)
+    // time travel, then a vacuum keeping v4 and v5
+    assert(rows(1) == Map("old" -> 1.0))
+    assert(rows(2) == Map("old" -> 1.0, "w1" -> 2.0, "w2" -> 3.0))
+    LogTable.vacuum(spark, root, keepLast = 2, minAgeMs = 0L)
+    assert(rootDataFiles == (liveFiles(4) ++ liveFiles(5)).map(_._2))
+    assert(rows(4) == Map("old" -> 1.0, "w1" -> 20.0))
+    assert(rows(5) == Map("o1" -> 5.0))
+    assert(TableLog.currentVersion(spark, root) == 5L)
+    intercept[RuntimeException](LogTable.read(spark, root, Some(3L)))
+    fs.delete(rootP.getParent, true)
   }
 
   test("LogTable concurrent appends: the data write stages OUTSIDE the " +

@@ -53,7 +53,7 @@ class HttpApiSpec extends SparkSpec {
       assert(sync.statusCode() == 200, sync.body())
       assert(sync.body().contains("\"status\":\"success\""))
       assert(sync.body().contains("\"message\""))
-      assert(spark.read.parquet(s"$wh/dim_lists").count() == 1)
+      assert(graft.operators.LogTable.read(spark, s"$wh/dim_lists").count() == 1)
 
       // refresh adds mode + days to the body (main.py:42-47); no
       // time_entries fixture here → error body must carry them too

@@ -1,11 +1,10 @@
 package graft
 
 import java.nio.file.Files
-import java.time.LocalDate
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{MergeOps, Multimodal}
+import graft.operators.{LogTable, Multimodal}
 import graft.streaming.Streams
 
 /** Structured-Streaming re-expression of the refresh loop and the
@@ -91,41 +90,6 @@ class StreamingMultimodalSpec extends SparkSpec {
       ("2024-01-16 00:00:00", 4L, 2L, 1L, 2L,
         BigDecimal((0.5 - 0.5) * math.log(1.0))
           .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)))
-  }
-
-  test("streaming foreachBatch merge equals the batch merge (M1 via watermark loop)") {
-    val factDir = Files.createTempDirectory("graft_fact").toString + "/fact"
-    val inDir = Files.createTempDirectory("graft_merge_in").toString
-    val today = LocalDate.parse("2024-03-01")
-
-    def entryDf(rows: Seq[(String, String, String, Double)]) =
-      rows.toDF("id", "at_s", "d_s", "value")
-        .withColumn("at", col("at_s").cast("timestamp"))
-        .withColumn("start_utc", col("at"))
-        .withColumn("start_date_oslo", col("d_s").cast("date"))
-        .drop("at_s", "d_s")
-
-    // seed fact: one historical + one in-window row
-    val fact0 = entryDf(Seq(
-      ("hist", "2024-01-01 10:00:00", "2024-01-01", 1.0),
-      ("r1", "2024-02-26 10:00:00", "2024-02-26", 2.0)))
-    fact0.write.parquet(factDir)
-
-    // stream a refresh batch: r1 updated (twice — dedup keeps latest), r2 new
-    val batch = entryDf(Seq(
-      ("r1", "2024-02-27 09:00:00", "2024-02-26", 10.0),
-      ("r1", "2024-02-27 10:00:00", "2024-02-26", 20.0),
-      ("r2", "2024-02-27 11:00:00", "2024-02-27", 5.0)))
-    batch.write.mode("overwrite").parquet(inDir)
-
-    val stream = spark.readStream.schema(batch.schema).parquet(inDir)
-    val ckpt = Files.createTempDirectory("graft_ckpt2").toString
-    Streams.streamingMerge(spark, stream, factDir, days = 7, todayOslo = today,
-      checkpoint = ckpt, sinkName = "unused")
-
-    val out = spark.read.parquet(factDir).orderBy("id")
-      .select("id", "value").as[(String, Double)].collect().toSeq
-    assert(out == Seq(("hist", 1.0), ("r1", 20.0), ("r2", 5.0)))
   }
 
   test("stream-stream LEFT OUTER join: matches emit, old unmatched flush, young unmatched hold") {
@@ -545,20 +509,20 @@ class StreamingMultimodalSpec extends SparkSpec {
       Multimodal.decodePpmPhash(bad), "img_id", "phash", 63, 3).count() == 0)
   }
 
-  test("M3/M6: ensureTable is idempotent and truncateLoad replaces content") {
+  test("M3/M6: overwrite creates, truncate-loads, and survives a failed load") {
     val path = Files.createTempDirectory("graft_dim").toString + "/dim"
-    val schema = Seq((1, "a")).toDF("k", "v").schema
-    MergeOps.ensureTable(spark, schema, path)
-    MergeOps.ensureTable(spark, schema, path) // second call: no-op, no error
-    assert(spark.read.parquet(path).count() == 0)
-    MergeOps.truncateLoad(Seq((1, "a"), (2, "b")).toDF("k", "v"), path)
-    MergeOps.truncateLoad(Seq((3, "c")).toDF("k", "v"), path) // WRITE_TRUNCATE
-    assert(spark.read.parquet(path).as[(Int, String)].collect().toSeq == Seq((3, "c")))
+    val dim = Seq((1, "a"), (2, "b")).toDF("k", "v")
+    LogTable.overwrite(spark, path, dim.limit(0), "") // M6: create, declared schema
+    assert(LogTable.read(spark, path).count() == 0)
+    assert(LogTable.read(spark, path).columns.toSeq == Seq("k", "v"))
+    LogTable.overwrite(spark, path, dim, "")
+    LogTable.overwrite(spark, path, Seq((3, "c")).toDF("k", "v"), "") // WRITE_TRUNCATE
+    assert(LogTable.read(spark, path).as[(Int, String)].collect().toSeq == Seq((3, "c")))
     // a load whose job fails in a task throws and leaves the old rows
     val failing = spark.range(4, 5).select(col("id").cast("int").as("k"),
       raise_error(lit("load failed")).cast("string").as("v"))
-    intercept[Exception](MergeOps.truncateLoad(failing, path))
-    assert(spark.read.parquet(path).as[(Int, String)].collect().toSeq == Seq((3, "c")))
+    intercept[Exception](LogTable.overwrite(spark, path, failing, ""))
+    assert(LogTable.read(spark, path).as[(Int, String)].collect().toSeq == Seq((3, "c")))
   }
 
   test("stream-static enrich over per-file micro-batches equals the batch join") {
