@@ -10,9 +10,34 @@ import org.apache.spark.sql.SparkSession
   *     throw;
   *   - shuffle partitions sized to the local core count (the 100 TB deploy
   *     would size this to ~2-3× total executor cores and rely on AQE
-  *     coalescing, which stays enabled).
+  *     coalescing, which stays enabled);
+  *   - a generated-code cache that holds a sync cycle's working set
+  *     ([[CodegenCacheEntries]]).
   */
 object GraftSession {
+  /** Entries in Spark's generated-code cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100; a static conf,
+    * so [[tune]] sets it on the builder). A long-lived session such as
+    * the sync service re-plans the same queries every request, and the
+    * cache is an LRU keyed by generated source: when one cycle of work
+    * compiles more distinct classes than the cache holds, every cycle
+    * evicts the classes the next one needs and recompiles them (Janino,
+    * about 25 ms a class).
+    *
+    * Sized from measurement: the `CodegenMetrics` compile count over a
+    * full perfbench run (`--seconds 15`, 4 cores) with a cache large
+    * enough that nothing is evicted. `clickup_sync` compiles 148
+    * distinct classes (116 in set-up, then 8 a cycle: the four stages
+    * whose plans carry the moved refresh-window literal, each compiled
+    * for the driver's and the executor's class loader), `query_mix` 159
+    * (111 in set-up, then 14-18 a cycle). 256 leaves 1.6x headroom over the
+    * larger; a cycle's literal-bearing classes go stale after it and are
+    * the LRU's first victims. At 100 a warm `clickup_sync` cycle
+    * recompiled 73-97 classes; at 256 it compiles 8. Neither heap nor
+    * metaspace grows measurably: `jvm.heap_peak_mb` 905 (100) and 775
+    * (256) in one traced run each, metaspace 41-47 MB either way. */
+  val CodegenCacheEntries = 256
+
   def tune(b: SparkSession.Builder, cpus: String): SparkSession.Builder = b
     .withExtensions(new GraftExtensions)
     .config("spark.sql.shuffle.partitions", cpus)
@@ -33,6 +58,7 @@ object GraftSession {
     // (QuerySpec.t truncates ns → µs, matching DuckDB/pandas readers).
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
     .config("spark.ui.enabled", "false")
 
   /** Run `body` with each of `confs` set on the session, then restore

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -199,10 +201,14 @@ object LogTable {
                                  bloomCols: Seq[String] = Seq.empty)
 
   /** Reconstructed manifests are immutable → memoize. Keyed by
-    * qualified root + version; [[manifest]] re-checks the version file
-    * exists before serving a hit, so vacuumed versions stay loud. */
+    * qualified root + version and stamped with the version file's
+    * (modification time, length); [[manifest]] stats the version file
+    * before serving a hit, so vacuumed versions stay loud and a table
+    * deleted and re-created at the same path is never served its
+    * predecessor's manifest. */
+  private final case class CachedManifest(stamp: (Long, Long), m: Manifest)
   private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Manifest]()
+    new java.util.concurrent.ConcurrentHashMap[String, CachedManifest]()
 
   private def checkpointInterval(spark: SparkSession): Int =
     spark.conf.get("spark.graft.logtable.checkpointInterval", "10").toInt
@@ -872,14 +878,19 @@ object LogTable {
                version: Long): Manifest = {
     val (fs, root) = TableLog.fsFor(spark, tableRoot)
     val ld = TableLog.logDir(root)
-    if (!fs.exists(deltaPath(ld, version)))
+    def stampOf(v: Long): Option[(Long, Long)] =
+      try {
+        val st = fs.getFileStatus(deltaPath(ld, v))
+        Some((st.getModificationTime, st.getLen))
+      } catch { case _: java.io.FileNotFoundException => None }
+    val stamp = stampOf(version).getOrElse(
       sys.error(s"LogTable: version $version of $tableRoot is not " +
         "retained (never committed, or reclaimed by vacuum) — time " +
-        "travel reaches only versions inside the vacuum retention window")
+        "travel reaches only versions inside the vacuum retention window"))
     val rootKey = fs.makeQualified(root).toString
     val key = s"$rootKey#$version"
     val cached = manifestCache.get(key)
-    if (cached != null) return cached
+    if (cached != null && cached.stamp == stamp) return cached.m
     // r19 (guide §6, verdict #1 "reuse parsed manifests"): when the
     // immediately preceding version is cached — the commit-then-read
     // and ascending version-walk patterns ([[changes]], the streaming
@@ -887,9 +898,13 @@ object LogTable {
     // delta on top of it: one KB-scale delta read instead of a
     // checkpoint parquet job plus a re-walk of every delta since. The
     // cached base is itself a faithful reconstruction (deltas are
-    // immutable), so the fold is identical to replaying from disk.
+    // immutable), so the fold is identical to replaying from disk — as
+    // long as the base's own stamp still holds.
     val prevCached =
-      if (version > 1L) manifestCache.get(s"$rootKey#${version - 1L}")
+      if (version > 1L)
+        Option(manifestCache.get(s"$rootKey#${version - 1L}"))
+          .filter(c => stampOf(version - 1L).contains(c.stamp))
+          .map(_.m).orNull
       else null
     val m = if (prevCached != null) {
       val d = parseDelta(fs, deltaPath(ld, version), version)
@@ -918,7 +933,7 @@ object LogTable {
         head.schemaDdl, parts, txns, head.bloomCols)
     }
     if (manifestCache.size > 4096) manifestCache.clear()
-    manifestCache.put(key, m)
+    manifestCache.put(key, CachedManifest(stamp, m))
     m
   }
 
@@ -3219,193 +3234,207 @@ object LogTable {
         () => upsertKeys.groupBy(keyCols.map(col): _*)
           .agg(count(lit(1)).as("__c")).filter(col("__c") > 1L)
           .limit(1).collect())
-      val delKeys = deleteMatchedKeys.map(_.select(keyCols.map(col): _*)
-        .distinct().localCheckpoint(true))
-      delKeys.foreach { dk =>
-        val overlap = dk.join(upsertKeys, keyCols, "left_semi")
-          .limit(1).collect()
-        require(overlap.isEmpty, "LogTable.merge: key " +
-          s"${overlap.headOption.mkString} is both updated and deleted " +
-          "— first-match-wins classification is the caller's job")
-      }
-      // the probe/survivor key set: updated AND matched-delete keys
-      // (a deleted row's file must rewrite too)
-      val keyFrame = delKeys.map(upsertKeys.unionByName(_))
-        .getOrElse(upsertKeys)
-      // which live files hold a matched key? names only — and when the
-      // keys carry zone maps, only zone-admitted candidates are
-      // scanned; keyScopedPartitions further restricts the probe to
-      // the updates' own partitions (see [[mergeProbeTails]])
-      val probeTails = delKeys match {
-        case None => mergeProbeTails(spark, tableRoot, prev, updates,
-          keyCols, partColsOf(dateCol), keyScopedPartitions)
-        case Some(_) => // candidates from BOTH key sets
-          mergeCandidateFiles(spark, tableRoot, prev, keyFrame, keyCols)
-            .getOrElse(fileKeys(prev.parts))
-      }
-      val hitByKey: Set[String] =
-        if (probeTails.isEmpty) Set.empty // no zone admits any key
-        else scanWithIdentity(spark, tableRoot, prev,
-            probeTails.sorted.map(t => s"$tableRoot/$t"))
-          .join(keyFrame, keyCols, "left_semi")
-          .select("__dvf").distinct().collect()
-          .map(_.getString(0)).toSet
-      val dup = try dupCheck.join() catch {
-        case e: java.util.concurrent.CompletionException =>
-          throw Option(e.getCause).getOrElse(e)
-      }
-      require(dup.isEmpty, "LogTable.merge: updates contain duplicate " +
-        s"keys (e.g. ${dup.headOption.mkString}) — multiple source rows " +
-        "would match the same target row")
-      // the "matched by source" key set for the windowed delete: the
-      // caller's full source keys when given (generic MERGE — a
-      // matched-but-untouched row must NOT read as unmatched), else
-      // the write keys (star path: updates carry every source row)
-      val nmbsKeys = deleteUnmatchedAgainst
-        .map(_.select(keyCols.map(col): _*).distinct()
-          .localCheckpoint(true))
-      updateUnmatched.foreach { case (_, sets) =>
-        // misassignments fail loudly like every other merge misuse:
-        // an unknown column would silently no-op (sets.getOrElse
-        // falls back to the existing value), and re-keying an
-        // unmatched row could duplicate a key another file holds
-        val unknown = sets.keys.filterNot(updates.columns.contains)
-        require(unknown.isEmpty, "LogTable.merge: updateUnmatched " +
-          s"assigns unknown columns ${unknown.mkString(",")}")
-        val rekeyed = sets.keys.filter(keyCols.contains)
-        require(rekeyed.isEmpty, "LogTable.merge: updateUnmatched " +
-          s"must not reassign key columns (${rekeyed.mkString(",")}) " +
-          "— re-keying an unmatched row can duplicate a live key")
-      }
-      // files holding a NOT-MATCHED-BY-SOURCE victim (delete) or
-      // target (update) rewrite too — ONE zone-pruned probe over the
-      // OR of the two windows (the hit sets overlap heavily)
-      val nmbsConds = deleteUnmatchedCond.toSeq ++
-        updateUnmatched.map(_._1).toSeq
-      val hitByNmbs: Set[String] = nmbsConds
-        .reduceLeftOption(_ || _) match {
-        case None => Set.empty
-        case Some(c) =>
-          // zone-prune each window separately (an OR extracts no
-          // conjuncts), scan their union once
-          val tails = nmbsConds.flatMap(cc =>
-            dmlCandidateFiles(spark, prev, cc,
-              tableRoot = Some(tableRoot))).distinct
-          if (tails.isEmpty) Set.empty
-          else scanWithIdentity(spark, tableRoot, prev,
-              tails.map(t => s"$tableRoot/$t"))
-            .filter(c)
-            .join(nmbsKeys.getOrElse(keyFrame), keyCols, "left_anti")
-            .select("__dvf").distinct().collect()
-            .map(_.getString(0)).toSet
-      }
-      val hitTails = hitByKey ++ hitByNmbs
-      val survivors =
-        if (hitTails.isEmpty) None
-        else Some {
-          val sv0 = scanFiles(spark, tableRoot, prev,
-            hitTails.toSeq.sorted.map(t => s"$tableRoot/$t"))
-            .join(keyFrame, keyCols, "left_anti")
-          val svCols = sv0.columns.toSeq
-          // "unmatched by source" for the NMBS actions: with a wider
-          // source key set (generic SQL MERGE), a matched-but-
-          // untouched row is NOT unmatched — mark membership once
-          val (sv, unmatched) = nmbsKeys match {
-            case None => (sv0, lit(true)) // anti keyFrame = unmatched
-            case Some(nk) =>
-              (sv0.join(nk.withColumn("__nm", lit(1)), keyCols,
-                "left"), col("__nm").isNull)
-          }
-          // delete first, then update — the CALLER composes clause
-          // order into the effective conditions (SQL first-match-wins)
-          val afterDel = deleteUnmatchedCond match {
-            case None => sv
-            case Some(c) =>
-              sv.filter(!(coalesce(c, lit(false)) && unmatched))
-          }
-          val afterUpd = updateUnmatched match {
-            case None => afterDel
-            case Some((c, sets)) =>
-              val applies = coalesce(c, lit(false)) && unmatched
-              afterDel.select(svCols.map(cn =>
-                when(applies, sets.getOrElse(cn, col(cn)))
-                  .otherwise(col(cn)).as(cn)): _*)
-          }
-          afterUpd.select(svCols.map(col): _*)
+      // every frame pinned from here on; a failed merge can never read
+      // them again, so any failure exit awaits the dup check (it reads
+      // the pin) and frees their blocks instead of waiting for the
+      // ContextCleaner (the same hygiene the SQL command applies to its
+      // own checkpoints)
+      val pinned = mutable.ArrayBuffer[DataFrame](upsertKeys)
+      try {
+        val delKeys = deleteMatchedKeys.map(_.select(keyCols.map(col): _*)
+          .distinct().localCheckpoint(true))
+        pinned ++= delKeys
+        delKeys.foreach { dk =>
+          val overlap = dk.join(upsertKeys, keyCols, "left_semi")
+            .limit(1).collect()
+          require(overlap.isEmpty, "LogTable.merge: key " +
+            s"${overlap.headOption.mkString} is both updated and deleted " +
+            "— first-match-wins classification is the caller's job")
         }
-      val newData = survivors match {
-        // under evolution the survivors (old schema) null-fill the
-        // new columns — the same semantics their files get on read
-        case Some(sv) => sv.unionByName(updates,
-          allowMissingColumns = evolveSchema)
-        case None => updates
-      }
-      val partCols = partColsOf(dateCol)
-      validatePartTypes(newData, partCols, "merge")
-      // staged adds, never a listing diff: a lock-free append's
-      // promote could land files in the same partition dirs
-      // mid-operation, and a pre/post listing would claim them
-      val (fs, root) = TableLog.fsFor(spark, tableRoot)
-      val (stagePath, stagedParts) = stageRows(spark, fs, root,
-        newData, partCols)
-      promoteStage(fs, root, stagePath, stagedParts, "merge")
-      // identity read set: every retired tail at its snapshot stat
-      val statByTail = prev.parts.toSeq.flatMap { case (p, fl) =>
-        fl.map(f => tailKey(p, f.file) -> f) }.toMap
-      // phantom-insert check (run per rebase head): a file added since
-      // this op's snapshot that actually CONTAINS one of the merge's
-      // keys makes the planned write wrong — a row the merge would
-      // have replaced (or a duplicate of a row it inserts) slipped in.
-      // Zone/bloom candidates narrow first; only admitted phantom
-      // files are scanned (O(interleaved adds), never O(table)).
-      val snapTails = statByTail.keySet
-      val phantomCheck: Manifest => Unit = { hm =>
-        val phantomParts = hm.parts.map { case (p, fl) =>
-          p -> fl.filter(f => !snapTails.contains(tailKey(p, f.file)))
-        }.filter(_._2.nonEmpty)
-        if (phantomParts.nonEmpty) {
-          val pm = hm.copy(parts = phantomParts)
-          // probe from the PINNED key frame (r16 advice): candidate
-          // pruning's distinct/bounding-box collects re-run per rebase
-          // attempt — against checkpoint blocks, never the caller's
-          // updates lineage
-          val cand = mergeCandidateFiles(spark, tableRoot, pm, keyFrame,
-              keyCols)
-            .getOrElse(fileKeys(phantomParts))
-          if (cand.nonEmpty) {
-            val clash = scanFiles(spark, tableRoot, pm,
-                cand.sorted.map(t => s"$tableRoot/$t"))
-              .join(keyFrame, keyCols, "left_semi").limit(1).count()
-            if (clash > 0L)
-              throw new ConcurrentWriteException(
-                s"LogTable.$action: a concurrent commit added rows " +
-                  "whose keys this merge reads — re-run against the " +
-                  "new head")
+        // the probe/survivor key set: updated AND matched-delete keys
+        // (a deleted row's file must rewrite too)
+        val keyFrame = delKeys.map(upsertKeys.unionByName(_))
+          .getOrElse(upsertKeys)
+        updateUnmatched.foreach { case (_, sets) =>
+          // misassignments fail loudly like every other merge misuse:
+          // an unknown column would silently no-op (sets.getOrElse
+          // falls back to the existing value), and re-keying an
+          // unmatched row could duplicate a key another file holds
+          val unknown = sets.keys.filterNot(updates.columns.contains)
+          require(unknown.isEmpty, "LogTable.merge: updateUnmatched " +
+            s"assigns unknown columns ${unknown.mkString(",")}")
+          val rekeyed = sets.keys.filter(keyCols.contains)
+          require(rekeyed.isEmpty, "LogTable.merge: updateUnmatched " +
+            s"must not reassign key columns (${rekeyed.mkString(",")}) " +
+            "— re-keying an unmatched row can duplicate a live key")
+        }
+        // the "matched by source" key set for the NOT-MATCHED-BY-SOURCE
+        // (NMBS) actions: the caller's full source keys when given
+        // (generic MERGE — a matched-but-untouched row must NOT read as
+        // unmatched), else the write keys (star path: updates carry every
+        // source row)
+        val nmbsKeys = deleteUnmatchedAgainst
+          .map(_.select(keyCols.map(col): _*).distinct()
+            .localCheckpoint(true))
+        pinned ++= nmbsKeys
+        // candidate files that may hold a matched key — zone-admitted
+        // when the keys carry zone maps; keyScopedPartitions further
+        // restricts them to the updates' own partitions (see
+        // [[mergeProbeTails]])
+        val keyTails = delKeys match {
+          case None => mergeProbeTails(spark, tableRoot, prev, updates,
+            keyCols, partColsOf(dateCol), keyScopedPartitions)
+          case Some(_) => // candidates from BOTH key sets
+            mergeCandidateFiles(spark, tableRoot, prev, keyFrame, keyCols)
+              .getOrElse(fileKeys(prev.parts))
+        }
+        // candidate files that may hold an NMBS victim (delete) or
+        // target (update): each window zone-pruned separately (an OR
+        // extracts no conjuncts)
+        val nmbsConds = deleteUnmatchedCond.toSeq ++
+          updateUnmatched.map(_._1).toSeq
+        val nmbsTails = nmbsConds.flatMap(cc =>
+          dmlCandidateFiles(spark, prev, cc, tableRoot = Some(tableRoot)))
+        // which live files rewrite? ONE scan over the union of both
+        // candidate sets marks each row's key match (and, with a wider
+        // source key set, its match by source); a file is hit when a row
+        // is matched, or lies in an NMBS window unmatched by source. The
+        // union is sound because each candidate set is a superset of its
+        // own side's hits: a row outside the key candidates matches no
+        // key, and a row outside a window's candidates fails that window.
+        val probeTails = (keyTails ++ nmbsTails).distinct.sorted
+        val hitTails: Set[String] =
+          if (probeTails.isEmpty) Set.empty // no zone admits anything
+          else {
+            val keyed = scanWithIdentity(spark, tableRoot, prev,
+                probeTails.map(t => s"$tableRoot/$t"))
+              .join(keyFrame.withColumn("__m", lit(true)), keyCols, "left")
+            val matched = col("__m").isNotNull
+            val (marked, bySource) = nmbsKeys match {
+              case None => (keyed, matched)
+              case Some(nk) => (keyed.join(nk.withColumn("__nm", lit(true)),
+                keyCols, "left"), col("__nm").isNotNull)
+            }
+            val hit = nmbsConds.reduceLeftOption(_ || _) match {
+              case None => matched
+              case Some(c) =>
+                matched || (coalesce(c, lit(false)) && !bySource)
+            }
+            marked.filter(hit).select("__dvf").distinct().collect()
+              .map(_.getString(0)).toSet
           }
-          // a NOT-MATCHED-BY-SOURCE merge READS the whole window, not
-          // just its keys: a concurrent add of an in-window row would
-          // escape the delete/update this merge contracted to perform
-          // (it serialized first) — Delta's ConcurrentAppendException
-          // for NOT-MATCHED-BY-SOURCE merges
-          (deleteUnmatchedCond.toSeq ++
-              updateUnmatched.map(_._1).toSeq).foreach { c =>
-            val delCand = dmlCandidateFiles(spark, pm, c,
-              tableRoot = Some(tableRoot))
-            if (delCand.nonEmpty) {
-              val hit = scanFiles(spark, tableRoot, pm,
-                  delCand.map(t => s"$tableRoot/$t"))
-                .filter(c).limit(1).count()
-              if (hit > 0L)
+        val dup = try dupCheck.join() catch {
+          case e: java.util.concurrent.CompletionException =>
+            throw Option(e.getCause).getOrElse(e)
+        }
+        require(dup.isEmpty, "LogTable.merge: updates contain duplicate " +
+          s"keys (e.g. ${dup.headOption.mkString}) — multiple source rows " +
+          "would match the same target row")
+        val survivors =
+          if (hitTails.isEmpty) None
+          else Some {
+            val sv0 = scanFiles(spark, tableRoot, prev,
+              hitTails.toSeq.sorted.map(t => s"$tableRoot/$t"))
+              .join(keyFrame, keyCols, "left_anti")
+            val svCols = sv0.columns.toSeq
+            // "unmatched by source" for the NMBS actions: with a wider
+            // source key set (generic SQL MERGE), a matched-but-
+            // untouched row is NOT unmatched — mark membership once
+            val (sv, unmatched) = nmbsKeys match {
+              case None => (sv0, lit(true)) // anti keyFrame = unmatched
+              case Some(nk) =>
+                (sv0.join(nk.withColumn("__nm", lit(1)), keyCols,
+                  "left"), col("__nm").isNull)
+            }
+            // delete first, then update — the CALLER composes clause
+            // order into the effective conditions (SQL first-match-wins)
+            val afterDel = deleteUnmatchedCond match {
+              case None => sv
+              case Some(c) =>
+                sv.filter(!(coalesce(c, lit(false)) && unmatched))
+            }
+            val afterUpd = updateUnmatched match {
+              case None => afterDel
+              case Some((c, sets)) =>
+                val applies = coalesce(c, lit(false)) && unmatched
+                afterDel.select(svCols.map(cn =>
+                  when(applies, sets.getOrElse(cn, col(cn)))
+                    .otherwise(col(cn)).as(cn)): _*)
+            }
+            afterUpd.select(svCols.map(col): _*)
+          }
+        val newData = survivors match {
+          // under evolution the survivors (old schema) null-fill the
+          // new columns — the same semantics their files get on read
+          case Some(sv) => sv.unionByName(updates,
+            allowMissingColumns = evolveSchema)
+          case None => updates
+        }
+        val partCols = partColsOf(dateCol)
+        validatePartTypes(newData, partCols, "merge")
+        // staged adds, never a listing diff: a lock-free append's
+        // promote could land files in the same partition dirs
+        // mid-operation, and a pre/post listing would claim them
+        val (fs, root) = TableLog.fsFor(spark, tableRoot)
+        val (stagePath, stagedParts) = stageRows(spark, fs, root,
+          newData, partCols)
+        promoteStage(fs, root, stagePath, stagedParts, "merge")
+        // identity read set: every retired tail at its snapshot stat
+        val statByTail = prev.parts.toSeq.flatMap { case (p, fl) =>
+          fl.map(f => tailKey(p, f.file) -> f) }.toMap
+        // phantom-insert check (run per rebase head): a file added since
+        // this op's snapshot that actually CONTAINS one of the merge's
+        // keys makes the planned write wrong — a row the merge would
+        // have replaced (or a duplicate of a row it inserts) slipped in.
+        // Zone/bloom candidates narrow first; only admitted phantom
+        // files are scanned (O(interleaved adds), never O(table)).
+        val snapTails = statByTail.keySet
+        val phantomCheck: Manifest => Unit = { hm =>
+          val phantomParts = hm.parts.map { case (p, fl) =>
+            p -> fl.filter(f => !snapTails.contains(tailKey(p, f.file)))
+          }.filter(_._2.nonEmpty)
+          if (phantomParts.nonEmpty) {
+            val pm = hm.copy(parts = phantomParts)
+            // probe from the PINNED key frame (r16 advice): candidate
+            // pruning's distinct/bounding-box collects re-run per rebase
+            // attempt — against checkpoint blocks, never the caller's
+            // updates lineage
+            val cand = mergeCandidateFiles(spark, tableRoot, pm, keyFrame,
+                keyCols)
+              .getOrElse(fileKeys(phantomParts))
+            if (cand.nonEmpty) {
+              val clash = scanFiles(spark, tableRoot, pm,
+                  cand.sorted.map(t => s"$tableRoot/$t"))
+                .join(keyFrame, keyCols, "left_semi").limit(1).count()
+              if (clash > 0L)
                 throw new ConcurrentWriteException(
                   s"LogTable.$action: a concurrent commit added rows " +
-                    "inside this merge's NOT-MATCHED-BY-SOURCE " +
-                    "window — re-run against the new head")
+                    "whose keys this merge reads — re-run against the " +
+                    "new head")
+            }
+            // a NOT-MATCHED-BY-SOURCE merge READS the whole window, not
+            // just its keys: a concurrent add of an in-window row would
+            // escape the delete/update this merge contracted to perform
+            // (it serialized first) — Delta's ConcurrentAppendException
+            // for NOT-MATCHED-BY-SOURCE merges
+            (deleteUnmatchedCond.toSeq ++
+                updateUnmatched.map(_._1).toSeq).foreach { c =>
+              val delCand = dmlCandidateFiles(spark, pm, c,
+                tableRoot = Some(tableRoot))
+              if (delCand.nonEmpty) {
+                val hit = scanFiles(spark, tableRoot, pm,
+                    delCand.map(t => s"$tableRoot/$t"))
+                  .filter(c).limit(1).count()
+                if (hit > 0L)
+                  throw new ConcurrentWriteException(
+                    s"LogTable.$action: a concurrent commit added rows " +
+                      "inside this merge's NOT-MATCHED-BY-SOURCE " +
+                      "window — re-run against the new head")
+              }
             }
           }
         }
-      }
-      graft.operators.TableLog.dmlCommitHook(action)
-      try
+        graft.operators.TableLog.dmlCommitHook(action)
         writeCommit(spark, tableRoot, action, prev.statsCols,
           commitDdl,
           statted(spark, tableRoot, commitDdl, prev.statsCols,
@@ -3414,13 +3443,10 @@ object LogTable {
           snapshotV = Some(v),
           readSet = hitTails.toSeq.map(t => t -> statByTail(t)).toMap,
           conflictCheck = Some(phantomCheck))
-      catch {
+      } catch {
         case e: Throwable =>
-          // an aborted merge's pinned key frames can never be read
-          // again — free their blocks instead of waiting for the
-          // ContextCleaner (the same hygiene the SQL command applies
-          // to its own checkpoints)
-          (Seq(upsertKeys) ++ delKeys.toSeq ++ nmbsKeys.toSeq).foreach(
+          scala.util.Try(dupCheck.join())
+          pinned.foreach(
             org.apache.spark.sql.graftshim.PlanShim.freeLocalCheckpoint)
           throw e
       }

@@ -3,6 +3,7 @@ package graft.tools
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, sum, xxhash64}
@@ -28,13 +29,16 @@ import graft.{GraftSession, SparkEntry}
   * plus a `noop`-sink save; persisted RDDs are dropped between runs. For
   * each run one listener records the job count, the summed job time and
   * the driver gap: wall time no job covers (planning, LogTable manifest
-  * and commit I/O, streaming trigger bookkeeping).
+  * and commit I/O, streaming trigger bookkeeping), and the generated
+  * classes compiled during the run (Spark's `CodegenMetrics` count): a
+  * warm pass that still compiles is missing the codegen cache.
   */
 object Ab {
   type Query = (SparkSession, String) => DataFrame
 
   final case class Variant(label: String, confs: Seq[(String, String)])
-  final case class Run(wallS: Double, jobs: Int, jobS: Double, gapS: Double)
+  final case class Run(wallS: Double, jobs: Int, jobS: Double, gapS: Double,
+      compiles: Long)
   /** One (query, variant) cell; `status` is "ok", "MISMATCH" or the
     * warm-pass failure, and only "ok" cells carry runs. */
   final case class Cell(query: String, variant: String, hash: Option[Long],
@@ -76,9 +80,11 @@ object Ab {
     val sc = spark.sparkContext
     ListenerShim.waitUntilEmpty(sc)
     jobs.take()
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val t0 = System.nanoTime()
     body
     val wallS = (System.nanoTime() - t0) / 1e9
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
     ListenerShim.waitUntilEmpty(sc)
     val spans = jobs.take()
     // union of the (possibly concurrent) job spans
@@ -87,7 +93,7 @@ object Ab {
         (acc + math.max(0L, e - math.max(s, end)), math.max(end, e))
     }
     Run(wallS, spans.size, spans.map { case (s, e) => e - s }.sum / 1e3,
-      math.max(0.0, wallS - coveredMs / 1e3))
+      math.max(0.0, wallS - coveredMs / 1e3), compiles)
   }
 
   private def unpersistAll(spark: SparkSession): Unit =
@@ -137,8 +143,9 @@ object Ab {
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
 
-  /** One line per cell: medians of wall, jobs, job time and gap, and the
-    * median per-pass wall ratio against `base`. */
+  /** One line per cell: medians of wall, jobs, job time, gap and
+    * compiled classes, and the median per-pass wall ratio against
+    * `base`. */
   def report(cells: Seq[Cell]): Seq[String] = {
     val base = cells.filter(_.variant == Base.label).map(c => c.query -> c).toMap
     cells.map { c =>
@@ -151,7 +158,9 @@ object Ab {
         f"$head wall=${median(c.runs.map(_.wallS))}%.3fs " +
           f"jobs=${median(c.runs.map(_.jobs.toDouble))}%.0f " +
           f"jobTime=${median(c.runs.map(_.jobS))}%.3fs " +
-          f"gap=${median(c.runs.map(_.gapS))}%.3fs ratio=$ratio%.3f"
+          f"gap=${median(c.runs.map(_.gapS))}%.3fs " +
+          f"compiles=${median(c.runs.map(_.compiles.toDouble))}%.0f " +
+          f"ratio=$ratio%.3f"
       }
     }
   }

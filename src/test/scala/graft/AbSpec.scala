@@ -30,7 +30,8 @@ class AbSpec extends SparkSpec {
     assert(same.hash == base.hash)
     assert(base.runs.size == Ab.Passes && same.runs.size == Ab.Passes)
     assert((base.runs ++ same.runs).forall(r =>
-      r.wallS > 0 && r.jobs >= 1 && r.jobS >= 0 && r.gapS >= 0))
+      r.wallS > 0 && r.jobs >= 1 && r.jobS >= 0 && r.gapS >= 0 &&
+        r.compiles >= 0))
 
     assert(changed.status == "MISMATCH")
     assert(changed.hash.nonEmpty && changed.hash != base.hash)
@@ -43,6 +44,7 @@ class AbSpec extends SparkSpec {
     val lines = Ab.report(cells)
     assert(lines.size == 3)
     assert(lines(2).contains("MISMATCH") && !lines(2).contains("wall="))
-    assert(lines.take(2).forall(l => l.contains("wall=") && l.contains("ratio=")))
+    assert(lines.take(2).forall(l => l.contains("wall=") &&
+      l.contains("compiles=") && l.contains("ratio=")))
   }
 }

@@ -18,6 +18,24 @@ class CliPipelineSpec extends SparkSpec {
     Files.writeString(d.resolve("part-0.json"), lines.mkString("\n"))
   }
 
+  private val dims = Seq("lists", "tasks", "accounts", "apps")
+
+  /** Raw JSON for the four dimension syncs. */
+  private def writeDims(in: String): Unit = {
+    writeFixture(in, "spaces", Seq("""{"id":"s1","name":"S","archived":false}"""))
+    writeFixture(in, "folders", Seq("""{"id":"f1","name":"F","space_id":"s1","archived":false}"""))
+    writeFixture(in, "lists", Seq(
+      """{"id":"l1","name":"L","space_id":"s1","folder_id":"f1","archived":false}""",
+      """{"id":"l2","name":"Root","space_id":"s1","folder_id":"","archived":false}"""))
+    writeFixture(in, "tasks", Seq(
+      """{"id":"t1","name":"T","time_estimate":"3600000","status":{"status":"open","type":"open"},"space_id":"s1","space_name":"S","folder_id":"","folder_name":"","list_id":"l1","list_name":"L"}"""))
+    writeFixture(in, "accounts", Seq(
+      """{"id":"a1","name":"Acme","status":{"status":"active","type":"open"},"custom_fields":[{"id":"00aeeab8-926e-4c46-8299-99f973287b6e","value":"l1, l2"}]}"""))
+    writeFixture(in, "apps", Seq(
+      """{"id":"app1","name":"Portal","custom_item_id":1005,"status":{"status":"live","type":"open"},"custom_fields":[]}""",
+      """{"id":"x","name":"NotApp","custom_item_id":1}"""))
+  }
+
   private def entry(id: String, startMs: Long, atMs: Long, durMs: Long) =
     s"""{"id":"$id","start":"$startMs","end":"${startMs + durMs}","duration":"$durMs",
        |"at":"$atMs","billable":true,"description":"work","source":"clickup",
@@ -113,20 +131,8 @@ class CliPipelineSpec extends SparkSpec {
   test("dimension pipelines write all four dims; health reports them") {
     val in = Files.createTempDirectory("graft_dim_in").toString
     val wh = Files.createTempDirectory("graft_dim_wh").toString
-    writeFixture(in, "spaces", Seq("""{"id":"s1","name":"S","archived":false}"""))
-    writeFixture(in, "folders", Seq("""{"id":"f1","name":"F","space_id":"s1","archived":false}"""))
-    writeFixture(in, "lists", Seq(
-      """{"id":"l1","name":"L","space_id":"s1","folder_id":"f1","archived":false}""",
-      """{"id":"l2","name":"Root","space_id":"s1","folder_id":"","archived":false}"""))
-    writeFixture(in, "tasks", Seq(
-      """{"id":"t1","name":"T","time_estimate":"3600000","status":{"status":"open","type":"open"},"space_id":"s1","space_name":"S","folder_id":"","folder_name":"","list_id":"l1","list_name":"L"}"""))
-    writeFixture(in, "accounts", Seq(
-      """{"id":"a1","name":"Acme","status":{"status":"active","type":"open"},"custom_fields":[{"id":"00aeeab8-926e-4c46-8299-99f973287b6e","value":"l1, l2"}]}"""))
-    writeFixture(in, "apps", Seq(
-      """{"id":"app1","name":"Portal","custom_item_id":1005,"status":{"status":"live","type":"open"},"custom_fields":[]}""",
-      """{"id":"x","name":"NotApp","custom_item_id":1}"""))
-
-    for (c <- Seq("lists", "tasks", "accounts", "apps"))
+    writeDims(in)
+    for (c <- dims)
       Main.run(spark, c, Map("in" -> in, "warehouse" -> wh))
 
     def n(t: String) = LogTable.read(spark, s"$wh/$t").count()
@@ -138,5 +144,51 @@ class CliPipelineSpec extends SparkSpec {
     Console.withOut(out)(Main.run(spark, "health", Map("warehouse" -> wh)))
     assert(out.toString.trim == "healthy fact_time_entries=absent " +
       "dim_lists=2 dim_tasks=1 dim_accounts=2 dim_apps=1")
+  }
+
+  test("a warm sync cycle reuses the previous cycle's generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.functions.{col, count, countDistinct, lit,
+      round, sum, when}
+    val in = Files.createTempDirectory("graft_warm_in").toString
+    val wh = Files.createTempDirectory("graft_warm_wh").toString
+    writeDims(in)
+    val day = 86400000L
+    writeFixture(in, "time_entries", (0 until 12).map(i =>
+      entry(s"e$i", feb25 - 6 * day + i * day, feb25, 3600000L)))
+    Main.run(spark, "full_reindex", Map("in" -> in, "warehouse" -> wh))
+    def table(t: String) = LogTable.read(spark, s"$wh/$t")
+    // the sync service's request mix: a refresh, the four dimension
+    // syncs, and the benchmark's three downstream reads
+    def cycle(today: String): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Main.run(spark, "refresh", Map("in" -> in, "warehouse" -> wh,
+        "days" -> "7", "today" -> today))
+      for (c <- dims) Main.run(spark, c, Map("in" -> in, "warehouse" -> wh))
+      Seq(
+        table("fact_time_entries")
+          .groupBy(col("task_location_list_id").as("list_id"))
+          .agg(sum("duration_ms").as("ms"), count(lit(1)).as("n"))
+          .join(table("dim_lists"), "list_id"),
+        table("dim_tasks")
+          .select(col("task_id"),
+            round(col("time_estimate_hrs") * 100).cast("bigint").as("est"))
+          .join(table("fact_time_entries").groupBy("task_id")
+            .agg(sum("duration_ms").as("ms")), "task_id"),
+        table("fact_time_entries").groupBy("user_id")
+          .agg(count(lit(1)).as("n"),
+            sum(when(col("billable"), 1).otherwise(0)).as("nb"),
+            countDistinct("task_id").as("nt"))
+      ).foreach(_.write.format("noop").mode("overwrite").save())
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    val cold = cycle("2024-03-01")
+    val warm = cycle("2024-03-02")
+    // only the refresh plans that carry the moved window literal
+    // compile again: four codegen stages (the pinned update keys, the
+    // merge probe, and the survivor and update halves of the staged
+    // write), each compiled once for the driver's class loader and once
+    // for the executor's
+    assert(warm <= 8L, s"warm cycle compiled $warm classes (cold $cold)")
   }
 }

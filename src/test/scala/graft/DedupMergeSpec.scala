@@ -3793,4 +3793,132 @@ class DedupMergeSpec extends SparkSpec {
     assert(!graft.operators.LogTable.zoneAdmits(fClean,
       NumRange("v", 100.0, 200.0)))
   }
+
+  test("LogTable manifest cache: a table deleted and re-created at the " +
+    "same path reads its own rows, never the old manifest") {
+    import graft.operators.LogTable
+    val root = java.nio.file.Files.createTempDirectory("graft_ltrecreate")
+      .toString + "/t"
+    val rootP = new org.apache.hadoop.fs.Path(root)
+    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val d1 = java.sql.Date.valueOf("2024-01-01")
+    def ids = LogTable.read(spark, root).select("id").as[String]
+      .collect().toSet
+    LogTable.init(entries(("old", "x", d1, 1.0)).coalesce(1), root, "")
+    assert(ids == Set("old"))
+    fs.delete(rootP, true)
+    LogTable.init(entries(("n1", "x", d1, 2.0), ("n2", "x", d1, 3.0))
+      .coalesce(1), root, "")
+    assert(ids == Set("n1", "n2"))
+    fs.delete(rootP.getParent, true)
+  }
+
+  test("LogTable.merge frees every pinned key frame on a failure exit: " +
+    "a failing updates frame and duplicate keys leave no persisted RDD") {
+    import graft.operators.LogTable
+    val root = java.nio.file.Files.createTempDirectory("graft_ltmrgfail")
+      .toString + "/t"
+    val d1 = java.sql.Date.valueOf("2024-01-01")
+    LogTable.init(entries(("a", "x", d1, 1.0)).coalesce(1), root, "")
+    def noLeak(merge: => Long): Unit = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      intercept[Exception](merge)
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"merge left persisted RDDs $leaked")
+    }
+    // the key column computes; `value` throws only when the merge
+    // stages the new rows, after every key frame is pinned
+    val boom = udf((x: Double) =>
+      if (x > 0) throw new IllegalStateException("boom") else x)
+    val bad = entries(("a", "y", d1, 5.0))
+      .withColumn("value", boom(col("value")))
+    noLeak(LogTable.merge(spark, root, bad, Seq("id"), ""))
+    noLeak(LogTable.merge(spark, root, bad, Seq("id"), "",
+      deleteUnmatchedCond = Some(col("start_date_oslo") >= lit(d1)),
+      deleteUnmatchedAgainst = Some(Seq("a", "b").toDF("id"))))
+    // the duplicate-key check fails after the probe
+    noLeak(LogTable.merge(spark, root, entries(("a", "y", d1, 5.0),
+      ("a", "z", d1, 6.0)), Seq("id"), ""))
+    assert(LogTable.read(spark, root).select("id", "value")
+      .as[(String, Double)].collect().toSeq == Seq(("a", 1.0)))
+    val dir = new org.apache.hadoop.fs.Path(root).getParent
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
+  }
+
+  test("LogTable.merge's one probe rewrites exactly the files holding a " +
+    "matched key or an unmatched in-window row, for deleteUnmatchedCond, " +
+    "deleteUnmatchedAgainst and updateUnmatched") {
+    import graft.operators.LogTable
+    def d(s: String) = java.sql.Date.valueOf(s)
+    val window = MergeOps.refreshWindow(col("start_date_oslo"), 7,
+      LocalDate.parse("2024-03-01"))
+    val updates = entries(("a1", "y", d("2024-02-25"), 10.0),
+      ("c1", "y", d("2024-02-26"), 30.0), ("n1", "y", d("2024-02-28"), 9.0))
+    // file A: only a matched key (out of the window); B: only an
+    // unmatched in-window row; C: both; D: neither
+    val files = Seq(
+      "A" -> Seq(("a1", "x", d("2024-01-10"), 1.0)),
+      "B" -> Seq(("b1", "x", d("2024-02-26"), 2.0)),
+      "C" -> Seq(("c1", "x", d("2024-01-15"), 3.0),
+        ("c2", "x", d("2024-02-27"), 4.0)),
+      "D" -> Seq(("d1", "x", d("2024-01-20"), 5.0)))
+    /** A fresh 4-file table; returns (root, file tail -> label). */
+    def table(): (String, Map[String, String]) = {
+      val root = java.nio.file.Files.createTempDirectory("graft_ltprobe")
+        .toString + "/t"
+      val labels = files.zipWithIndex.map { case ((label, rs), i) =>
+        val df = entries(rs: _*).coalesce(1)
+        if (i == 0) LogTable.init(df, root, "",
+          statsCols = Seq("start_date_oslo"))
+        else LogTable.append(spark, root, df, "")
+        val added = LogTable.manifest(spark, root, i + 1L).parts("")
+          .map(_.file).toSet -- (if (i == 0) Set.empty[String]
+            else LogTable.manifest(spark, root, i.toLong).parts("")
+              .map(_.file).toSet)
+        assert(added.size == 1)
+        added.head -> label
+      }.toMap
+      (root, labels)
+    }
+    def rows(root: String) = LogTable.read(spark, root)
+      .select("id", "value").as[(String, Double)].collect().toMap
+    /** Labels of the files the merge at version 5 removed. */
+    def removed(root: String, labels: Map[String, String]) =
+      (LogTable.manifest(spark, root, 4L).parts("").map(_.file).toSet --
+        LogTable.manifest(spark, root, 5L).parts("").map(_.file))
+        .map(labels)
+    // deleteUnmatchedCond: the M1 refresh, checked against MergeOps'
+    // DataFrame algebra over the same rows
+    val (r1, l1) = table()
+    val before = LogTable.read(spark, r1)
+    val want = MergeOps.mergeRefresh(before.localCheckpoint(true), updates,
+      7, LocalDate.parse("2024-03-01"))
+      .select("id", "value").as[(String, Double)].collect().toMap
+    LogTable.merge(spark, r1, updates, Seq("id"), "",
+      deleteUnmatchedCond = Some(window))
+    assert(removed(r1, l1) == Set("A", "B", "C"))
+    assert(rows(r1) == want)
+    assert(want == Map("a1" -> 10.0, "c1" -> 30.0, "n1" -> 9.0,
+      "d1" -> 5.0))
+    // deleteUnmatchedAgainst: b1 is matched by source (untouched), so B
+    // is not rewritten; c2 is still unmatched and goes
+    val (r2, l2) = table()
+    LogTable.merge(spark, r2, updates, Seq("id"), "",
+      deleteUnmatchedCond = Some(window),
+      deleteUnmatchedAgainst = Some(Seq("a1", "c1", "n1", "b1").toDF("id")))
+    assert(removed(r2, l2) == Set("A", "C"))
+    assert(rows(r2) == Map("a1" -> 10.0, "c1" -> 30.0, "n1" -> 9.0,
+      "b1" -> 2.0, "d1" -> 5.0))
+    // updateUnmatched: the unmatched in-window rows are rewritten
+    val (r3, l3) = table()
+    LogTable.merge(spark, r3, updates, Seq("id"), "",
+      updateUnmatched = Some((window, Map("value" -> lit(-1.0)))))
+    assert(removed(r3, l3) == Set("A", "B", "C"))
+    assert(rows(r3) == Map("a1" -> 10.0, "c1" -> 30.0, "n1" -> 9.0,
+      "b1" -> -1.0, "c2" -> -1.0, "d1" -> 5.0))
+    for (r <- Seq(r1, r2, r3)) {
+      val p = new org.apache.hadoop.fs.Path(r).getParent
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
 }
