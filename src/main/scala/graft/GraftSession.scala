@@ -12,7 +12,12 @@ import org.apache.spark.sql.SparkSession
   *     would size this to ~2-3× total executor cores and rely on AQE
   *     coalescing, which stays enabled);
   *   - a generated-code cache that holds a sync cycle's working set
-  *     ([[CodegenCacheEntries]]).
+  *     ([[CodegenCacheEntries]]);
+  *   - `file:` bound to [[NoForkLocalFileSystem]] (`FileSystem`) and
+  *     [[NoForkLocalFs]] (`FileContext`), which spawn no `chmod` or
+  *     `readlink` per file. Hadoop caches `FileSystem` instances by
+  *     scheme and user, not by conf: a `file:` instance created in this
+  *     JVM before the session keeps Hadoop's class.
   */
 object GraftSession {
   /** Entries in Spark's generated-code cache
@@ -59,6 +64,10 @@ object GraftSession {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
     .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+    // `file:` without a child process per file (NoForkRawLocalFileSystem)
+    .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+      classOf[NoForkLocalFs].getName)
     .config("spark.ui.enabled", "false")
 
   /** Run `body` with each of `confs` set on the session, then restore

@@ -2208,15 +2208,23 @@ object LogTable {
     * file — a reader sees the old table or the new one, never a mix,
     * and the old version still time-travels until [[vacuum]]. Falls
     * back to [[init]] semantics when the table has no commits yet.
-    * Schema evolution stays add-only ([[evolvedDdl]]). */
+    * Schema evolution stays add-only ([[evolvedDdl]]).
+    *
+    * `commitGate` runs once the rows are staged and before anything is
+    * promoted or committed: a caller that overlaps this write with work
+    * that must land first (the sync service's CSV backup) awaits it
+    * there. When the gate throws, the stage dir is dropped and nothing
+    * commits. */
   def overwrite(spark: SparkSession, tableRoot: String, rows: DataFrame,
-                dateCol: String = "start_date_oslo"): Long = {
+                dateCol: String = "start_date_oslo",
+                commitGate: () => Unit = () => ()): Long = {
     val partCols = partColsOf(dateCol)
     validatePartTypes(rows, partCols, "overwrite")
     val (fs, root) = TableLog.fsFor(spark, tableRoot)
     val (stagePath, stagedParts) = stageRows(spark, fs, root, rows,
       partCols)
     try {
+      commitGate()
       // lock-free like append: the CAS loop rebases the removes
       // against each attempt's head, so an interleaved append's files
       // are retired too — overwrite means the whole table as of the
@@ -3146,7 +3154,11 @@ object LogTable {
     * absent from the map keep their values; expressions reference
     * target columns only — they evaluate over the target scan).
     * Composable with `deleteUnmatchedCond`: the delete is checked
-    * FIRST (clause order is the caller's contract). */
+    * FIRST (clause order is the caller's contract).
+    *
+    * `commitGate`: as [[overwrite]]'s — run after the new data is
+    * staged and before it is promoted; a throwing gate drops the stage
+    * dir and the merge commits nothing. */
   def merge(spark: SparkSession, tableRoot: String, updates: DataFrame,
             keyCols: Seq[String],
             dateCol: String = "start_date_oslo",
@@ -3159,7 +3171,8 @@ object LogTable {
             deleteUnmatchedAgainst: Option[DataFrame] = None,
             updateUnmatched: Option[(org.apache.spark.sql.Column,
               Map[String, org.apache.spark.sql.Column])] = None,
-            evolveSchema: Boolean = false): Long =
+            evolveSchema: Boolean = false,
+            commitGate: () => Unit = () => ()): Long =
     // LOCK-FREE (r15 directive #2): the heavy probe + staging run
     // against this op's snapshot; the commit rides the CAS loop with
     // the FileStat-identity read set + the phantom-insert conflict
@@ -3378,6 +3391,12 @@ object LogTable {
         val (fs, root) = TableLog.fsFor(spark, tableRoot)
         val (stagePath, stagedParts) = stageRows(spark, fs, root,
           newData, partCols)
+        try commitGate()
+        catch {
+          case e: Throwable =>
+            try fs.delete(stagePath, true) catch { case _: Throwable => () }
+            throw e
+        }
         promoteStage(fs, root, stagePath, stagedParts, "merge")
         // identity read set: every retired tail at its snapshot stat
         val statByTail = prev.parts.toSeq.flatMap { case (p, fl) =>

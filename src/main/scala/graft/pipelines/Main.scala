@@ -1,8 +1,13 @@
 package graft.pipelines
 
 import java.time.LocalDate
+import java.util.concurrent.{CompletableFuture, CompletionException,
+  Executors}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, SparkSession, classic}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.col
 
 import graft.GraftSession
@@ -29,8 +34,38 @@ import graft.schemas.ClickUpSchemas
   * (plain parquet, no `_graft_log`) is adopted in place on its next
   * sync. Old versions stay on disk until [[LogTable.vacuum]]; the
   * service itself never vacuums.
+  *
+  * A sync's sinks overlap and its commits keep the reference's order:
+  * each sink starts as soon as its input exists (the CSV backup beside
+  * the table write; for the fact syncs the backup, the staging load and
+  * the fact write, all from one pinned frame), and each commit is gated
+  * on the sinks before it, so a failure at any point leaves a prefix of
+  * backup → staging → fact committed. Every started sink is awaited
+  * before `run` returns or throws, and only the calling thread prints.
   */
 object Main {
+
+  /** Sink threads. A cached pool: a commit gate blocked on an earlier
+    * sink never holds a thread that sink needs, as a small fixed pool
+    * (or `ForkJoinPool.commonPool`) could. Idle threads exit after a
+    * minute. */
+  private val sinkPool = Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-sync-sink")
+    t.setDaemon(true)
+    t
+  }
+
+  /** Start `body` on a sink thread, with the caller's session and Spark
+    * local properties. */
+  private def start[T](spark: SparkSession)(body: => T): CompletableFuture[T] =
+    SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[classic.SparkSession], sinkPool)(body)
+
+  /** `f`'s result, rethrowing the sink's own failure. */
+  private def await[T](f: CompletableFuture[T]): T =
+    try f.join() catch {
+      case e: CompletionException => throw Option(e.getCause).getOrElse(e)
+    }
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty || args(0) == "describe") { println(describe); return }
@@ -73,13 +108,21 @@ object Main {
       else v
     }
 
-    /** M5 CSV backup, then the M3/M4 truncate-and-load of `table`: one
-      * overwrite commit. */
-    def load(backup: String, table: String, df: DataFrame): Unit = {
-      MergeOps.csvBackup(df, s"$wh/csv_backups/$backup", stamp = Some(stamp))
-      adopt(s"$wh/$table")
-      println(s"$table: version ${LogTable.overwrite(spark, s"$wh/$table", df, "")}")
+    /** M5 CSV backup beside the M3/M4 truncate-and-load of `table`: one
+      * overwrite commit, gated on the backup. Returns the version. */
+    def load(backup: String, table: String, df: DataFrame): Long = {
+      val backedUp = start(spark)(MergeOps.csvBackup(df,
+        s"$wh/csv_backups/$backup", stamp = Some(stamp)))
+      try {
+        adopt(s"$wh/$table")
+        LogTable.overwrite(spark, s"$wh/$table", df, "",
+          commitGate = () => await(backedUp))
+      } finally Try(backedUp.join())
     }
+
+    /** A dimension sync: `dim_<name>`, backed up under `<name>`. */
+    def dim(name: String, df: DataFrame): Unit =
+      println(s"dim_$name: version ${load(name, s"dim_$name", df)}")
 
     cmd match {
       case "refresh" | "full_reindex" =>
@@ -91,38 +134,46 @@ object Main {
         // differently per sink
         val staging = Pipelines.timeEntryPipeline(
           raw("time_entries", ClickUpSchemas.rawTimeEntry)).localCheckpoint(true)
-        load("time_entries", "staging_time_entries", staging)
+        val staged = start(spark)(
+          load("time_entries", "staging_time_entries", staging))
         // M1 is MergeOps.mergeRefresh's semantics as one merge commit
         // that rewrites only the files holding matched or in-window rows;
-        // M2 (and M1 over an empty fact) is one overwrite
+        // M2 (and M1 over an empty fact) is one overwrite. The fact write
+        // runs beside the staging load and commits after it
         val fact = s"$wh/fact_time_entries"
         val window = MergeOps.refreshWindow(col("start_date_oslo"), days, today)
         val rows = if (cmd == "refresh") staging.filter(window) else staging
+        val afterStaging = () => { await(staged); () }
         val v =
-          if (adopt(fact, Seq("start_date_oslo")) == 0L)
-            LogTable.init(rows, fact, "", statsCols = Seq("start_date_oslo"))
-          else if (cmd == "refresh")
-            LogTable.merge(spark, fact, rows, Seq("id"), "",
-              deleteUnmatchedCond = Some(window))
-          else LogTable.overwrite(spark, fact, rows, "")
+          try {
+            if (adopt(fact, Seq("start_date_oslo")) == 0L) {
+              await(staged)
+              LogTable.init(rows, fact, "", statsCols = Seq("start_date_oslo"))
+            } else if (cmd == "refresh")
+              LogTable.merge(spark, fact, rows, Seq("id"), "",
+                deleteUnmatchedCond = Some(window), commitGate = afterStaging)
+            else LogTable.overwrite(spark, fact, rows, "",
+              commitGate = afterStaging)
+          } finally Try(staged.join())
+            .foreach(sv => println(s"staging_time_entries: version $sv"))
         println(s"$cmd: fact_time_entries version $v")
 
       case "lists" =>
-        load("lists", "dim_lists", Pipelines.denormalizeLists(
+        dim("lists", Pipelines.denormalizeLists(
           raw("spaces", ClickUpSchemas.rawSpace),
           raw("folders", ClickUpSchemas.rawFolder),
           raw("lists", ClickUpSchemas.rawList)))
 
       case "tasks" =>
-        load("tasks", "dim_tasks",
+        dim("tasks",
           Pipelines.transformTasks(raw("tasks", ClickUpSchemas.rawTask)))
 
       case "accounts" =>
-        load("accounts", "dim_accounts",
+        dim("accounts",
           Pipelines.transformAccounts(raw("accounts", ClickUpSchemas.rawTask)))
 
       case "apps" =>
-        load("apps", "dim_apps",
+        dim("apps",
           Pipelines.transformApps(raw("apps", ClickUpSchemas.rawTask)))
 
       case "health" =>

@@ -1,9 +1,14 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.graftshim.ListenerShim
 
 import graft.operators.{LogTable, TableLog}
 import graft.pipelines.Main
+import graft.streaming.Streams
 
 /** End-to-end CLI test: fixture JSON in, warehouse LogTables out, through the
   * same entry points a user of the reference would call (main.py:22-207).
@@ -190,5 +195,129 @@ class CliPipelineSpec extends SparkSpec {
     // write), each compiled once for the driver's class loader and once
     // for the executor's
     assert(warm <= 8L, s"warm cycle compiled $warm classes (cold $cold)")
+  }
+
+  /** Command lines of the child processes this JVM starts while `body`
+    * runs (JFR's `jdk.ProcessStart`). */
+  private def processStarts(body: => Unit): Seq[String] = {
+    val rec = new jdk.jfr.Recording()
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try body finally rec.stop()
+      val f = Files.createTempFile("graft_spawns", ".jfr")
+      try {
+        rec.dump(f)
+        jdk.jfr.consumer.RecordingFile.readAllEvents(f).asScala.toSeq
+          .map(_.getString("command"))
+      } finally Files.delete(f)
+    } finally rec.close()
+  }
+
+  private def tree(root: String): Seq[Path] =
+    Files.walk(Paths.get(root)).iterator().asScala.toSeq
+
+  /** No Spark job of a finished `Main.run` is still running, and no
+    * staged write is left under `wh`. */
+  private def assertSettled(wh: String): Unit = {
+    ListenerShim.waitUntilEmpty(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    val stages = tree(wh).filter(_.getFileName.toString
+      .startsWith(".stage_append_"))
+    assert(stages.isEmpty, s"stage dirs left: $stages")
+  }
+
+  test("file: binds to the no-fork local file system; a dimension sync " +
+      "and a streaming drain start no process") {
+    import org.apache.hadoop.fs.{FileContext, FileSystem}
+    import org.apache.hadoop.fs.permission.FsPermission
+    import org.apache.spark.sql.functions.{count, lit}
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(FileSystem.get(new java.net.URI("file:///"), conf).getClass ==
+      classOf[NoForkLocalFileSystem])
+    assert(FileContext.getFileContext(conf).getDefaultFileSystem.getClass ==
+      classOf[NoForkLocalFs])
+    val in = Files.createTempDirectory("graft_nofork_in").toString
+    val wh = Files.createTempDirectory("graft_nofork_wh").toString
+    writeDims(in)
+    val events = Files.createTempDirectory("graft_nofork_ev").toString
+    Files.writeString(Paths.get(events, "part-0.json"),
+      (0 until 20).map(i => s"""{"k":"k${i % 3}"}""").mkString("\n"))
+    // a first sync pays the JVM's one-time spawns (Spark's process-tree
+    // metrics ask `getconf PAGESIZE` once); the counted pass is warm
+    Main.run(spark, "tasks", Map("in" -> in, "warehouse" -> wh))
+    var drained = Map.empty[String, Long]
+    val spawned = processStarts {
+      Main.run(spark, "tasks", Map("in" -> in, "warehouse" -> wh))
+      // an aggregating drain: offsets, commits and state-store deltas
+      // all write through FileContext
+      drained = Streams.drain(spark.readStream.schema("k STRING")
+          .json(events).groupBy("k").agg(count(lit(1)).as("n")), "complete")
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
+    assert(spawned.isEmpty, s"${spawned.size} processes: " + spawned
+      .groupBy(_.takeWhile(_ != ' ')).map { case (c, n) => s"$c ${n.size}" }
+      .mkString(", "))
+    assert(drained == Map("k0" -> 7L, "k1" -> 7L, "k2" -> 6L))
+    assert(TableLog.currentVersion(spark, s"$wh/dim_tasks") == 2L)
+    assert(LogTable.read(spark, s"$wh/dim_tasks").count() == 1)
+    // the bits Hadoop's create and mkdirs ask for: its defaults under the
+    // conf's umask, as before
+    val umask = FsPermission.getUMask(conf)
+    def posix(p: FsPermission) =
+      java.nio.file.attribute.PosixFilePermissions.fromString(p.toString)
+    val filePerm = posix(FsPermission.getFileDefault.applyUMask(umask))
+    val dirPerm = posix(FsPermission.getDirDefault.applyUMask(umask))
+    val written = tree(wh).filterNot(_ == Paths.get(wh))
+    assert(written.exists(_.toString.endsWith(".csv")))
+    written.foreach { p =>
+      val want = if (Files.isDirectory(p)) dirPerm else filePerm
+      assert(Files.getPosixFilePermissions(p) == want, p.toString)
+    }
+    // and an explicit mode lands bit for bit
+    val f = new org.apache.hadoop.fs.Path(s"$wh/mode_probe")
+    val fs = f.getFileSystem(conf)
+    fs.create(f).close()
+    fs.setPermission(f, new FsPermission("640"))
+    assert(java.nio.file.attribute.PosixFilePermissions.toString(
+      Files.getPosixFilePermissions(Paths.get(wh, "mode_probe"))) ==
+      "rw-r-----")
+  }
+
+  test("a dimension sync whose backup fails throws and keeps the " +
+      "dimension's last version") {
+    val in = Files.createTempDirectory("graft_bkfail_in").toString
+    val wh = Files.createTempDirectory("graft_bkfail_wh").toString
+    writeDims(in)
+    def sync(stamp: String): Unit = Main.run(spark, "tasks",
+      Map("in" -> in, "warehouse" -> wh, "stamp" -> stamp))
+    sync("20240101_100000")
+    val v = TableLog.currentVersion(spark, s"$wh/dim_tasks")
+    // a regular file where the backups' directory goes
+    val backups = Paths.get(wh, "csv_backups", "tasks")
+    tree(backups.toString).reverse.foreach(Files.delete)
+    Files.writeString(backups, "not a directory")
+    intercept[Exception](sync("20240101_110000"))
+    assert(TableLog.currentVersion(spark, s"$wh/dim_tasks") == v)
+    assertSettled(wh)
+    Files.delete(backups)
+    sync("20240101_120000") // the retry commits
+    assert(TableLog.currentVersion(spark, s"$wh/dim_tasks") == v + 1)
+  }
+
+  test("a refresh whose staging load fails keeps the fact's last version") {
+    val (_, wh) = backfill()
+    val factV = TableLog.currentVersion(spark, s"$wh/fact_time_entries")
+    // a staging table the new rows cannot overwrite: its `id` is a
+    // bigint, the staged rows' a string (retypes are refused after the
+    // rows are staged)
+    val stagingDir = Paths.get(wh, "staging_time_entries")
+    tree(stagingDir.toString).reverse.foreach(Files.delete)
+    LogTable.init(spark.range(1).toDF("id"), stagingDir.toString, "")
+    val e = intercept[IllegalArgumentException](refresh(wh))
+    assert(e.getMessage.contains("changes type"), e.getMessage)
+    assert(TableLog.currentVersion(spark, s"$wh/fact_time_entries") == factV)
+    assert(hoursById(wh) == Map("hist" -> 1.0, "r1" -> 1.0))
+    assertSettled(wh)
   }
 }

@@ -65,6 +65,30 @@ class HttpApiSpec extends SparkSpec {
       assert(refreshErr.body().contains("\"days\":7"))
       assert(refreshErr.body().contains("\"error\""))
 
+      // the `detail` lines, in the order the syncs commit them
+      def detail(body: String): String =
+        "\"detail\":\"(.*)\"}$".r.findFirstMatchIn(body).get.group(1)
+      assert(detail(sync.body()) == "dim_lists: version 1")
+      Files.createDirectories(Paths.get(in, "tasks"))
+      Files.writeString(Paths.get(in, "tasks", "t.json"),
+        """{"id":"t1","name":"T","status":{"status":"open","type":"open"},"list_id":"l1"}""")
+      val tasks = post(s"/sync/tasks?in=$in&warehouse=$wh")
+      assert(tasks.statusCode() == 200, tasks.body())
+      assert(detail(tasks.body()) == "dim_tasks: version 1")
+      Files.createDirectories(Paths.get(in, "time_entries"))
+      Files.writeString(Paths.get(in, "time_entries", "e.json"),
+        """{"id":"e1","start":"1708855200000","end":"1708858800000",""" +
+          """"duration":"3600000","at":"1708855200000","billable":true,""" +
+          """"task":{"id":"t1"},"user":{"id":"u1","username":"jane"},""" +
+          """"task_location":{"list_id":"l1","folder_id":"f1","space_id":"s1"}}""")
+      for (n <- 1 to 2) {
+        val refresh = post(s"/sync/refresh?in=$in&warehouse=$wh&days=7" +
+          "&today=2024-03-01")
+        assert(refresh.statusCode() == 200, refresh.body())
+        assert(detail(refresh.body()) == s"staging_time_entries: version $n" +
+          s"\\nrefresh: fact_time_entries version $n")
+      }
+
       // health: main.py:218-222 shape (status/service/version)
       val health = get(s"/health?warehouse=$wh")
       assert(health.statusCode() == 200)
