@@ -1,52 +1,53 @@
 package graft
 
 import java.net.URI
-import java.nio.file.{Files, attribute}
+import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
   FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.io.nativeio.NativeIO
 
 /** Hadoop's local file system without a child process per file.
   * Without the native Hadoop library, `RawLocalFileSystem` runs `chmod`
   * through `Shell.execCommand` for every file it creates and every
   * directory it makes (about 3 ms a spawn; a dimension sync spawned 20,
   * a streaming drain 60), and `readlink` for both ends of every
-  * `FileContext` rename. This one sets the same `chmod(2)` bits through
-  * `java.nio.file.Files.setPosixFilePermissions`, and answers a link
-  * status for a path that is not a symbolic link with its plain status,
-  * as Hadoop does once `readlink` prints nothing. It falls back to the
-  * inherited path where that cannot express the change: when the native
-  * library is loaded (it already chmods in-process), for a sticky bit
-  * (no `PosixFilePermission` for it), on a store without POSIX
-  * attributes, and for a symbolic link. [[GraftSession.tune]] binds
-  * `file:` to it. */
+  * `FileContext` rename. This one sets the mode in-process through the
+  * JDK's `unix:mode` attribute (`chmod(2)`), with the bits the forked
+  * `chmod <4-digit mode>` leaves: a file takes the mode exactly, a
+  * directory keeps its set-user-ID and set-group-ID bits (so a warehouse
+  * under a setgid directory keeps handing its group down). It answers a
+  * link status for a path that is not a symbolic link with its plain
+  * status, as Hadoop does once `readlink` prints nothing. It falls back
+  * to the inherited code on a store without the `unix` attribute view
+  * and for a symbolic link. [[GraftSession.tune]] binds `file:` to it. */
 class NoForkRawLocalFileSystem extends RawLocalFileSystem {
   override def getFileLinkStatus(f: Path): FileStatus =
     if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
     else getFileStatus(f)
 
-  override def setPermission(p: Path, permission: FsPermission): Unit =
-    if (NativeIO.isAvailable || permission.getStickyBit)
-      super.setPermission(p, permission)
-    else {
-      val mode = permission.toShort
-      // PosixFilePermission's declaration order is the mode's bit order,
-      // owner read (0400) down to others execute (0001)
-      val bits = java.util.EnumSet.noneOf(
-        classOf[attribute.PosixFilePermission])
-      attribute.PosixFilePermission.values.foreach { b =>
-        if ((mode & (1 << (8 - b.ordinal))) != 0) bits.add(b)
-      }
-      try Files.setPosixFilePermissions(pathToFile(p).toPath, bits)
-      catch {
-        case _: UnsupportedOperationException =>
-          super.setPermission(p, permission)
-      }
+  override def setPermission(p: Path, permission: FsPermission): Unit = {
+    val path = pathToFile(p).toPath
+    try {
+      val st = Files.readAttributes(path, "unix:mode,isDirectory")
+      val kept =
+        if (st.get("isDirectory").asInstanceOf[Boolean])
+          st.get("mode").asInstanceOf[Int] & NoForkRawLocalFileSystem.SetIdBits
+        else 0
+      Files.setAttribute(path, "unix:mode",
+        Integer.valueOf(kept | permission.toShort))
+    } catch {
+      case _: UnsupportedOperationException =>
+        super.setPermission(p, permission)
     }
+  }
+}
+
+private object NoForkRawLocalFileSystem {
+  /** 06000: set-user-ID and set-group-ID. */
+  val SetIdBits = 0xc00
 }
 
 /** `fs.file.impl`: the checksummed `file:` file system over

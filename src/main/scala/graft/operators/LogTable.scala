@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Futures
+
 /** Manifest-native MVCC table — the Delta/Iceberg core idea, self-built
   * on [[TableLog]]'s lock + log primitives (no Delta in the jar set):
   * writers APPEND uniquely-named parquet files and atomically commit a
@@ -3336,10 +3338,7 @@ object LogTable {
             marked.filter(hit).select("__dvf").distinct().collect()
               .map(_.getString(0)).toSet
           }
-        val dup = try dupCheck.join() catch {
-          case e: java.util.concurrent.CompletionException =>
-            throw Option(e.getCause).getOrElse(e)
-        }
+        val dup = Futures.await(dupCheck)
         require(dup.isEmpty, "LogTable.merge: updates contain duplicate " +
           s"keys (e.g. ${dup.headOption.mkString}) — multiple source rows " +
           "would match the same target row")
@@ -3674,12 +3673,7 @@ object LogTable {
         val (fs, root) = TableLog.fsFor(spark, tableRoot)
         val (stagePath, stagedParts) =
           try stageRows(spark, fs, root, transformed, partCols)
-          finally { // surface EITHER failure pre-commit
-            try dvWrite.join() catch {
-              case e: java.util.concurrent.CompletionException =>
-                throw Option(e.getCause).getOrElse(e)
-            }
-          }
+          finally Futures.await(dvWrite) // surface EITHER failure pre-commit
         promoteStage(fs, root, stagePath, stagedParts, "update")
         val statted = LogTable.statted(spark, tableRoot, prev.schemaDdl,
           prev.statsCols, prev.bloomCols, stagedParts)

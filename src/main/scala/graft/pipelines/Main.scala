@@ -1,8 +1,7 @@
 package graft.pipelines
 
 import java.time.LocalDate
-import java.util.concurrent.{CompletableFuture, CompletionException,
-  Executors}
+import java.util.concurrent.{CompletableFuture, Executors}
 
 import scala.util.Try
 
@@ -11,6 +10,7 @@ import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.col
 
 import graft.GraftSession
+import graft.Futures.await
 import graft.operators.{LogTable, MergeOps, TableLog}
 import graft.schemas.ClickUpSchemas
 
@@ -60,12 +60,6 @@ object Main {
   private def start[T](spark: SparkSession)(body: => T): CompletableFuture[T] =
     SQLExecution.withThreadLocalCaptured(
       spark.asInstanceOf[classic.SparkSession], sinkPool)(body)
-
-  /** `f`'s result, rethrowing the sink's own failure. */
-  private def await[T](f: CompletableFuture[T]): T =
-    try f.join() catch {
-      case e: CompletionException => throw Option(e.getCause).getOrElse(e)
-    }
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty || args(0) == "describe") { println(describe); return }

@@ -239,12 +239,22 @@ class CliPipelineSpec extends SparkSpec {
       classOf[NoForkLocalFs])
     val in = Files.createTempDirectory("graft_nofork_in").toString
     val wh = Files.createTempDirectory("graft_nofork_wh").toString
+    // a shared-group warehouse: setgid, which every directory made
+    // below it inherits and must keep
+    def mode(p: Path) = Files.getAttribute(p, "unix:mode").asInstanceOf[Int]
+    def octal(s: String) = Integer.parseInt(s, 8)
+    Files.setAttribute(Paths.get(wh), "unix:mode", Integer.valueOf(octal("2700")))
     writeDims(in)
     val events = Files.createTempDirectory("graft_nofork_ev").toString
     Files.writeString(Paths.get(events, "part-0.json"),
       (0 until 20).map(i => s"""{"k":"k${i % 3}"}""").mkString("\n"))
-    // a first sync pays the JVM's one-time spawns (Spark's process-tree
-    // metrics ask `getconf PAGESIZE` once); the counted pass is warm
+    // the JVM's one-time spawn: Spark's process-tree metrics ask
+    // `getconf PAGESIZE` once, from the first executor heartbeat (about
+    // 10 s into the JVM, so inside the count when this test runs alone);
+    // their private[spark] singleton is built here instead
+    Class.forName("org.apache.spark.executor.ProcfsMetricsGetter")
+      .getMethod("pTreeInfo").invoke(null)
+    // a first sync, so the counted pass is warm
     Main.run(spark, "tasks", Map("in" -> in, "warehouse" -> wh))
     var drained = Map.empty[String, Long]
     val spawned = processStarts {
@@ -273,15 +283,25 @@ class CliPipelineSpec extends SparkSpec {
     written.foreach { p =>
       val want = if (Files.isDirectory(p)) dirPerm else filePerm
       assert(Files.getPosixFilePermissions(p) == want, p.toString)
+      // a directory keeps the setgid it inherited, as `chmod 0755`
+      // leaves it; a file has none
+      assert(((mode(p) & octal("2000")) != 0) == Files.isDirectory(p),
+        f"$p ${mode(p) & octal("7777")}%o")
     }
-    // and an explicit mode lands bit for bit
+    assert(written.exists(p => Files.isDirectory(p) &&
+      p.getFileName.toString == "_graft_log"))
+    // an explicit mode lands bit for bit on a file; a directory also
+    // keeps its setgid, and takes a sticky bit
     val f = new org.apache.hadoop.fs.Path(s"$wh/mode_probe")
     val fs = f.getFileSystem(conf)
     fs.create(f).close()
     fs.setPermission(f, new FsPermission("640"))
-    assert(java.nio.file.attribute.PosixFilePermissions.toString(
-      Files.getPosixFilePermissions(Paths.get(wh, "mode_probe"))) ==
-      "rw-r-----")
+    assert((mode(Paths.get(wh, "mode_probe")) & octal("7777")) == octal("640"))
+    val d = new org.apache.hadoop.fs.Path(s"$wh/mode_probe_dir")
+    fs.mkdirs(d)
+    fs.setPermission(d, new FsPermission("1750"))
+    assert((mode(Paths.get(wh, "mode_probe_dir")) & octal("7777")) ==
+      octal("3750"))
   }
 
   test("a dimension sync whose backup fails throws and keeps the " +
